@@ -197,8 +197,8 @@ object Bench {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_detail.json"),
       s"""{"metric":"total","value":$pubTotal,"unit":"sec","queries":$pubJson,"first_run":$firstJson,"first_run_total":$firstTotal,"spill_build_s":${fmt2(spillBuildS)},"rerun_n":$rerunJson,"rerun_failed":$rerunFailedJson,"heap_after_mb":$heapJson,"failed":[${failed.mkString(",")}],"sf":"$sfDir"}""")
-    // r22 MEASUREMENT-CONTRACT RESTORATION (r21 verdict items 1+2,
-    // disclosed in OPTIMIZATION_r22.md): the stdout line again carries
+    // r22 MEASUREMENT-CONTRACT RESTORATION (r21 verdict items 1+2; the
+    // per-change record is CHANGES.md): the stdout line again carries
     // the documented driver contract — a full-name `queries` map of
     // SECONDS ({"metric","value","unit","queries","sf"}) — which the
     // r20 line-compression had replaced with the positional `q_ds`

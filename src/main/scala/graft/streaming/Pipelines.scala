@@ -1073,8 +1073,10 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
       destinationConnection =
         if (newSpec.destinationConnection.nonEmpty) newSpec.destinationConnection
         else baseline.destinationConnection)
-    specs.put(name, updated)
+    // persist first: its watermark bump must precede the map change
+    // (see reconcileSpecs)
     persistSpec(updated)
+    specs.put(name, updated)
     val destChanged =
       updated.destinationConnection != baseline.destinationConnection
     // q75: delivery-relevant METADATA changes reassign exactly like a
@@ -1203,7 +1205,10 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * Every successful read also advances this manager's
     * [[specVersions]] watermark, so a later [[persistSpec]] continues
     * the file's write sequence instead of restarting it. */
-  private def readSpecFile(p: Path): PipelineSpec = {
+  private def readSpecFile(p: Path): PipelineSpec = readVersionedSpecFile(p)._1
+
+  /** [[readSpecFile]] plus the file's specVersion (0 when unversioned). */
+  private def readVersionedSpecFile(p: Path): (PipelineSpec, Long) = {
     val in = rootFs.open(p)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
@@ -1211,7 +1216,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     val v = PipelineSpecJson.versionOf(text)
     if (v > 0L) specVersions.updateWith(spec.name)(o =>
       Some(math.max(o.getOrElse(0L), v))): Unit
-    spec
+    (spec, v)
   }
 
   private def specAnywhereKnown(name: String): Option[Option[PipelineSpec]] =
@@ -1687,6 +1692,11 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
             (s.getModificationTime, s.getLen)))
       } catch { case _: java.io.IOException => return } // judge later
     val durableNs = listing.map(_._1).toSet
+    // The spec watermarks as the tick began (an O(1) TrieMap snapshot).
+    // A watermark now past both that and a file's version means an
+    // update or delete on this manager landed after the file was read:
+    // persistSpec and deleteLocal move it BEFORE they change `specs`.
+    val heldAtStart = specVersions.readOnlySnapshot()
     // ---- tick-scoped read bounding (round 20, the control-plane
     // scale pass): lock owners come from ONE locks-dir listing
     // ([[snapshotLockOwners]]), instance liveness is memoized for the
@@ -1742,21 +1752,31 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     listing.foreach { case (ns, stamp) =>
       if (!specModSeen.get(ns).contains(stamp)) {
         try {
-          val spec = readSpecFile(new Path(dir, s"$ns.json"))
+          val (spec, v) = readVersionedSpecFile(new Path(dir, s"$ns.json"))
+          // the read is stale: putting it would undo the newer write
+          def superseded = specVersions.get(spec.name)
+            .exists(_ > math.max(v, heldAtStart.getOrElse(spec.name, 0L)))
           val restored = spec.status match {
             case PipelineStatus.Ready | PipelineStatus.Stopping
                 if !foreignLiveNow(spec.name) =>
               spec.copy(status = PipelineStatus.Stopped)
             case _ => spec
           }
-          if (spec.status != PipelineStatus.Deleting) {
+          if (spec.status != PipelineStatus.Deleting && !superseded) {
             // snapshot screens, direct read confirms (changed files
             // only — a lock this manager acquired AFTER the snapshot
             // listing must still block the overwrite, exactly as the
-            // per-name read it replaced did)
-            if (specs.putIfAbsent(spec.name, restored).isDefined &&
-                !ownedLocallySnap(spec.name) && !ownedLocally(spec.name))
-              specs.put(spec.name, restored): Unit
+            // per-name read it replaced did). Re-judged after each
+            // step, and the overwrite is a compare-and-set, so a write
+            // landing mid-step is never undone either.
+            specs.putIfAbsent(spec.name, restored) match {
+              case None =>
+                if (superseded) specs.remove(spec.name, restored): Unit
+              case Some(cur) =>
+                if (!ownedLocallySnap(spec.name) &&
+                    !ownedLocally(spec.name) && !superseded)
+                  specs.replace(spec.name, cur, restored): Unit
+            }
           }
           // recorded only after a successful read, so a torn/mid-write
           // file is retried next tick
@@ -3666,6 +3686,9 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
       val survivors = findGroup(name).filterNot(_.name == name)
       stopQueryOf(name)
       releaseLock(name)
+      // a reconcile tick that read the spec file before this delete
+      // must not put it back (see reconcileSpecs)
+      specVersions.updateWith(name)(o => Some(o.getOrElse(0L) + 1L)): Unit
       specs.updateWith(name)(_.map(_.copy(status = PipelineStatus.Deleting)))
       specs.remove(name)
       PipelineManager.sketchStripe(sketchDir(name)).synchronized {

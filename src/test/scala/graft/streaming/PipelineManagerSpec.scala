@@ -2485,4 +2485,75 @@ class PipelineManagerSpec extends SparkTestBase {
         "a stale writer must extend the on-disk sequence, not re-mint it")
     } finally { pmB.close(); pmA.close() }
   }
+
+  test("a reconcile tick never puts back a spec read before a local update or delete") {
+    val root = Files.createTempDirectory("graft-stale-put-").toString
+    // only this manager's rootFs serves spec reads through the hook
+    val conf = spark.sparkContext.hadoopConfiguration
+    val saved = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+      .map(k => k -> Option(conf.get(k)))
+    conf.set("fs.file.impl", classOf[SpecReadHookFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    val pm = try new PipelineManager(spark, root, instance = "S")
+      finally saved.foreach {
+        case (k, Some(v)) => conf.set(k, v)
+        case (k, None) => conf.unset(k)
+      }
+    try {
+      // update: the tick reads rev 1, then the update to rev 2 lands
+      pm.create(PipelineSpec("u", "parquet", "memory", "/src/u",
+        metadata = Map("rev" -> "1")))
+      SpecReadHookFs.arm("u.json", () => pm.update("u",
+        PipelineSpec("u", "parquet", "memory", "/src/u",
+          metadata = Map("rev" -> "2"))))
+      pm.reconcileSpecs()
+      assert(SpecReadHookFs.fired.get, "the tick must have read u's spec")
+      assert(pm.get("u").flatMap(_.metadata.get("rev")).contains("2"),
+        "the tick restored the spec it read before the update")
+      // delete: the tick reads d, then the delete lands
+      pm.create(PipelineSpec("d", "parquet", "memory", "/src/d"))
+      SpecReadHookFs.arm("d.json", () => pm.delete("d"))
+      pm.reconcileSpecs()
+      assert(SpecReadHookFs.fired.get, "the tick must have read d's spec")
+      assert(pm.get("d").isEmpty && !pm.list(0, 10).exists(_.name == "d"),
+        "the tick resurrected a spec deleted after its read")
+      pm.reconcileSpecs()
+      assert(pm.get("u").flatMap(_.metadata.get("rev")).contains("2"))
+      assert(pm.get("d").isEmpty)
+    } finally pm.close()
+  }
+}
+
+/** A local filesystem that runs one armed hook right after a spec
+  * file has been read and before the reader gets its bytes: it forces
+  * a write to land between a reconcile tick's read and its put. */
+final class SpecReadHookFs extends org.apache.hadoop.fs.LocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataInputStream, Path}
+  override def open(f: Path, bufferSize: Int): FSDataInputStream =
+    SpecReadHookFs.take(f.getName) match {
+      case None => super.open(f, bufferSize)
+      case Some(hook) =>
+        val copy = new Path(f.getParent.getParent, s"read-of-${f.getName}")
+        Files.copy(pathToFile(f).toPath, pathToFile(copy).toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        hook()
+        super.open(copy, bufferSize)
+    }
+}
+
+object SpecReadHookFs {
+  private val armed =
+    new java.util.concurrent.atomic.AtomicReference[(String, () => Unit)]
+  val fired = new java.util.concurrent.atomic.AtomicBoolean
+  def arm(file: String, hook: () => Unit): Unit = {
+    fired.set(false)
+    armed.set((file, hook))
+  }
+  private def take(file: String): Option[() => Unit] = {
+    val a = armed.get
+    if (a != null && a._1 == file && armed.compareAndSet(a, null)) {
+      fired.set(true)
+      Some(a._2)
+    } else None
+  }
 }

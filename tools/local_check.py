@@ -6,31 +6,48 @@ by graft.Verify (columns sorted by name, rows sorted, values hashed).
 Usage: local_check.py <sfDir> <verifyOutDir>
        local_check.py --decode-bench <BENCH_rNN.json|bench_line.json> <CORRECTNESS_rNN.json>
 """
-import sys, json, glob, math
+import sys, json, glob, math, re
 
 def decode_bench(bench_path, correctness_path):
     """Decode the bench stdout's compact `q_ds` per-family decisecond
     arrays back to {query_name: seconds}. Contract: families in
     ascending key order; the k-th value belongs to the k-th name in the
     ascending sorted list of that family's NON-FAILED gates (the gate
-    inventory is CORRECTNESS_rNN.json's key set)."""
+    inventory is CORRECTNESS_rNN.json's key set). A BENCH_rNN.json artifact
+    keeps only a ~2000-char stdout tail, which can cut the line's head: the
+    `queries` map is used when the whole line survived, else the
+    `q_ds` and `failed` values are read from their own markers."""
     raw = open(bench_path).read()
     # accept either the driver's BENCH artifact (tail field) or a raw line
     try:
         doc = json.loads(raw)
-        text = doc.get("tail", raw) if isinstance(doc, dict) and "tail" in doc else raw
+        text = doc["tail"] if isinstance(doc, dict) and "tail" in doc else raw
     except json.JSONDecodeError:
         text = raw
-    line = next(l for l in reversed(text.splitlines())
-                if '"q_ds"' in l or '"queries"' in l)
-    obj = json.loads(line[line.index("{"):])
-    if "queries" in obj:                       # full-name map present
-        return {k: float(v) for k, v in obj["queries"].items()}
-    failed = set(obj.get("failed", []))
+    dec = json.JSONDecoder()
+
+    def value_after(marker):
+        i = text.rfind(marker)
+        return None if i < 0 else dec.raw_decode(text, i + len(marker))[0]
+
+    line_start = text.rfind('{"metric"')
+    if line_start >= 0:
+        line = dec.raw_decode(text, line_start)[0]
+        if "queries" in line:
+            return {k: float(v) for k, v in line["queries"].items()}
+    q_ds = value_after('"q_ds":')
+    if q_ds is None:
+        sys.exit(f"no bench JSON line found in {bench_path}")
+    failed = value_after('"failed":') or []
+    unnamed = [f for f in failed if re.match(r"\+\d+ more", f)]
+    if unnamed:
+        sys.exit(f"{bench_path}: stdout names only some failed gates "
+                 f"({unnamed[0]!r}), so the positional q_ds arrays cannot "
+                 "be decoded; read the run's bench_detail.json instead")
     names = sorted(k for k in json.load(open(correctness_path))
-                   if k not in failed)
+                   if k not in set(failed))
     out = {}
-    for fam, vals in sorted(obj["q_ds"].items()):
+    for fam, vals in sorted(q_ds.items()):
         fam_names = [n for n in names if n[0] == fam]
         assert len(fam_names) == len(vals), (fam, len(fam_names), len(vals))
         out.update({n: v / 10.0 for n, v in zip(fam_names, vals)})
