@@ -1,10 +1,14 @@
 package graft.streaming
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.functions.Portable
 
@@ -38,8 +42,9 @@ import graft.functions.Portable
  * THEN is the backup dropped — at every instant either the bucket dir
  * or its backup holds a complete copy. [[currentState]] resolves
  * whichever survives. A replayed micro-batch (Spark's at-least-once
- * foreachBatch contract) re-merges idempotently: last-writer-wins by
- * scn makes re-applying the same changes a no-op.
+ * foreachBatch contract) re-merges idempotently: each touched key takes
+ * the batch's final image again, so re-applying the same changes leaves
+ * the same rows.
  */
 object CdcMerge {
 
@@ -137,24 +142,75 @@ object CdcMerge {
     fs.delete(bak, true) // safe: state is installed; a leftover is handled above
   }
 
+  /** Spark's copy of the written frame's schema, which it stores in
+    * every parquet footer it writes (`ParquetReadSupport.SPARK_METADATA_KEY`). */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The schema Spark recorded in one part file's footer. Every bucket
+    * file is written by Spark's parquet writer, so a footer without it
+    * is not a state file and fails the read. */
+  private def footerSchema(conf: Configuration, file: Path): StructType = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val json = try reader.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
+      finally reader.close()
+    require(json != null, s"$file has no $SparkSchemaKey footer key")
+    DataType.fromJson(json).asInstanceOf[StructType]
+  }
+
+  /**
+   * Read the live copies of buckets `ids`; None when none of them holds
+   * a data file (never written, or every key deleted: an emptied bucket
+   * is an empty dir, which parquet schema inference rejects). The
+   * schema is read from ONE part file's footer on the driver, so the
+   * scan plans without Spark's schema-inference job.
+   */
+  private def readBuckets(spark: SparkSession, fs: FileSystem, statePath: String,
+      ids: Seq[Long]): Option[DataFrame] = {
+    val withData = ids.flatMap(liveBucket(fs, statePath, _)).flatMap { dir =>
+      fs.listStatus(dir).map(_.getPath)
+        .find(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+        .map(dir.toString -> _)
+    }
+    withData.headOption.map { case (_, file) =>
+      val dirs = withData.map(_._1)
+      spark.read.schema(footerSchema(spark.sparkContext.hadoopConfiguration, file))
+        .parquet(dirs: _*)
+    }
+  }
+
   /**
    * Apply one micro-batch of changes onto the bucketed parquet state
    * at `statePath`: untouched buckets are not read or written; within
    * a touched bucket, untouched keys survive, changed keys take the
-   * batch's final image, DELETEs drop.
+   * batch's final image whatever the state row's scn, DELETEs drop.
    *
-   * ONE Spark job merges every touched bucket: the live copies of all
-   * touched buckets are read as one multi-path scan, batch survivors
-   * and final images union, and a `partitionBy("__bucket")` write
-   * lands each bucket's new contents under `statePath.tmp/__bucket=N`
-   * in a single pass. The per-bucket crash-safe rename swap then runs
-   * over the pre-written scratch dirs — metadata-only operations, so
-   * serializing THOSE is O(touched) namenode calls, not O(touched)
-   * Spark jobs (the previous form launched a full merge job per
-   * bucket; at 256 buckets that serialized the sink on the driver).
-   * The existing rows' bucket is recomputed from their key columns —
-   * the bucket function is pure, so it always agrees with the dir the
-   * row was read from.
+   * One shuffle merges every touched bucket. The live rows of the
+   * touched buckets (tagged state) and the raw micro-batch (tagged
+   * change) union and are repartitioned by bucket; one `row_number`
+   * window over (bucket, key), ordered change-before-state and then by
+   * scn descending, keeps each key's winner, and a DELETE winner drops
+   * the key. The bucket partitioning satisfies the window's clustering
+   * and the window's sort satisfies the `partitionBy("__bucket")`
+   * writer's ordering, so the exchange feeds the write directly and
+   * each touched bucket lands as ONE file under
+   * `statePath.tmp/__bucket=N`. At most three Spark jobs per epoch:
+   * the touched-bucket collect (one set per input partition, no
+   * shuffle) and the exchange's map and write stages (one job each
+   * under AQE). The per-bucket crash-safe rename swap then runs over
+   * the pre-written scratch dirs — metadata-only operations, O(touched)
+   * namenode calls, not O(touched) Spark jobs. The price is that every
+   * row of every touched bucket crosses the shuffle and each bucket is
+   * written by one task: this shape saves per-job overhead, which wins
+   * while touched buckets are small, and is unmeasured for large ones.
+   *
+   * The window groups null key components together, as [[latestState]]
+   * does, so a null key is replaced, never duplicated. The merged rows
+   * keep the state's columns (the batch's on a first write): the
+   * batch is projected onto them before the union, so columns only
+   * the batch carries are dropped and a state column the batch lacks
+   * fails the epoch. The state rows' bucket is
+   * recomputed from their key columns — the bucket function is pure,
+   * so it always agrees with the dir the row was read from.
    */
   def applyBatch(spark: SparkSession, batch: DataFrame, statePath: String,
       keyCols: Seq[String], scnCol: String, opcodeCol: String,
@@ -162,33 +218,34 @@ object CdcMerge {
     val fs = new Path(statePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bucketOf =
       pmod(Portable.hash64(concat_ws("|", keyCols.map(col): _*)), lit(numBuckets.toLong))
-    val withBucket = batch.withColumn("__bucket", bucketOf)
-    // Touched-bucket ids: bounded by numBuckets — control-plane
-    // cardinality, not data cardinality, so the collect is safe.
-    val touched = withBucket.select("__bucket").distinct()
-      .collect().map(_.getLong(0)).sorted
+    val changes = batch.withColumn("__bucket", bucketOf).withColumn("__state", lit(false))
+    // Touched-bucket ids: at most numBuckets, so the collect is safe.
+    val touched = changes.select("__bucket").rdd
+      .mapPartitions(rows => Iterator(rows.map(_.getLong(0)).toSet))
+      .collect().flatten.distinct.sorted.toSeq
     if (touched.isEmpty) return
-    val latest = latestState(withBucket, keyCols, scnCol, opcodeCol)
-    val livePaths = touched.toSeq.flatMap(liveBucket(fs, statePath, _)).map(_.toString)
-    val merged = if (livePaths.nonEmpty) {
-      val existing = spark.read.parquet(livePaths: _*).withColumn("__bucket", bucketOf)
-      val touchedKeys = withBucket.select(keyCols.map(col): _*).distinct()
-      existing.join(touchedKeys, keyCols, "left_anti")
-        .unionByName(latest.select(existing.columns.map(col): _*))
-    } else latest
+    val existing = readBuckets(spark, fs, statePath, touched)
+    val cols = existing.getOrElse(batch).columns
+    val rows = existing.fold(changes)(_.withColumn("__bucket", bucketOf)
+      .withColumn("__state", lit(true))
+      .unionByName(changes.select((cols :+ "__bucket" :+ "__state").map(col): _*)))
+    val w = Window.partitionBy((col("__bucket") +: keyCols.map(col)): _*)
+      .orderBy(col("__state"), col(scnCol).desc)
+    val merged = rows.repartition(col("__bucket"))
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1 && (col("__state") || col(opcodeCol) =!= "DELETE"))
+      .select((cols :+ "__bucket").map(col): _*)
     val tmpRoot = new Path(s"$statePath.tmp")
     fs.delete(tmpRoot, true) // leftovers of a crashed epoch
-    merged.write.mode(SaveMode.Overwrite).partitionBy("__bucket")
-      .parquet(tmpRoot.toString)
-    touched.foreach { b =>
-      installBucketDir(fs, new Path(tmpRoot, s"__bucket=$b"), statePath, b)
-    }
+    merged.write.mode(SaveMode.Overwrite).partitionBy("__bucket").parquet(tmpRoot.toString)
+    touched.foreach(b => installBucketDir(fs, new Path(tmpRoot, s"__bucket=$b"), statePath, b))
     fs.delete(tmpRoot, true)
   }
 
-  /** The full live state: the union of every bucket's surviving copy.
-    * Falls back to a flat (non-bucketed) layout for state dirs written
-    * by older versions. */
+  /** The full live state: the union of every bucket's surviving copy;
+    * None when no bucket holds a row (every key deleted). Falls back to
+    * a flat (non-bucketed) layout for state dirs written by older
+    * versions. */
   def currentState(spark: SparkSession, statePath: String): Option[DataFrame] = {
     val fs = new Path(statePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root = new Path(statePath)
@@ -199,10 +256,8 @@ object CdcMerge {
         .filter(s => s.isDirectory && s.getPath.getName.matches("b\\d{5}"))
         .map(_.getPath.getName.drop(1).toLong).toSet
     val ids = bucketIds(root) ++ bucketIds(bakRoot)
-    if (ids.nonEmpty) {
-      val paths = ids.toSeq.sorted.flatMap(liveBucket(fs, statePath, _)).map(_.toString)
-      Some(spark.read.parquet(paths: _*))
-    } else if (fs.exists(root)) Some(spark.read.parquet(statePath))
+    if (ids.nonEmpty) readBuckets(spark, fs, statePath, ids.toSeq.sorted)
+    else if (fs.exists(root)) Some(spark.read.parquet(statePath))
     else if (fs.exists(bakRoot)) Some(spark.read.parquet(bakRoot.toString))
     else None
   }

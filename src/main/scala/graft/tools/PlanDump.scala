@@ -3,13 +3,17 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dump `explain("formatted")` plans for the round's plan-evidence
   * files (`plans/rNN/<query>_{before,after}.txt`). Batch gates dump
   * the gate frame's plan; the incremental-index SERVE paths (whose
   * gates return a post-hoc read of their output dir) dump the plan of
-  * a serve() over a one-epoch store built from the sf dir.
+  * a serve() over a one-epoch store built from the sf dir; the CDC
+  * merge dumps the executed plan of one epoch's state write.
   *
   * Usage: PlanDump <outDir> <suffix> [gate...]   (sfDir from env)
   */
@@ -27,9 +31,10 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
 
-    def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+    def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit =
+      dumpExecution(name, df.queryExecution)
+    def dumpExecution(name: String, qe: QueryExecution): Unit = {
+      val plan = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
       Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
       System.err.println(s"[plandump] wrote ${name}_$suffix.txt")
     }
@@ -60,6 +65,32 @@ object PlanDump {
         cents, name = "vdump")
       ivx.appendEpoch(emb.filter(col("vec_id") < 100), 0L)
       dump("vecindex_serve", ivx.serve(probes, k = 3, nprobe = 2))
+    }
+    locally {
+      // CdcMerge.applyBatch builds its write plan internally: capture
+      // the executed write command of an epoch onto existing state. The
+      // epochs are parquet scans, as a file-source micro-batch is.
+      val base = Files.createTempDirectory("graft-plandump-cdc-").toString
+      val dir = s"$base/state"
+      val Seq(first, second) = Seq(0L, 100L).map { scn =>
+        spark.range(40).select(col("id").as("key"), (col("id") + scn).as("scn"),
+          lit("UPDATE").as("opcode"), col("id").cast("string").as("v"))
+          .write.parquet(s"$base/changes$scn")
+        spark.read.parquet(s"$base/changes$scn")
+      }
+      graft.streaming.CdcMerge.applyBatch(spark, first, dir, Seq("key"), "scn", "opcode", 4)
+      val writes = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          if (qe.analyzed.isInstanceOf[InsertIntoHadoopFsRelationCommand]) writes.put(qe)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      graft.streaming.CdcMerge.applyBatch(spark, second, dir, Seq("key"), "scn", "opcode", 4)
+      val qe = writes.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      spark.listenerManager.unregister(listener)
+      require(qe != null, "the merge write was not observed within 60 s")
+      dumpExecution("cdc_merge_write", qe)
     }
     spark.stop()
   }
