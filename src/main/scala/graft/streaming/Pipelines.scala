@@ -133,19 +133,25 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
   private val queries = new ConcurrentHashMap[String, StreamingQuery]()
   // F2/A4: admission state — (partition column, paused values) per
   // pipeline; applied by start() on EVERY (re)start so the admission
-  // invariant survives pause/resume cycles. Durable under
-  // `checkpointRoot/<name>.paused` (the reference keeps this in
-  // ZooKeeper: pausedSourcePartitions on the datastream task), so a
+  // invariant survives pause/resume cycles. Durable as the pause-set
+  // record (the reference keeps this in ZooKeeper:
+  // pausedSourcePartitions on the datastream task), so a
   // NEW manager on the same checkpoint root keeps holding back —
   // otherwise a restart would deliver fresh paused-partition rows
   // while earlier ones sit in holdback.
   private val pausedPartitions = TrieMap.empty[String, (String, Set[String])]
   // Highest specVersion this manager has written OR read per
   // pipeline — the write counter [[persistSpec]] continues. Advanced
-  // by every successful spec read (constructor load, [[readSpecFile]]),
-  // so a manager that adopted a peer's file extends the peer's
-  // sequence instead of restarting it.
+  // by every successful spec read ([[specAt]]), so a manager that
+  // adopted a peer's file extends the peer's sequence instead of
+  // restarting it.
   private val specVersions = TrieMap.empty[String, Long]
+  // Every control-plane file under the root goes through `records`
+  // (layout, framing, atomic replace); `rootFs` itself serves only the
+  // data directories the records locate.
+  private val rootFs = new Path(checkpointRoot)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val records = new DurableRecords(rootFs, checkpointRoot)
   loadSpecs()
   loadPausedState()
 
@@ -162,10 +168,6 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
   // multi-host deployment sets livenessLeaseMs > 0 so registrations
   // also age out by heartbeat mod-time (hard-crash detection without
   // close()); in-process managers need only existence. --
-  private val rootFs = new Path(checkpointRoot)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def instancePath(id: String) =
-    new Path(s"$checkpointRoot/instances/$id")
   // Config validation BEFORE the registration file exists: a require
   // that fired after registerInstance() would leak a live registration
   // no close() ever removes, blocking every re-construction under the
@@ -173,7 +175,6 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
   require(!autoHeartbeat || livenessLeaseMs > 0L,
     s"autoHeartbeat requires livenessLeaseMs > 0 (got $livenessLeaseMs): " +
       "existence-only registrations have no lease to refresh or expire")
-  rootFs.mkdirs(instancePath(instanceId).getParent)
   registerInstance()
 
   /** Register this instance's liveness file with an EXCLUSIVE create.
@@ -193,22 +194,11 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * replaced — so the new incarnation starts with no inherited
     * ownership at all. */
   private def registerInstance(): Unit = {
-    val p = instancePath(instanceId)
-    def tryCreate(): Boolean =
-      try { rootFs.create(p, false).close(); true }
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-            _: java.nio.file.FileAlreadyExistsException => false
-        // Filesystems that signal exclusive-create loss with a plain
-        // IOException: only "the file exists" means lost-the-race; a
-        // transient IO failure must surface as itself, never be
-        // misread as "already registered and live".
-        case e: java.io.IOException =>
-          if (try rootFs.exists(p)
-              catch { case _: java.io.IOException => throw e })
-            false
-          else throw e
-      }
+    val p = records.instance(instanceId)
+    // only "the file exists" means lost-the-race; a transient IO
+    // failure surfaces as itself, never misread as "already
+    // registered and live"
+    def tryCreate(): Boolean = records.createExclusive(p, Array.emptyByteArray)
     if (tryCreate()) return
     if (instanceLive(instanceId))
       throw new IllegalStateException(s"instance $instanceId is already " +
@@ -218,29 +208,20 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     // expired predecessor: sweep its stale locks before re-registering
     // (once registered, those locks would read as live-owned by a
     // process that holds no queries for them)
-    val locksDir = new Path(s"$checkpointRoot/locks")
-    if (rootFs.exists(locksDir)) {
-      rootFs.listStatus(locksDir).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".lock"))
-        .foreach { st =>
-          // Stripe on the UNQUALIFIED lock path exactly as
-          // acquireLock/releaseLock do — listStatus returns
-          // scheme-qualified paths whose hashCode picks a different
-          // stripe, which would run this sweep outside the in-JVM
-          // monitor the check-then-create protocol requires on local
-          // filesystems.
-          val stripeKey =
-            new Path(s"$checkpointRoot/locks/${st.getPath.getName}").toString
-          PipelineManager.lockStripe(stripeKey).synchronized {
-            val owner = try lockOwner(st.getPath)
-              catch { case _: java.io.IOException => "" }
-            if (owner == instanceId)
-              try reclaimLockFile(st.getPath, owner)
-              catch { case _: PipelineLockedException => () } // a rival won it; leave it
-          }
-        }
+    // (listed paths are the UNQUALIFIED lock paths acquireLock and
+    // releaseLock stripe on, so this sweep runs inside the in-JVM
+    // monitor the check-then-create protocol requires on local
+    // filesystems)
+    records.list(records.lockDir, ".lock").foreach { l =>
+      PipelineManager.lockStripe(l.path.toString).synchronized {
+        val owner = try lockOwner(l.path)
+          catch { case _: java.io.IOException => "" }
+        if (owner == instanceId)
+          try reclaimLockFile(l.path, owner, l.key)
+          catch { case _: PipelineLockedException => () } // a rival won it; leave it
+      }
     }
-    rootFs.delete(p, false): Unit
+    records.delete(p)
     if (!tryCreate())
       throw new IllegalStateException(s"instance $instanceId lost the " +
         s"re-registration race on $checkpointRoot (a same-id rival " +
@@ -266,7 +247,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * neither term). */
   private def instanceLive(id: String): Boolean =
     try {
-      val st = rootFs.getFileStatus(instancePath(id))
+      val st = records.status(records.instance(id))
       livenessLeaseMs <= 0L ||
         System.currentTimeMillis() - st.getModificationTime < livenessLeaseMs
     } catch { case _: java.io.FileNotFoundException => false }
@@ -297,12 +278,12 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * of it dominates worst-case touch latency. */
   def heartbeat(): Boolean =
     try {
-      val p = instancePath(instanceId)
-      val st = rootFs.getFileStatus(p) // throws FNF if reclaimed/closed
+      val p = records.instance(instanceId)
+      val st = records.status(p) // throws FNF if reclaimed/closed
       val fresh = livenessLeaseMs <= 0L ||
         System.currentTimeMillis() - st.getModificationTime <
           livenessLeaseMs - livenessLeaseMs / 4
-      if (fresh) rootFs.setTimes(p, System.currentTimeMillis(), -1)
+      if (fresh) records.touch(p, System.currentTimeMillis())
       fresh
     } catch { case _: java.io.IOException => false }
 
@@ -403,15 +384,14 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
       Some(ex)
     }
 
-  private def lockPath(name: String) =
-    new Path(s"$checkpointRoot/locks/${PipelineManager.namespaceOf(name)}.lock")
-
-  private def lockOwner(p: Path): String =
-    if (!rootFs.exists(p)) ""
-    else {
-      val in = rootFs.open(p)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
+  /** The instanceId a lock file names; "" when it is absent or torn
+    * (a created-but-not-yet-written lock). Throws when unreadable. */
+  private def lockOwner(p: Path): String = records.fields(p) match {
+    case DurableRecords.Found(Seq(owner)) => owner
+    case DurableRecords.Unknown(false) =>
+      throw new java.io.IOException(s"lock $p unreadable")
+    case _ => ""
+  }
 
   /** Acquire (or re-enter) the pipeline's execution lock. Re-entrant
     * for this instance — pause/resume/restart cycles keep ownership,
@@ -438,18 +418,13 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * create(overwrite=false) is check-then-create and two in-process
     * managers could otherwise both "win" the same lock file. */
   private[streaming] def acquireLock(name: String): Boolean =
-    PipelineManager.lockStripe(lockPath(name).toString)
+    PipelineManager.lockStripe(records.lock(name).toString)
       .synchronized { acquireLockUnsynced(name) }
 
   private def acquireLockUnsynced(name: String): Boolean = {
-    val p = lockPath(name)
-    rootFs.mkdirs(p.getParent)
+    val p = records.lock(name)
     def tryCreate(): Boolean =
-      try {
-        val out = rootFs.create(p, false)
-        try out.write(instanceId.getBytes("UTF-8")) finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
+      records.createExclusive(p, DurableRecords.frame(Seq(instanceId)))
     if (tryCreate()) return true
     val owner = lockOwner(p)
     if (owner == instanceId) return false
@@ -463,7 +438,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
       // instanceLive — reading a hiccup as "old empty orphan" would
       // reclaim a live rival's in-flight lock.
       val age =
-        try System.currentTimeMillis() - rootFs.getFileStatus(p).getModificationTime
+        try System.currentTimeMillis() - records.status(p).getModificationTime
         catch { case _: java.io.FileNotFoundException => Long.MaxValue }
       if (age < PipelineManager.AcquireGraceMs)
         throw PipelineLockedException(name, "(acquiring)")
@@ -499,14 +474,10 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * turned out to be a rival's live or in-flight lock. Callers that
     * go on to acquire still have to win the exclusive create — a
     * rival that created in between is a live owner. */
-  private def reclaimLockFile(p: Path, owner: String,
-      label: String = ""): Unit = {
-    val name = if (label.nonEmpty) label else p.getName.stripSuffix(".lock")
-    val tombstone = new Path(p.getParent,
-      s"_reclaim-${p.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
-    if (rootFs.rename(p, tombstone)) {
+  private def reclaimLockFile(p: Path, owner: String, name: String): Unit =
+    records.moveAside(p).foreach { tombstone =>
       def restoreAndReject(as: String): Nothing = {
-        rootFs.rename(tombstone, p): Unit // keep tombstone if dest exists
+        records.restore(tombstone, p): Unit // keep tombstone if dest exists
         throw PipelineLockedException(name, as)
       }
       val moved =
@@ -515,15 +486,13 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
       if (moved != owner) {
         if (moved.nonEmpty) restoreAndReject(moved)
         val tombAge =
-          try System.currentTimeMillis() -
-            rootFs.getFileStatus(tombstone).getModificationTime
+          try System.currentTimeMillis() - records.status(tombstone).getModificationTime
           catch { case _: java.io.IOException => restoreAndReject("(acquiring)") }
         if (tombAge < PipelineManager.AcquireGraceMs)
           restoreAndReject("(acquiring)")
       }
-      rootFs.delete(tombstone, false): Unit
+      records.delete(tombstone)
     }
-  }
 
   /** Release the lock if this instance holds it (stop/delete — the
     * task returns to the pool; the reference's task release). The
@@ -535,10 +504,10 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * by construction). The residual window is one owner-read RPC
     * against the lease length — size `livenessLeaseMs` accordingly. */
   private[streaming] def releaseLock(name: String): Unit = {
-    val p = lockPath(name)
+    val p = records.lock(name)
     PipelineManager.lockStripe(p.toString).synchronized {
       if (instanceLive(instanceId) && lockOwner(p) == instanceId)
-        rootFs.delete(p, false): Unit
+        records.delete(p)
     }
   }
 
@@ -559,121 +528,132 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
 
   // ---- Durable spec store (the reference's
   // ZookeeperBackedDatastreamStore role): every registered spec lives
-  // as one JSON file under checkpointRoot/specs, written on every
+  // as one JSON record ([[DurableRecords.spec]]), replaced on every
   // mutation and reloaded by a new manager on the same root — a
   // restarted driver sees every pipeline it had, with durable state
   // (checkpoints, holdback, pause sets) intact. ----
 
-  private def specFilePath(name: String) =
-    new Path(s"$checkpointRoot/specs/${PipelineManager.namespaceOf(name)}.json")
-
   /** Persist `spec` with a MONOTONIC write counter, reflected into the
-    * file's modification time (`setTimes(version)`): the
-    * (mtime, length) stamp [[reconcileSpecs]]'s listing already pays
-    * for becomes an EXACT version compare, closing the blind spot
-    * where two writes inside one wall-clock mtime granule that leave
-    * the file the same length were invisible until a later write
-    * moved the stamp. Equality-compared only — nothing anywhere reads
-    * a spec file's mtime as a wall-clock time. Cross-WRITER races
-    * remain what they were (two uncoordinated managers persisting one
-    * name can mint the same version — enactments are already
-    * serialized by the execution lock); the intra-writer window is
-    * gone. A filesystem refusing setTimes degrades to the wall-clock
-    * stamp this method replaced (NonFatal: object stores and viewfs
-    * wrappers throw UnsupportedOperationException, not IOException —
-    * either way the JSON body still carries the exact specVersion).
-    * Cross-writer: the counter is maxed against the version already
-    * IN the file before minting, so two managers that both last
-    * observed version N can no longer both mint N+1 — the second
-    * writer reads the first's N+1 and mints N+2, keeping a third
-    * observer's (mtime, length) stamp distinguishing. (Two writers
-    * racing INSIDE this read-then-write window can still tie; their
-    * enactments were already serialized by the execution lock.) */
+    * file's modification time: the (mtime, length) stamp
+    * [[reconcileSpecs]]'s listing already pays for becomes an EXACT
+    * version compare, closing the blind spot where two writes inside
+    * one wall-clock mtime granule that leave the file the same length
+    * were invisible until a later write moved the stamp.
+    * Equality-compared only — nothing anywhere reads a spec file's
+    * mtime as a wall-clock time. A filesystem refusing setTimes
+    * degrades to the wall-clock stamp (the JSON body still carries the
+    * exact specVersion). Cross-writer: the counter is maxed against
+    * the version already IN the file before minting, so two managers
+    * that both last observed version N can no longer both mint N+1 —
+    * the second writer reads the first's N+1 and mints N+2, keeping a
+    * third observer's (mtime, length) stamp distinguishing. (Two
+    * writers racing INSIDE this read-then-write window can still tie;
+    * their enactments were already serialized by the execution lock.)
+    * The write is a [[DurableRecords.replace]]: a crash mid-write
+    * leaves the previous spec, never a torn one. */
   private def persistSpec(spec: PipelineSpec): Unit = {
-    val p = specFilePath(spec.name)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    val onDisk = try {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      PipelineSpecJson.versionOf(text)
-    } catch { case scala.util.control.NonFatal(_) => 0L }
+    val p = records.spec(spec.name)
+    val onDisk = specAt(p).toOption.fold(0L)(_._2)
     val v = specVersions.updateWith(spec.name)(o =>
       Some(math.max(o.getOrElse(0L), onDisk) + 1L)).get
-    val out = fs.create(p, true)
-    try out.write(PipelineSpecJson.writeVersioned(spec, v).getBytes("UTF-8"))
-    finally out.close()
-    try fs.setTimes(p, v, -1)
-    catch { case scala.util.control.NonFatal(_) => () }
+    records.replace(p,
+      PipelineSpecJson.writeVersioned(spec, v).getBytes("UTF-8"), mtime = v)
   }
 
-  private def removeSpecFile(name: String): Unit = {
-    val p = specFilePath(name)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, false): Unit
-  }
-
-  private def loadSpecs(): Unit = {
-    val dir = new Path(s"$checkpointRoot/specs")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir)) {
-      fs.listStatus(dir).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".json"))
-        .foreach { st =>
-          val in = fs.open(st.getPath)
-          val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          val spec = PipelineSpecJson.read(text)
-          val v = PipelineSpecJson.versionOf(text)
-          if (v > 0L) specVersions.put(spec.name, v): Unit
-          spec.status match {
-            // a mid-flight delete finishes now
-            case PipelineStatus.Deleting => fs.delete(st.getPath, false): Unit
-            // a restored spec has no live query: READY/STOPPING
-            // collapse to STOPPED (the query died with the previous
-            // process; resume() replays from the checkpoint)
-            case PipelineStatus.Ready | PipelineStatus.Stopping =>
-              specs.put(spec.name, spec.copy(status = PipelineStatus.Stopped))
-            case _ => specs.put(spec.name, spec)
-          }
-        }
+  /** THE spec read: the spec record at `p` with its specVersion (0
+    * when unversioned), tri-state. Every complete read advances this
+    * manager's [[specVersions]] watermark, so a later [[persistSpec]]
+    * continues the file's write sequence instead of restarting it. */
+  private def specAt(p: Path): DurableRecords.Read[(PipelineSpec, Long)] = {
+    val r = records.read(p) { bytes =>
+      val text = new String(bytes, "UTF-8")
+      Some((PipelineSpecJson.read(text), PipelineSpecJson.versionOf(text)))
     }
+    r.toOption.foreach { case (s, v) =>
+      if (v > 0L) specVersions.updateWith(s.name)(o =>
+        Some(math.max(o.getOrElse(0L), v))): Unit
+    }
+    r
   }
 
-  private def pausedStatePath(name: String) = new Path(s"$checkpointRoot/$name.paused")
+  /** `name`'s persisted spec — the durable truth every manager wrote
+    * through. Destructive callers act only on positive knowledge:
+    * Found, or Absent (the record positively does not exist); Unknown
+    * keeps their hands off. */
+  private def durableSpec(name: String): DurableRecords.Read[PipelineSpec] =
+    specAt(records.spec(name)).map(_._1)
 
-  private def persistPausedState(name: String): Unit = {
-    val p = pausedStatePath(name)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** THE spec snapshot: one listing, every record read once. Throws
+    * when the listing fails. */
+  private def specSnapshot(): Seq[DurableRecords.Read[PipelineSpec]] =
+    records.list(records.specDir, ".json").map(l => specAt(l.path).map(_._1))
+
+  /** Every persisted spec — or None when ANYTHING was unreadable
+    * (listing or any record): guards that forfeit or re-point holdback
+    * state keyed by "destination out of service" must not treat a
+    * throttled store as an empty one. Callers doing per-dir checks
+    * take this once, not once per dir. */
+  private def durableSpecs(): Option[Seq[PipelineSpec]] =
+    try {
+      val snap = specSnapshot()
+      if (!snap.exists(_.isInstanceOf[DurableRecords.Unknown]))
+        Some(snap.flatMap(_.toOption))
+      else {
+        // loud, because the consequence is invisible: while ANY record
+        // is unreadable, every forfeit/repair guard holds off
+        // (correctly — fail toward keep), so a PERMANENTLY torn record
+        // silently disables them all
+        Console.err.println(s"[graft] spec snapshot of $checkpointRoot has " +
+          "an unreadable record — holdback forfeit/repair suspended " +
+          "until it is fixed or removed")
+        None
+      }
+    } catch { case _: java.io.IOException => None }
+
+  private def loadSpecs(): Unit =
+    specSnapshot().foreach {
+      case DurableRecords.Found(spec) => spec.status match {
+        // a mid-flight delete finishes now
+        case PipelineStatus.Deleting => records.delete(records.spec(spec.name))
+        // a restored spec has no live query: READY/STOPPING collapse
+        // to STOPPED (the query died with the previous process;
+        // resume() replays from the checkpoint)
+        case PipelineStatus.Ready | PipelineStatus.Stopping =>
+          specs.put(spec.name, spec.copy(status = PipelineStatus.Stopped))
+        case _ => specs.put(spec.name, spec)
+      }
+      // a record no writer completed must not make every later
+      // manager on this root fail to construct
+      case DurableRecords.Unknown(_) =>
+        Console.err.println(s"[graft] unreadable spec record under " +
+          s"$checkpointRoot skipped at load")
+      case DurableRecords.Absent => ()
+    }
+
+  /** Pause-set record: the name, the partition column, then the
+    * paused values; removed once no value is paused. */
+  private def persistPausedState(name: String): Unit =
     pausedPartitions.get(name) match {
       case Some((pcol, values)) if values.nonEmpty =>
-        val out = fs.create(p, true)
-        try out.write((pcol +: values.toSeq.sorted).mkString("\n").getBytes("UTF-8"))
-        finally out.close()
-      case _ => fs.delete(p, false)
+        records.replace(records.paused(name),
+          DurableRecords.frame(name +: pcol +: values.toSeq.sorted))
+      case _ => records.delete(records.paused(name))
     }
-  }
 
-  private def loadPausedState(): Unit = {
-    val root = new Path(checkpointRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) {
-      fs.listStatus(root).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".paused"))
-        .foreach { s =>
-          val in = fs.open(s.getPath)
-          val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().toList finally in.close()
-          lines match {
-            case pcol :: values if values.nonEmpty =>
-              pausedPartitions.put(s.getPath.getName.stripSuffix(".paused"),
-                (pcol, values.toSet))
-            case _ => ()
-          }
-        }
+  private def loadPausedState(): Unit =
+    records.list(records.rootDir, ".paused").foreach { l =>
+      records.fields(l.path) match {
+        case DurableRecords.Found(name +: pcol +: values) if values.nonEmpty =>
+          pausedPartitions.put(name, (pcol, values.toSet)): Unit
+        case DurableRecords.Found(_) | DurableRecords.Absent => ()
+        // a torn record, or one in the unframed pre-store format: its
+        // partitions deliver again, so say so
+        case DurableRecords.Unknown(_) =>
+          Console.err.println(s"[graft] unreadable pause record ${l.path} " +
+            "skipped at load: its paused partitions are not restored")
+      }
     }
-  }
+
   // The transform/trigger of each group prefix's LAST startGroup call
   // — what a membership-change reassignment restarts with (the
   // reference's Coordinator re-runs assignment with the persisted
@@ -728,7 +708,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     // instance held is now an orphan that the next live acquirer
     // reclaims — deliberately NOT deleting the lock files themselves,
     // so the q64 crash-failover path exercises orphan reclamation.
-    rootFs.delete(instancePath(instanceId), false): Unit
+    records.delete(records.instance(instanceId))
   }
 
   /** Validate + authorize + dedup + register (the "create" DDL).
@@ -737,9 +717,11 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
   def create(spec: PipelineSpec, owner: String = "anonymous"): PipelineSpec = {
     requireNotDemoted()
     require(spec.name.nonEmpty, "pipeline name required")
-    require(spec.name != PipelineManager.ReservedNamespace,
-      s"pipeline name '${PipelineManager.ReservedNamespace}' is reserved " +
-        "(it is the epoch namespace of anonymous library writers)")
+    // "default" is the epoch namespace of anonymous library writers;
+    // the rest name top-level entries of the checkpoint root
+    require(!DurableRecords.ReservedNames(PipelineManager.namespaceOf(spec.name)),
+      s"pipeline name '${spec.name}' is reserved " +
+        s"(${DurableRecords.ReservedNames.toSeq.sorted.mkString(", ")})")
     require(hooks.authorize(spec, owner), s"owner $owner not authorized for ${spec.name}")
     require(!specs.contains(spec.name), s"duplicate pipeline ${spec.name}")
     require(spec.sourceConnection.nonEmpty, "source connection required")
@@ -774,7 +756,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
         // Coordinator.createTopic): durable sinks get a real path.
         spec.copy(destinationConnection =
           if (spec.transport == "memory") s"dest-${spec.name}"
-          else s"$checkpointRoot/dest/${spec.name}")
+          else records.defaultDest(spec.name))
       case _ => spec
     }
     // A unique-source (or BYOT) stream starts its own group: task
@@ -838,7 +820,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
           catch {
             case e: Throwable =>
               specs.remove(spec.name)
-              try removeSpecFile(spec.name)
+              try records.delete(records.spec(spec.name))
               catch { case e2: Throwable => e.addSuppressed(e2) }
               // observers saw Ready at registration; tell them the
               // member is gone again (same signal delete() sends)
@@ -964,7 +946,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     // re-point through the empty-destination carry-over. The local
     // spec only fills in when the durable read fails — in which case
     // it is also the best available truth.
-    val baseline = readPersistedSpec(name).getOrElse(existing)
+    val baseline = durableSpec(name).toOption.getOrElse(existing)
     require(newSpec.name == name, "pipeline name is immutable")
     require(newSpec.sourceConnection.nonEmpty, "source connection required")
     // same authorize-before-mutate ordering as create (the reference
@@ -985,7 +967,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
       // streams into one sink. FAIL-CLOSED on an unreadable store:
       // rejecting is a retryable error; accepting a conflict is
       // silent data corruption.
-      val durable = readAllPersistedSpecs()
+      val durable = durableSpecs()
       require(durable.isDefined, "spec store unreadable; cannot " +
         s"validate destination ${newSpec.destinationConnection} for " +
         "conflicts — retry the update")
@@ -1037,7 +1019,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
       // group member is invisible in this manager's map), fail-closed
       // on an unreadable store — wrongly accepting a grouped source
       // re-point leaves a group startGroup can never run again
-      val durableForGroup = readAllPersistedSpecs()
+      val durableForGroup = durableSpecs()
       require(durableForGroup.isDefined, "spec store unreadable; " +
         s"cannot validate $name's task-group membership — retry")
       require(!(specs.values ++ durableForGroup.get).exists(s =>
@@ -1047,13 +1029,10 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
         s"pipeline $name belongs to task group '$prefix'; group " +
           "sources must stay consistent — delete and recreate to " +
           "re-point the source")
-      // FileNotFound inside lockOwner's exists-then-open pair means a
-      // concurrent release just freed the lock — that IS the free
-      // case, not an error; any other IO failure propagates (reading
-      // a hiccup as "free" could accept an update a live query makes
-      // wrong).
-      val o = try lockOwner(lockPath(name))
-        catch { case _: java.io.FileNotFoundException => "" }
+      // An absent lock (a concurrent release just freed it) IS the
+      // free case; an unreadable one propagates (reading a hiccup as
+      // "free" could accept an update a live query makes wrong).
+      val o = lockOwner(records.lock(name))
       require(o.isEmpty || (o != instanceId && !instanceLive(o)),
         s"pipeline $name is running or paused (execution lock held by " +
           s"${if (o == instanceId) "this manager" else o}); its source " +
@@ -1113,10 +1092,6 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
   // owner still delivers there, eroding the replay dedup they
   // provide. ----
 
-  private def reassignRequestDir = new Path(s"$checkpointRoot/reassign-requests")
-  private def reassignRequestPath(name: String) =
-    new Path(reassignRequestDir, s"${PipelineManager.namespaceOf(name)}.req")
-
   /** The live manager (not this one) whose locks run `name`'s query,
     * if any — public so control planes (REST) can choose the routed
     * verb BEFORE acting, instead of unwinding a half-applied local
@@ -1130,8 +1105,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
         case ms => ms
       }
     memberNames.iterator
-      .map(n => try lockOwner(lockPath(n))
-        catch { case _: java.io.FileNotFoundException => "" })
+      .map(n => lockOwner(records.lock(n)))
       .find(o => o.nonEmpty && o != instanceId && instanceLive(o))
   }
 
@@ -1149,125 +1123,14 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * state move; intermediate destinations never received a lock
     * owner's delivery). */
   private def writeReassignRequest(name: String, prevDest: String): Unit = {
-    rootFs.mkdirs(reassignRequestDir)
+    val p = records.reassign(name)
     // keep the FIRST request's previous destination across overwrites:
     // the owner has been running against it the whole time
-    val existing = readReassignRequest(name)
-    val oldDest = existing.map(_._2).filter(_.nonEmpty).getOrElse(prevDest)
-    val out = rootFs.create(reassignRequestPath(name), true)
-    try out.write(s"$name\n$instanceId\n$oldDest\n${PipelineManager.FrameEnd}"
-      .getBytes("UTF-8"))
-    finally out.close()
+    val oldDest = records.fields(p).toOption
+      .collect { case Seq(_, _, old) if old.nonEmpty => old }
+      .getOrElse(prevDest)
+    records.replace(p, DurableRecords.frame(Seq(name, instanceId, oldDest)))
   }
-
-  /** (name, previousDestination) parsed from a request file — the
-    * ONE spelling of the wire format, shared by the writer's
-    * keep-first-prev read and the consumer's listing walk. Tri-state,
-    * like every destructive guard here: `Some(Some(req))` = a
-    * COMPLETE frame (the [[PipelineManager.FrameEnd]] sentinel closes
-    * it, so EVERY truncation point reads as torn — without it a
-    * mid-write read could hand the consumer a destination PREFIX and
-    * move state against a path that never existed);
-    * `Some(None)` = read whole but torn (a crashed writer's partial —
-    * the consumer GCs it after the create-to-write grace);
-    * `None` = IO failure (transient; judge on a later tick). */
-  private def parseReassignRequest(p: Path): Option[Option[(String, String)]] =
-    try {
-      // no exists() pre-check: absent-file opens throw
-      // FileNotFoundException ⊂ IOException → None, same semantics
-      // one RPC cheaper (the consumer walks paths fresh from a
-      // listing anyway)
-      val in = rootFs.open(p)
-      val parts = try new String(in.readAllBytes(), "UTF-8").split("\n", 4)
-        finally in.close()
-      Some(
-        if (parts.length == 4 && parts(3) == PipelineManager.FrameEnd &&
-            parts(0).nonEmpty)
-          Some((parts(0), parts(2)))
-        else None)
-    } catch { case _: java.io.IOException => None }
-
-  private def readReassignRequest(name: String): Option[(String, String)] =
-    parseReassignRequest(reassignRequestPath(name)).flatten
-
-  /** Tri-state owner lookup for the holdback churn guards: local map
-    * first (a hit costs nothing), then the shared durable store — a
-    * pipeline created by ANOTHER manager after this one's loadSpecs()
-    * is invisible locally, and a local-only lookup would misread a
-    * live peer's strand as a deleted owner's dir and drain it into
-    * the wrong stream. The three states matter because every caller
-    * makes a DESTRUCTIVE decision: `Some(Some(s))` = found,
-    * `Some(None)` = POSITIVELY absent (the spec file does not exist),
-    * `None` = unreadable (IO hiccup) — callers must fail toward
-    * "keep" on None, never toward forfeit/drain/restamp. */
-  /** Read-and-parse one spec file; throws on anything (the ONE
-    * spelling of the read — each caller wraps its own error policy).
-    * Every successful read also advances this manager's
-    * [[specVersions]] watermark, so a later [[persistSpec]] continues
-    * the file's write sequence instead of restarting it. */
-  private def readSpecFile(p: Path): PipelineSpec = readVersionedSpecFile(p)._1
-
-  /** [[readSpecFile]] plus the file's specVersion (0 when unversioned). */
-  private def readVersionedSpecFile(p: Path): (PipelineSpec, Long) = {
-    val in = rootFs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val spec = PipelineSpecJson.read(text)
-    val v = PipelineSpecJson.versionOf(text)
-    if (v > 0L) specVersions.updateWith(spec.name)(o =>
-      Some(math.max(o.getOrElse(0L), v))): Unit
-    (spec, v)
-  }
-
-  private def specAnywhereKnown(name: String): Option[Option[PipelineSpec]] =
-    specs.get(name) match {
-      case Some(s) => Some(Some(s))
-      case None => specDurablyKnown(name)
-    }
-
-  /** Durable-FIRST tri-state lookup for control-plane guards whose
-    * local map may itself be stale (restamp and repair can run on
-    * whichever manager took the verb, long after a peer re-pointed
-    * the owner): the persisted spec is the truth every manager wrote
-    * through, so a durable hit outranks local memory; an unreadable
-    * store is `None` and the destructive caller keeps its hands off
-    * rather than acting on a possibly-stale local view. */
-  private def specDurablyKnown(name: String): Option[Option[PipelineSpec]] =
-    try {
-      val p = specFilePath(name)
-      if (!rootFs.exists(p)) Some(None)
-      else Some(Some(readSpecFile(p)))
-    } catch { case _: Exception => None }
-
-  /** Every persisted spec, read in ONE pass — or None when ANYTHING
-    * was unreadable (listing or any file): guards that forfeit or
-    * re-point holdback state keyed by "destination out of service"
-    * must not treat a throttled store as an empty one. Callers doing
-    * per-dir checks take this snapshot once, not once per dir. */
-  private def readAllPersistedSpecs(): Option[Seq[PipelineSpec]] =
-    try {
-      val dir = new Path(s"$checkpointRoot/specs")
-      if (!rootFs.exists(dir)) Some(Nil)
-      else {
-        val parsed = rootFs.listStatus(dir).toSeq
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".json"))
-          .map { st =>
-            try Some(readSpecFile(st.getPath))
-            catch {
-              case _: Exception =>
-                // loud, because the consequence is invisible: while
-                // ANY file is unreadable, every forfeit/repair guard
-                // holds off (correctly — fail toward keep), so a
-                // PERMANENTLY torn file silently disables them all
-                Console.err.println(s"[graft] spec snapshot: unreadable " +
-                  s"${st.getPath} — holdback forfeit/repair suspended " +
-                  "until it is fixed or removed")
-                None
-            }
-          }
-        if (parsed.contains(None)) None else Some(parsed.flatten)
-      }
-    } catch { case _: Exception => None }
 
   /** Is `dest` POSITIVELY out of service — no local spec and a fully
     * readable durable snapshot with no match? Unreadable → false
@@ -1279,95 +1142,51 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     !specs.values.exists(_.destinationConnection == dest) &&
       durable.exists(!_.exists(_.destinationConnection == dest))
 
-  private def readPersistedSpec(name: String): Option[PipelineSpec] =
-    // catches EVERYTHING (exists-hiccups, torn-file parse errors):
-    // every caller documents "fall back to the local view when the
-    // durable read fails", and a propagating parse exception would
-    // abort the caller instead
-    try {
-      val p = specFilePath(name)
-      if (!rootFs.exists(p)) None else Some(readSpecFile(p))
-    } catch { case _: Exception => None }
+  /** Positive knowledge for the holdback churn guards: `owner`'s spec
+    * points at `dest`, or `owner` is positively gone. Unreadable →
+    * false — callers fail toward "keep", never toward
+    * forfeit/drain/restamp. */
+  private def deliversToOrGone(owner: DurableRecords.Read[PipelineSpec],
+      dest: String): Boolean = owner match {
+    case DurableRecords.Found(s) => s.destinationConnection == dest
+    case r => r == DurableRecords.Absent
+  }
 
   /** Consume pending reassign-requests this manager is entitled to
-    * act on: those for pipelines it knows whose queries no LIVE PEER
-    * owns (normally: this manager holds the lock; after an owner
-    * crash: whichever live manager's tick sees the orphan first —
-    * every step below is idempotent). For each, the persisted spec
+    * act on ([[consumeRequests]]). For each, the persisted spec
     * (written by the requestor's update()) replaces the in-memory
     * one — status kept from the LOCAL view, which is what the running
     * query truthfully reflects — and the standard update-reassign
     * discipline runs ([[reassignUpdatedMember]]: stop → move old-dest
     * state → restart from the shared checkpoint, exactly-once across
-    * the restart). The request is deleted whether the restart
-    * succeeds or not — the update stands either way, exactly as on
-    * the local path (a failed restart leaves truthful Stopped
-    * members). Wired to the heartbeat tick; public so deployments
-    * with their own timers (and gates) can drive it directly.
-    * Returns the number of requests consumed. */
-  def consumeReassignRequests(): Int = {
-    requireNotDemoted()
-    if (!rootFs.exists(reassignRequestDir)) return 0
-    var consumed = 0
-    rootFs.listStatus(reassignRequestDir).toSeq.filter(_.isFile).foreach { st =>
-      val tri = parseReassignRequest(st.getPath)
-      // read whole but torn = a crashed writer's partial frame. The
-      // recorded previous destination is LOST with the crash; GC the
-      // partial after the create-to-write grace (younger may still be
-      // mid-write) — the spec change it carried already stands
-      // durably, and a stamp stranded by the skipped state move heals
-      // at the member's next drain (repairStrandedHoldbackStamps).
-      if (tri.contains(None) &&
-          System.currentTimeMillis() - st.getModificationTime >
-            PipelineManager.AcquireGraceMs)
-        rootFs.delete(st.getPath, false): Unit
-      val parsed = tri.flatten
-      val name = parsed.map(_._1).getOrElse("")
-      if (name.nonEmpty) specs.get(name) match {
-        case None =>
-          // not this manager's pipeline to judge — unless the spec
-          // itself is gone (deleted mid-flight): then the request is
-          // stale for everyone
-          if (readPersistedSpec(name).isEmpty)
-            rootFs.delete(st.getPath, false): Unit
-        case Some(local) if liveForeignExecutor(name).isEmpty =>
-          readPersistedSpec(name) match {
-            case None => rootFs.delete(st.getPath, false): Unit
-            case Some(persisted) =>
-              // `previous` must describe what the OWNER's query was
-              // delivering with. The request RECORDS that destination
-              // at request time (kept across overwrites), and it
-              // always wins over this manager's map: the requestor's
-              // map already carries the new spec (a local read would
-              // no-op the consume), and a third manager's map can be
-              // arbitrarily stale (a local read would move state from
-              // a destination the owner left long ago, stranding the
-              // true old destination's holdback). The local spec only
-              // fills in for a request that predates the field.
-              val recordedOld = parsed.map(_._2).getOrElse("")
-              val previous =
-                if (recordedOld.nonEmpty)
-                  local.copy(destinationConnection = recordedOld)
-                else local
-              val updated = persisted.copy(status = previous.status)
-              specs.put(name, updated)
-              val destChanged = updated.destinationConnection !=
-                previous.destinationConnection
-              try {
-                if (destChanged) provisionDestination(updated)
-                if (destChanged ||
-                    deliveryRelevantChange(updated, previous))
-                  reassignUpdatedMember(updated, previous)
-              } finally {
-                rootFs.delete(st.getPath, false): Unit
-                consumed += 1
-              }
-          }
-        case _ => () // a live peer owns it; their tick consumes
-      }
+    * the restart). The update stands whether the restart succeeds or
+    * not, exactly as on the local path (a failed restart leaves
+    * truthful Stopped members). Wired to the heartbeat tick; public so
+    * deployments with their own timers (and gates) can drive it
+    * directly. Returns the number of requests consumed. */
+  def consumeReassignRequests(): Int =
+    consumeRequests(records.reassignDir, arity = 3) { (req, local, persisted) =>
+      // `previous` must describe what the OWNER's query was delivering
+      // with. The request RECORDS that destination at request time
+      // (kept across overwrites), and it always wins over this
+      // manager's map: the requestor's map already carries the new
+      // spec (a local read would no-op the consume), and a third
+      // manager's map can be arbitrarily stale (a local read would move
+      // state from a destination the owner left long ago, stranding the
+      // true old destination's holdback). The local spec only fills in
+      // for a request that predates the field.
+      val recordedOld = req(2)
+      val previous =
+        if (recordedOld.nonEmpty) local.copy(destinationConnection = recordedOld)
+        else local
+      val updated = persisted.copy(status = previous.status)
+      specs.put(req.head, updated)
+      val destChanged = updated.destinationConnection !=
+        previous.destinationConnection
+      if (destChanged) provisionDestination(updated)
+      if (destChanged || deliveryRelevantChange(updated, previous))
+        reassignUpdatedMember(updated, previous)
     }
-    consumed
-  }
 
   // ---- Cross-manager lifecycle routing (q77–q79): pause / stop /
   // resume / delete of a pipeline whose query runs under a DIFFERENT
@@ -1398,8 +1217,6 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
   // persisted spec, re-read at consume time — nothing is lost with
   // the file overwritten. ----
 
-  private def lifecycleRequestDir = new Path(s"$checkpointRoot/lifecycle-requests")
-
   private val lifecycleSeq = new java.util.concurrent.atomic.AtomicLong()
 
   /** Durable lifecycle-request: name (the file name is uniqueness
@@ -1408,160 +1225,99 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * from one requestor lands as distinct files whose zero-padded
     * sequence (within the requestor's prefix) preserves issue order;
     * cross-requestor order follows file modification time, the same
-    * approximation any two uncoordinated writers already have. */
+    * approximation any two uncoordinated writers already have. The
+    * create advances the sequence past any collision: a RESTARTED
+    * manager's in-memory sequence starts over, and an overwriting
+    * create would destroy a predecessor's still-pending request under
+    * the same name. */
   private def writeLifecycleRequest(name: String, verb: String,
       force: Boolean): Unit = {
-    rootFs.mkdirs(lifecycleRequestDir)
-    // exclusive create, advancing the sequence past any collision: a
-    // RESTARTED manager's in-memory sequence starts over, and an
-    // overwriting create would destroy a predecessor's still-pending
-    // request under the same name. ONLY the create call itself may
-    // read an exception as a collision — a failure AFTER a successful
-    // create (disk full mid-write) must propagate, not loop forever
-    // spawning torn files; the partial file is best-effort removed so
-    // it cannot linger unparseable in the queue.
-    var written = false
-    while (!written) {
-      val file = s"${PipelineManager.namespaceOf(name)}." +
-        s"${PipelineManager.namespaceOf(instanceId)}." +
-        f"${lifecycleSeq.getAndIncrement()}%012d.req"
-      val p = new Path(lifecycleRequestDir, file)
-      val created =
-        try Some(rootFs.create(p, false))
-        catch {
-          // both spellings of the exclusive-create collision; any
-          // OTHER create failure (permissions, quota) propagates —
-          // retrying it with the next sequence would loop forever
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException => None
-          case e: java.io.IOException if rootFs.exists(p) => None
-        }
-      created.foreach { out =>
-        try {
-          try out.write(
-            s"$name\n$instanceId\n$verb\n$force\n${PipelineManager.FrameEnd}"
-              .getBytes("UTF-8"))
-          finally out.close()
-        } catch {
-          case e: Throwable =>
-            try rootFs.delete(p, false): Unit
-            catch { case e2: Throwable => e.addSuppressed(e2) }
-            throw e
-        }
-        written = true
-      }
-    }
+    val bytes = DurableRecords.frame(Seq(name, instanceId, verb, force.toString))
+    while (!records.createExclusive(
+        records.lifecycle(name, instanceId, lifecycleSeq.getAndIncrement()), bytes)) ()
   }
 
-  /** (name, verb, force) parsed from a request file — the ONE
-    * spelling of the wire format. Tri-state: `Some(Some(req))` = a
-    * COMPLETE frame (closed by the [[PipelineManager.FrameEnd]]
-    * sentinel, so EVERY truncation point reads as torn — without it a
-    * frame cut inside the force line parsed as force=false and a
-    * routed force-verb silently narrowed its scope);
-    * `Some(None)` = read whole but torn (a writer crashed between
-    * create and write — its own failure path deletes partials, so
-    * only a hard crash leaves one; the consumer GCs it after the
-    * create-to-write grace instead of re-parsing it every tick
-    * forever); `None` = IO failure (transient; retried whole on a
-    * later tick). DELIBERATE: a pre-sentinel writer's 4-line frame
-    * also reads as torn and is GC'd — accepting sentinel-less frames
-    * by part count would reopen the truncation hole the sentinel
-    * closed (a frame cut exactly after the force line is
-    * indistinguishable from a legacy frame). Mixed-version rolling
-    * restarts over one checkpoint root must drain the request queue
-    * before upgrading writers; in-flight verbs are re-issuable, the
-    * spec store (the authority) is unaffected. */
-  private def parseLifecycleRequest(p: Path)
-      : Option[Option[(String, String, Boolean)]] =
-    try {
-      val in = rootFs.open(p)
-      val parts = try new String(in.readAllBytes(), "UTF-8").split("\n", 5)
-        finally in.close()
-      Some(
-        if (parts.length == 5 && parts(4) == PipelineManager.FrameEnd &&
-            parts(0).nonEmpty && parts(2).nonEmpty)
-          Some((parts(0), parts(2), parts(3) == "true"))
-        else None)
-    } catch { case _: java.io.IOException => None }
-
   /** Consume pending lifecycle-requests this manager is entitled to
-    * act on — the same entitlement rule as
-    * [[consumeReassignRequests]]: pipelines it knows whose queries no
-    * LIVE PEER owns (normally the owner; after an owner crash,
-    * whichever live manager's tick sees the orphan first — every verb
-    * body is idempotent). Requests enact in WRITE ORDER (mod-time,
-    * then file name — intra-requestor bursts carry an exact sequence
-    * in the name), so "pause then stop" enacts both, finishing
-    * Stopped. Enactment runs the very same local verb core a direct
-    * call runs, with locks this manager actually holds; the request
-    * is deleted whether the enactment succeeds or not — exactly the
-    * reassign-request's the-update-stands discipline (a failed
-    * group-restart inside delete leaves truthful Stopped survivors,
-    * and the deletion itself completed). A resume-request restarts
-    * from the remembered run when this manager has one, else from
-    * the spec's CATALOG transform ([[catalogRun]], q81 — how a resume
-    * survives the owner's crash: the spec is data any manager can
-    * materialize); only when NEITHER exists is it dropped LOUDLY,
+    * act on ([[consumeRequests]]), in WRITE ORDER, so "pause then
+    * stop" enacts both, finishing Stopped. Enactment runs the very
+    * same local verb core a direct call runs, with locks this manager
+    * actually holds; a failed enactment still consumes the request (a
+    * failed group-restart inside delete leaves truthful Stopped
+    * survivors, and the deletion itself completed). A resume-request
+    * restarts from the remembered run when this manager has one, else
+    * from the spec's CATALOG transform ([[catalogRun]], q81 — how a
+    * resume survives the owner's crash: the spec is data any manager
+    * can materialize); only when NEITHER exists is it dropped LOUDLY,
     * enacting nothing — resume locally with [[resume]]
     * (bring-your-own-transform) instead. Wired to the heartbeat tick
     * beside the reassign consume; public so deployments with their
     * own timers (and gates) can drive it directly. Returns the
     * number of requests consumed. */
-  def consumeLifecycleRequests(): Int = {
+  def consumeLifecycleRequests(): Int =
+    consumeRequests(records.lifecycleDir, arity = 4) { (req, _, _) =>
+      val (name, verb, force) = (req.head, req(2), req(3) == "true")
+      verb match {
+        case "pause" => pauseLocal(name, force)
+        case "stop" => stopLocal(name, force)
+        case "resume" =>
+          try resumeRemembered(name, force)
+          catch {
+            case e: IllegalStateException =>
+              Console.err.println(s"[graft] lifecycle-request " +
+                s"resume($name) dropped: ${e.getMessage}")
+          }
+        case "delete" => deleteLocal(name)
+        case other =>
+          Console.err.println(s"[graft] lifecycle-request " +
+            s"$other($name) dropped: unknown verb")
+      }
+    }
+
+  /** THE request-queue consumer behind [[consumeReassignRequests]] and
+    * [[consumeLifecycleRequests]]: enact, in write order (mod-time,
+    * then file name), every complete request (`arity` fields, the
+    * pipeline name first) this manager is entitled to act on —
+    * pipelines it knows whose queries no LIVE PEER owns (normally the
+    * owner; after an owner crash, whichever live manager's tick sees
+    * the orphan first — every enactment is idempotent). `enact`
+    * receives the request, the local spec and the persisted one; the
+    * request is deleted whether it succeeds or not.
+    *  - A request whose spec is POSITIVELY gone durably is stale for
+    *    everyone and dropped without enacting (enacting would
+    *    RESURRECT a deleted spec: pause/stop persist a status flip);
+    *    an unreadable spec store keeps it for a later tick — a read
+    *    failure must never drop the recorded intent.
+    *  - A torn frame (a crashed writer's partial) is GC'd once older
+    *    than the create-to-write grace (younger may still be
+    *    mid-write); an unreadable one is retried whole on a later
+    *    tick. */
+  private def consumeRequests(dir: Path, arity: Int)(
+      enact: (Seq[String], PipelineSpec, PipelineSpec) => Unit): Int = {
     requireNotDemoted()
-    if (!rootFs.exists(lifecycleRequestDir)) return 0
     var consumed = 0
-    rootFs.listStatus(lifecycleRequestDir).toSeq.filter(_.isFile)
-      .sortBy(st => (st.getModificationTime, st.getPath.getName))
-      .foreach { st =>
-      val tri = parseLifecycleRequest(st.getPath)
-      // a torn frame (crashed writer) is GC'd after the
-      // create-to-write grace — younger may still be mid-write
-      if (tri.contains(None) &&
-          System.currentTimeMillis() - st.getModificationTime >
-            PipelineManager.AcquireGraceMs)
-        rootFs.delete(st.getPath, false): Unit
-      tri.flatten.foreach { case (name, verb, force) =>
-        specs.get(name) match {
-          case None =>
-            // not this manager's pipeline to judge — unless the spec
-            // is POSITIVELY gone durably (deleted mid-flight; an
-            // unreadable store must not look like deletion): then the
-            // request is stale for everyone
-            if (specDurablyKnown(name).contains(None))
-              rootFs.delete(st.getPath, false): Unit
-          case Some(_) if liveForeignExecutor(name).isEmpty =>
-            specDurablyKnown(name) match {
-              case Some(None) =>
-                // the spec is POSITIVELY gone durably (deleted after
-                // the request was written) while THIS manager's map
-                // is stale: enacting would RESURRECT the deleted spec
-                // (pause/stop persist a status flip). Stale for
-                // everyone — drop without enacting.
-                rootFs.delete(st.getPath, false): Unit
-              case None => () // unreadable store: judge on a later tick
-              case Some(Some(_)) =>
-                try verb match {
-                  case "pause" => pauseLocal(name, force)
-                  case "stop" => stopLocal(name, force)
-                  case "resume" =>
-                    try resumeRemembered(name, force)
-                    catch {
-                      case e: IllegalStateException =>
-                        Console.err.println(s"[graft] lifecycle-request " +
-                          s"resume($name) dropped: ${e.getMessage}")
-                    }
-                  case "delete" => deleteLocal(name)
-                  case other =>
-                    Console.err.println(s"[graft] lifecycle-request " +
-                      s"$other($name) dropped: unknown verb")
-                } finally {
-                  rootFs.delete(st.getPath, false): Unit
-                  consumed += 1
-                }
-            }
-          case _ => () // a live peer owns it; their tick consumes
-        }
+    records.list(dir, ".req").sortBy(l => (l.mtime, l.path.getName)).foreach { l =>
+      records.fields(l.path).filter(f => f.length == arity && f.head.nonEmpty) match {
+        case DurableRecords.Unknown(true) =>
+          if (System.currentTimeMillis() - l.mtime > PipelineManager.AcquireGraceMs)
+            records.delete(l.path)
+        case DurableRecords.Found(req) =>
+          val name = req.head
+          specs.get(name) match {
+            case None =>
+              // not this manager's pipeline to judge — unless it is
+              // positively gone
+              if (durableSpec(name) == DurableRecords.Absent) records.delete(l.path)
+            case Some(local) if liveForeignExecutor(name).isEmpty =>
+              durableSpec(name) match {
+                case DurableRecords.Absent => records.delete(l.path)
+                case DurableRecords.Found(persisted) =>
+                  try enact(req, local, persisted)
+                  finally { records.delete(l.path); consumed += 1 }
+                case _ => () // unreadable store: judge on a later tick
+              }
+            case _ => () // a live peer owns it; their tick consumes
+          }
+        case _ => () // unreadable, or consumed meanwhile
       }
     }
     consumed
@@ -1613,33 +1369,25 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * this snapshot replaced). */
   private def snapshotLockOwners(): Option[Map[String, Option[String]]] =
     try {
-      val ldir = new Path(s"$checkpointRoot/locks")
-      if (!rootFs.exists(ldir)) Some(Map.empty)
-      else {
-        val now = System.currentTimeMillis()
-        val m = rootFs.listStatus(ldir).iterator
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".lock"))
-          .map { st =>
-            val ns = st.getPath.getName.stripSuffix(".lock")
-            val stamp = (st.getModificationTime, st.getLen)
-            val owner = lockContentSeen.get(ns) match {
-              case Some((s, o)) if s == stamp => Some(o)
-              case _ =>
-                try {
-                  val o = lockOwner(st.getPath)
-                  if (now - st.getModificationTime >
-                      PipelineManager.AcquireGraceMs)
-                    lockContentSeen.put(ns, (stamp, o)): Unit
-                  Some(o)
-                } catch { case _: java.io.IOException => None }
-            }
-            ns -> owner
-          }.toMap
-        // released locks leave the cache with their files
-        lockContentSeen.keys.foreach(k =>
-          if (!m.contains(k)) lockContentSeen.remove(k): Unit)
-        Some(m)
-      }
+      val now = System.currentTimeMillis()
+      val m = records.list(records.lockDir, ".lock").map { l =>
+        val stamp = (l.mtime, l.len)
+        val owner = lockContentSeen.get(l.key) match {
+          case Some((s, o)) if s == stamp => Some(o)
+          case _ =>
+            try {
+              val o = lockOwner(l.path)
+              if (now - l.mtime > PipelineManager.AcquireGraceMs)
+                lockContentSeen.put(l.key, (stamp, o)): Unit
+              Some(o)
+            } catch { case _: java.io.IOException => None }
+        }
+        l.key -> owner
+      }.toMap
+      // released locks leave the cache with their files
+      lockContentSeen.keys.foreach(k =>
+        if (!m.contains(k)) lockContentSeen.remove(k): Unit)
+      Some(m)
     } catch { case _: java.io.IOException => None }
 
   /** Eventually-consistent local-map hygiene for the multi-manager
@@ -1682,16 +1430,10 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * public for deployments with their own timers (and tests). */
   def reconcileSpecs(): Unit = {
     if (demotedFlag) return
-    val dir = new Path(s"$checkpointRoot/specs")
-    val listing: Seq[(String, (Long, Long))] =
-      try {
-        if (!rootFs.exists(dir)) Nil
-        else rootFs.listStatus(dir).toSeq
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".json"))
-          .map(s => (s.getPath.getName.stripSuffix(".json"),
-            (s.getModificationTime, s.getLen)))
-      } catch { case _: java.io.IOException => return } // judge later
-    val durableNs = listing.map(_._1).toSet
+    val listing =
+      try records.list(records.specDir, ".json")
+      catch { case _: java.io.IOException => return } // judge later
+    val durableNs = listing.map(_.key).toSet
     // The spec watermarks as the tick began (an O(1) TrieMap snapshot).
     // A watermark now past both that and a file's version means an
     // update or delete on this manager landed after the file was read:
@@ -1715,7 +1457,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
       case Some(m) =>
         m.getOrElse(PipelineManager.namespaceOf(name), Some(""))
       case None => // listing failed: the direct read this replaced
-        try Some(lockOwner(lockPath(name)))
+        try Some(lockOwner(records.lock(name)))
         catch { case _: java.io.IOException => None }
     }
     val byPrefix: Map[String, Seq[String]] =
@@ -1746,13 +1488,13 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     // touch (normally none)
     def ownedLocally(name: String): Boolean =
       Option(queries.get(name)).isDefined ||
-        (try lockOwner(lockPath(name)) == instanceId
+        (try lockOwner(records.lock(name)) == instanceId
          catch { case _: java.io.IOException => true }) // unsure → hands off
     // DISCOVER + REFRESH (gated on (mod-time, length) from the listing)
-    listing.foreach { case (ns, stamp) =>
-      if (!specModSeen.get(ns).contains(stamp)) {
-        try {
-          val (spec, v) = readVersionedSpecFile(new Path(dir, s"$ns.json"))
+    listing.foreach { l =>
+      val stamp = (l.mtime, l.len)
+      if (!specModSeen.get(l.key).contains(stamp)) try {
+        specAt(l.path).toOption.foreach { case (spec, v) =>
           // the read is stale: putting it would undo the newer write
           def superseded = specVersions.get(spec.name)
             .exists(_ > math.max(v, heldAtStart.getOrElse(spec.name, 0L)))
@@ -1778,11 +1520,11 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
                   specs.replace(spec.name, cur, restored): Unit
             }
           }
-          // recorded only after a successful read, so a torn/mid-write
-          // file is retried next tick
-          specModSeen.put(ns, stamp): Unit
-        } catch { case _: Exception => () } // torn/mid-write: next tick
-      }
+          // recorded only after a complete read, so a torn or
+          // unreadable record is retried next tick
+          specModSeen.put(l.key, stamp): Unit
+        }
+      } catch { case _: Exception => () } // unsure: next tick
     }
     // LIVENESS COLLAPSE, re-judged EVERY tick (an owner's death moves
     // no file, so it can never be mod-time-gated): an unowned local
@@ -1816,7 +1558,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     // runs FIRST so quiet ticks read no locks at all)
     specs.keys.foreach { n =>
       val absentNow = !durableNs.contains(PipelineManager.namespaceOf(n)) &&
-        specDurablyKnown(n).contains(None) // positive re-check, fresh RPC
+        durableSpec(n) == DurableRecords.Absent // positive re-check, fresh RPC
       if (absentNow && !ownedLocallySnap(n)) {
         if (sweepCandidates.remove(n)) {
           if (!ownedLocally(n)) { // act-time confirmation, direct read
@@ -2035,45 +1777,20 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     }
   }
 
-  /** The owner/destination stamp of a group-holdback dir, shared by
-    * every reader ([[replayGroupHoldback]], [[restampHoldbackDest]])
-    * so the format has one spelling. Falls back to the restamp's
-    * staged `.next` file when the meta itself is missing or torn —
-    * the crash window of [[restampHoldbackDest]]'s
-    * write-next → delete → rename sequence, in which `.next` is the
-    * completed authority. Read-only: never repairs (cross-JVM readers
-    * must not mutate under the owner). */
-  private def readHoldbackStamp(hbDir: Path): Option[(String, String)] = {
-    def parse(p: Path): Option[(String, String)] =
-      try {
-        val in = rootFs.open(p)
-        val parts =
-          try new String(in.readAllBytes(), "UTF-8").split("\n", 2)
-          finally in.close()
-        if (parts.length == 2 && parts(0).nonEmpty && parts(1).nonEmpty)
-          Some((parts(0), parts(1)))
-        else None
-      } catch { case _: java.io.IOException => None }
-    val meta = new Path(hbDir, PipelineManager.HoldbackMetaFile)
-    parse(meta).orElse(parse(
-      new Path(hbDir, PipelineManager.HoldbackMetaFile + ".next")))
-  }
-
   /** Re-point every durable group-holdback directory stamped for
     * `fromDest` at `toDest` (q73: the held epochs are the re-pointed
     * member's own undelivered data — they follow its stream). The
     * dir-owner namespace inside is untouched, so the eventual replay
     * still dedups by the owner's markers at the destination.
     *
-    * The stamp is an AUTHORITY file, so it is never overwritten in
+    * The stamp is an AUTHORITY record, so it is never overwritten in
     * place (a truncating rewrite's crash window would leave a torn
     * stamp no reader accepts and no writer repairs — the held epochs
-    * would strand forever): the new stamp is staged as `.next`, the
-    * old meta deleted, `.next` renamed into place. Every state is
-    * readable ([[readHoldbackStamp]]): meta valid → old or new stamp
-    * wins; meta gone → the completed `.next` is the stamp. Serialized
-    * against concurrent drains of BOTH destinations (stripes taken in
-    * ascending index order — two restamps can never deadlock).
+    * would strand forever): [[DurableRecords.replace]] stages it, and
+    * every intermediate state reads as the old or the new stamp.
+    * Serialized against concurrent drains of BOTH destinations
+    * (stripes taken in ascending index order — two restamps can never
+    * deadlock).
     *
     * Only dirs whose OWNER's current spec points at `toDest` move —
     * or whose owner no longer exists (a deleted past leader's dir
@@ -2097,38 +1814,16 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
         case _ => body // unreachable: 1 or 2 distinct stripes
       }
       locked {
-        val root = new Path(s"$checkpointRoot/group-holdback")
-        if (rootFs.exists(root))
-          rootFs.listStatus(root).toSeq.filter(_.isDirectory).foreach { d =>
-            readHoldbackStamp(d.getPath).foreach { case (owner, dest) =>
-              val meta = new Path(d.getPath,
-                PipelineManager.HoldbackMetaFile)
-              val next = new Path(d.getPath,
-                PipelineManager.HoldbackMetaFile + ".next")
-              // complete a crashed predecessor FIRST: meta absent with
-              // a parseable `.next` means `.next` IS the authority —
-              // promote it before anything stages over it (truncating
-              // the live authority in place would reopen the exact
-              // torn-write window this protocol closes)
-              if (!rootFs.exists(meta) && rootFs.exists(next) &&
-                  !rootFs.rename(next, meta))
-                sys.error(s"holdback stamp promotion failed under $d")
-              if (dest == fromDest &&
-                  // positive DURABLE knowledge only (this can run on
-                  // a manager whose own map is stale): found pointing
-                  // at toDest, or positively absent; unreadable →
-                  // leave the dir (repair re-runs at the next drain)
-                  specDurablyKnown(owner)
-                    .exists(_.forall(_.destinationConnection == toDest))) {
-                val out = rootFs.create(next, true)
-                try out.write(s"$owner\n$toDest".getBytes("UTF-8"))
-                finally out.close()
-                rootFs.delete(meta, false)
-                if (!rootFs.rename(next, meta))
-                  sys.error(s"holdback restamp rename failed under $d")
-              }
-            }
-          }
+        records.stamps().foreach {
+          case (d, Some((owner, `fromDest`)))
+              // positive DURABLE knowledge only (this can run on a
+              // manager whose own map is stale): found pointing at
+              // toDest, or positively absent; unreadable → leave the
+              // dir (repair re-runs at the next drain)
+              if deliversToOrGone(durableSpec(owner), toDest) =>
+            records.writeStamp(d, owner, toDest)
+          case _ => ()
+        }
       }
     }
 
@@ -2224,9 +1919,6 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     case other => throw new IllegalArgumentException(s"unknown connector $other")
   }
 
-  /** Where a pipeline's held-back (paused-partition) records live. */
-  private def holdbackPath(name: String): String = s"$checkpointRoot/$name.holdback"
-
   /**
    * Pause source partitions WITHOUT losing their records (F2/A4).
    *
@@ -2283,11 +1975,10 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * deliver-then-delete half of [[resumePartitions]]). */
   private def replayHoldback(name: String, values: Set[String]): Unit = {
     val spec = specs.getOrElse(name, sys.error(s"unknown pipeline $name"))
-    val hb = new Path(holdbackPath(name))
-    val fs = hb.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(hb)) {
+    val hb = records.holdback(name)
+    if (rootFs.exists(hb)) {
       val deliver = transportWriter(spec)
-      fs.listStatus(hb).toSeq
+      rootFs.listStatus(hb).toSeq
         .filter(_.getPath.getName.startsWith("__pp="))
         .foreach { st =>
           val value = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -2304,7 +1995,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
               // partition undercount forever
               updateCardinalitySketch(spec, held)
             } finally held.unpersist(): Unit
-            fs.delete(st.getPath, true)
+            rootFs.delete(st.getPath, true)
           }
         }
     }
@@ -2375,7 +2066,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
   /**
    * Start the query for a created spec with a transform chain.
    * Checkpointing (the reference's ZookeeperCheckpointProvider) is the
-   * built-in offset/commit log under `checkpointRoot/name`.
+   * built-in offset/commit log under [[DurableRecords.checkpoint]].
    *
    * Multi-tenant isolation (SURVEY §7.3 hard part 4): every pipeline's
    * jobs run in their own scheduler pool `graft-<name>` — the Spark
@@ -2447,7 +2138,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
       s"task group spans ${srcs.size} sources; group fan-out needs exactly one")
     val prefix = members.head.metadata
       .getOrElse(PipelineManager.TaskPrefixKey, members.head.name)
-    val groupCkpt = groupCheckpointPath(prefix)
+    val groupCkpt = records.groupCheckpoint(prefix)
     // Members that STAY stopped across this start (reassignment
     // restarts pass reAdmitStopped=false): their resources were
     // released, so this start must neither flip them Ready nor pull
@@ -2473,7 +2164,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
       // checkpoint would redeliver every epoch that member's
       // destination already received.
       if (!rootFs.exists(groupCkpt)) members.foreach { m =>
-        if (rootFs.exists(new Path(s"$checkpointRoot/${m.name}")))
+        if (rootFs.exists(records.checkpoint(m.name)))
           throw new IllegalStateException(s"pipeline ${m.name} last ran solo " +
             "(per-name checkpoint exists, group checkpoint does not); a group " +
             "start would redeliver its delivered epochs")
@@ -2545,11 +2236,11 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
                 ms.filter(_.metadata.contains(PipelineManager.SketchColumnKey))
                   .foreach(updateCardinalitySketch(_, batch))
               } else if (statuses.contains(PipelineStatus.Paused)) {
-                val hbDir = groupHoldbackPath(leader.name)
+                val hbDir = records.groupHoldback(leader.name)
                 stampHoldbackOwner(hbDir, leader.name,
                   leader.destinationConnection)
                 PipelineManager.epochAppend(batch,
-                  hbDir, epoch, leader.name): Unit
+                  hbDir.toString, epoch, leader.name): Unit
               }
             }
             finally { batch.unpersist(); () }
@@ -2617,9 +2308,6 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     }
   }
 
-  private def groupCheckpointPath(prefix: String): Path =
-    new Path(s"$checkpointRoot/group-${PipelineManager.namespaceOf(prefix)}")
-
   /** Has `name`'s task group ever run as ONE shared query? True once
     * the group checkpoint exists (only [[startGroup]] creates it, and
     * solo restarts are rejected from then on) — the state in which
@@ -2628,38 +2316,26 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
   private def isGroupRun(name: String): Boolean =
     specs.get(name).exists { spec =>
       val prefix = spec.metadata.getOrElse(PipelineManager.TaskPrefixKey, spec.name)
-      rootFs.exists(groupCheckpointPath(prefix))
+      rootFs.exists(records.groupCheckpoint(prefix))
     }
 
-  /** Durable holdback of a destination group inside a running group:
-    * epochs withheld while every member of the destination was paused,
-    * written with the SAME epoch markers as live delivery so replay is
-    * exactly-once. Keyed by the name of the dest-group leader AT
-    * APPEND TIME; each dir is stamped with its owner name and its
-    * destination (see [[stampHoldbackOwner]]) so replay can find and
-    * attribute it even after the leader changes or the owner is
-    * deleted. */
-  private def groupHoldbackPath(leaderName: String): String =
-    s"$checkpointRoot/group-holdback/${PipelineManager.namespaceOf(leaderName)}"
-
-  /** Stamp a holdback dir with `owner\ndestination` (idempotent).
-    * The owner names the epoch namespace inside the dir AND the
-    * destination-marker namespace its epochs replay under; the
-    * destination lets replay enumerate dirs by destination instead of
-    * by live member list, so a dir whose owner was deleted (or whose
-    * leadership moved to an earlier-named dedup'd member) still
-    * drains — "never dropped" survives membership churn. */
-  private def stampHoldbackOwner(dir: String, owner: String,
-      dest: String): Unit =
-    // write-once against the READABLE stamp, not bare meta existence:
-    // inside a crashed restamp's window (meta deleted, completed
-    // `.next` the authority) a bare-existence check would lay down a
-    // fresh OLD-destination stamp that outranks the restamped one
-    if (readHoldbackStamp(new Path(dir)).isEmpty) {
-      val meta = new Path(dir, PipelineManager.HoldbackMetaFile)
-      val out = rootFs.create(meta, true)
-      try out.write(s"$owner\n$dest".getBytes("UTF-8")) finally out.close()
-    }
+  /** Durable holdback of a destination group inside a running group
+    * ([[DurableRecords.groupHoldback]]): epochs withheld while every
+    * member of the destination was paused, written with the SAME epoch
+    * markers as live delivery so replay is exactly-once. Keyed by the
+    * name of the dest-group leader AT APPEND TIME and stamped (once)
+    * with that owner and its destination: the owner names the epoch
+    * namespace inside the dir AND the destination-marker namespace its
+    * epochs replay under; the destination lets replay enumerate dirs by
+    * destination instead of by live member list, so a dir whose owner
+    * was deleted (or whose leadership moved to an earlier-named
+    * dedup'd member) still drains — "never dropped" survives
+    * membership churn. Write-once against the READABLE stamp, not bare
+    * existence: inside a restamp's replace window the staged stamp is
+    * the authority, and a fresh OLD-destination stamp would outrank
+    * it. */
+  private def stampHoldbackOwner(dir: Path, owner: String, dest: String): Unit =
+    if (records.stamp(dir).isEmpty) records.writeStamp(dir, owner, dest)
 
   /** Deliver (then remove) every held-back epoch of a dest group, in
     * epoch order — for parquet transports each replayed epoch
@@ -2693,12 +2369,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     // restamp whose held epochs belong to THIS destination's stream
     repairStrandedHoldbackStamps(dest)
     PipelineManager.holdbackStripe(dest).synchronized {
-      val root = new Path(s"$checkpointRoot/group-holdback")
-      if (!rootFs.exists(root)) return
-      val dirs = rootFs.listStatus(root).toSeq.filter(_.isDirectory)
-        .map(_.getPath).sortBy(_.getName)
-      dirs.foreach { hb =>
-        val stamp = readHoldbackStamp(hb)
+      records.stamps().foreach {
         // The stamp must not be a STRAND awaiting repair: an owner
         // whose spec points at a DIFFERENT destination re-pointed
         // away with the restamp crashed (old stamp authoritative) —
@@ -2723,10 +2394,8 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
         // member delivering here was consumed by THIS manager (its
         // map saw it); the durable fallback covers owners it never
         // loaded.
-        if (stamp.exists(_._2 == dest) &&
-            stamp.forall(st => specAnywhereKnown(st._1)
-              .exists(_.forall(_.destinationConnection == dest)))) {
-          val owner = stamp.get._1
+        case (hb, Some((owner, `dest`))) if deliversToOrGone(specs.get(owner)
+            .fold(durableSpec(owner))(DurableRecords.Found(_)), dest) =>
           val ns = PipelineManager.namespaceOf(owner)
           val markers = new Path(hb, s"_graft_commits/$ns")
           if (rootFs.exists(markers)) {
@@ -2758,7 +2427,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
               rootFs.delete(new Path(markers, e.toString), false): Unit
             }
           }
-        }
+        case _ => ()
       }
     }
   }
@@ -2777,27 +2446,22 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * dir), so a strand heals at the latest when its new destination
     * next drains. */
   private def repairStrandedHoldbackStamps(dest: String): Unit = {
-    val root = new Path(s"$checkpointRoot/group-holdback")
-    if (rootFs.exists(root)) {
-      val dirs = rootFs.listStatus(root).toSeq.filter(_.isDirectory)
-      // ONE durable snapshot serves every dir's out-of-service check
-      // (an object store pays a real RPC per spec read), taken lazily
-      // — the common no-strand case never pays it
-      lazy val durable = readAllPersistedSpecs()
-      dirs.foreach { d =>
-        readHoldbackStamp(d.getPath).foreach { case (owner, stampDest) =>
-          if (stampDest != dest &&
-              // both checks answered from the DURABLE snapshot (this
-              // manager's map may be stale, and the snapshot is
-              // already paid for): positive knowledge only — an
-              // unreadable store must not look like a strand (the
-              // re-drive re-runs at every later drain)
-              durable.exists(_.exists(s => s.name == owner &&
-                s.destinationConnection == dest)) &&
-              destinationKnownUnserved(stampDest, durable))
-            restampHoldbackDest(stampDest, dest)
-        }
-      }
+    // ONE durable snapshot serves every dir's out-of-service check (an
+    // object store pays a real RPC per spec read), taken lazily — the
+    // common no-strand case never pays it
+    lazy val durable = durableSpecs()
+    records.stamps().foreach {
+      case (_, Some((owner, stampDest))) if stampDest != dest &&
+          // both checks answered from the DURABLE snapshot (this
+          // manager's map may be stale, and the snapshot is already
+          // paid for): positive knowledge only — an unreadable store
+          // must not look like a strand (the re-drive re-runs at every
+          // later drain)
+          durable.exists(_.exists(s => s.name == owner &&
+            s.destinationConnection == dest)) &&
+          destinationKnownUnserved(stampDest, durable) =>
+        restampHoldbackDest(stampDest, dest)
+      case _ => ()
     }
   }
 
@@ -2850,11 +2514,8 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     } catch { case e: Throwable => if (newlyLocked) releaseLock(name); throw e }
   }
 
-  private def sketchDir(name: String): String =
-    s"$checkpointRoot/sketch/${PipelineManager.namespaceOf(name)}"
-
   private def sketchHasData(name: String): Boolean = {
-    val p = new Path(sketchDir(name))
+    val p = new Path(records.sketch(name))
     rootFs.exists(p) && rootFs.listStatus(p).exists(st =>
       st.isFile && st.getPath.getName.startsWith("part-"))
   }
@@ -2868,9 +2529,9 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * pre-rename attempt whose epoch will replay: drop it. Idempotent;
     * callers hold [[PipelineManager.sketchStripe]]. */
   private def recoverSketch(name: String): Unit = {
-    val dir = new Path(sketchDir(name))
-    val aside = new Path(sketchDir(name) + ".old")
-    val staging = new Path(sketchDir(name) + ".staging")
+    val dir = new Path(records.sketch(name))
+    val aside = new Path(records.sketch(name) + ".old")
+    val staging = new Path(records.sketch(name) + ".staging")
     if (!rootFs.exists(dir)) {
       if (rootFs.exists(staging)) rootFs.rename(staging, dir): Unit
       else if (rootFs.exists(aside)) rootFs.rename(aside, dir): Unit
@@ -2891,9 +2552,9 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
   private def updateCardinalitySketch(spec: PipelineSpec,
       batch: DataFrame): Unit =
     spec.metadata.get(PipelineManager.SketchColumnKey).foreach { c =>
-      PipelineManager.sketchStripe(sketchDir(spec.name)).synchronized {
+      PipelineManager.sketchStripe(records.sketch(spec.name)).synchronized {
         recoverSketch(spec.name)
-        val dir = sketchDir(spec.name)
+        val dir = records.sketch(spec.name)
         val bregs = graft.sketch.Sketch.hllRegisters(
           batch.select(col(c)), col(c))
         val merged = (if (sketchHasData(spec.name))
@@ -2928,7 +2589,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * staging dir (whose write finished before the live dir was
     * renamed aside), else the set-aside previous table. */
   def cardinality(name: String): Option[(Long, Double)] =
-    PipelineManager.sketchStripe(sketchDir(name)).synchronized {
+    PipelineManager.sketchStripe(records.sketch(name)).synchronized {
       // requireSuccess: a CROSS-JVM reader can see the owner's staging
       // dir mid-write with only a subset of part files visible —
       // Spark's job-commit `_SUCCESS` marker is what proves the write
@@ -2958,9 +2619,9 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
           case _: org.apache.spark.sql.AnalysisException => None
           case _: org.apache.spark.SparkException => None
         }
-      tryRead(sketchDir(name))
-        .orElse(tryRead(sketchDir(name) + ".staging", requireSuccess = true))
-        .orElse(tryRead(sketchDir(name) + ".old"))
+      tryRead(records.sketch(name))
+        .orElse(tryRead(records.sketch(name) + ".staging", requireSuccess = true))
+        .orElse(tryRead(records.sketch(name) + ".old"))
     }
 
   /** Remove orphan atomic-write temp files (`.<name>.<uuid>.tmp`)
@@ -3002,17 +2663,17 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     // delivered. Fail loudly instead — the group restarts via
     // startGroup.
     val prefix = spec.metadata.getOrElse(PipelineManager.TaskPrefixKey, name)
-    val groupCkpt = groupCheckpointPath(prefix)
-    if (rootFs.exists(groupCkpt) &&
-        !rootFs.exists(new Path(s"$checkpointRoot/$name")))
+    val groupCkpt = records.groupCheckpoint(prefix)
+    val ckpt = records.checkpoint(name)
+    if (rootFs.exists(groupCkpt) && !rootFs.exists(ckpt))
       throw new IllegalStateException(s"pipeline $name last ran as part of " +
         s"task group '$prefix' (shared checkpoint); restart it with startGroup")
-    sweepCheckpointTemps(new Path(s"$checkpointRoot/$name"))
+    sweepCheckpointTemps(ckpt)
     val out = observed(transform(source(spec)))
     val writer = out.writeStream
       .queryName(name)
       .outputMode("append")
-      .option("checkpointLocation", s"$checkpointRoot/$name")
+      .option("checkpointLocation", ckpt.toString)
       .trigger(trigger)
     val q = spec.transport match {
       case "memory" =>
@@ -3022,7 +2683,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
         writer.format("memory").start()
       case _ =>
         val deliver = transportWriter(spec)
-        val hbPath = holdbackPath(name)
+        val hbPath = records.holdback(name).toString
         writer.foreachBatch { (batch: DataFrame, epoch: Long) =>
           pausedPartitions.get(name) match {
             case Some((pcol, values)) if values.nonEmpty =>
@@ -3286,7 +2947,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
    * datastream)`): the shared query keeps serving the siblings, and
    * once every member of the paused member's DESTINATION group is
    * paused, that destination's epochs divert to a durable holdback
-   * ([[groupHoldbackPath]]) that [[resume]] replays exactly-once —
+   * ([[DurableRecords.groupHoldback]]) that [[resume]] replays exactly-once —
    * never dropped, never redelivered. `force = true` extends the
    * pause to the whole group and stops the shared query (every
    * member flips Paused, matching the reference's force scope).
@@ -3691,9 +3352,9 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
       specVersions.updateWith(name)(o => Some(o.getOrElse(0L) + 1L)): Unit
       specs.updateWith(name)(_.map(_.copy(status = PipelineStatus.Deleting)))
       specs.remove(name)
-      PipelineManager.sketchStripe(sketchDir(name)).synchronized {
+      PipelineManager.sketchStripe(records.sketch(name)).synchronized {
         Seq("", ".old", ".staging").foreach(sfx =>
-          rootFs.delete(new Path(sketchDir(name) + sfx), true): Unit)
+          rootFs.delete(new Path(records.sketch(name) + sfx), true): Unit)
       }
       // Per-name durable state dies with the pipeline: a recreated
       // same-name pipeline must not inherit offsets, holdback, or a
@@ -3705,9 +3366,11 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
       // crash window), and (b) an observer that saw the spec vanish
       // may rely on the per-name state being gone too (a routed
       // delete's requestor polls exactly that).
-      rootFs.delete(new Path(s"$checkpointRoot/$name"), true): Unit
-      rootFs.delete(new Path(holdbackPath(name)), true): Unit
-      removeSpecFile(name)
+      rootFs.delete(records.checkpoint(name), true): Unit
+      rootFs.delete(records.holdback(name), true): Unit
+      records.delete(records.paused(name))
+      pausedPartitions.remove(name): Unit
+      records.delete(records.spec(name))
       // Group-holdback dirs whose stamped destination this deletion
       // takes OUT OF SERVICE: while survivors still serve it the dirs
       // stay (replay enumerates by destination, and an owner-missing
@@ -3723,27 +3386,21 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
       // too. Live owners pointing elsewhere (strands) are untouched:
       // their own destination's drain repairs them.
       locally {
-        val hbRoot = new Path(s"$checkpointRoot/group-holdback")
-        if (rootFs.exists(hbRoot)) {
-          val dirs = rootFs.listStatus(hbRoot).toSeq.filter(_.isDirectory)
-          // one durable snapshot for all dirs; forfeiting is
-          // DESTRUCTIVE, so both legs demand POSITIVE knowledge — an
-          // unreadable store keeps every dir (a live peer's held
-          // epochs must never be forfeited on an IO hiccup)
-          lazy val durable = readAllPersistedSpecs()
-          dirs.foreach { d =>
-            readHoldbackStamp(d.getPath).foreach { case (o, dst) =>
-              // owner-gone answered from the snapshot too (one read
-              // serves every dir, and it IS the durable truth)
-              if ((o == name || durable.exists(!_.exists(_.name == o))) &&
-                  destinationKnownUnserved(dst, durable))
-                rootFs.delete(d.getPath, true): Unit
-            }
-          }
+        // one durable snapshot for all dirs; forfeiting is
+        // DESTRUCTIVE, so both legs demand POSITIVE knowledge — an
+        // unreadable store keeps every dir (a live peer's held epochs
+        // must never be forfeited on an IO hiccup)
+        lazy val durable = durableSpecs()
+        records.stamps().foreach {
+          // owner-gone answered from the snapshot too (one read serves
+          // every dir, and it IS the durable truth)
+          case (d, Some((o, dst)))
+              if (o == name || durable.exists(!_.exists(_.name == o))) &&
+                destinationKnownUnserved(dst, durable) =>
+            rootFs.delete(d, true): Unit
+          case _ => ()
         }
       }
-      rootFs.delete(pausedStatePath(name), false): Unit
-      pausedPartitions.remove(name): Unit
       indexHealthProviders.remove(name): Unit
       soloRuns.remove(name): Unit
       // last member gone -> the remembered group run (and its captured
@@ -3824,12 +3481,6 @@ object PipelineManager {
     * acquire's create-to-write window, not an orphan (acquireLock). */
   val AcquireGraceMs: Long = 5000L
 
-  /** Closing sentinel line of every durable request frame
-    * (reassign/lifecycle requests): a frame without it was truncated
-    * by a crashed writer — EVERY truncation point reads as torn, so a
-    * partial can never parse as a (different) complete request. */
-  private[streaming] val FrameEnd: String = "."
-
   /** Fixed pool of monitors serializing IN-PROCESS lock operations —
     * the local-filesystem complement of HDFS's atomic exclusive
     * create (acquireLock's cross-process primitive). A fixed array
@@ -3859,9 +3510,10 @@ object PipelineManager {
   private[streaming] def holdbackStripe(path: String): Object =
     holdbackStripeAt(holdbackStripeIndex(path))
 
-  /** Name of the owner/destination stamp inside a group-holdback dir
-    * (`owner\ndestination`) — lets replay enumerate dirs by
-    * destination and attribute their epochs after membership churn. */
+  /** Name of the owner/destination stamp record inside a
+    * group-holdback dir ([[DurableRecords.stamp]]) — lets replay
+    * enumerate dirs by destination and attribute their epochs after
+    * membership churn. */
   private[streaming] val HoldbackMetaFile = "_graft_holdback_meta"
 
   /** Monitors for the cardinality-sketch swap — like

@@ -63,13 +63,14 @@ object ControlPlaneScaleProbe {
       val createS = (System.nanoTime() - t0) / 1e9
       // hold the locks as the live owner WOULD (start() does this;
       // 1000 real queries are not startable in a probe) — same file
-      // format as acquireLockUnsynced: content = instanceId
+      // format as acquireLockUnsynced: the framed instanceId
       fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/locks"))
       (0 until n).foreach { i =>
         val p = new org.apache.hadoop.fs.Path(
           s"$root/locks/${PipelineManager.namespaceOf(f"cp$i%05d")}.lock")
         val out = fs.create(p, false)
-        try out.write("cp-owner".getBytes("UTF-8")) finally out.close()
+        try out.write(graft.streaming.DurableRecords.frame(Seq("cp-owner")))
+        finally out.close()
       }
       println(s"[cpscale] n=$n managers=$nManagers create=${f(createS)}s")
 

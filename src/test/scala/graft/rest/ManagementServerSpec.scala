@@ -54,6 +54,12 @@ class ManagementServerSpec extends SparkTestBase {
           .stripMargin.replace("\n", "")))
       assert(created.statusCode() == 201, created.body())
       assert(created.body().contains("\"status\":\"Ready\""))
+      // a name that would alias a top-level entry of the checkpoint
+      // root is refused as a bad request
+      val reserved = req(base, "POST", "/pipelines", Some(
+        s"""{"name":"specs","connector":"parquet","transport":"parquet",
+           |"sourceConnection":"$srcDir"}""".stripMargin.replace("\n", "")))
+      assert(reserved.statusCode() == 400, reserved.body())
 
       // list + get
       assert(req(base, "GET", "/pipelines").body().contains("\"r1\""))

@@ -231,7 +231,7 @@ class GroupLifecycleFuzzSpec extends SparkTestBase {
                   if (fs.exists(next)) fs.delete(next, false): Unit
                   assert(fs.rename(meta, next))
                   val out = fs.create(meta, true)
-                  try out.write(s"$m\n$old".getBytes("UTF-8"))
+                  try out.write(DurableRecords.frame(Seq(m, old)))
                   finally out.close()
                 }
               }

@@ -304,33 +304,59 @@ class PipelineManagerSpec extends SparkTestBase {
   }
 
   test("pause set survives a manager restart; holdback replays across managers") {
-    val root = Files.createTempDirectory("graft-pause-dur-").toString
-    val srcDir = Files.createTempDirectory("graft-pause-dur-src-").toString
-    Seq((1L, "p0"), (2L, "p1")).toDF("k", "part")
-      .write.mode(SaveMode.Append).parquet(srcDir)
+    // "a/b" too: a name with a path separator must not nest its pause
+    // record where the restarted manager's listing never looks
+    Seq("pd", "a/b").foreach { name =>
+      val root = Files.createTempDirectory("graft-pause-dur-").toString
+      val srcDir = Files.createTempDirectory("graft-pause-dur-src-").toString
+      Seq((1L, "p0"), (2L, "p1")).toDF("k", "part")
+        .write.mode(SaveMode.Append).parquet(srcDir)
 
-    val pmA = new PipelineManager(spark, root)
-    val spec = pmA.create(PipelineSpec("pd", "parquet", "parquet", srcDir))
-    pmA.pausePartitions("pd", "part", Set("p1"), identity).awaitTermination()
-    pmA.close()
+      val pmA = new PipelineManager(spark, root)
+      val spec = pmA.create(PipelineSpec(name, "parquet", "parquet", srcDir))
+      pmA.pausePartitions(name, "part", Set("p1"), identity).awaitTermination()
+      pmA.close()
 
-    // a NEW manager on the same checkpoint root (driver restart)
-    // reloads the durable SPEC and pause set: no re-create needed,
-    // and fresh p1 data stays held back
-    val pmB = new PipelineManager(spark, root)
-    assert(pmB.get("pd").isDefined, "spec lost across restart")
-    assert(pmB.paused("pd") == Set("p1"), "pause set lost across restart")
-    Seq((3L, "p1"), (4L, "p0")).toDF("k", "part")
-      .write.mode(SaveMode.Append).parquet(srcDir)
-    pmB.start("pd", identity).awaitTermination()
-    assert(spark.read.parquet(spec.destinationConnection)
-      .select("k").as[Long].collect().toSet == Set(1L, 4L))
+      // a NEW manager on the same checkpoint root (driver restart)
+      // reloads the durable SPEC and pause set: no re-create needed,
+      // and fresh p1 data stays held back
+      val pmB = new PipelineManager(spark, root)
+      assert(pmB.get(name).isDefined, s"spec of $name lost across restart")
+      assert(pmB.paused(name) == Set("p1"), s"pause set of $name lost across restart")
+      Seq((3L, "p1"), (4L, "p0")).toDF("k", "part")
+        .write.mode(SaveMode.Append).parquet(srcDir)
+      pmB.start(name, identity).awaitTermination()
+      assert(spark.read.parquet(spec.destinationConnection)
+        .select("k").as[Long].collect().toSet == Set(1L, 4L))
 
-    // resume replays BOTH managers' held records — nothing was lost
-    pmB.resumePartitions("pd", Set("p1"), identity).awaitTermination()
-    assert(spark.read.parquet(spec.destinationConnection)
-      .select("k").as[Long].collect().toSet == Set(1L, 2L, 3L, 4L))
-    pmB.delete("pd")
+      // resume replays BOTH managers' held records — nothing was lost
+      pmB.resumePartitions(name, Set("p1"), identity).awaitTermination()
+      assert(spark.read.parquet(spec.destinationConnection)
+        .select("k").as[Long].collect().toSet == Set(1L, 2L, 3L, 4L))
+      pmB.delete(name)
+      pmB.close()
+    }
+  }
+
+  test("a name's per-pipeline state never aliases another pipeline's") {
+    // delete("a") once removed `<root>/a` recursively — the checkpoint
+    // of "a/b" with it — so a restarted "a/b" re-read its whole source
+    // as epoch 0, whose destination marker swallowed the new rows
+    val root = Files.createTempDirectory("graft-alias-").toString
+    val srcAb = Files.createTempDirectory("graft-alias-src-").toString
+    Seq((1L, "v1")).toDF("k", "v").write.mode(SaveMode.Append).parquet(srcAb)
+    val pm = new PipelineManager(spark, root)
+    val ab = pm.create(PipelineSpec("a/b", "parquet", "parquet", srcAb))
+    pm.create(PipelineSpec("a", "parquet", "parquet",
+      Files.createTempDirectory("graft-alias-src2-").toString))
+    pm.start("a/b", identity).awaitTermination()
+    pm.delete("a")
+    Seq((2L, "v2")).toDF("k", "v").write.mode(SaveMode.Append).parquet(srcAb)
+    pm.start("a/b", identity).awaitTermination()
+    assert(spark.read.parquet(ab.destinationConnection).select("k").as[Long]
+      .collect().toSet == Set(1L, 2L),
+      "deleting \"a\" must leave the checkpoint of \"a/b\" intact")
+    pm.close()
   }
 
   test("update rejects re-pointing at a destination another pipeline uses") {
@@ -766,10 +792,14 @@ class PipelineManagerSpec extends SparkTestBase {
     names.map(PipelineManager.namespaceOf).foreach(ns =>
       assert(ns.matches("[A-Za-z0-9_]+"), s"namespace $ns must be fs-safe"))
 
-    // the anonymous-writer namespace is reserved as a pipeline name
+    // the anonymous-writer namespace is reserved as a pipeline name,
+    // and so is every top-level entry of the checkpoint root a name
+    // would otherwise alias (delete("specs") would wipe every spec)
     val pm = newManager()
-    intercept[IllegalArgumentException] {
-      pm.create(PipelineSpec("default", "rate", "memory", "r"))
+    Seq("default", "specs", "locks", "instances", "sketch", "dest").foreach { n =>
+      intercept[IllegalArgumentException] {
+        pm.create(PipelineSpec(n, "rate", "memory", "r"))
+      }
     }
     // two punctuation-distinct pipelines on one destination stay apart
     val dest = Files.createTempDirectory("graft-eo3-").toString
@@ -1281,7 +1311,7 @@ class PipelineManagerSpec extends SparkTestBase {
       if (fsA.exists(meta)) {
         assert(fsA.rename(meta, next)) // the staged new stamp
         val out = fsA.create(meta, true) // the surviving OLD stamp
-        try out.write(s"pb\n$db".getBytes("UTF-8")) finally out.close()
+        try out.write(DurableRecords.frame(Seq("pb", db))) finally out.close()
       }
     }
     pm.resume("pb", identity).awaitTermination()
@@ -1326,7 +1356,7 @@ class PipelineManagerSpec extends SparkTestBase {
               PipelineManager.HoldbackMetaFile + ".next")
             assert(fsA.rename(meta, next))
             val out = fsA.create(meta, true)
-            try out.write(s"$owner\n$oldDest".getBytes("UTF-8"))
+            try out.write(DurableRecords.frame(Seq(owner, oldDest)))
             finally out.close()
           }
         }
@@ -2388,13 +2418,14 @@ class PipelineManagerSpec extends SparkTestBase {
       livenessLeaseMs = lease)
     try {
       mA.create(PipelineSpec("lsp", "parquet", "memory", "/src/lsp")): Unit
-      // simulate A running lsp: lock content = instance id (the
-      // acquireLockUnsynced format), spec persisted Ready
+      // simulate A running lsp: lock content = the instance id framed
+      // by the record codec (the acquireLockUnsynced format), spec
+      // persisted Ready
       val lockP = new org.apache.hadoop.fs.Path(
         s"$root/locks/${PipelineManager.namespaceOf("lsp")}.lock")
       fs.mkdirs(lockP.getParent)
       val o1 = fs.create(lockP, false)
-      try o1.write("lsA".getBytes("UTF-8")) finally o1.close()
+      try o1.write(DurableRecords.frame(Seq("lsA"))) finally o1.close()
       val mAspec = mA.get("lsp").get
       mA.update("lsp", mAspec.copy(metadata =
         mAspec.metadata + ("note" -> "r"))): Unit // persist a stamp move
@@ -2413,7 +2444,7 @@ class PipelineManagerSpec extends SparkTestBase {
       // from any stale evidence. Both layers are what this pins.
       fs.delete(lockP, false): Unit
       val o2 = fs.create(lockP, false)
-      try o2.write("lsB".getBytes("UTF-8")) finally o2.close()
+      try o2.write(DurableRecords.frame(Seq("lsB"))) finally o2.close()
       // a DIFFERENT aged mtime than the first write: same content
       // length, so the stamp's mtime component alone must carry the
       // cache invalidation
@@ -2489,16 +2520,7 @@ class PipelineManagerSpec extends SparkTestBase {
   test("a reconcile tick never puts back a spec read before a local update or delete") {
     val root = Files.createTempDirectory("graft-stale-put-").toString
     // only this manager's rootFs serves spec reads through the hook
-    val conf = spark.sparkContext.hadoopConfiguration
-    val saved = Seq("fs.file.impl", "fs.file.impl.disable.cache")
-      .map(k => k -> Option(conf.get(k)))
-    conf.set("fs.file.impl", classOf[SpecReadHookFs].getName)
-    conf.setBoolean("fs.file.impl.disable.cache", true)
-    val pm = try new PipelineManager(spark, root, instance = "S")
-      finally saved.foreach {
-        case (k, Some(v)) => conf.set(k, v)
-        case (k, None) => conf.unset(k)
-      }
+    val pm = SpecReadHookFs.manager(spark, root, "S")
     try {
       // update: the tick reads rev 1, then the update to rev 2 lands
       pm.create(PipelineSpec("u", "parquet", "memory", "/src/u",
@@ -2522,16 +2544,142 @@ class PipelineManagerSpec extends SparkTestBase {
       assert(pm.get("d").isEmpty)
     } finally pm.close()
   }
+
+  test("a write that dies mid-record leaves the previous spec and pause set") {
+    // the spec and the pause set were truncated in place: a crash
+    // mid-write left a torn spec that made every later manager on the
+    // root throw at construction, and a torn pause set that loaded as
+    // a partial set (delivering rows from paused partitions)
+    val root = Files.createTempDirectory("graft-torn-w-").toString
+    val srcDir = Files.createTempDirectory("graft-torn-w-src-").toString
+    Seq((1L, "p0"), (2L, "p1")).toDF("k", "part")
+      .write.mode(SaveMode.Append).parquet(srcDir)
+    def spec(rev: String) = PipelineSpec("tw", "parquet", "parquet", srcDir,
+      metadata = Map("rev" -> rev))
+    SpecReadHookFs.during(spark) {
+      val pm = new PipelineManager(spark, root)
+      try {
+        pm.create(spec("1"))
+        pm.pausePartitions("tw", "part", Set("p1"), identity).awaitTermination()
+        // each rewrite crashes after a few bytes have landed
+        SpecReadHookFs.armCreate("tw.json", 12)
+        intercept[java.io.IOException](pm.update("tw", spec("2")))
+        assert(SpecReadHookFs.fired.get, "the spec rewrite must have crashed")
+        SpecReadHookFs.armCreate("tw.paused", 6)
+        intercept[java.io.IOException](
+          pm.pausePartitions("tw", "part", Set("p0"), identity))
+        assert(SpecReadHookFs.fired.get, "the pause-set rewrite must have crashed")
+      } finally pm.close()
+    }
+    val pm2 = new PipelineManager(spark, root)
+    try {
+      assert(pm2.get("tw").flatMap(_.metadata.get("rev")).contains("1"),
+        "the previous spec must survive a crashed rewrite")
+      assert(pm2.paused("tw") == Set("p1"),
+        "the previous pause set must survive a crashed rewrite")
+    } finally pm2.close()
+  }
+
+  test("a reassign request survives a failed spec read and is enacted on the next tick") {
+    // the reassign consumer used to delete a pending request whenever
+    // the spec read failed, losing the recorded previous destination
+    val root = Files.createTempDirectory("graft-rsv-").toString
+    val srcDir = Files.createTempDirectory("graft-rsv-src-").toString
+    val dA = Files.createTempDirectory("graft-rsv-da-").toString + "/d"
+    val dB = Files.createTempDirectory("graft-rsv-db-").toString + "/d"
+    val dZ = Files.createTempDirectory("graft-rsv-dz-").toString + "/d"
+    Seq((1L, "e0")).toDF("k", "v").write.mode(SaveMode.Append).parquet(srcDir)
+    val mA = new PipelineManager(spark, root, instance = "rsvA")
+    mA.create(PipelineSpec("oa", "parquet", "parquet", srcDir,
+      destinationConnection = dA))
+    mA.create(PipelineSpec("ob", "parquet", "parquet", srcDir,
+      destinationConnection = dB))
+    mA.startGroup("oa", identity).awaitTermination()
+    mA.pause("ob")
+    Seq((2L, "e1")).toDF("k", "v").write.mode(SaveMode.Append).parquet(srcDir)
+    mA.startGroup("oa", identity).awaitTermination() // ob's e1 held at dB
+    val mB = SpecReadHookFs.manager(spark, root, "rsvB")
+    try {
+      mB.update("ob", PipelineSpec("ob", "parquet", "parquet", srcDir,
+        destinationConnection = dZ)): Unit
+      mA.close() // the owner is gone: the requestor may consume
+      val reqDir = new org.apache.hadoop.fs.Path(s"$root/reassign-requests")
+      val fs = reqDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def pending = fs.exists(reqDir) && fs.listStatus(reqDir).nonEmpty
+      SpecReadHookFs.arm("ob.json",
+        () => throw new java.io.IOException("injected spec read failure"))
+      assert(mB.consumeReassignRequests() == 0,
+        "nothing may be enacted while the spec is unreadable")
+      assert(SpecReadHookFs.fired.get, "the consume must have read ob's spec")
+      assert(pending, "a failed spec read must not drop the request")
+      assert(mB.consumeReassignRequests() == 1, "the next tick enacts it")
+      assert(!pending)
+      mB.resume("ob", identity).awaitTermination()
+      assert(spark.read.parquet(dZ).as[(Long, String)].collect().toSet ==
+        Set((2L, "e1")),
+        "the held epoch must follow the recorded old destination's re-point")
+    } finally mB.close()
+  }
+
+  test("a routed verb on a pipeline whose name holds a newline is enacted, not GC'd as torn") {
+    val root = Files.createTempDirectory("graft-nl-").toString
+    val name = "n\nl"
+    val mA = new PipelineManager(spark, root, instance = "nlA")
+    mA.create(PipelineSpec(name, "parquet", "memory", "/src/nl"))
+    assert(mA.acquireLock(name)) // mA owns the pipeline's execution
+    val mB = new PipelineManager(spark, root, instance = "nlB")
+    try {
+      mB.pause(name) // routed: a live peer holds the lock
+      assert(mA.consumeLifecycleRequests() == 1,
+        "the owner must parse and enact the routed pause")
+      assert(mA.get(name).exists(_.status == PipelineStatus.Paused))
+    } finally { mB.close(); mA.close() }
+  }
+
+  test("a spec read racing a replace's rename is never taken for an absent spec") {
+    // a replace deletes the spec, then renames its staged .next into
+    // place: a reader that misses the spec and then the .next (renamed
+    // in between) used to read "absent" — and the request consumer
+    // dropped a pending request unenacted
+    val root = Files.createTempDirectory("graft-rr-").toString
+    val mA = SpecReadHookFs.manager(spark, root, "rrA")
+    mA.create(PipelineSpec("rr", "parquet", "memory", "/src/rr"))
+    assert(mA.acquireLock("rr")) // mA owns the pipeline's execution
+    val mB = new PipelineManager(spark, root, instance = "rrB")
+    try {
+      mB.pause("rr") // routed: a live peer holds the lock
+      // the replace window: the spec deleted, its successor staged
+      val p = new org.apache.hadoop.fs.Path(s"$root/specs/rr.json")
+      val next = new org.apache.hadoop.fs.Path(s"$root/specs/rr.json.next")
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(fs.rename(p, next))
+      // the rename lands right after the reader misses the spec
+      SpecReadHookFs.arm("rr.json", () => assert(fs.rename(next, p)))
+      assert(mA.consumeLifecycleRequests() == 1,
+        "the request must be enacted, not dropped as for a deleted spec")
+      assert(SpecReadHookFs.fired.get, "the consume must have read rr's spec")
+      assert(mA.get("rr").exists(_.status == PipelineStatus.Paused))
+    } finally { mB.close(); mA.close() }
+  }
 }
 
-/** A local filesystem that runs one armed hook right after a spec
-  * file has been read and before the reader gets its bytes: it forces
-  * a write to land between a reconcile tick's read and its put. */
+/** A local filesystem with two one-shot faults. [[SpecReadHookFs.arm]]
+  * runs a hook right after a file has been read and before the reader
+  * gets its bytes: it forces a write to land between a reconcile
+  * tick's read and its put, or (a throwing hook) fails the open. On a
+  * file that does not exist, the hook runs between the miss and the
+  * reader seeing it.
+  * [[SpecReadHookFs.armCreate]] makes the next create of a file whose
+  * name starts with the armed prefix fail after that many bytes — the
+  * bytes written so far land, as in a writer crashing mid-write. */
 final class SpecReadHookFs extends org.apache.hadoop.fs.LocalFileSystem {
-  import org.apache.hadoop.fs.{FSDataInputStream, Path}
+  import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, Path}
   override def open(f: Path, bufferSize: Int): FSDataInputStream =
     SpecReadHookFs.take(f.getName) match {
       case None => super.open(f, bufferSize)
+      case Some(hook) if !pathToFile(f).exists() =>
+        hook()
+        throw new java.io.FileNotFoundException(s"File $f does not exist")
       case Some(hook) =>
         val copy = new Path(f.getParent.getParent, s"read-of-${f.getName}")
         Files.copy(pathToFile(f).toPath, pathToFile(copy).toPath,
@@ -2539,15 +2687,43 @@ final class SpecReadHookFs extends org.apache.hadoop.fs.LocalFileSystem {
         hook()
         super.open(copy, bufferSize)
     }
+
+  override def create(f: Path,
+      permission: org.apache.hadoop.fs.permission.FsPermission,
+      overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: org.apache.hadoop.util.Progressable)
+      : FSDataOutputStream = {
+    val out = super.create(f, permission, overwrite, bufferSize,
+      replication, blockSize, progress)
+    SpecReadHookFs.takeCreate(f.getName) match {
+      case None => out
+      case Some(n) =>
+        new FSDataOutputStream(new java.io.OutputStream {
+          private var left = n
+          override def write(b: Int): Unit = {
+            if (left == 0) throw new java.io.IOException(s"injected crash writing $f")
+            out.write(b)
+            left -= 1
+          }
+          override def close(): Unit = out.close()
+        }, null)
+    }
+  }
 }
 
 object SpecReadHookFs {
   private val armed =
     new java.util.concurrent.atomic.AtomicReference[(String, () => Unit)]
+  private val armedCreate =
+    new java.util.concurrent.atomic.AtomicReference[(String, Int)]
   val fired = new java.util.concurrent.atomic.AtomicBoolean
   def arm(file: String, hook: () => Unit): Unit = {
     fired.set(false)
     armed.set((file, hook))
+  }
+  def armCreate(prefix: String, bytes: Int): Unit = {
+    fired.set(false)
+    armedCreate.set((prefix, bytes))
   }
   private def take(file: String): Option[() => Unit] = {
     val a = armed.get
@@ -2556,4 +2732,32 @@ object SpecReadHookFs {
       Some(a._2)
     } else None
   }
+  private def takeCreate(file: String): Option[Int] = {
+    val a = armedCreate.get
+    if (a != null && file.startsWith(a._1) && armedCreate.compareAndSet(a, null)) {
+      fired.set(true)
+      Some(a._2)
+    } else None
+  }
+
+  /** Run `body` with every `file:` filesystem the session creates
+    * being a fresh [[SpecReadHookFs]]. */
+  def during[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val saved = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+      .map(k => k -> Option(conf.get(k)))
+    conf.set("fs.file.impl", classOf[SpecReadHookFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
+  /** A manager whose root filesystem is a [[SpecReadHookFs]] (the
+    * other managers and the test's own reads keep the plain one). */
+  def manager(spark: org.apache.spark.sql.SparkSession, root: String,
+      instance: String): PipelineManager =
+    during(spark)(new PipelineManager(spark, root, instance = instance))
 }
