@@ -3,13 +3,17 @@ package graft.queries
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.model.{PipelineSpec, PipelineStatus}
 import graft.operators.Translate
-import graft.streaming.{CdcMerge, PipelineHooks, PipelineLockedException, PipelineManager, TwsCounterProcessor, TwsSessionProcessor}
+import graft.streaming.{CdcMerge, DurableRecords, PipelineHooks, PipelineLockedException, PipelineManager, TwsCounterProcessor, TwsSessionProcessor}
 
 /**
  * Structured-Streaming forms of the data-plane operators, run
@@ -23,33 +27,176 @@ object StreamingQueries {
 
   private val runId = new AtomicInteger(0)
 
-  /** Append one source-bucket file and force a strictly-increasing
-    * modification time keyed by the bucket number, so a run that
-    * plans several buckets as maxFilesPerTrigger=1 epochs replays
-    * them in bucket order (the file source admits oldest-modtime
-    * first; same-millisecond writes would otherwise tie-break on an
-    * arbitrary uuid path). Shared by every bucketed ingest gate —
-    * even where verdicts are epoch-order-independent (s20), the
-    * pinned order keeps epoch attribution reproducible. `stamped`
-    * tracks files already assigned a time across calls. */
-  private def writeStampedBucket(srcDir: String,
-      stamped: scala.collection.mutable.Set[String], b: Int,
-      bucket: DataFrame): Unit = {
-    bucket.coalesce(1).write.mode("append").parquet(srcDir)
-    new java.io.File(srcDir).listFiles()
-      .filter(f => f.getName.startsWith("part-") && !stamped(f.getName))
-      .foreach { f =>
-        // A silently-failed stamp would make epoch replay order (and
-        // the gates' epoch attribution) arbitrary — fail loudly.
-        require(f.setLastModified(1700000000000L + b * 60000L),
-          s"setLastModified failed for ${f.getPath}; bucket order would be nondeterministic")
-        stamped += f.getName }
-  }
-
   /** Per-user running totals for s09 (top-level so the product encoder
     * derives cleanly). */
   case class CounterState(nEvents: Long, nBatches: Long)
   case class CounterUpdate(user_id: Long, n_events: Long, n_batches: Long)
+
+  /**
+   * One gate's scaffold, written once. Every scratch dir, pinned
+   * session conf, manager and cached frame a gate takes through its
+   * scope is released by [[gate]]'s one `finally`, after the body has
+   * detached its result (the body decides whether to
+   * `localCheckpoint`; key/value frames are local relations, so the
+   * scope adds no Spark action). Release runs in reverse order of
+   * acquisition, then deletes the dirs.
+   */
+  private[queries] final class GateScope(s: SparkSession, tag: String) {
+    private var undo = List.empty[() => Unit]
+    private var dirs = List.empty[String]
+    private def conf = s.sparkContext.hadoopConfiguration
+
+    /** A fresh `graft-<tag>-<role>-` temp dir. A path that must not
+      * exist yet (a pipeline destination) is a child of one. */
+    def dir(role: String): String = {
+      val d = Files.createTempDirectory(s"graft-$tag-$role-").toString
+      dirs ::= d
+      d
+    }
+
+    /** Set session confs for the gate: each is set back, or unset
+      * when it was unset, at release (`getOption` would report an
+      * unset key's default, and setting that back leaves it set). */
+    def pin(kvs: (String, Any)*): Unit = kvs.foreach { case (k, v) =>
+      val prior = s.conf.getAll.get(k)
+      onRelease(prior.fold(s.conf.unset(k))(s.conf.set(k, _)))
+      s.conf.set(k, v.toString)
+    }
+
+    def onRelease(f: => Unit): Unit = undo ::= (() => f)
+
+    /** `pm`, closed at release (close() is idempotent). */
+    def track(pm: PipelineManager): PipelineManager = {
+      onRelease(pm.close())
+      pm
+    }
+
+    /** `df` cached for the gate (the first action materializes it),
+      * its blocks released at release — persist, not localCheckpoint,
+      * so nothing outlives the gate. */
+    def persist(df: DataFrame): DataFrame = {
+      val p = df.persist()
+      onRelease(p.unpersist(false): Unit)
+      p
+    }
+
+    /** Drain `stream` under Trigger.AvailableNow from checkpoint
+      * `ckpt`, handing each micro-batch and its epoch to `onEpoch`. */
+    def availableNow(stream: DataFrame, ckpt: String, mode: String = "append")(
+        onEpoch: (DataFrame, Long) => Unit): Unit =
+      runAvailableNow(stream.writeStream.foreachBatch(onEpoch), ckpt, mode)
+
+    /** The epoch body that commits each micro-batch to `dir`. */
+    def appendTo(dir: String): (DataFrame, Long) => Unit =
+      (batch, epoch) => PipelineManager.epochAppend(batch, dir, epoch, tag): Unit
+
+    /** Commit one epoch's served rows to `dir`, tagged with the epoch
+      * — the one place an epoch becomes a plan literal. */
+    def serveTo(dir: String, epoch: Long, served: DataFrame): Unit =
+      PipelineManager.epochAppend(
+        served.withColumn("epoch", lit(epoch)).coalesce(1), dir, epoch, tag): Unit
+
+    /** A bucketed file source in a fresh `src` dir. */
+    def bucketSource(schema: StructType): BucketSource =
+      new BucketSource(s, dir("src"), schema)
+
+    /** The control-plane store of manager root `root`: its paths are
+      * the manager's own layout, never spelled by a gate. */
+    def records(root: String): DurableRecords =
+      new DurableRecords(new Path(root).getFileSystem(conf), root)
+
+    def exists(p: Path): Boolean = p.getFileSystem(conf).exists(p)
+
+    /** Committed epoch files at `dest` (epochAppend's rename contract). */
+    def committed(dest: String): Int = PipelineManager.committedFiles(dest, conf).size
+
+    def await(what: String)(cond: => Boolean): Unit = awaitCond(tag, what)(cond)
+
+    /** Wait until micro-batch `b` of the query checkpointed at `ckpt`
+      * (a [[records]] path) has committed and `also` holds. */
+    def awaitCommit(ckpt: Path, b: Long)(also: => Boolean = true): Unit =
+      await(s"epoch $b commit")(exists(new Path(ckpt, s"commits/$b")) && also)
+
+    /** Rows delivered to `dest`: (count, distinct event_id). */
+    def delivered(dest: String): (Long, Long) = {
+      val r = s.read.parquet(dest)
+        .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
+        .head()
+      (r.getLong(0), r.getLong(1))
+    }
+
+    /** A (kind, k, v) result frame — a local relation. */
+    def kv(rows: (String, String, Any)*): DataFrame = {
+      import s.implicits._
+      rows.map { case (kind, k, v) => (kind, k, v.toString) }.toDF("kind", "k", "v")
+    }
+
+    /** Run every release action, then delete the dirs; the first
+      * failure, after all were attempted. */
+    private[queries] def release(): Option[Throwable] = {
+      var first = Option.empty[Throwable]
+      def attempt(f: => Unit): Unit =
+        try f catch { case NonFatal(e) => if (first.isEmpty) first = Some(e) }
+      undo.foreach(f => attempt(f()))
+      dirs.foreach(d => attempt(deleteTree(d)))
+      undo = Nil
+      dirs = Nil
+      first
+    }
+  }
+
+  /** Run `body` in a fresh [[GateScope]] and release it however the
+    * body ends; a release failure never masks the body's own. */
+  private[queries] def gate[A](s: SparkSession, tag: String)(body: GateScope => A): A = {
+    val g = new GateScope(s, tag)
+    val out =
+      try body(g)
+      catch { case t: Throwable => g.release().foreach(t.addSuppressed); throw t }
+    g.release().foreach(e => throw e)
+    out
+  }
+
+  /** THE Trigger.AvailableNow runner: every gate's stream drains
+    * through here. */
+  private def runAvailableNow(w: DataStreamWriter[Row], ckpt: String,
+      mode: String): Unit =
+    w.outputMode(mode)
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
+  /** A file-stream source fed one bucket file at a time and read as
+    * maxFilesPerTrigger=1 epochs. Each bucket's file gets a
+    * strictly-increasing modification time keyed by the bucket number,
+    * so a run that plans several buckets replays them in bucket order
+    * (the file source admits oldest-modtime first; same-millisecond
+    * writes would otherwise tie-break on an arbitrary uuid path). Even
+    * where verdicts are epoch-order-independent (s20), the pinned
+    * order keeps epoch attribution reproducible. */
+  private[queries] final class BucketSource(s: SparkSession, dir: String,
+      schema: StructType) {
+    private val stamped = scala.collection.mutable.Set[String]()
+
+    private def write(b: Int, bucket: DataFrame): Unit = {
+      bucket.coalesce(1).write.mode("append").parquet(dir)
+      new java.io.File(dir).listFiles()
+        .filter(f => f.getName.startsWith("part-") && !stamped(f.getName))
+        .foreach { f =>
+          // A silently-failed stamp would make epoch replay order (and
+          // the gates' epoch attribution) arbitrary — fail loudly.
+          require(f.setLastModified(1700000000000L + b * 60000L),
+            s"setLastModified failed for ${f.getPath}; bucket order would be nondeterministic")
+          stamped += f.getName }
+    }
+
+    /** One ingest run per group: write the group's buckets, then `run`. */
+    def runs(groups: Seq[Int]*)(bucket: Int => DataFrame)(run: => Unit): Unit =
+      groups.foreach { bs => bs.foreach(b => write(b, bucket(b))); run }
+
+    def stream: DataFrame =
+      s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir)
+  }
 
   /**
    * Run a streaming plan to completion into a memory table.
@@ -60,36 +207,22 @@ object StreamingQueries {
    * volume / executor count), exactly like the reference sizes task
    * counts per datastream. For this corpus the stateful demos are
    * state-store-overhead-bound, so they run at 8 partitions; the conf
-   * is restored after the query finishes.
+   * is restored after the query finishes. The memory sink holds rows
+   * in driver memory, so the checkpoint is dead once the query
+   * terminates and is deleted with the scope.
    */
-  private def runToTable(df: DataFrame, mode: String,
-      statePartitions: Int = 8): DataFrame = {
-    val spark = df.sparkSession
+  private def runToTable(tag: String, df: DataFrame, mode: String,
+      statePartitions: Int = 8): DataFrame = gate(df.sparkSession, tag) { g =>
     val name = s"stream_out_${runId.incrementAndGet()}"
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    try {
-      val q = df.writeStream
-        .queryName(name)
-        .outputMode(mode)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
-    // The memory sink holds rows in driver memory; the checkpoint is
-    // dead once the query terminates. Repeated gated runs would
-    // otherwise leak a temp dir per invocation.
-    deleteTree(ckpt)
-    spark.table(name)
+    g.pin("spark.sql.shuffle.partitions" -> statePartitions)
+    runAvailableNow(df.writeStream.queryName(name).format("memory"),
+      g.dir("ckpt"), mode)
+    df.sparkSession.table(name)
   }
 
   /** THE lifecycle-gate wait: poll `cond` up to 60 s in 25 ms steps —
     * gates wait on the engine's own commit log, never on sleeps sized
-    * to the work. One implementation for every qNN gate (q71-q75 once
-    * carried five hand-synced copies). */
+    * to the work. */
   private def awaitCond(tag: String, what: String)(cond: => Boolean): Unit = {
     val deadline = System.currentTimeMillis() + 60000L
     while (!cond && System.currentTimeMillis() < deadline)
@@ -97,9 +230,9 @@ object StreamingQueries {
     require(cond, s"$tag: timed out waiting for $what")
   }
 
-  /** Recursively delete per-invocation temp dirs (src/out/checkpoint);
-    * call only after the result is detached from the files. */
-  private def deleteTree(dirs: String*): Unit = dirs.foreach { d =>
+  /** Recursively delete a temp tree; call only after the result is
+    * detached from its files. */
+  private def deleteTree(d: String): Unit = {
     val root = java.nio.file.Paths.get(d)
     if (Files.exists(root)) {
       val walk = Files.walk(root)
@@ -138,17 +271,27 @@ object StreamingQueries {
       col("props").as("value"),
       col("ts"))
 
+  /** The corpus's clicks (event_id, user_id), epoch `e` being the
+    * rows with event_id mod `n` = e — the manager gates' source. */
+  private def clickEpochs(s: SparkSession, d: String, n: Long): Long => DataFrame = {
+    val clicks = Tables.t(s, d, "events")
+      .filter(col("event_type") === "click")
+      .select(col("event_id"), col("user_id"))
+    e => clicks.filter(pmod(col("event_id"), lit(n)) === e)
+  }
+
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // The mirror pipeline (poll → translate → sink) under streaming
     // execution; per-record transform chain identical to q02.
     "s01_stream_mirror" -> ((s, d) =>
-      runToTable(
+      runToTable("s01",
         Translate.mirror(kafkaShaped(eventsStream(s, d)), "mirror.%s", "p-"),
         mode = "append")),
 
     // Streaming stateful aggregation (complete mode = full rollup).
     "s02_stream_agg" -> ((s, d) =>
-      runToTable(
+      runToTable("s02",
         eventsStream(s, d)
           .groupBy(col("event_type"))
           .agg(
@@ -162,7 +305,7 @@ object StreamingQueries {
     // finalization rule. This is the A6 SLA rollup in its native
     // streaming form.
     "s03_windowed_watermark" -> ((s, d) =>
-      runToTable(
+      runToTable("s03",
         eventsStream(s, d)
           .withWatermark("ts", "0 seconds")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -184,7 +327,7 @@ object StreamingQueries {
         .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
           col("ts").as("purchase_ts"))
         .withWatermark("purchase_ts", "0 seconds")
-      runToTable(
+      runToTable("s04",
         clicks.join(purchases,
           col("user_id") === col("p_user_id") &&
             col("purchase_ts") >= col("click_ts") &&
@@ -197,7 +340,7 @@ object StreamingQueries {
     // the key set is deterministic under parallel arrival, so that is
     // what the query returns (D-family dedup in streaming form).
     "s05_stream_dedup" -> ((s, d) =>
-      runToTable(
+      runToTable("s05",
         eventsStream(s, d)
           .select(col("user_id"), col("event_type"))
           .dropDuplicates("user_id", "event_type"),
@@ -208,7 +351,7 @@ object StreamingQueries {
     // Sessions still open at the final watermark stay in state and are
     // not emitted; the oracle applies the same rule.
     "s06_session_window" -> ((s, d) =>
-      runToTable(
+      runToTable("s06",
         eventsStream(s, d)
           .withWatermark("ts", "0 seconds")
           .groupBy(col("user_id"), session_window(col("ts"), "1 hour"))
@@ -233,52 +376,28 @@ object StreamingQueries {
     // single-batch execution (which would keep every row) hash-fails.
     // The sink is foreachBatch → epochAppend (exactly-once across the
     // three runs' epochs; the memory sink cannot resume a checkpoint).
-    "s08_multibatch_watermark" -> ((s, d) => {
+    "s08_multibatch_watermark" -> ((s, d) => gate(s, "s08") { g =>
       val base = Tables.t(s, d, "events")
         .select(col("event_id"), col("event_type"), col("ts"))
-      val srcDir = Files.createTempDirectory("graft-s08-src-").toString
-      val outDir = Files.createTempDirectory("graft-s08-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s08-ckpt-").toString
-      val schema = base.schema
-      val before = s.conf.get("spark.sql.shuffle.partitions")
+      val src = g.bucketSource(base.schema)
+      val (outDir, ckpt) = (g.dir("out"), g.dir("ckpt"))
       // Unlike s10, this AGGREGATION's oracle finalizes windows against
       // the watermark including the LAST batch's data — which only a
       // trailing no-data micro-batch can flush. Pin the (default-true)
       // flag explicitly so a session-level override can't break it.
-      val ndbKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val ndbBefore = s.conf.get(ndbKey)
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      s.conf.set(ndbKey, "true")
-      try {
-        (0 until 3).foreach { b =>
-          base.filter(pmod(col("event_id"), lit(3L)) === b)
-            .coalesce(1).write.mode("append").parquet(srcDir)
-          val agg = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(srcDir)
+      g.pin("spark.sql.shuffle.partitions" -> 8,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> true)
+      src.runs(Seq(0), Seq(1), Seq(2))(b =>
+        base.filter(pmod(col("event_id"), lit(3L)) === b))(
+        g.availableNow(src.stream
             .withWatermark("ts", "30 minutes")
             .groupBy(window(col("ts"), "1 hour"), col("event_type"))
             .agg(count(lit(1)).as("n"))
-            .select(col("window.start").as("win"), col("event_type"), col("n"))
-          val q = agg.writeStream
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (batch: DataFrame, epoch: Long) =>
-              PipelineManager.epochAppend(batch, outDir, epoch, "s08"): Unit
-            }
-            .start()
-          q.awaitTermination()
-        }
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", before)
-        s.conf.set(ndbKey, ndbBefore)
-      }
+            .select(col("window.start").as("win"), col("event_type"), col("n")),
+          ckpt)(g.appendTo(outDir)))
       // localCheckpoint (eager) detaches the result from the temp
-      // files so they can be deleted before returning.
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(srcDir, outDir, ckpt)
-      out
+      // files so they can be deleted when the scope is released.
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // Custom keyed state over MULTIPLE micro-batches:
@@ -290,22 +409,15 @@ object StreamingQueries {
     // replayed state would double-count and hash-fail. This is the
     // A4-family custom-state surface (the reference's per-partition
     // control state) as a gated query.
-    "s09_stateful_counter" -> ((s, d) => {
+    "s09_stateful_counter" -> ((s, d) => gate(s, "s09") { g =>
       import s.implicits._
       val base = Tables.t(s, d, "events").select(col("event_id"), col("user_id"))
-      val srcDir = Files.createTempDirectory("graft-s09-src-").toString
-      val outDir = Files.createTempDirectory("graft-s09-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s09-ckpt-").toString
-      val schema = base.schema
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      try {
-        (0 until 3).foreach { b =>
-          base.filter(pmod(col("event_id"), lit(3L)) === b)
-            .coalesce(1).write.mode("append").parquet(srcDir)
-          val counts = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(srcDir)
+      val src = g.bucketSource(base.schema)
+      val (outDir, ckpt) = (g.dir("out"), g.dir("ckpt"))
+      g.pin("spark.sql.shuffle.partitions" -> 8)
+      src.runs(Seq(0), Seq(1), Seq(2))(b =>
+        base.filter(pmod(col("event_id"), lit(3L)) === b))(
+        g.availableNow(src.stream
             .as[(Long, Long)]
             .groupByKey(_._2)
             .flatMapGroupsWithState[CounterState, CounterUpdate](
@@ -316,21 +428,9 @@ object StreamingQueries {
                 val next = CounterState(st.nEvents + events.size, st.nBatches + 1)
                 state.update(next)
                 Iterator(CounterUpdate(user, next.nEvents, next.nBatches))
-            }
-          val q = counts.toDF().writeStream
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (batch: DataFrame, epoch: Long) =>
-              PipelineManager.epochAppend(batch, outDir, epoch, "s09"): Unit
-            }
-            .start()
-          q.awaitTermination()
-        }
-      } finally s.conf.set("spark.sql.shuffle.partitions", before)
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(srcDir, outDir, ckpt)
-      out
+            }.toDF(),
+          ckpt, "update")(g.appendTo(outDir)))
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // Bounded-state streaming dedup across MULTIPLE micro-batches:
@@ -347,40 +447,21 @@ object StreamingQueries {
     // replays per-batch admission. The re-emission-after-state-death
     // path, which needs a key that does NOT carry its event time, is
     // pinned by DedupWithinWatermarkContractSpec.
-    "s12_dedup_within_wm" -> ((s, d) => {
+    "s12_dedup_within_wm" -> ((s, d) => gate(s, "s12") { g =>
       val base = Tables.t(s, d, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           date_trunc("hour", col("ts")).as("hr"))
-      val srcDir = Files.createTempDirectory("graft-s12-src-").toString
-      val outDir = Files.createTempDirectory("graft-s12-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s12-ckpt-").toString
-      val schema = base.drop("event_id").schema
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      try {
-        (0 until 3).foreach { b =>
-          base.filter(pmod(col("event_id"), lit(3L)) === b).drop("event_id")
-            .coalesce(1).write.mode("append").parquet(srcDir)
-          val deduped = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(srcDir)
+      val src = g.bucketSource(base.drop("event_id").schema)
+      val (outDir, ckpt) = (g.dir("out"), g.dir("ckpt"))
+      g.pin("spark.sql.shuffle.partitions" -> 8)
+      src.runs(Seq(0), Seq(1), Seq(2))(b =>
+        base.filter(pmod(col("event_id"), lit(3L)) === b).drop("event_id"))(
+        g.availableNow(src.stream
             .withWatermark("hr", "30 minutes")
             .dropDuplicatesWithinWatermark("user_id", "event_type", "hr")
-            .select(col("user_id"), col("event_type"), col("hr"))
-          val q = deduped.writeStream
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (batch: DataFrame, epoch: Long) =>
-              PipelineManager.epochAppend(batch, outDir, epoch, "s12"): Unit
-            }
-            .start()
-          q.awaitTermination()
-        }
-      } finally s.conf.set("spark.sql.shuffle.partitions", before)
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(srcDir, outDir, ckpt)
-      out
+            .select(col("user_id"), col("event_type"), col("hr")),
+          ckpt)(g.appendTo(outDir)))
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // Streaming NEAR-DUP admission — the one LLM-data op with a
@@ -393,64 +474,34 @@ object StreamingQueries {
     // event time is synthesized deterministically (doc_id % 97 hours
     // from a fixed base) so the 3-batch split (doc_id % 3) and every
     // admission decision replay as a pure function in the oracle.
-    "s14_stream_banded_dedup" -> ((s, d) => {
+    "s14_stream_banded_dedup" -> ((s, d) => gate(s, "s14") { g =>
       // Band frame from the shared d-family signature spill (same
       // k=16/r=4 chain) — the first s-gate consumer after a release
       // rebuilds it once; reruns and s15 ride it.
       val bands = DataOpsQueries.sharedBands(s, d)
-      // Cached once (first write materializes it): the three per-bucket
-      // source writes would otherwise each recompute the full corpus
-      // MinHash (s15's 4-scan setup hazard). persist, not
-      // localCheckpoint, so the finally can release the blocks — the
-      // suite's nothing-outlives-the-gate cache contract.
-      val base = bands.select(
+      // Cached once: the three per-bucket source writes would
+      // otherwise each recompute the full corpus MinHash (s15's 4-scan
+      // setup hazard).
+      val base = g.persist(bands.select(
         col("doc"),
         col("band").cast("long").as("band"),
         col("bh"),
         expr("timestampadd(HOUR, cast(pmod(doc, 97) as int), " +
-          "timestamp'2024-01-01 00:00:00')").as("hr"))
-        .persist()
-      val srcDir = Files.createTempDirectory("graft-s14-src-").toString
-      val outDir = Files.createTempDirectory("graft-s14-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s14-ckpt-").toString
-      val schema = base.drop("doc").schema
-      // Forced mod-time bucket order (see s15) so two buckets landing
-      // in one run replay as ordered maxFilesPerTrigger=1 epochs.
-      val stamped = scala.collection.mutable.Set[String]()
-      def writeBucket(b: Int): Unit = writeStampedBucket(srcDir, stamped, b,
-        base.filter(pmod(col("doc"), lit(3L)) === b).drop("doc"))
-      def runIngest(): Unit = {
-        val admitted = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(srcDir)
-          .withWatermark("hr", "30 minutes")
-          .dropDuplicatesWithinWatermark("band", "bh", "hr")
-          .select(col("band"), col("bh"), col("hr"))
-        val q = admitted.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            PipelineManager.epochAppend(batch, outDir, epoch, "s14"): Unit
-          }
-          .start()
-        q.awaitTermination()
-      }
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 4)
-      try {
-        // two runs over one checkpoint: bucket 0 alone, then buckets
-        // 1+2 after a restart — state-store recovery proven by the
-        // second run, within-run watermark advance by its two epochs.
-        writeBucket(0); runIngest()
-        writeBucket(1); writeBucket(2); runIngest()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", before)
-        base.unpersist(false)
-      }
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(srcDir, outDir, ckpt)
-      out
+          "timestamp'2024-01-01 00:00:00')").as("hr")))
+      val src = g.bucketSource(base.drop("doc").schema)
+      val (outDir, ckpt) = (g.dir("out"), g.dir("ckpt"))
+      g.pin("spark.sql.shuffle.partitions" -> 4)
+      // two runs over one checkpoint: bucket 0 alone, then buckets
+      // 1+2 after a restart — state-store recovery proven by the
+      // second run, within-run watermark advance by its two epochs.
+      src.runs(Seq(0), Seq(1, 2))(b =>
+        base.filter(pmod(col("doc"), lit(3L)) === b).drop("doc"))(
+        g.availableNow(src.stream
+            .withWatermark("hr", "30 minutes")
+            .dropDuplicatesWithinWatermark("band", "bh", "hr")
+            .select(col("band"), col("bh"), col("hr")),
+          ckpt)(g.appendTo(outDir)))
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // Streaming incremental index dedup — the d19 durable-index loop
@@ -463,38 +514,25 @@ object StreamingQueries {
     // idempotent epoch commit — a replayed epoch neither double-admits
     // nor re-flags, and a batch-4 near-dup of a batch-2 admission is
     // caught only because the index grew between epochs.
-    "s15_stream_index_dedup" -> ((s, d) => {
+    "s15_stream_index_dedup" -> ((s, d) => gate(s, "s15") { g =>
       val docs = Tables.t(s, d, "documents")
       // Shared-spill band frame — see s14.
       val bands = DataOpsQueries.sharedBands(s, d)
       // Cache the band pipeline ONCE (bootstrap write materializes it):
       // the bootstrap plus three per-bucket source writes would
       // otherwise each recompute the full corpus MinHash (4 scans of
-      // documents.parquet). persist, not localCheckpoint, so the
-      // finally can release the blocks.
-      val rows = docs.select(col("doc_id").as("doc"))
+      // documents.parquet).
+      val rows = g.persist(docs.select(col("doc_id").as("doc"))
         .join(bands, Seq("doc"), "left") // keep shingle-less docs (null band)
-        .select(col("doc"), col("band").cast("long").as("band"), col("bh"))
-        .persist()
-      val srcDir = Files.createTempDirectory("graft-s15-src-").toString
-      val idxDir = Files.createTempDirectory("graft-s15-idx-").toString
-      val outDir = Files.createTempDirectory("graft-s15-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s15-ckpt-").toString
+        .select(col("doc"), col("band").cast("long").as("band"), col("bh")))
+      val src = g.bucketSource(rows.schema)
+      val (idxDir, outDir, ckpt) = (g.dir("idx"), g.dir("out"), g.dir("ckpt"))
       // bootstrap: the pre-existing corpus index (buckets 0-1 of 5).
       // Compacted to one file: the run-start recovery read below and
       // any crash-restart re-read list this dir, and the write
       // otherwise inherits the suite's 32 shuffle partitions.
       rows.filter(pmod(col("doc"), lit(5L)) < 2 && col("band").isNotNull)
         .coalesce(1).write.mode("overwrite").parquet(idxDir)
-      val schema = rows.schema
-      // Source files carry FORCED strictly-increasing mod times so the
-      // file source's maxFilesPerTrigger=1 epochs replay in bucket
-      // order even when several buckets land in one run (the source
-      // admits oldest-modtime first; same-millisecond writes would
-      // otherwise tie-break on an arbitrary uuid path).
-      val stamped = scala.collection.mutable.Set[String]()
-      def writeBucket(b: Int): Unit = writeStampedBucket(srcDir, stamped, b,
-        rows.filter(pmod(col("doc"), lit(5L)) === b))
       // One ingest RUN = recovery read of the durable index (run-start
       // view rebuild — the production restart path), then epochs
       // extend the view with their own COMMITTED files: the epoch
@@ -512,42 +550,25 @@ object StreamingQueries {
         // bounded (DurableIndexView — kills the measured late-epoch
         // planning drift at high epoch counts).
         val idx = new graft.streaming.DurableIndexView(s, idxDir)
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(srcDir)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            // The shared admission-epoch body (verdicts against the
-            // index as of this epoch, committed one-file-per-epoch;
-            // PipelineManager.dedupAdmissionEpoch owns the loop —
-            // this gate's index layer is the flat dir + bounded view)
-            idx.extend(PipelineManager.epochAppend(
-              PipelineManager.dedupAdmissionEpoch(
-                idx.frame, batch, outDir, epoch, "s15out"),
-              idxDir, epoch, "s15idx"))
-          }
-          .start()
-        q.awaitTermination()
+        g.availableNow(src.stream, ckpt) { (batch, epoch) =>
+          // The shared admission-epoch body (verdicts against the
+          // index as of this epoch, committed one-file-per-epoch;
+          // PipelineManager.dedupAdmissionEpoch owns the loop —
+          // this gate's index layer is the flat dir + bounded view)
+          idx.extend(PipelineManager.epochAppend(
+            PipelineManager.dedupAdmissionEpoch(
+              idx.frame, batch, outDir, epoch, "s15out"),
+            idxDir, epoch, "s15idx"))
+        }
       }
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 4)
-      try {
-        // two runs over one checkpoint: bucket 2 alone, then buckets
-        // 3+4 after a restart — the second run proves recovery (view
-        // rebuilt from the durable index, offsets from the checkpoint)
-        // while its two epochs prove within-run index growth.
-        writeBucket(2); runIngest()
-        writeBucket(3); writeBucket(4); runIngest()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", before)
-        rows.unpersist(false)
-      }
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(srcDir, idxDir, outDir, ckpt)
-      out
+      g.pin("spark.sql.shuffle.partitions" -> 4)
+      // two runs over one checkpoint: bucket 2 alone, then buckets
+      // 3+4 after a restart — the second run proves recovery (view
+      // rebuilt from the durable index, offsets from the checkpoint)
+      // while its two epochs prove within-run index growth.
+      src.runs(Seq(2), Seq(3, 4))(b =>
+        rows.filter(pmod(col("doc"), lit(5L)) === b))(runIngest())
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // s15's admission semantics with the band index riding the
@@ -562,17 +583,14 @@ object StreamingQueries {
     // re-open re-issues it as a marker no-op); stream epoch e maps
     // to store epoch e+1. Verdicts are BIT-IDENTICAL to s15 by
     // construction, and the oracle is literally s15's.
-    "s30_stream_dedup_store" -> ((s, d) => {
+    "s30_stream_dedup_store" -> ((s, d) => gate(s, "s30") { g =>
       val docs = Tables.t(s, d, "documents")
       val bands = DataOpsQueries.sharedBands(s, d)
-      val rows = docs.select(col("doc_id").as("doc"))
+      val rows = g.persist(docs.select(col("doc_id").as("doc"))
         .join(bands, Seq("doc"), "left")
-        .select(col("doc"), col("band").cast("long").as("band"), col("bh"))
-        .persist()
-      val srcDir = Files.createTempDirectory("graft-s30-src-").toString
-      val idxDir = Files.createTempDirectory("graft-s30-idx-").toString
-      val outDir = Files.createTempDirectory("graft-s30-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s30-ckpt-").toString
+        .select(col("doc"), col("band").cast("long").as("band"), col("bh")))
+      val src = g.bucketSource(rows.schema)
+      val (idxDir, outDir, ckpt) = (g.dir("idx"), g.dir("out"), g.dir("ckpt"))
       // band rows get a stable 16-way partition column for the store
       // (bucketing the DIRECTORY layout so compaction rewrites land
       // ~one file per bucket; the dedup join itself is key-planned)
@@ -580,52 +598,31 @@ object StreamingQueries {
         pmod(graft.functions.Portable.hash64(col("bh")), lit(16L)))
       val boot = rows
         .filter(pmod(col("doc"), lit(5L)) < 2 && col("band").isNotNull)
-      val schema = rows.schema
-      val stamped = scala.collection.mutable.Set[String]()
-      def writeBucket(b: Int): Unit = writeStampedBucket(srcDir, stamped, b,
-        rows.filter(pmod(col("doc"), lit(5L)) === b))
       def runIngest(): Unit = {
         val store = new graft.streaming.EpochPartitionedStore(s,
           s"$idxDir/bands", "pb", "s30", compactEvery = 2)
         // bootstrap = store epoch 0; idempotent across runs/replays
         store.appendEpoch(withPb(boot).coalesce(1), 0L)
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(srcDir)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            val idxFrame = store.frameIfAny
-              .map(_.select(col("doc"), col("band"), col("bh")))
-              .getOrElse(batch.limit(0) // unreachable: bootstrap committed
-                .select(col("doc"), col("band"), col("bh")))
-            store.appendEpoch(
-              withPb(PipelineManager.dedupAdmissionEpoch(
-                idxFrame, batch, outDir, epoch, "s30out")),
-              epoch + 1)
-          }
-          .start()
-        q.awaitTermination()
+        g.availableNow(src.stream, ckpt) { (batch, epoch) =>
+          val idxFrame = store.frameIfAny
+            .map(_.select(col("doc"), col("band"), col("bh")))
+            .getOrElse(batch.limit(0) // unreachable: bootstrap committed
+              .select(col("doc"), col("band"), col("bh")))
+          store.appendEpoch(
+            withPb(PipelineManager.dedupAdmissionEpoch(
+              idxFrame, batch, outDir, epoch, "s30out")),
+            epoch + 1)
+        }
       }
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 4)
-      try {
-        // two runs over one checkpoint: bucket 2 alone, then buckets
-        // 3+4 after a restart — the second run proves the STORE's
-        // crash recovery (constructor rollback/sweep + snapshot
-        // bootstrap read) under the same offsets-from-checkpoint
-        // replay as s15, with a compaction tick inside each run.
-        writeBucket(2); runIngest()
-        writeBucket(3); writeBucket(4); runIngest()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", before)
-        rows.unpersist(false)
-      }
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(srcDir, idxDir, outDir, ckpt)
-      out
+      g.pin("spark.sql.shuffle.partitions" -> 4)
+      // two runs over one checkpoint: bucket 2 alone, then buckets
+      // 3+4 after a restart — the second run proves the STORE's
+      // crash recovery (constructor rollback/sweep + snapshot
+      // bootstrap read) under the same offsets-from-checkpoint
+      // replay as s15, with a compaction tick inside each run.
+      src.runs(Seq(2), Seq(3, 4))(b =>
+        rows.filter(pmod(col("doc"), lit(5L)) === b))(runIngest())
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // Streaming ANN admission — the embedding counterpart of s15: the
@@ -646,23 +643,19 @@ object StreamingQueries {
     // from any crash boundary, and serves snapshot-consistent reads.
     // Bootstrap = store epoch 0; stream epoch e maps to store epoch
     // e+1. Verdicts are bit-identical (same oracle).
-    "s16_stream_ann_admission" -> ((s, d) => {
+    "s16_stream_ann_admission" -> ((s, d) => gate(s, "s16") { g =>
       val emb = Tables.t(s, d, "embeddings")
       val sig = emb.select(col("vec_id").as("doc"),
         graft.ann.Ann.lshBucket(
           graft.ann.Ann.toDouble(col("embedding")), 24).as("bucket"))
-      // Cache once, release in the finally — same 4-scan setup hazard
-      // and cache-lifecycle contract as s15.
-      val rows = sig.select(col("doc"), posexplode(array(
+      // Cached once — same 4-scan setup hazard as s15.
+      val rows = g.persist(sig.select(col("doc"), posexplode(array(
           col("bucket").bitwiseAND(lit(4095L)),
           shiftright(col("bucket"), 12).bitwiseAND(lit(4095L)))))
         .select(col("doc"), col("pos").cast("long").as("band"),
-          col("col").as("bh"))
-        .persist()
-      val srcDir = Files.createTempDirectory("graft-s16-src-").toString
-      val idxDir = Files.createTempDirectory("graft-s16-idx-").toString
-      val outDir = Files.createTempDirectory("graft-s16-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s16-ckpt-").toString
+          col("col").as("bh")))
+      val src = g.bucketSource(rows.schema)
+      val (idxDir, outDir, ckpt) = (g.dir("idx"), g.dir("out"), g.dir("ckpt"))
       // band rows get a stable 16-way partition column for the store
       // (bucketing the DIRECTORY layout so compaction rewrites land
       // ~one file per bucket; the dedup join itself is key-planned)
@@ -670,50 +663,29 @@ object StreamingQueries {
         pmod(graft.functions.Portable.hash64(col("bh")), lit(16L)))
       // bootstrap: the pre-existing corpus index (buckets 0-1 of 5)
       val boot = rows.filter(pmod(col("doc"), lit(5L)) < 2)
-      val schema = rows.schema
       // Forced mod-time bucket order + two-run recovery structure +
       // commit-as-materialization epochs — see s15 for the rationale
       // and the replay-safety argument.
-      val stamped = scala.collection.mutable.Set[String]()
-      def writeBucket(b: Int): Unit = writeStampedBucket(srcDir, stamped, b,
-        rows.filter(pmod(col("doc"), lit(5L)) === b))
       def runIngest(): Unit = {
         val store = new graft.streaming.EpochPartitionedStore(s,
           s"$idxDir/bands", "pb", "s16", compactEvery = 2)
         // bootstrap = store epoch 0; idempotent across runs/replays
         store.appendEpoch(withPb(boot).coalesce(1), 0L)
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(srcDir)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            val idxFrame = store.frameIfAny
-              .map(_.select(col("doc"), col("band"), col("bh")))
-              .getOrElse(batch.limit(0) // unreachable: bootstrap committed
-                .select(col("doc"), col("band"), col("bh")))
-            store.appendEpoch(
-              withPb(PipelineManager.dedupAdmissionEpoch(
-                idxFrame, batch, outDir, epoch, "s16out")),
-              epoch + 1)
-          }
-          .start()
-        q.awaitTermination()
+        g.availableNow(src.stream, ckpt) { (batch, epoch) =>
+          val idxFrame = store.frameIfAny
+            .map(_.select(col("doc"), col("band"), col("bh")))
+            .getOrElse(batch.limit(0) // unreachable: bootstrap committed
+              .select(col("doc"), col("band"), col("bh")))
+          store.appendEpoch(
+            withPb(PipelineManager.dedupAdmissionEpoch(
+              idxFrame, batch, outDir, epoch, "s16out")),
+            epoch + 1)
+        }
       }
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 4)
-      try {
-        writeBucket(2); runIngest()
-        writeBucket(3); writeBucket(4); runIngest()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", before)
-        rows.unpersist(false)
-      }
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(srcDir, idxDir, outDir, ckpt)
-      out
+      g.pin("spark.sql.shuffle.partitions" -> 4)
+      src.runs(Seq(2), Seq(3, 4))(b =>
+        rows.filter(pmod(col("doc"), lit(5L)) === b))(runIngest())
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // The same multi-batch custom-state shape on Spark 4's
@@ -723,61 +695,31 @@ object StreamingQueries {
     // first-seen-batch ordinal, which only a state store that survived
     // both restarts can report (a fresh store would re-initialize it
     // to the current batch and hash-fail).
-    "s11_tws_counter" -> ((s, d) => {
+    "s11_tws_counter" -> ((s, d) => gate(s, "s11") { g =>
       import s.implicits._
       val base = Tables.t(s, d, "events").select(col("event_id"), col("user_id"))
-      val srcDir = Files.createTempDirectory("graft-s11-src-").toString
-      val outDir = Files.createTempDirectory("graft-s11-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s11-ckpt-").toString
-      val schema = base.schema
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val provBefore = s.conf.get(provKey)
-      // Changelog checkpointing: commit the per-batch CHANGELOG
-      // instead of a full RocksDB snapshot upload — the production
-      // setting for large state; here it cuts the 8-partition x
-      // 3-run x per-batch snapshot overhead of trivially-small state.
-      // Checkpoint format only; state content and results unchanged.
-      val clKey =
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-      val clBefore = s.conf.getOption(clKey)
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      s.conf.set(clKey, "true")
-      try {
-        (0 until 3).foreach { b =>
-          base.filter(pmod(col("event_id"), lit(3L)) === b)
-            .coalesce(1).write.mode("append").parquet(srcDir)
-          val counts = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(srcDir)
+      val src = g.bucketSource(base.schema)
+      val (outDir, ckpt) = (g.dir("out"), g.dir("ckpt"))
+      g.pin("spark.sql.shuffle.partitions" -> 8,
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        // Changelog checkpointing: commit the per-batch CHANGELOG
+        // instead of a full RocksDB snapshot upload — the production
+        // setting for large state; here it cuts the 8-partition x
+        // 3-run x per-batch snapshot overhead of trivially-small state.
+        // Checkpoint format only; state content and results unchanged.
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> true)
+      src.runs(Seq(0), Seq(1), Seq(2))(b =>
+        base.filter(pmod(col("event_id"), lit(3L)) === b))(
+        g.availableNow(src.stream
             .as[(Long, Long)]
             .groupByKey(_._2)
             .transformWithState(new TwsCounterProcessor,
               org.apache.spark.sql.streaming.TimeMode.None(),
               OutputMode.Update())
-          val q = counts.toDF().writeStream
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (batch: DataFrame, epoch: Long) =>
-              PipelineManager.epochAppend(batch, outDir, epoch, "s11"): Unit
-            }
-            .start()
-          q.awaitTermination()
-        }
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", before)
-        s.conf.set(provKey, provBefore)
-        clBefore match {
-          case Some(v) => s.conf.set(clKey, v)
-          case None => s.conf.unset(clKey)
-        }
-      }
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(srcDir, outDir, ckpt)
-      out
+            .toDF(),
+          ckpt, "update")(g.appendTo(outDir)))
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // Event-time TIMERS on the arbitrary-state API: an inactivity
@@ -794,7 +736,7 @@ object StreamingQueries {
     // fire1, fire2) session compositions per user. Timers that
     // outlive the final watermark never fire — those sessions are
     // deliberately absent.
-    "s13_session_timeout" -> ((s, d) => {
+    "s13_session_timeout" -> ((s, d) => gate(s, "s13") { g =>
       import s.implicits._
       val gapMs = 86400000L // 1 day of event-time silence
       val evs = Tables.t(s, d, "events")
@@ -810,29 +752,17 @@ object StreamingQueries {
           when(col("ms") < lo + step, 0)
             .when(col("ms") < lo + 2 * step, 1).otherwise(2))
         .drop("ms")
-      val srcDir = Files.createTempDirectory("graft-s13-src-").toString
-      val outDir = Files.createTempDirectory("graft-s13-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s13-ckpt-").toString
-      val schema = base.drop("b").schema
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val provBefore = s.conf.get(provKey)
+      val src = g.bucketSource(base.drop("b").schema)
+      val (outDir, ckpt) = (g.dir("out"), g.dir("ckpt"))
       // changelog checkpointing: see the s11 comment — commit format
       // only, results unchanged
-      val clKey =
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-      val clBefore = s.conf.getOption(clKey)
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      s.conf.set(clKey, "true")
-      try {
-        (0 until 3).foreach { b =>
-          base.filter(col("b") === b).drop("b")
-            .coalesce(1).write.mode("append").parquet(srcDir)
-          val closed = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(srcDir)
+      g.pin("spark.sql.shuffle.partitions" -> 8,
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> true)
+      src.runs(Seq(0), Seq(1), Seq(2))(b =>
+        base.filter(col("b") === b).drop("b"))(
+        g.availableNow(src.stream
             .withWatermark("ts", "0 seconds")
             .select(col("user_id"), col("ts"))
             .as[(Long, java.sql.Timestamp)]
@@ -840,27 +770,9 @@ object StreamingQueries {
             .transformWithState(new TwsSessionProcessor(gapMs),
               org.apache.spark.sql.streaming.TimeMode.EventTime(),
               OutputMode.Update())
-          val q = closed.toDF().writeStream
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (batch: DataFrame, epoch: Long) =>
-              PipelineManager.epochAppend(batch, outDir, epoch, "s13"): Unit
-            }
-            .start()
-          q.awaitTermination()
-        }
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", before)
-        s.conf.set(provKey, provBefore)
-        clBefore match {
-          case Some(v) => s.conf.set(clKey, v)
-          case None => s.conf.unset(clKey)
-        }
-      }
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(srcDir, outDir, ckpt)
-      out
+            .toDF(),
+          ckpt, "update")(g.appendTo(outDir)))
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // Watermarked stream-stream LEFT OUTER join across MULTIPLE
@@ -883,58 +795,36 @@ object StreamingQueries {
     // cumulative-maxima model overpredicts at sf0.1).
     // NoDataBatchContractSpec pins the schedule, the flag-off lag,
     // and the node-reset rule, failing loudly on a Spark upgrade.
-    "s10_stream_outer_join" -> ((s, d) => {
+    "s10_stream_outer_join" -> ((s, d) => gate(s, "s10") { g =>
       val base = Tables.t(s, d, "events")
         .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
-      val srcDir = Files.createTempDirectory("graft-s10-src-").toString
-      val outDir = Files.createTempDirectory("graft-s10-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s10-ckpt-").toString
-      val schema = base.schema
-      val before = s.conf.get("spark.sql.shuffle.partitions")
+      val src = g.bucketSource(base.schema)
+      val (outDir, ckpt) = (g.dir("out"), g.dir("ckpt"))
       // The oracle models the DEFAULT noDataMicroBatches=true schedule;
       // pin it explicitly so a session-level override can't break the
       // gate (see the comment above + NoDataBatchContractSpec).
-      val ndbKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val ndbBefore = s.conf.get(ndbKey)
-      s.conf.set("spark.sql.shuffle.partitions", 8)
-      s.conf.set(ndbKey, "true")
-      try {
-        (0 until 3).foreach { b =>
-          base.filter(pmod(col("event_id"), lit(3L)) === b)
-            .coalesce(1).write.mode("append").parquet(srcDir)
-          val stream = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(srcDir)
-          val clicks = stream.filter(col("event_type") === "click")
-            .select(col("user_id"), col("event_id").as("click_id"),
-              col("ts").as("click_ts"))
-            .withWatermark("click_ts", "30 minutes")
-          val purchases = stream.filter(col("event_type") === "purchase")
-            .select(col("user_id").as("p_user_id"),
-              col("event_id").as("purchase_id"), col("ts").as("purchase_ts"))
-            .withWatermark("purchase_ts", "30 minutes")
-          val joined = clicks.join(purchases,
+      g.pin("spark.sql.shuffle.partitions" -> 8,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> true)
+      src.runs(Seq(0), Seq(1), Seq(2))(b =>
+        base.filter(pmod(col("event_id"), lit(3L)) === b)) {
+        val stream = src.stream
+        val clicks = stream.filter(col("event_type") === "click")
+          .select(col("user_id"), col("event_id").as("click_id"),
+            col("ts").as("click_ts"))
+          .withWatermark("click_ts", "30 minutes")
+        val purchases = stream.filter(col("event_type") === "purchase")
+          .select(col("user_id").as("p_user_id"),
+            col("event_id").as("purchase_id"), col("ts").as("purchase_ts"))
+          .withWatermark("purchase_ts", "30 minutes")
+        g.availableNow(clicks.join(purchases,
             col("user_id") === col("p_user_id") &&
               col("purchase_ts") >= col("click_ts") &&
               col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
             "leftOuter")
-            .select(col("user_id"), col("click_id"), col("purchase_id"))
-          val q = joined.writeStream
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch { (batch: DataFrame, epoch: Long) =>
-              PipelineManager.epochAppend(batch, outDir, epoch, "s10"): Unit
-            }
-            .start()
-          q.awaitTermination()
-        }
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", before)
-        s.conf.set(ndbKey, ndbBefore)
+            .select(col("user_id"), col("click_id"), col("purchase_id")),
+          ckpt)(g.appendTo(outDir))
       }
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(srcDir, outDir, ckpt)
-      out
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // S8: the synthetic indexed source as a GATED query — the
@@ -947,32 +837,19 @@ object StreamingQueries {
     // state; epochAppend keeps the sink exactly-once across both runs'
     // epochs. The corpus dir is unused (the source is synthetic by
     // definition); the oracle regenerates the same indexed payloads.
-    "s17_synthetic_resume" -> ((s, d) => {
-      val outDir = Files.createTempDirectory("graft-s17-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s17-ckpt-").toString
-      def drain(totalEvents: Long): Unit = {
-        val q = s.readStream
+    "s17_synthetic_resume" -> ((s, d) => gate(s, "s17") { g =>
+      val (outDir, ckpt) = (g.dir("out"), g.dir("ckpt"))
+      def drain(totalEvents: Long): Unit = g.availableNow(s.readStream
           .format(classOf[graft.sources.SyntheticProvider].getName)
           .option("totalEvents", totalEvents.toString)
           .option("batchSize", "250")
           .option("payloadSize", "64")
           .option("numPartitions", "4")
-          .load()
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            PipelineManager.epochAppend(batch.coalesce(1), outDir, epoch, "s17"): Unit
-          }
-          .start()
-        q.awaitTermination()
-      }
+          .load(), ckpt)((batch, epoch) =>
+        PipelineManager.epochAppend(batch.coalesce(1), outDir, epoch, "s17"))
       drain(600)
       drain(1000)
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(outDir, ckpt)
-      out
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // F2/A4 at the source layer (SURVEY §7.3 hard part 1): the
@@ -981,39 +858,23 @@ object StreamingQueries {
     // resumes from the HELD index. Run 1 pauses partition 1 (its 150
     // rows stay unread); run 2 unpauses and delivers exactly those —
     // every row arrives exactly once, and the run column proves WHEN.
-    "s18_paused_source" -> ((s, d) => {
-      val outDir = Files.createTempDirectory("graft-s18-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s18-ckpt-").toString
-      val pauseFile = Files.createTempFile("graft-s18-pause-", ".txt")
-      def drain(run: Int): Unit = {
-        val q = s.readStream
+    "s18_paused_source" -> ((s, d) => gate(s, "s18") { g =>
+      val (outDir, ckpt) = (g.dir("out"), g.dir("ckpt"))
+      val pauseFile = java.nio.file.Paths.get(g.dir("pause"), "pause.txt")
+      def drain(run: Int): Unit = g.availableNow(s.readStream
           .format(classOf[graft.sources.PausableProvider].getName)
           .option("rowsPerPartition", "150")
           .option("numPartitions", "4")
           .option("batchPerPartition", "40")
           .option("payloadSize", "16")
           .option("pauseFile", pauseFile.toString)
-          .load()
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            PipelineManager.epochAppend(
-              batch.withColumn("run", lit(run)).coalesce(1),
-              outDir, epoch, "s18"): Unit
-          }
-          .start()
-        q.awaitTermination()
-      }
+          .load(), ckpt)((batch, epoch) => PipelineManager.epochAppend(
+        batch.withColumn("run", lit(run)).coalesce(1), outDir, epoch, "s18"))
       Files.writeString(pauseFile, "1")
       drain(1)
       Files.writeString(pauseFile, "")
       drain(2)
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(outDir, ckpt)
-      Files.deleteIfExists(pauseFile)
-      out
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // F2 for FOREIGN DSv2 sources, oracle-gated: the same
@@ -1022,12 +883,10 @@ object StreamingQueries {
     // entirely in the wrapping PausingMicroBatchStream (offset-layer
     // clamp via the vector codec). Same closed form as s18: partition
     // 1's rows arrive only in run 2, everything exactly once.
-    "s19_wrapped_pause" -> ((s, d) => {
-      val outDir = Files.createTempDirectory("graft-s19-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s19-ckpt-").toString
-      val pauseFile = Files.createTempFile("graft-s19-pause-", ".txt")
-      def drain(run: Int): Unit = {
-        val q = s.readStream
+    "s19_wrapped_pause" -> ((s, d) => gate(s, "s19") { g =>
+      val (outDir, ckpt) = (g.dir("out"), g.dir("ckpt"))
+      val pauseFile = java.nio.file.Paths.get(g.dir("pause"), "pause.txt")
+      def drain(run: Int): Unit = g.availableNow(s.readStream
           .format(classOf[graft.sources.PausingProvider].getName)
           .option("innerFormat", classOf[graft.sources.PausableProvider].getName)
           .option("offsetCodec", "vector")
@@ -1036,27 +895,13 @@ object StreamingQueries {
           .option("numPartitions", "4")
           .option("batchPerPartition", "40")
           .option("payloadSize", "16")
-          .load()
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            PipelineManager.epochAppend(
-              batch.withColumn("run", lit(run)).coalesce(1),
-              outDir, epoch, "s19"): Unit
-          }
-          .start()
-        q.awaitTermination()
-      }
+          .load(), ckpt)((batch, epoch) => PipelineManager.epochAppend(
+        batch.withColumn("run", lit(run)).coalesce(1), outDir, epoch, "s19"))
       Files.writeString(pauseFile, "1")
       drain(1)
       Files.writeString(pauseFile, "")
       drain(2)
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(outDir, ckpt)
-      Files.deleteIfExists(pauseFile)
-      out
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // Streaming DECONTAMINATION on the ingest path — the guard a
@@ -1077,72 +922,48 @@ object StreamingQueries {
     // compaction instead of accumulating one flat file per epoch,
     // and the final read is the store's committed snapshot. Verdicts
     // bit-identical (same oracle).
-    "s20_stream_decontam" -> ((s, d) => {
+    "s20_stream_decontam" -> ((s, d) => gate(s, "s20") { g =>
       val docs = Tables.t(s, d, "documents")
       // Shared-spill band frame — see s14.
       val bands = DataOpsQueries.sharedBands(s, d)
-      val rows = docs.select(col("doc_id").as("doc"))
+      val rows = g.persist(docs.select(col("doc_id").as("doc"))
         .join(bands, Seq("doc"), "left")
-        .select(col("doc"), col("band").cast("long").as("band"), col("bh"))
-        .persist()
-      val srcDir = Files.createTempDirectory("graft-s20-src-").toString
-      val idxDir = Files.createTempDirectory("graft-s20-idx-").toString
-      val outDir = Files.createTempDirectory("graft-s20-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s20-ckpt-").toString
+        .select(col("doc"), col("band").cast("long").as("band"), col("bh")))
+      val src = g.bucketSource(rows.schema)
+      val (idxDir, outDir, ckpt) = (g.dir("idx"), g.dir("out"), g.dir("ckpt"))
       // the benchmark corpus: docs 0-1 of 10, banded once, compacted
       rows.filter(pmod(col("doc"), lit(10L)) < 2 && col("band").isNotNull)
         .coalesce(1).write.mode("overwrite").parquet(idxDir)
-      val schema = rows.schema
       val streamed = rows.filter(pmod(col("doc"), lit(10L)) >= 2)
-      val stamped = scala.collection.mutable.Set[String]()
-      def writeBucket(b: Int): Unit = writeStampedBucket(srcDir, stamped, b,
-        streamed.filter(pmod(col("doc"), lit(3L)) === b))
       def runIngest(): Unit = {
         val bench = s.read.parquet(idxDir) // static; one read per run
         // the verdict log's tiered store: partitioned 16-way by doc
         // hash so compaction rewrites land ~one file per bucket
         val store = new graft.streaming.EpochPartitionedStore(s,
           s"$outDir/log", "pb", "s20", compactEvery = 2)
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(srcDir)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            val bb = batch.filter(col("band").isNotNull)
-            // same collision machinery as the dedup loops, read as
-            // contamination: n_hits colliding benchmark docs,
-            // first_hit the smallest (-1 = clean)
-            store.appendEpoch(
-              graft.dedup.Dedup.indexDedupBatch(bench, bb,
-                batch.select(col("doc")).distinct())
-                .select(col("doc"), col("n_dups").as("n_hits"),
-                  col("first_dup").as("first_hit"))
-                .withColumn("pb", pmod(
-                  graft.functions.Portable.hash64(col("doc")), lit(16L)))
-                .coalesce(1),
-              epoch)
-          }
-          .start()
-        q.awaitTermination()
+        g.availableNow(src.stream, ckpt) { (batch, epoch) =>
+          val bb = batch.filter(col("band").isNotNull)
+          // same collision machinery as the dedup loops, read as
+          // contamination: n_hits colliding benchmark docs,
+          // first_hit the smallest (-1 = clean)
+          store.appendEpoch(
+            graft.dedup.Dedup.indexDedupBatch(bench, bb,
+              batch.select(col("doc")).distinct())
+              .select(col("doc"), col("n_dups").as("n_hits"),
+                col("first_dup").as("first_hit"))
+              .withColumn("pb", pmod(
+                graft.functions.Portable.hash64(col("doc")), lit(16L)))
+              .coalesce(1),
+            epoch)
+        }
       }
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 4)
-      try {
-        writeBucket(0); runIngest()
-        writeBucket(1); writeBucket(2); runIngest()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", before)
-        rows.unpersist(false)
-      }
-      val out = graft.streaming.EpochPartitionedStore
+      g.pin("spark.sql.shuffle.partitions" -> 4)
+      src.runs(Seq(0), Seq(1, 2))(b =>
+        streamed.filter(pmod(col("doc"), lit(3L)) === b))(runIngest())
+      graft.streaming.EpochPartitionedStore
         .readSnapshot(s, s"$outDir/log", "pb", "s20").get
         .select(col("doc"), col("n_hits"), col("first_hit"))
         .localCheckpoint()
-      deleteTree(srcDir, idxDir, outDir, ckpt)
-      out
     }),
 
     // Relevance scoring ON INGEST with a pre-trained lexical model —
@@ -1154,7 +975,7 @@ object StreamingQueries {
     // cost is O(batch) — no corpus state, no growing index — and the
     // accumulated output equals the batch t23 scorer over the same
     // docs, which is exactly what the oracle checks.
-    "s21_stream_bm25" -> ((s, d) => {
+    "s21_stream_bm25" -> ((s, d) => gate(s, "s21") { g =>
       val terms = Seq("vector", "customer", "merge", "scan")
       val docs = Tables.t(s, d, "documents").select(col("doc_id"), col("text"))
       // train the static scorer from the corpus snapshot (one pass)
@@ -1169,54 +990,29 @@ object StreamingQueries {
         .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("c"))
         .groupBy(col("term")).agg(count(lit(1)).cast("double").as("df"))
         .localCheckpoint() // 4 rows; broadcast to every epoch
-      val srcDir = Files.createTempDirectory("graft-s21-src-").toString
-      val outDir = Files.createTempDirectory("graft-s21-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s21-ckpt-").toString
-      val schema = docs.schema
-      val stamped = scala.collection.mutable.Set[String]()
-      def writeBucket(b: Int): Unit = writeStampedBucket(srcDir, stamped, b,
-        docs.filter(pmod(col("doc_id"), lit(3L)) === b))
-      def runIngest(): Unit = {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(srcDir)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            val btok = batch.select(col("doc_id"),
-              graft.text.Text.tokens(col("text")).as("w"))
-            val bdl = btok.select(col("doc_id"),
-              size(col("w")).cast("double").as("dl"))
-            val postings = btok
-              .select(col("doc_id"), explode(col("w")).as("term"))
-              .filter(col("term").isin(terms: _*))
-              .groupBy(col("doc_id"), col("term"))
-              .agg(count(lit(1)).cast("double").as("tf"))
-            // identical literal shapes to t23 / its oracle SQL
-            val wExpr = log((lit(nd) - col("df") + 0.5) /
-                (col("df") + 0.5) + 1) * col("tf") * 2.2 /
-              (col("tf") + lit(1.2) *
-                (lit(1) - 0.75 + lit(0.75) * col("dl") / lit(avgdl)))
-            val scored = postings.join(bdl, "doc_id")
-              .join(broadcast(dfTable), "term")
-              .groupBy(col("doc_id")).agg(round(sum(wExpr), 6).as("score"))
-            PipelineManager.epochAppend(scored.coalesce(1),
-              outDir, epoch, "s21"): Unit
-          }
-          .start()
-        q.awaitTermination()
-      }
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 4)
-      try {
-        writeBucket(0); runIngest()
-        writeBucket(1); writeBucket(2); runIngest()
-      } finally s.conf.set("spark.sql.shuffle.partitions", before)
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(srcDir, outDir, ckpt)
-      out
+      val src = g.bucketSource(docs.schema)
+      val (outDir, ckpt) = (g.dir("out"), g.dir("ckpt"))
+      g.pin("spark.sql.shuffle.partitions" -> 4)
+      src.runs(Seq(0), Seq(1, 2))(b =>
+        docs.filter(pmod(col("doc_id"), lit(3L)) === b))(
+        g.availableNow(src.stream, ckpt) { (batch, epoch) =>
+          val btok = batch.select(col("doc_id"),
+            graft.text.Text.tokens(col("text")).as("w"))
+          val bdl = btok.select(col("doc_id"),
+            size(col("w")).cast("double").as("dl"))
+          val postings = btok
+            .select(col("doc_id"), explode(col("w")).as("term"))
+            .filter(col("term").isin(terms: _*))
+            .groupBy(col("doc_id"), col("term"))
+            .agg(count(lit(1)).cast("double").as("tf"))
+          // identical literal shapes to t23 / its oracle SQL
+          val wExpr = graft.text.Text.bm25Weight(lit(nd), lit(avgdl), 1.2, 0.75)
+          val scored = postings.join(bdl, "doc_id")
+            .join(broadcast(dfTable), "term")
+            .groupBy(col("doc_id")).agg(round(sum(wExpr), 6).as("score"))
+          PipelineManager.epochAppend(scored.coalesce(1), outDir, epoch, "s21")
+        })
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // INCREMENTAL LEXICAL-INDEX MAINTENANCE on ingest — the s15 story
@@ -1237,95 +1033,67 @@ object StreamingQueries {
     // epoch-marked (skipped when already committed), and a replayed
     // epoch whose stats row already landed REUSES that committed row
     // instead of re-adding its batch.
-    "s23_stream_lex_index" -> ((s, d) => {
+    "s23_stream_lex_index" -> ((s, d) => gate(s, "s23") { g =>
       val terms = Seq("vector", "customer", "merge", "scan")
       val docs = Tables.t(s, d, "documents").select(col("doc_id"), col("text"))
-      val srcDir = Files.createTempDirectory("graft-s23-src-").toString
-      val idxDir = Files.createTempDirectory("graft-s23-idx-").toString
-      val outDir = Files.createTempDirectory("graft-s23-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s23-ckpt-").toString
-      val schema = docs.schema
-      val stamped = scala.collection.mutable.Set[String]()
-      def writeBucket(b: Int): Unit = writeStampedBucket(srcDir, stamped, b,
-        docs.filter(pmod(col("doc_id"), lit(3L)) === b))
-      def runIngest(): Unit = {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(srcDir)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            val btok = batch.select(col("doc_id"),
-              graft.text.Text.tokens(col("text")).as("w"))
-            val bdl = btok.select(col("doc_id"),
-              size(col("w")).cast("double").as("dl"))
-            val bpost = btok
-              .select(col("doc_id"), explode(col("w")).as("term"))
-              .filter(col("term").isin(terms: _*))
-              .groupBy(col("doc_id"), col("term"))
-              .agg(count(lit(1)).cast("double").as("tf"))
-              .join(bdl, "doc_id")
-            PipelineManager.epochAppend(bpost.coalesce(1),
-              s"$idxDir/postings", epoch, "s23p"): Unit
-            // running corpus stats: committed row for THIS epoch wins
-            // (replay), else previous epoch's cumulative + this batch
-            val statsPath = s"$idxDir/stats"
-            // the committed-file probe goes through the ONE owner of
-            // epochAppend's rename contract — never a re-spelled glob
-            val existing =
-              if (PipelineManager.committedFiles(statsPath,
-                  s.sparkContext.hadoopConfiguration).nonEmpty)
-                s.read.parquet(statsPath).collect() // ≤ 1 row per epoch
-              else Array.empty[org.apache.spark.sql.Row]
-            val (nd, sumDl) = existing.find(_.getLong(0) == epoch) match {
-              case Some(r) => (r.getDouble(1), r.getDouble(2))
-              case None =>
-                val prior = existing.filter(_.getLong(0) < epoch)
-                  .sortBy(-_.getLong(0)).headOption
-                val b = bdl.agg(count(lit(1)).cast("double"),
-                  coalesce(sum(col("dl")), lit(0.0))).head()
-                (prior.map(_.getDouble(1)).getOrElse(0.0) + b.getDouble(0),
-                  prior.map(_.getDouble(2)).getOrElse(0.0) + b.getDouble(1))
-            }
-            PipelineManager.epochAppend(
-              { import s.implicits._
-                Seq((epoch, nd, sumDl)).toDF("epoch", "nd", "sum_dl") }
-                .coalesce(1),
-              statsPath, epoch, "s23s"): Unit
-            // serve the standing query from the updated index
-            val avgdl = sumDl / nd
-            val post = s.read.parquet(s"$idxDir/postings")
-            val dfT = post.groupBy(col("term"))
-              .agg(count(lit(1)).cast("double").as("df"))
-            val wExpr = log((lit(nd) - col("df") + 0.5) /
-                (col("df") + 0.5) + 1) * col("tf") * 2.2 /
-              (col("tf") + lit(1.2) *
-                (lit(1) - 0.75 + lit(0.75) * col("dl") / lit(avgdl)))
-            val scored = post.join(broadcast(dfT), "term")
-              .groupBy(col("doc_id")).agg(round(sum(wExpr), 6).as("score"))
-            val top = scored.orderBy(col("score").desc, col("doc_id")).limit(3)
-              .withColumn("rank", row_number().over(
-                org.apache.spark.sql.expressions.Window
-                  .orderBy(col("score").desc, col("doc_id"))).cast("long"))
-              .select(col("doc_id"), col("rank"), col("score"))
-            PipelineManager.epochAppend(
-              top.withColumn("epoch", lit(epoch)).coalesce(1),
-              outDir, epoch, "s23"): Unit
+      val src = g.bucketSource(docs.schema)
+      val (idxDir, outDir, ckpt) = (g.dir("idx"), g.dir("out"), g.dir("ckpt"))
+      g.pin("spark.sql.shuffle.partitions" -> 4)
+      src.runs(Seq(0), Seq(1, 2))(b =>
+        docs.filter(pmod(col("doc_id"), lit(3L)) === b))(
+        g.availableNow(src.stream, ckpt) { (batch, epoch) =>
+          val btok = batch.select(col("doc_id"),
+            graft.text.Text.tokens(col("text")).as("w"))
+          val bdl = btok.select(col("doc_id"),
+            size(col("w")).cast("double").as("dl"))
+          val bpost = btok
+            .select(col("doc_id"), explode(col("w")).as("term"))
+            .filter(col("term").isin(terms: _*))
+            .groupBy(col("doc_id"), col("term"))
+            .agg(count(lit(1)).cast("double").as("tf"))
+            .join(bdl, "doc_id")
+          PipelineManager.epochAppend(bpost.coalesce(1),
+            s"$idxDir/postings", epoch, "s23p")
+          // running corpus stats: committed row for THIS epoch wins
+          // (replay), else previous epoch's cumulative + this batch
+          val statsPath = s"$idxDir/stats"
+          // the committed-file probe goes through the ONE owner of
+          // epochAppend's rename contract — never a re-spelled glob
+          val existing =
+            if (g.committed(statsPath) > 0)
+              s.read.parquet(statsPath).collect() // ≤ 1 row per epoch
+            else Array.empty[Row]
+          val (nd, sumDl) = existing.find(_.getLong(0) == epoch) match {
+            case Some(r) => (r.getDouble(1), r.getDouble(2))
+            case None =>
+              val prior = existing.filter(_.getLong(0) < epoch)
+                .sortBy(-_.getLong(0)).headOption
+              val b = bdl.agg(count(lit(1)).cast("double"),
+                coalesce(sum(col("dl")), lit(0.0))).head()
+              (prior.map(_.getDouble(1)).getOrElse(0.0) + b.getDouble(0),
+                prior.map(_.getDouble(2)).getOrElse(0.0) + b.getDouble(1))
           }
-          .start()
-        q.awaitTermination()
-      }
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 4)
-      try {
-        writeBucket(0); runIngest()
-        writeBucket(1); writeBucket(2); runIngest()
-      } finally s.conf.set("spark.sql.shuffle.partitions", before)
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(srcDir, idxDir, outDir, ckpt)
-      out
+          PipelineManager.epochAppend(
+            { import s.implicits._
+              Seq((epoch, nd, sumDl)).toDF("epoch", "nd", "sum_dl") }
+              .coalesce(1),
+            statsPath, epoch, "s23s")
+          // serve the standing query from the updated index
+          val avgdl = sumDl / nd
+          val post = s.read.parquet(s"$idxDir/postings")
+          val dfT = post.groupBy(col("term"))
+            .agg(count(lit(1)).cast("double").as("df"))
+          val wExpr = graft.text.Text.bm25Weight(lit(nd), lit(avgdl), 1.2, 0.75)
+          val scored = post.join(broadcast(dfT), "term")
+            .groupBy(col("doc_id")).agg(round(sum(wExpr), 6).as("score"))
+          val top = scored.orderBy(col("score").desc, col("doc_id")).limit(3)
+            .withColumn("rank", row_number().over(
+              org.apache.spark.sql.expressions.Window
+                .orderBy(col("score").desc, col("doc_id"))).cast("long"))
+            .select(col("doc_id"), col("rank"), col("score"))
+          g.serveTo(outDir, epoch, top)
+        })
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // FULL-VOCABULARY incremental inverted index — s23 without its
@@ -1341,45 +1109,23 @@ object StreamingQueries {
     // t23's exact closed form over the ingested prefix; the second
     // run constructs a FRESH index object over the surviving store,
     // exercising the compaction recovery path.
-    "s24_stream_lex_vocab" -> ((s, d) => {
+    "s24_stream_lex_vocab" -> ((s, d) => gate(s, "s24") { g =>
       val qTerms = Seq("table", "stream", "window", "sort")
       val docs = Tables.t(s, d, "documents").select(col("doc_id"), col("text"))
-      val srcDir = Files.createTempDirectory("graft-s24-src-").toString
-      val idxDir = Files.createTempDirectory("graft-s24-idx-").toString
-      val outDir = Files.createTempDirectory("graft-s24-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s24-ckpt-").toString
-      val schema = docs.schema
-      val stamped = scala.collection.mutable.Set[String]()
-      def writeBucket(b: Int): Unit = writeStampedBucket(srcDir, stamped, b,
-        docs.filter(pmod(col("doc_id"), lit(3L)) === b))
+      val src = g.bucketSource(docs.schema)
+      val (idxDir, outDir, ckpt) = (g.dir("idx"), g.dir("out"), g.dir("ckpt"))
       def runIngest(): Unit = {
         val ilx = new graft.streaming.IncrementalLexIndex(s, idxDir,
           name = "s24", compactEvery = 2)
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(srcDir)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            ilx.appendEpoch(batch, epoch)
-            PipelineManager.epochAppend(
-              ilx.serve(qTerms, 3).withColumn("epoch", lit(epoch)).coalesce(1),
-              outDir, epoch, "s24"): Unit
-          }
-          .start()
-        q.awaitTermination()
+        g.availableNow(src.stream, ckpt) { (batch, epoch) =>
+          ilx.appendEpoch(batch, epoch)
+          g.serveTo(outDir, epoch, ilx.serve(qTerms, 3))
+        }
       }
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 4)
-      try {
-        writeBucket(0); runIngest()
-        writeBucket(1); writeBucket(2); runIngest()
-      } finally s.conf.set("spark.sql.shuffle.partitions", before)
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(srcDir, idxDir, outDir, ckpt)
-      out
+      g.pin("spark.sql.shuffle.partitions" -> 4)
+      src.runs(Seq(0), Seq(1, 2))(b =>
+        docs.filter(pmod(col("doc_id"), lit(3L)) === b))(runIngest())
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // STREAMING HYBRID RETRIEVAL — e20's reciprocal-rank fusion served
@@ -1393,77 +1139,54 @@ object StreamingQueries {
     // ≤ 2k rows per epoch no matter how large the ingested corpus is,
     // exactly e20's 100 TB contract, now holding while both indexes
     // grow. The second run re-opens both stores (recovery paths).
-    "s25_stream_hybrid" -> ((s, d) => {
+    "s25_stream_hybrid" -> ((s, d) => gate(s, "s25") { g =>
       val qTerms = Seq("vector", "customer", "merge", "scan")
       val docs = Tables.t(s, d, "documents").select(col("doc_id"), col("text"))
       val emb = Tables.t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val probe = graft.ann.Ann.pinTiny(emb.filter(col("vec_id") === 0))
-      val srcDir = Files.createTempDirectory("graft-s25-src-").toString
-      val idxDir = Files.createTempDirectory("graft-s25-idx-").toString
-      val vecDir = Files.createTempDirectory("graft-s25-vec-").toString + "/v"
-      val outDir = Files.createTempDirectory("graft-s25-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s25-ckpt-").toString
-      val schema = docs.schema
-      val stamped = scala.collection.mutable.Set[String]()
-      def writeBucket(b: Int): Unit = writeStampedBucket(srcDir, stamped, b,
-        docs.filter(pmod(col("doc_id"), lit(3L)) === b))
+      val src = g.bucketSource(docs.schema)
+      val (idxDir, outDir, ckpt) = (g.dir("idx"), g.dir("out"), g.dir("ckpt"))
+      val vecDir = g.dir("vec") + "/v"
       def runIngest(): Unit = {
         val ilx = new graft.streaming.IncrementalLexIndex(s, idxDir,
           name = "s25")
         var vview: Option[graft.streaming.DurableIndexView] = None
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(srcDir)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            // lexical store: the batch's full-vocab postings
-            ilx.appendEpoch(batch, epoch)
-            // vector store: this epoch's embeddings slice
-            val vFiles = PipelineManager.epochAppend(
-              emb.filter(pmod(col("vec_id"), lit(3L)) === epoch).coalesce(1),
-              vecDir, epoch, "s25v")
-            val vecs = vview match {
-              case None =>
-                val v = new graft.streaming.DurableIndexView(s, vecDir)
-                vview = Some(v); v.frame
-              case Some(v) => v.extend(vFiles); v.frame
-            }
-            val lex = ilx.serve(qTerms, 10)
-              .select(col("doc_id"), col("rank").as("lex_rank"))
-            val vec = graft.ann.Ann.bruteForceTopK(probe, vecs, 10)
-              .select(col("cand_id").as("doc_id"),
-                col("rank").cast("long").as("vec_rank"))
-            val fused = lex.join(vec, Seq("doc_id"), "full_outer")
-              .withColumn("rrf", round(
-                coalesce(lit(1.0) / (lit(60) + col("lex_rank")), lit(0.0)) +
-                  coalesce(lit(1.0) / (lit(60) + col("vec_rank")), lit(0.0)), 6))
-            val top = fused.orderBy(col("rrf").desc, col("doc_id")).limit(10)
-              .withColumn("rank", row_number()
-                .over(org.apache.spark.sql.expressions.Window
-                  .orderBy(col("rrf").desc, col("doc_id"))).cast("long"))
-              .select(col("doc_id"), col("rank"), col("lex_rank"),
-                col("vec_rank"), col("rrf"))
-            PipelineManager.epochAppend(
-              top.withColumn("epoch", lit(epoch)).coalesce(1),
-              outDir, epoch, "s25"): Unit
+        g.availableNow(src.stream, ckpt) { (batch, epoch) =>
+          // lexical store: the batch's full-vocab postings
+          ilx.appendEpoch(batch, epoch)
+          // vector store: this epoch's embeddings slice
+          val vFiles = PipelineManager.epochAppend(
+            emb.filter(pmod(col("vec_id"), lit(3L)) === epoch).coalesce(1),
+            vecDir, epoch, "s25v")
+          val vecs = vview match {
+            case None =>
+              val v = new graft.streaming.DurableIndexView(s, vecDir)
+              vview = Some(v); v.frame
+            case Some(v) => v.extend(vFiles); v.frame
           }
-          .start()
-        q.awaitTermination()
+          val lex = ilx.serve(qTerms, 10)
+            .select(col("doc_id"), col("rank").as("lex_rank"))
+          val vec = graft.ann.Ann.bruteForceTopK(probe, vecs, 10)
+            .select(col("cand_id").as("doc_id"),
+              col("rank").cast("long").as("vec_rank"))
+          val fused = lex.join(vec, Seq("doc_id"), "full_outer")
+            .withColumn("rrf", round(
+              coalesce(lit(1.0) / (lit(60) + col("lex_rank")), lit(0.0)) +
+                coalesce(lit(1.0) / (lit(60) + col("vec_rank")), lit(0.0)), 6))
+          val top = fused.orderBy(col("rrf").desc, col("doc_id")).limit(10)
+            .withColumn("rank", row_number()
+              .over(org.apache.spark.sql.expressions.Window
+                .orderBy(col("rrf").desc, col("doc_id"))).cast("long"))
+            .select(col("doc_id"), col("rank"), col("lex_rank"),
+              col("vec_rank"), col("rrf"))
+          g.serveTo(outDir, epoch, top)
+        }
       }
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 4)
-      try {
-        writeBucket(0); runIngest()
-        writeBucket(1); writeBucket(2); runIngest()
-      } finally s.conf.set("spark.sql.shuffle.partitions", before)
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(srcDir, idxDir, new java.io.File(vecDir).getParent,
-        outDir, ckpt)
-      out
+      g.pin("spark.sql.shuffle.partitions" -> 4)
+      src.runs(Seq(0), Seq(1, 2))(b =>
+        docs.filter(pmod(col("doc_id"), lit(3L)) === b))(runIngest())
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // STANDING MULTI-QUERY CURATION over the live index — t26's
@@ -1475,49 +1198,26 @@ object StreamingQueries {
     // the index absorbs each batch. None of the 12 terms is named at
     // ingest; per (epoch, query) the rows bit-match independent
     // single-query serves, which is what the unrolled oracle scores.
-    "s28_stream_multi_bm25" -> ((s, d) => {
+    "s28_stream_multi_bm25" -> ((s, d) => gate(s, "s28") { g =>
       val qset = Seq(
         "qA" -> Seq("table", "stream", "window", "sort"),
         "qB" -> Seq("vector", "customer", "merge", "scan"),
         "qC" -> Seq("join", "hash", "fast", "slow"))
       val docs = Tables.t(s, d, "documents").select(col("doc_id"), col("text"))
-      val srcDir = Files.createTempDirectory("graft-s28-src-").toString
-      val idxDir = Files.createTempDirectory("graft-s28-idx-").toString
-      val outDir = Files.createTempDirectory("graft-s28-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s28-ckpt-").toString
-      val schema = docs.schema
-      val stamped = scala.collection.mutable.Set[String]()
-      def writeBucket(b: Int): Unit = writeStampedBucket(srcDir, stamped, b,
-        docs.filter(pmod(col("doc_id"), lit(3L)) === b))
+      val src = g.bucketSource(docs.schema)
+      val (idxDir, outDir, ckpt) = (g.dir("idx"), g.dir("out"), g.dir("ckpt"))
       def runIngest(): Unit = {
         val ilx = new graft.streaming.IncrementalLexIndex(s, idxDir,
           name = "s28", compactEvery = 2)
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(srcDir)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            ilx.appendEpoch(batch, epoch)
-            PipelineManager.epochAppend(
-              ilx.serveMulti(qset, 3)
-                .withColumn("epoch", lit(epoch)).coalesce(1),
-              outDir, epoch, "s28"): Unit
-          }
-          .start()
-        q.awaitTermination()
+        g.availableNow(src.stream, ckpt) { (batch, epoch) =>
+          ilx.appendEpoch(batch, epoch)
+          g.serveTo(outDir, epoch, ilx.serveMulti(qset, 3))
+        }
       }
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 4)
-      try {
-        writeBucket(0); runIngest()
-        writeBucket(1); writeBucket(2); runIngest()
-      } finally s.conf.set("spark.sql.shuffle.partitions", before)
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(srcDir, idxDir, outDir, ckpt)
-      out
+      g.pin("spark.sql.shuffle.partitions" -> 4)
+      src.runs(Seq(0), Seq(1, 2))(b =>
+        docs.filter(pmod(col("doc_id"), lit(3L)) === b))(runIngest())
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // INCREMENTAL IVF VECTOR INDEX — the s24 story for the vector
@@ -1529,50 +1229,27 @@ object StreamingQueries {
     // reads ONLY the probed cells' directories. Bit-matches the batch
     // IVF closed form (e06's shapes) over every ingested prefix; the
     // second run re-opens the store through recovery.
-    "s26_stream_ivf" -> ((s, d) => {
+    "s26_stream_ivf" -> ((s, d) => gate(s, "s26") { g =>
       val emb = Tables.t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val cents = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cent_id"),
           graft.ann.Ann.toDouble(col("embedding")).as("ce"))
       val probes = graft.ann.Ann.pinTiny(emb.filter(col("vec_id") < 4))
-      val srcDir = Files.createTempDirectory("graft-s26-src-").toString
-      val idxDir = Files.createTempDirectory("graft-s26-idx-").toString
-      val outDir = Files.createTempDirectory("graft-s26-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s26-ckpt-").toString
-      val schema = emb.schema
-      val stamped = scala.collection.mutable.Set[String]()
-      def writeBucket(b: Int): Unit = writeStampedBucket(srcDir, stamped, b,
-        emb.filter(pmod(col("vec_id"), lit(3L)) === b))
+      val src = g.bucketSource(emb.schema)
+      val (idxDir, outDir, ckpt) = (g.dir("idx"), g.dir("out"), g.dir("ckpt"))
       def runIngest(): Unit = {
         val ivx = new graft.streaming.IncrementalVectorIndex(s, idxDir,
           cents, name = "s26", compactEvery = 2)
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(srcDir)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            ivx.appendEpoch(batch, epoch)
-            PipelineManager.epochAppend(
-              ivx.serve(probes, k = 3, nprobe = 2)
-                .withColumn("epoch", lit(epoch)).coalesce(1),
-              outDir, epoch, "s26"): Unit
-          }
-          .start()
-        q.awaitTermination()
+        g.availableNow(src.stream, ckpt) { (batch, epoch) =>
+          ivx.appendEpoch(batch, epoch)
+          g.serveTo(outDir, epoch, ivx.serve(probes, k = 3, nprobe = 2))
+        }
       }
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 4)
-      try {
-        writeBucket(0); runIngest()
-        writeBucket(1); writeBucket(2); runIngest()
-      } finally s.conf.set("spark.sql.shuffle.partitions", before)
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(srcDir, idxDir, outDir, ckpt)
-      out
+      g.pin("spark.sql.shuffle.partitions" -> 4)
+      src.runs(Seq(0), Seq(1, 2))(b =>
+        emb.filter(pmod(col("vec_id"), lit(3L)) === b))(runIngest())
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // INCREMENTAL IVF+PQ INDEX, MULTI-PROBE SERVE — s26 with the
@@ -1587,7 +1264,7 @@ object StreamingQueries {
     // cosine re-rank of only those candidates to top-3. Bit-matches
     // the e14 closed form + re-rank over every ingested prefix; the
     // second run re-opens the store through recovery.
-    "s29_stream_pq_ivf" -> ((s, d) => {
+    "s29_stream_pq_ivf" -> ((s, d) => gate(s, "s29") { g =>
       val emb = Tables.t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val cents = emb.filter(col("vec_id") < 8)
@@ -1596,43 +1273,20 @@ object StreamingQueries {
       val cb = graft.ann.Ann.pinTiny(graft.ann.Ann.pqCodebook(
         graft.ann.Ann.pqSubvectors(emb, 8), 16))
       val probes = graft.ann.Ann.pinTiny(emb.filter(col("vec_id") < 4))
-      val srcDir = Files.createTempDirectory("graft-s29-src-").toString
-      val idxDir = Files.createTempDirectory("graft-s29-idx-").toString
-      val outDir = Files.createTempDirectory("graft-s29-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s29-ckpt-").toString
-      val schema = emb.schema
-      val stamped = scala.collection.mutable.Set[String]()
-      def writeBucket(b: Int): Unit = writeStampedBucket(srcDir, stamped, b,
-        emb.filter(pmod(col("vec_id"), lit(3L)) === b))
+      val src = g.bucketSource(emb.schema)
+      val (idxDir, outDir, ckpt) = (g.dir("idx"), g.dir("out"), g.dir("ckpt"))
       def runIngest(): Unit = {
         val ipx = new graft.streaming.IncrementalPqIndex(s, idxDir,
           cents, cb, m = 8, name = "s29", compactEvery = 2)
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(srcDir)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            ipx.appendEpoch(batch, epoch)
-            PipelineManager.epochAppend(
-              ipx.serve(probes, k = 3, nprobe = 2, rerank = 6)
-                .withColumn("epoch", lit(epoch)).coalesce(1),
-              outDir, epoch, "s29"): Unit
-          }
-          .start()
-        q.awaitTermination()
+        g.availableNow(src.stream, ckpt) { (batch, epoch) =>
+          ipx.appendEpoch(batch, epoch)
+          g.serveTo(outDir, epoch, ipx.serve(probes, k = 3, nprobe = 2, rerank = 6))
+        }
       }
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 4)
-      try {
-        writeBucket(0); runIngest()
-        writeBucket(1); writeBucket(2); runIngest()
-      } finally s.conf.set("spark.sql.shuffle.partitions", before)
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(srcDir, idxDir, outDir, ckpt)
-      out
+      g.pin("spark.sql.shuffle.partitions" -> 4)
+      src.runs(Seq(0), Seq(1, 2))(b =>
+        emb.filter(pmod(col("vec_id"), lit(3L)) === b))(runIngest())
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // CODEBOOK RETRAIN-AND-REBUILD WITH SERVE CUTOVER — the remedy
@@ -1650,7 +1304,7 @@ object StreamingQueries {
     // operational claim), 'post' (new index, new codebook). The
     // oracle computes both codebooks' closed forms over the full
     // corpus; 'pre' must equal 'during' bit for bit.
-    "s32_pq_rebuild_cutover" -> ((s, d) => {
+    "s32_pq_rebuild_cutover" -> ((s, d) => gate(s, "s32") { g =>
       val emb = Tables.t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val cents = emb.filter(col("vec_id") < 8)
@@ -1667,63 +1321,43 @@ object StreamingQueries {
           .select(col("sub"), (col("vec_id") - 16).cast("int").as("code"),
             col("sv").as("cv")))
       val probes = graft.ann.Ann.pinTiny(emb.filter(col("vec_id") < 2))
-      val srcDir = Files.createTempDirectory("graft-s32-src-").toString
-      val idxA = Files.createTempDirectory("graft-s32-idxA-").toString
-      val idxB = Files.createTempDirectory("graft-s32-idxB-").toString
-      val outDir = Files.createTempDirectory("graft-s32-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s32-ckpt-").toString
-      val schema = emb.schema
-      val stamped = scala.collection.mutable.Set[String]()
-      def writeBucket(b: Int): Unit = writeStampedBucket(srcDir, stamped, b,
-        emb.filter(pmod(col("vec_id"), lit(3L)) === b))
+      val src = g.bucketSource(emb.schema)
+      val (idxA, idxB) = (g.dir("idxA"), g.dir("idxB"))
+      val (outDir, ckpt) = (g.dir("out"), g.dir("ckpt"))
       def phased(phase: String, df: DataFrame): DataFrame =
         df.withColumn("phase", lit(phase))
           .select(col("phase"), col("query_id"), col("cand_id"),
             col("rank"), col("cos"))
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 4)
-      try {
-        // the LIVE index: streaming ingest of the whole corpus under
-        // the old codebook (3 one-file epochs, compaction tick)
-        val ipxA = new graft.streaming.IncrementalPqIndex(s, idxA,
-          cents, cbOld, m = 8, name = "s32a", compactEvery = 2)
-        writeBucket(0); writeBucket(1); writeBucket(2)
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(srcDir)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            ipxA.appendEpoch(batch, epoch)
-          }
-          .start()
-        q.awaitTermination()
-        def serveOf(ipx: graft.streaming.IncrementalPqIndex): DataFrame =
-          ipx.serve(probes, k = 3, nprobe = 2, rerank = 6)
-        PipelineManager.epochAppend(
-          phased("pre", serveOf(ipxA)).coalesce(1), outDir, 0, "s32"): Unit
-        // REBUILD beside it: a fresh store under the new codebook,
-        // backfilled from the RAW corpus (the source of truth) in two
-        // epochs with a compaction tick; the old index serves
-        // UNCHANGED in the middle of the backfill
-        val ipxB = new graft.streaming.IncrementalPqIndex(s, idxB,
-          cents, cbNew, m = 8, name = "s32b", compactEvery = 2)
-        ipxB.appendEpoch(emb.filter(pmod(col("vec_id"), lit(2L)) === 0), 0L)
-        PipelineManager.epochAppend(
-          phased("during", serveOf(ipxA)).coalesce(1), outDir, 1, "s32"): Unit
-        ipxB.appendEpoch(emb.filter(pmod(col("vec_id"), lit(2L)) === 1), 1L)
-        // cutover gate: reads move only when the rebuild's committed
-        // ceiling covers its backfill plan
-        require(ipxB.cellStore.committedEpochCeiling == 1L,
-          "rebuild incomplete; refusing cutover")
-        PipelineManager.epochAppend(
-          phased("post", serveOf(ipxB)).coalesce(1), outDir, 2, "s32"): Unit
-      } finally s.conf.set("spark.sql.shuffle.partitions", before)
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(srcDir, idxA, idxB, outDir, ckpt)
-      out
+      g.pin("spark.sql.shuffle.partitions" -> 4)
+      // the LIVE index: streaming ingest of the whole corpus under
+      // the old codebook (3 one-file epochs, compaction tick)
+      val ipxA = new graft.streaming.IncrementalPqIndex(s, idxA,
+        cents, cbOld, m = 8, name = "s32a", compactEvery = 2)
+      src.runs(Seq(0, 1, 2))(b =>
+        emb.filter(pmod(col("vec_id"), lit(3L)) === b))(
+        g.availableNow(src.stream, ckpt)((batch, epoch) =>
+          ipxA.appendEpoch(batch, epoch)))
+      def serveOf(ipx: graft.streaming.IncrementalPqIndex): DataFrame =
+        ipx.serve(probes, k = 3, nprobe = 2, rerank = 6)
+      PipelineManager.epochAppend(
+        phased("pre", serveOf(ipxA)).coalesce(1), outDir, 0, "s32")
+      // REBUILD beside it: a fresh store under the new codebook,
+      // backfilled from the RAW corpus (the source of truth) in two
+      // epochs with a compaction tick; the old index serves
+      // UNCHANGED in the middle of the backfill
+      val ipxB = new graft.streaming.IncrementalPqIndex(s, idxB,
+        cents, cbNew, m = 8, name = "s32b", compactEvery = 2)
+      ipxB.appendEpoch(emb.filter(pmod(col("vec_id"), lit(2L)) === 0), 0L)
+      PipelineManager.epochAppend(
+        phased("during", serveOf(ipxA)).coalesce(1), outDir, 1, "s32")
+      ipxB.appendEpoch(emb.filter(pmod(col("vec_id"), lit(2L)) === 1), 1L)
+      // cutover gate: reads move only when the rebuild's committed
+      // ceiling covers its backfill plan
+      require(ipxB.cellStore.committedEpochCeiling == 1L,
+        "rebuild incomplete; refusing cutover")
+      PipelineManager.epochAppend(
+        phased("post", serveOf(ipxB)).coalesce(1), outDir, 2, "s32")
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // DRIFT TELEMETRY, VALUE-PINNED (s34): adcRankAgreement stops
@@ -1739,7 +1373,7 @@ object StreamingQueries {
     // metric exists to expose, with its k/rerank window published so
     // the random-ordering floor is computable. The remedy this
     // triggers is the s32/s33 rebuild.
-    "s34_drift_telemetry" -> ((s, d) => {
+    "s34_drift_telemetry" -> ((s, d) => gate(s, "s34") { g =>
       val emb = Tables.t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val embN = emb
@@ -1754,45 +1388,35 @@ object StreamingQueries {
       val cbOld = graft.ann.Ann.pinTiny(graft.ann.Ann.pqCodebook(
         graft.ann.Ann.pqSubvectors(embN, 8), 16))
       val probes = graft.ann.Ann.pinTiny(embN.filter(col("vec_id") < 2))
-      val idxDir = Files.createTempDirectory("graft-s34-idx-").toString
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 4)
-      try {
-        val ipx = new graft.streaming.IncrementalPqIndex(s, idxDir,
-          cents, cbOld, m = 8, name = "s34", compactEvery = 2)
-        def servedAgreement(nth: Long): Double = {
-          require(ipx.serve(probes, k = 3, nprobe = 2, rerank = 6)
-            .count() > 0, "serve returned no rows to measure")
-          // the observation completes on the listener bus,
-          // asynchronously after count() — poll the consumed-serve
-          // counter, never a sleep sized to the bus
-          val deadline = System.currentTimeMillis() + 60000L
-          while (ipx.health.getOrElse("driftConsumedServes", 0.0) < nth &&
-              System.currentTimeMillis() < deadline) Thread.sleep(10L)
-          ipx.health.getOrElse("adcRankAgreement",
-            sys.error("no drift metric after a consumed serve"))
-        }
-        // epoch 0: the matched prefix — every vector reconstructs
-        // exactly under the codebook
-        ipx.appendEpoch(embN.filter(col("vec_id") < 16), 0L)
-        val matched = servedAgreement(1L)
-        // epoch 1: the drifted half — off-codebook vectors quantize
-        // with error
-        ipx.appendEpoch(embN.filter(col("vec_id") >= 16), 1L)
-        val drifted = servedAgreement(2L)
-        val h = ipx.health
-        import s.implicits._
-        Seq(
-          ("matched", "agreement", f"$matched%.6f"),
-          ("drifted", "below_matched",
-            (drifted < matched - 1e-9).toString),
-          ("window", "topk", h("driftTopK").toLong.toString),
-          ("window", "rerank", h("driftRerank").toLong.toString))
-          .toDF("kind", "k", "v")
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", before)
-        deleteTree(idxDir)
+      val idxDir = g.dir("idx")
+      g.pin("spark.sql.shuffle.partitions" -> 4)
+      val ipx = new graft.streaming.IncrementalPqIndex(s, idxDir,
+        cents, cbOld, m = 8, name = "s34", compactEvery = 2)
+      def servedAgreement(nth: Long): Double = {
+        require(ipx.serve(probes, k = 3, nprobe = 2, rerank = 6)
+          .count() > 0, "serve returned no rows to measure")
+        // the observation completes on the listener bus,
+        // asynchronously after count() — poll the consumed-serve
+        // counter, never a sleep sized to the bus
+        g.await(s"drift observation of serve $nth")(
+          ipx.health.getOrElse("driftConsumedServes", 0.0) >= nth)
+        ipx.health.getOrElse("adcRankAgreement",
+          sys.error("no drift metric after a consumed serve"))
       }
+      // epoch 0: the matched prefix — every vector reconstructs
+      // exactly under the codebook
+      ipx.appendEpoch(embN.filter(col("vec_id") < 16), 0L)
+      val matched = servedAgreement(1L)
+      // epoch 1: the drifted half — off-codebook vectors quantize
+      // with error
+      ipx.appendEpoch(embN.filter(col("vec_id") >= 16), 1L)
+      val drifted = servedAgreement(2L)
+      val h = ipx.health
+      g.kv(
+        ("matched", "agreement", f"$matched%.6f"),
+        ("drifted", "below_matched", drifted < matched - 1e-9),
+        ("window", "topk", h("driftTopK").toLong),
+        ("window", "rerank", h("driftRerank").toLong))
     }),
 
     // THE MANAGED REBUILD VERB (s33) — s32's protocol with the WHOLE
@@ -1811,7 +1435,7 @@ object StreamingQueries {
     // visible on /diag, old store swept) is require()d — a violation
     // errs the gate. Epoch 1 of the backfill is latch-held so the
     // mid-backfill serve is deterministic.
-    "s33_rebuild_verb" -> ((s, d) => {
+    "s33_rebuild_verb" -> ((s, d) => gate(s, "s33") { g =>
       val emb = Tables.t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"))
       val cents = emb.filter(col("vec_id") < 8)
@@ -1824,100 +1448,91 @@ object StreamingQueries {
           .select(col("sub"), (col("vec_id") - 16).cast("int").as("code"),
             col("sv").as("cv")))
       val probes = graft.ann.Ann.pinTiny(emb.filter(col("vec_id") < 2))
-      val ckptRoot = Files.createTempDirectory("graft-s33-pm-").toString
-      val idxA = Files.createTempDirectory("graft-s33-idxA-").toString
-      val idxB = Files.createTempDirectory("graft-s33-idxB-").toString
-      val outDir = Files.createTempDirectory("graft-s33-out-").toString
+      val (ckptRoot, outDir) = (g.dir("pm"), g.dir("out"))
+      val (idxA, idxB) = (g.dir("idxA"), g.dir("idxB"))
       def phased(phase: String, df: DataFrame): DataFrame =
         df.withColumn("phase", lit(phase))
           .select(col("phase"), col("query_id"), col("cand_id"),
             col("rank"), col("cos"))
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 4)
-      val pm = new PipelineManager(s, ckptRoot)
+      g.pin("spark.sql.shuffle.partitions" -> 4)
+      val pm = g.track(new PipelineManager(s, ckptRoot))
       val srv = new graft.rest.ManagementServer(pm).start()
-      try {
-        val base = s"http://localhost:${srv.boundPort}"
-        val client = java.net.http.HttpClient.newHttpClient()
-        // timeout on every request: a handler that dies without
-        // responding must fail the gate loudly, never park send()
-        def http(method: String, path: String): java.net.http.HttpResponse[String] =
-          client.send(java.net.http.HttpRequest.newBuilder(
-              java.net.URI.create(base + path)).header("X-Owner", "ops")
-              .timeout(java.time.Duration.ofSeconds(180))
-              .method(method, java.net.http.HttpRequest.BodyPublishers
-                .noBody()).build(),
-            java.net.http.HttpResponse.BodyHandlers.ofString())
-        pm.create(PipelineSpec("s33a", "parquet", "parquet", idxA))
-        // the LIVE index: full corpus under the old codebook, three
-        // epochs with a compaction tick (s32's content, direct form)
-        val ipxA = new graft.streaming.IncrementalPqIndex(s, idxA,
-          cents, cbOld, m = 8, name = "s33a", compactEvery = 2)
-        (0L to 2L).foreach(e => ipxA.appendEpoch(
-          emb.filter(pmod(col("vec_id"), lit(3L)) === e), e))
-        val slot = new java.util.concurrent.atomic.AtomicReference(ipxA)
-        pm.registerIndexHealth("s33a", () => slot.get().health)
-        val epoch1Gate = new java.util.concurrent.CountDownLatch(1)
-        val ipxB = new graft.streaming.IncrementalPqIndex(s, idxB,
-          cents, cbNew, m = 8, name = "s33b", compactEvery = 2)
-        pm.registerIndexRebuilder("s33a",
-          new graft.streaming.IndexRebuilder {
-            def planEpochs: Long = 2L
-            def backfillEpoch(epoch: Long): Unit = {
-              if (epoch == 1L) epoch1Gate.await()
-              ipxB.appendEpoch(
-                emb.filter(pmod(col("vec_id"), lit(2L)) === epoch), epoch)
-            }
-            def oldCeiling: Long = ipxA.cellStore.committedEpochCeiling
-            def newCeiling: Long = ipxB.cellStore.committedEpochCeiling
-            def cutover(): Unit = { slot.set(ipxB); deleteTree(idxA) }
-          })
-        def serveOf(): DataFrame =
-          slot.get().serve(probes, k = 3, nprobe = 2, rerank = 6)
-        PipelineManager.epochAppend(
-          phased("pre", serveOf()).coalesce(1), outDir, 0, "s33"): Unit
-        // REST call 1: start the rebuild
-        val posted = http("POST", "/pipelines/s33a/rebuildIndex")
-        require(posted.statusCode() == 202, s"rebuild POST: ${posted.body()}")
-        require(http("POST", "/pipelines/s33a/rebuildIndex")
-          .statusCode() == 409,
-          "concurrent rebuild must be refused with the house 409 shape")
-        // REST call 2: poll to the deterministic mid-point
-        def progress(): String =
-          http("GET", "/pipelines/s33a/rebuildIndex").body()
-        val deadline = System.currentTimeMillis() + 120000L
-        while (!progress().contains("\"epochsDone\":1") &&
-            System.currentTimeMillis() < deadline) Thread.sleep(20L)
-        val mid = progress()
-        require(mid.contains("\"state\":\"backfilling\"") &&
-          mid.contains("\"epochsDone\":1"), s"mid progress: $mid")
-        val diag = http("GET", "/diag/s33a").body()
-        require(diag.contains("\"rebuild\"") &&
-          diag.contains("\"backfilling\"") &&
-          diag.contains("\"oldCeiling\":2") &&
-          diag.contains("\"newCeiling\":0"), s"diag mid-rebuild: $diag")
-        // the old index serves UNCHANGED mid-backfill (oracle pins it)
-        PipelineManager.epochAppend(
-          phased("during", serveOf()).coalesce(1), outDir, 1, "s33"): Unit
-        // REST call 3: release and poll to completion (the cutover
-        // gate is the manager's, not the gate's)
-        epoch1Gate.countDown()
-        while (!progress().contains("\"state\":\"complete\"") &&
-            System.currentTimeMillis() < deadline) Thread.sleep(20L)
-        val fin = progress()
-        require(fin.contains("\"state\":\"complete\"") &&
-          fin.contains("\"newCeiling\":1"), s"final progress: $fin")
-        require(!new java.io.File(idxA).exists(),
-          "cutover must sweep the superseded store")
-        PipelineManager.epochAppend(
-          phased("post", serveOf()).coalesce(1), outDir, 2, "s33"): Unit
-      } finally {
-        srv.stop(); pm.close()
-        s.conf.set("spark.sql.shuffle.partitions", before)
-      }
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(ckptRoot, idxA, idxB, outDir)
-      out
+      g.onRelease(srv.stop())
+      val base = s"http://localhost:${srv.boundPort}"
+      val client = java.net.http.HttpClient.newHttpClient()
+      // timeout on every request: a handler that dies without
+      // responding must fail the gate loudly, never park send()
+      def http(method: String, path: String): java.net.http.HttpResponse[String] =
+        client.send(java.net.http.HttpRequest.newBuilder(
+            java.net.URI.create(base + path)).header("X-Owner", "ops")
+            .timeout(java.time.Duration.ofSeconds(180))
+            .method(method, java.net.http.HttpRequest.BodyPublishers
+              .noBody()).build(),
+          java.net.http.HttpResponse.BodyHandlers.ofString())
+      pm.create(PipelineSpec("s33a", "parquet", "parquet", idxA))
+      // the LIVE index: full corpus under the old codebook, three
+      // epochs with a compaction tick (s32's content, direct form)
+      val ipxA = new graft.streaming.IncrementalPqIndex(s, idxA,
+        cents, cbOld, m = 8, name = "s33a", compactEvery = 2)
+      (0L to 2L).foreach(e => ipxA.appendEpoch(
+        emb.filter(pmod(col("vec_id"), lit(3L)) === e), e))
+      val slot = new java.util.concurrent.atomic.AtomicReference(ipxA)
+      pm.registerIndexHealth("s33a", () => slot.get().health)
+      val epoch1Gate = new java.util.concurrent.CountDownLatch(1)
+      val ipxB = new graft.streaming.IncrementalPqIndex(s, idxB,
+        cents, cbNew, m = 8, name = "s33b", compactEvery = 2)
+      pm.registerIndexRebuilder("s33a",
+        new graft.streaming.IndexRebuilder {
+          def planEpochs: Long = 2L
+          def backfillEpoch(epoch: Long): Unit = {
+            if (epoch == 1L) epoch1Gate.await()
+            ipxB.appendEpoch(
+              emb.filter(pmod(col("vec_id"), lit(2L)) === epoch), epoch)
+          }
+          def oldCeiling: Long = ipxA.cellStore.committedEpochCeiling
+          def newCeiling: Long = ipxB.cellStore.committedEpochCeiling
+          def cutover(): Unit = { slot.set(ipxB); deleteTree(idxA) }
+        })
+      def serveOf(): DataFrame =
+        slot.get().serve(probes, k = 3, nprobe = 2, rerank = 6)
+      PipelineManager.epochAppend(
+        phased("pre", serveOf()).coalesce(1), outDir, 0, "s33")
+      // REST call 1: start the rebuild
+      val posted = http("POST", "/pipelines/s33a/rebuildIndex")
+      require(posted.statusCode() == 202, s"rebuild POST: ${posted.body()}")
+      require(http("POST", "/pipelines/s33a/rebuildIndex")
+        .statusCode() == 409,
+        "concurrent rebuild must be refused with the house 409 shape")
+      // REST call 2: poll to the deterministic mid-point
+      def progress(): String =
+        http("GET", "/pipelines/s33a/rebuildIndex").body()
+      val deadline = System.currentTimeMillis() + 120000L
+      while (!progress().contains("\"epochsDone\":1") &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20L)
+      val mid = progress()
+      require(mid.contains("\"state\":\"backfilling\"") &&
+        mid.contains("\"epochsDone\":1"), s"mid progress: $mid")
+      val diag = http("GET", "/diag/s33a").body()
+      require(diag.contains("\"rebuild\"") &&
+        diag.contains("\"backfilling\"") &&
+        diag.contains("\"oldCeiling\":2") &&
+        diag.contains("\"newCeiling\":0"), s"diag mid-rebuild: $diag")
+      // the old index serves UNCHANGED mid-backfill (oracle pins it)
+      PipelineManager.epochAppend(
+        phased("during", serveOf()).coalesce(1), outDir, 1, "s33")
+      // REST call 3: release and poll to completion (the cutover
+      // gate is the manager's, not the gate's)
+      epoch1Gate.countDown()
+      while (!progress().contains("\"state\":\"complete\"") &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20L)
+      val fin = progress()
+      require(fin.contains("\"state\":\"complete\"") &&
+        fin.contains("\"newCeiling\":1"), s"final progress: $fin")
+      require(!new java.io.File(idxA).exists(),
+        "cutover must sweep the superseded store")
+      PipelineManager.epochAppend(
+        phased("post", serveOf()).coalesce(1), outDir, 2, "s33")
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // HYBRID RETRIEVAL FROM TWO INGEST-MAINTAINED INDEXES — the
@@ -1929,7 +1544,7 @@ object StreamingQueries {
     // batch in and the standing hybrid query re-serves top-10; both
     // input lists are k-bounded before the full-outer merge. Query
     // terms never named at ingest; probe fixed at vec 0.
-    "s27_stream_hybrid_indexed" -> ((s, d) => {
+    "s27_stream_hybrid_indexed" -> ((s, d) => gate(s, "s27") { g =>
       val qTerms = Seq("table", "stream", "window", "sort")
       val docs = Tables.t(s, d, "documents").select(col("doc_id"), col("text"))
       val emb = Tables.t(s, d, "embeddings")
@@ -1938,62 +1553,40 @@ object StreamingQueries {
         .select(col("vec_id").as("cent_id"),
           graft.ann.Ann.toDouble(col("embedding")).as("ce"))
       val probe = graft.ann.Ann.pinTiny(emb.filter(col("vec_id") === 0))
-      val srcDir = Files.createTempDirectory("graft-s27-src-").toString
-      val lexDir = Files.createTempDirectory("graft-s27-lex-").toString
-      val vecDir = Files.createTempDirectory("graft-s27-vec-").toString
-      val outDir = Files.createTempDirectory("graft-s27-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s27-ckpt-").toString
-      val schema = docs.schema
-      val stamped = scala.collection.mutable.Set[String]()
-      def writeBucket(b: Int): Unit = writeStampedBucket(srcDir, stamped, b,
-        docs.filter(pmod(col("doc_id"), lit(3L)) === b))
+      val src = g.bucketSource(docs.schema)
+      val (lexDir, vecDir) = (g.dir("lex"), g.dir("vec"))
+      val (outDir, ckpt) = (g.dir("out"), g.dir("ckpt"))
       def runIngest(): Unit = {
         val ilx = new graft.streaming.IncrementalLexIndex(s, lexDir,
           name = "s27l", compactEvery = 2)
         val ivx = new graft.streaming.IncrementalVectorIndex(s, vecDir,
           cents, name = "s27v", compactEvery = 2)
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(srcDir)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            ilx.appendEpoch(batch, epoch)
-            ivx.appendEpoch(
-              emb.filter(pmod(col("vec_id"), lit(3L)) === epoch), epoch)
-            val lex = ilx.serve(qTerms, 10)
-              .select(col("doc_id"), col("rank").as("lex_rank"))
-            val vec = ivx.serve(probe, k = 10, nprobe = 2)
-              .select(col("cand_id").as("doc_id"),
-                col("rank").as("vec_rank"))
-            val fused = lex.join(vec, Seq("doc_id"), "full_outer")
-              .withColumn("rrf", round(
-                coalesce(lit(1.0) / (lit(60) + col("lex_rank")), lit(0.0)) +
-                  coalesce(lit(1.0) / (lit(60) + col("vec_rank")), lit(0.0)), 6))
-            val top = fused.orderBy(col("rrf").desc, col("doc_id")).limit(10)
-              .withColumn("rank", row_number()
-                .over(org.apache.spark.sql.expressions.Window
-                  .orderBy(col("rrf").desc, col("doc_id"))).cast("long"))
-              .select(col("doc_id"), col("rank"), col("lex_rank"),
-                col("vec_rank"), col("rrf"))
-            PipelineManager.epochAppend(
-              top.withColumn("epoch", lit(epoch)).coalesce(1),
-              outDir, epoch, "s27"): Unit
-          }
-          .start()
-        q.awaitTermination()
+        g.availableNow(src.stream, ckpt) { (batch, epoch) =>
+          ilx.appendEpoch(batch, epoch)
+          ivx.appendEpoch(
+            emb.filter(pmod(col("vec_id"), lit(3L)) === epoch), epoch)
+          val lex = ilx.serve(qTerms, 10)
+            .select(col("doc_id"), col("rank").as("lex_rank"))
+          val vec = ivx.serve(probe, k = 10, nprobe = 2)
+            .select(col("cand_id").as("doc_id"),
+              col("rank").as("vec_rank"))
+          val fused = lex.join(vec, Seq("doc_id"), "full_outer")
+            .withColumn("rrf", round(
+              coalesce(lit(1.0) / (lit(60) + col("lex_rank")), lit(0.0)) +
+                coalesce(lit(1.0) / (lit(60) + col("vec_rank")), lit(0.0)), 6))
+          val top = fused.orderBy(col("rrf").desc, col("doc_id")).limit(10)
+            .withColumn("rank", row_number()
+              .over(org.apache.spark.sql.expressions.Window
+                .orderBy(col("rrf").desc, col("doc_id"))).cast("long"))
+            .select(col("doc_id"), col("rank"), col("lex_rank"),
+              col("vec_rank"), col("rrf"))
+          g.serveTo(outDir, epoch, top)
+        }
       }
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 4)
-      try {
-        writeBucket(0); runIngest()
-        writeBucket(1); writeBucket(2); runIngest()
-      } finally s.conf.set("spark.sql.shuffle.partitions", before)
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(srcDir, lexDir, vecDir, outDir, ckpt)
-      out
+      g.pin("spark.sql.shuffle.partitions" -> 4)
+      src.runs(Seq(0), Seq(1, 2))(b =>
+        docs.filter(pmod(col("doc_id"), lit(3L)) === b))(runIngest())
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // STANDING MULTI-QUERY HYBRID SERVING — the s28 serveMulti
@@ -2009,7 +1602,7 @@ object StreamingQueries {
     // s27-style serves — the whole point: curation at scale runs many
     // standing hybrid queries, and today each would pay its own
     // serve. PlanSpec pins the one-scan-per-store-pass contract.
-    "s31_stream_hybrid_multi" -> ((s, d) => {
+    "s31_stream_hybrid_multi" -> ((s, d) => gate(s, "s31") { g =>
       val hq = Seq(
         "0" -> Seq("table", "stream"),
         "1" -> Seq("window", "sort"),
@@ -2024,66 +1617,44 @@ object StreamingQueries {
         graft.ann.Ann.pqSubvectors(emb, 8), 16))
       // probe vec i IS standing query i's vector half
       val probes = graft.ann.Ann.pinTiny(emb.filter(col("vec_id") < 3))
-      val srcDir = Files.createTempDirectory("graft-s31-src-").toString
-      val lexDir = Files.createTempDirectory("graft-s31-lex-").toString
-      val vecDir = Files.createTempDirectory("graft-s31-vec-").toString
-      val outDir = Files.createTempDirectory("graft-s31-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s31-ckpt-").toString
-      val schema = docs.schema
-      val stamped = scala.collection.mutable.Set[String]()
-      def writeBucket(b: Int): Unit = writeStampedBucket(srcDir, stamped, b,
-        docs.filter(pmod(col("doc_id"), lit(3L)) === b))
+      val src = g.bucketSource(docs.schema)
+      val (lexDir, vecDir) = (g.dir("lex"), g.dir("vec"))
+      val (outDir, ckpt) = (g.dir("out"), g.dir("ckpt"))
       def runIngest(): Unit = {
         val ilx = new graft.streaming.IncrementalLexIndex(s, lexDir,
           name = "s31l", compactEvery = 2)
         val ipx = new graft.streaming.IncrementalPqIndex(s, vecDir,
           cents, cb, m = 8, name = "s31v", compactEvery = 2)
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(srcDir)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            ilx.appendEpoch(batch, epoch)
-            ipx.appendEpoch(
-              emb.filter(pmod(col("vec_id"), lit(3L)) === epoch), epoch)
-            val lex = ilx.serveMulti(hq, 10)
-              .select(col("query_id"), col("doc_id"),
-                col("rank").as("lex_rank"))
-            val vec = ipx.serve(probes, k = 10, nprobe = 2, rerank = 20)
-              .select(col("query_id").cast("string").as("query_id"),
-                col("cand_id").as("doc_id"), col("rank").as("vec_rank"))
-            val fused = lex.join(vec, Seq("query_id", "doc_id"), "full_outer")
-              .withColumn("rrf", round(
-                coalesce(lit(1.0) / (lit(60) + col("lex_rank")), lit(0.0)) +
-                  coalesce(lit(1.0) / (lit(60) + col("vec_rank")), lit(0.0)),
-                6))
-            val rw = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("query_id"))
-              .orderBy(col("rrf").desc, col("doc_id"))
-            val top = fused
-              .withColumn("rank", row_number().over(rw).cast("long"))
-              .filter(col("rank") <= 10)
-              .select(col("query_id"), col("doc_id"), col("rank"),
-                col("lex_rank"), col("vec_rank"), col("rrf"))
-            PipelineManager.epochAppend(
-              top.withColumn("epoch", lit(epoch)).coalesce(1),
-              outDir, epoch, "s31"): Unit
-          }
-          .start()
-        q.awaitTermination()
+        g.availableNow(src.stream, ckpt) { (batch, epoch) =>
+          ilx.appendEpoch(batch, epoch)
+          ipx.appendEpoch(
+            emb.filter(pmod(col("vec_id"), lit(3L)) === epoch), epoch)
+          val lex = ilx.serveMulti(hq, 10)
+            .select(col("query_id"), col("doc_id"),
+              col("rank").as("lex_rank"))
+          val vec = ipx.serve(probes, k = 10, nprobe = 2, rerank = 20)
+            .select(col("query_id").cast("string").as("query_id"),
+              col("cand_id").as("doc_id"), col("rank").as("vec_rank"))
+          val fused = lex.join(vec, Seq("query_id", "doc_id"), "full_outer")
+            .withColumn("rrf", round(
+              coalesce(lit(1.0) / (lit(60) + col("lex_rank")), lit(0.0)) +
+                coalesce(lit(1.0) / (lit(60) + col("vec_rank")), lit(0.0)),
+              6))
+          val rw = org.apache.spark.sql.expressions.Window
+            .partitionBy(col("query_id"))
+            .orderBy(col("rrf").desc, col("doc_id"))
+          val top = fused
+            .withColumn("rank", row_number().over(rw).cast("long"))
+            .filter(col("rank") <= 10)
+            .select(col("query_id"), col("doc_id"), col("rank"),
+              col("lex_rank"), col("vec_rank"), col("rrf"))
+          g.serveTo(outDir, epoch, top)
+        }
       }
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 4)
-      try {
-        writeBucket(0); runIngest()
-        writeBucket(1); writeBucket(2); runIngest()
-      } finally s.conf.set("spark.sql.shuffle.partitions", before)
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(srcDir, lexDir, vecDir, outDir, ckpt)
-      out
+      g.pin("spark.sql.shuffle.partitions" -> 4)
+      src.runs(Seq(0), Seq(1, 2))(b =>
+        docs.filter(pmod(col("doc_id"), lit(3L)) === b))(runIngest())
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // Streaming CARDINALITY on ingest — a durable 256-row HyperLogLog
@@ -2099,52 +1670,27 @@ object StreamingQueries {
     // cost is O(batch + 256) whatever the history; the emitted
     // estimate after epoch e equals the batch t24 sketch over buckets
     // 0..e, which is what the oracle unrolls.
-    "s22_stream_hll" -> ((s, d) => {
+    "s22_stream_hll" -> ((s, d) => gate(s, "s22") { g =>
       val docs = Tables.t(s, d, "documents").select(col("doc_id"), col("text"))
-      val srcDir = Files.createTempDirectory("graft-s22-src-").toString
-      val regDir = Files.createTempDirectory("graft-s22-reg-").toString
-      val outDir = Files.createTempDirectory("graft-s22-out-").toString
-      val ckpt = Files.createTempDirectory("graft-s22-ckpt-").toString
-      val schema = docs.schema
-      val stamped = scala.collection.mutable.Set[String]()
-      def writeBucket(b: Int): Unit = writeStampedBucket(srcDir, stamped, b,
-        docs.filter(pmod(col("doc_id"), lit(3L)) === b))
-      def runIngest(): Unit = {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(srcDir)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            val sh = batch.select(graft.text.Text.tokens(col("text")).as("w"))
-              .select(explode(graft.text.Text.shinglesOf(col("w"))).as("sh"))
-            val bregs = graft.sketch.Sketch.hllRegisters(sh, col("sh"))
-            val priorFiles = new java.io.File(regDir).listFiles()
-            val merged = (if (priorFiles != null &&
-                priorFiles.exists(_.getName.startsWith("part-")))
-              s.read.parquet(regDir).unionByName(bregs) else bregs)
-              .groupBy(col("reg")).agg(max(col("mj")).as("mj"))
-              .localCheckpoint() // materialize BEFORE overwriting regDir
-            merged.coalesce(1).write.mode("overwrite").parquet(regDir)
-            PipelineManager.epochAppend(
-              graft.sketch.Sketch.hllEstimate(merged)
-                .withColumn("epoch", lit(epoch)).coalesce(1),
-              outDir, epoch, "s22"): Unit
-          }
-          .start()
-        q.awaitTermination()
-      }
-      val before = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", 4)
-      try {
-        writeBucket(0); runIngest()
-        writeBucket(1); writeBucket(2); runIngest()
-      } finally s.conf.set("spark.sql.shuffle.partitions", before)
-      val out = s.read.parquet(outDir).localCheckpoint()
-      deleteTree(srcDir, regDir, outDir, ckpt)
-      out
+      val src = g.bucketSource(docs.schema)
+      val (regDir, outDir, ckpt) = (g.dir("reg"), g.dir("out"), g.dir("ckpt"))
+      g.pin("spark.sql.shuffle.partitions" -> 4)
+      src.runs(Seq(0), Seq(1, 2))(b =>
+        docs.filter(pmod(col("doc_id"), lit(3L)) === b))(
+        g.availableNow(src.stream, ckpt) { (batch, epoch) =>
+          val sh = batch.select(graft.text.Text.tokens(col("text")).as("w"))
+            .select(explode(graft.text.Text.shinglesOf(col("w"))).as("sh"))
+          val bregs = graft.sketch.Sketch.hllRegisters(sh, col("sh"))
+          val priorFiles = new java.io.File(regDir).listFiles()
+          val merged = (if (priorFiles != null &&
+              priorFiles.exists(_.getName.startsWith("part-")))
+            s.read.parquet(regDir).unionByName(bregs) else bregs)
+            .groupBy(col("reg")).agg(max(col("mj")).as("mj"))
+            .localCheckpoint() // materialize BEFORE overwriting regDir
+          merged.coalesce(1).write.mode("overwrite").parquet(regDir)
+          g.serveTo(outDir, epoch, graft.sketch.Sketch.hllEstimate(merged))
+        })
+      s.read.parquet(outDir).localCheckpoint()
     }),
 
     // K3: the flush/epoch-commit barrier. Per epoch the transport
@@ -2158,9 +1704,8 @@ object StreamingQueries {
     // epoch (crash between flush and offset commit) is a no-op —
     // so after one run + one restart + two forced replays the sink
     // holds exactly one copy of every row and one marker per epoch.
-    "q60_epoch_barrier" -> ((s, d) => {
-      val srcDir = Files.createTempDirectory("graft-q60-src-").toString
-      val ckptRoot = Files.createTempDirectory("graft-q60-pm-").toString
+    "q60_epoch_barrier" -> ((s, d) => gate(s, "q60") { g =>
+      val (srcDir, ckptRoot) = (g.dir("src"), g.dir("pm"))
       val slice = Tables.t(s, d, "events")
         .filter(col("event_type").isin("click", "view"))
         .select(col("event_id"), col("event_type"), col("user_id"))
@@ -2172,7 +1717,7 @@ object StreamingQueries {
       PipelineManager.epochAppend(
         slice.filter(col("event_type") === "view").coalesce(1),
         srcDir, 1, "q60src")
-      val pm = new PipelineManager(s, ckptRoot)
+      val pm = g.track(new PipelineManager(s, ckptRoot))
       val spec = pm.create(PipelineSpec("q60", "parquet", "parquet", srcDir,
         metadata = Map("maxFilesPerTrigger" -> "1")))
       val dest = spec.destinationConnection
@@ -2190,7 +1735,7 @@ object StreamingQueries {
       // with no duplicate rows from the restart or the replays. The
       // commit-MARKER count is deliberately not asserted — empty
       // restart batches legitimately commit markers with no data.
-      val out = s.read.parquet(dest)
+      s.read.parquet(dest)
         .withColumn("epoch",
           regexp_extract(input_file_name(), "-e(\\d+)-p", 1).cast("long"))
         .groupBy(col("event_type"))
@@ -2198,9 +1743,6 @@ object StreamingQueries {
           countDistinct(col("event_id")).as("n_distinct"),
           countDistinct(col("epoch")).as("n_epochs"))
         .localCheckpoint()
-      pm.close()
-      deleteTree(srcDir, ckptRoot)
-      out
     }),
 
     // K6: the memory transport end-to-end — deliver a corpus slice
@@ -2208,24 +1750,20 @@ object StreamingQueries {
     // InMemoryTransportProvider role) and read the delivered table
     // back. Non-durable by design; the gate checks the delivery path
     // carries the transform's exact rows.
-    "q61_memory_transport" -> ((s, d) => {
-      val srcDir = Files.createTempDirectory("graft-q61-src-").toString
-      val ckptRoot = Files.createTempDirectory("graft-q61-pm-").toString
+    "q61_memory_transport" -> ((s, d) => gate(s, "q61") { g =>
+      val (srcDir, ckptRoot) = (g.dir("src"), g.dir("pm"))
       val slice = Tables.t(s, d, "events")
         .filter(col("event_type").isin("click", "error"))
         .select(col("event_id"), col("user_id"), col("event_type"))
       PipelineManager.epochAppend(slice.coalesce(1), srcDir, 0, "q61src")
-      val pm = new PipelineManager(s, ckptRoot)
+      val pm = g.track(new PipelineManager(s, ckptRoot))
       // memory-sink table names are session-global; a fresh name per
       // invocation keeps repeated gated runs independent
       val name = s"q61mem${runId.incrementAndGet()}"
       pm.create(PipelineSpec(name, "parquet", "memory", srcDir))
       pm.start(name, df => df.withColumn("route",
         concat(lit("mem."), col("event_type")))).awaitTermination()
-      val out = s.table(name).localCheckpoint()
-      pm.close()
-      deleteTree(srcDir, ckptRoot)
-      out
+      s.table(name).localCheckpoint()
     }),
 
     // K7 retention tier: the broker's `retention.ms` behavior for
@@ -2234,47 +1772,33 @@ object StreamingQueries {
     // (explicit mtimes — no clock races) and enforcement must delete
     // exactly those, leaving the other epochs' rows intact and the
     // commit markers untouched.
-    "q63_retention" -> ((s, d) => {
-      val ckptRoot = Files.createTempDirectory("graft-q63-pm-").toString
-      val destDir = Files.createTempDirectory("graft-q63-dest-").toString
-      // finally-scoped: a throw anywhere (epoch write, retention
-      // enforcement, read-back) must not leak the temp trees or the
-      // manager's listener registration (close() is idempotent)
-      var pms = List.empty[PipelineManager]
-      try {
-        val pm = new PipelineManager(s, ckptRoot)
-        pms ::= pm
-        pm.create(PipelineSpec("q63", "parquet", "parquet",
-          sourceConnection = destDir, destinationConnection = destDir,
-          metadata = Map("retentionMs" -> "3600000")))
-        val slice = Tables.t(s, d, "events")
-          .filter(col("event_type") === "click")
-          .select(col("event_id"), pmod(col("event_id"), lit(4L)).as("bucket"))
-        for (e <- 0 until 4)
-          PipelineManager.epochAppend(
-            slice.filter(col("bucket") === e.toLong).coalesce(1),
-            destDir, e.toLong, "q63")
-        // age epochs 0 and 2 beyond the 1-hour window
-        val fs = new org.apache.hadoop.fs.Path(destDir).getFileSystem(
-          s.sparkContext.hadoopConfiguration)
-        val now = System.currentTimeMillis()
-        for (e <- Seq(0, 2)) {
-          val p = new org.apache.hadoop.fs.Path(destDir,
-            s"graft-${PipelineManager.namespaceOf("q63")}-e$e-p0.parquet")
-          fs.setTimes(p, now - 7200000L, -1)
-        }
-        val removed = pm.enforceRetention("q63", nowMs = now)
-        import s.implicits._
-        val out = s.read.parquet(destDir)
-          .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-          .unionByName(Seq((-1L, removed.toLong)).toDF("bucket", "n"))
-          .localCheckpoint()
-        pm.close()
-        out
-      } finally {
-        pms.foreach(p => try p.close() catch { case _: Throwable => () })
-        deleteTree(ckptRoot, destDir)
+    "q63_retention" -> ((s, d) => gate(s, "q63") { g =>
+      val (ckptRoot, destDir) = (g.dir("pm"), g.dir("dest"))
+      val pm = g.track(new PipelineManager(s, ckptRoot))
+      pm.create(PipelineSpec("q63", "parquet", "parquet",
+        sourceConnection = destDir, destinationConnection = destDir,
+        metadata = Map("retentionMs" -> "3600000")))
+      val slice = Tables.t(s, d, "events")
+        .filter(col("event_type") === "click")
+        .select(col("event_id"), pmod(col("event_id"), lit(4L)).as("bucket"))
+      for (e <- 0 until 4)
+        PipelineManager.epochAppend(
+          slice.filter(col("bucket") === e.toLong).coalesce(1),
+          destDir, e.toLong, "q63")
+      // age epochs 0 and 2 beyond the 1-hour window
+      val fs = new Path(destDir).getFileSystem(s.sparkContext.hadoopConfiguration)
+      val now = System.currentTimeMillis()
+      for (e <- Seq(0, 2)) {
+        val p = new Path(destDir,
+          s"graft-${PipelineManager.namespaceOf("q63")}-e$e-p0.parquet")
+        fs.setTimes(p, now - 7200000L, -1)
       }
+      val removed = pm.enforceRetention("q63", nowMs = now)
+      import s.implicits._
+      s.read.parquet(destDir)
+        .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
+        .unionByName(Seq((-1L, removed.toLong)).toDF("bucket", "n"))
+        .localCheckpoint()
     }),
 
     // Manager crash-and-recover, end-to-end — the reference's
@@ -2292,18 +1816,9 @@ object StreamingQueries {
     // every click and every view lands exactly once, so per-pipeline
     // counts equal the corpus counts and the state facts are
     // literals.
-    "q64_manager_failover" -> ((s, d) => {
-      val ckptRoot = Files.createTempDirectory("graft-q64-pm-").toString
-      val srcA = Files.createTempDirectory("graft-q64-srcA-").toString
-      val srcB = Files.createTempDirectory("graft-q64-srcB-").toString
-      val destA = Files.createTempDirectory("graft-q64-destA-").toString + "/d"
-      val destB = Files.createTempDirectory("graft-q64-destB-").toString + "/d"
-      // finally-scoped: an awaitTermination throw must not leak the
-      // five temp trees or either manager's listener registration
-      // (same guard as q63/q65; close() is idempotent, so the happy
-      // path's crash-simulating close() composes with it)
-      var pms = List.empty[PipelineManager]
-      try {
+    "q64_manager_failover" -> ((s, d) => gate(s, "q64") { g =>
+      val (ckptRoot, srcA, srcB) = (g.dir("pm"), g.dir("srcA"), g.dir("srcB"))
+      val (destA, destB) = (g.dir("destA") + "/d", g.dir("destB") + "/d")
       val ev = Tables.t(s, d, "events")
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("event_id"), col("user_id"))
@@ -2315,8 +1830,7 @@ object StreamingQueries {
       // epoch 0 source files
       PipelineManager.epochAppend(epochOf(clicks, 0).coalesce(1), srcA, 0, "q64a")
       PipelineManager.epochAppend(epochOf(views, 0).coalesce(1), srcB, 0, "q64b")
-      val pm1 = new PipelineManager(s, ckptRoot)
-      pms ::= pm1
+      val pm1 = g.track(new PipelineManager(s, ckptRoot))
       pm1.create(PipelineSpec("q64a", "parquet", "parquet", srcA,
         destinationConnection = destA))
       pm1.create(PipelineSpec("q64b", "parquet", "parquet", srcB,
@@ -2333,8 +1847,7 @@ object StreamingQueries {
       pm1.close()
 
       // failover: a fresh manager on the same durable root
-      val pm2 = new PipelineManager(s, ckptRoot)
-      pms ::= pm2
+      val pm2 = g.track(new PipelineManager(s, ckptRoot))
       val aStatus = pm2.get("q64a").map(_.status.toString).getOrElse("LOST")
       val bStatus = pm2.get("q64b").map(_.status.toString).getOrElse("LOST")
       val bPaused = pm2.paused("q64b").toSeq.sorted.mkString(",")
@@ -2347,28 +1860,16 @@ object StreamingQueries {
       qa1.awaitTermination(); qb1.awaitTermination()
       // release the held partition: BOTH managers' held rows replay
       pm2.resumePartitions("q64b", Set("1"), identity).awaitTermination()
-      val a = s.read.parquet(destA)
-        .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-        .head()
-      val b = s.read.parquet(destB)
-        .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-        .head()
-      pm2.close()
-      import s.implicits._
-      Seq(
+      val (an, ad) = g.delivered(destA)
+      val (bn, bd) = g.delivered(destB)
+      g.kv(
         ("spec", "a_status_after_failover", aStatus),
         ("spec", "b_status_after_failover", bStatus),
         ("paused", "b_paused_after_failover", bPaused),
-        ("rows", "a_n", a.getLong(0).toString),
-        ("rows", "a_distinct", a.getLong(1).toString),
-        ("rows", "b_n", b.getLong(0).toString),
-        ("rows", "b_distinct", b.getLong(1).toString))
-        .toDF("kind", "k", "v")
-      } finally {
-        pms.foreach(p => try p.close() catch { case _: Throwable => () })
-        deleteTree(ckptRoot, srcA, srcB,
-          new java.io.File(destA).getParent, new java.io.File(destB).getParent)
-      }
+        ("rows", "a_n", an),
+        ("rows", "a_distinct", ad),
+        ("rows", "b_n", bn),
+        ("rows", "b_distinct", bd))
     }),
 
     // Two-LIVE-manager mutual exclusion — the guarantee q64 does NOT
@@ -2388,63 +1889,45 @@ object StreamingQueries {
     // the loser's delivery continuing from the winner's checkpoint is
     // also pinned. Oracle is closed-form: lock-event literals plus
     // exactly-once corpus counts.
-    "q65_manager_mutex" -> ((s, d) => {
-      val ckptRoot = Files.createTempDirectory("graft-q65-pm-").toString
-      val srcDir = Files.createTempDirectory("graft-q65-src-").toString
-      val destDir = Files.createTempDirectory("graft-q65-dest-").toString + "/d"
-      var pms = List.empty[PipelineManager]
-      try {
-        val clicks = Tables.t(s, d, "events")
-          .filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"))
-        def epochOf(e: Long): DataFrame =
-          clicks.filter(pmod(col("event_id"), lit(2L)) === e)
-        PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q65src")
-        val m1 = new PipelineManager(s, ckptRoot, instance = "mgr1")
-        pms ::= m1
-        m1.create(PipelineSpec("q65p", "parquet", "parquet", srcDir,
-          destinationConnection = destDir))
-        // mgr2 joins the cluster AFTER the create (a new manager loads
-        // the durable spec store) — BOTH are now live on the root
-        val m2 = new PipelineManager(s, ckptRoot, instance = "mgr2")
-        pms ::= m2
-        val sawSpec = m2.get("q65p").isDefined
-        val q1 = m1.start("q65p", identity)
-        // loser: clean rejection, no second query
-        val rejectedBy =
-          try { m2.start("q65p", identity); "NONE" }
-          catch { case e: PipelineLockedException => e.lockedBy }
-        val loserHasQuery = m2.queryOf("q65p").isDefined
-        q1.awaitTermination()
-        // ownership is the MANAGER's, not the query's: the winner's
-        // query has drained, the winner is still live — still locked
-        val rejectedAfterDrain =
-          try { m2.start("q65p", identity); "NONE" }
-          catch { case e: PipelineLockedException => e.lockedBy }
-        // winner's session ends; its lock is now an orphan
-        m1.close()
-        PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q65src")
-        val tookOver =
-          try { m2.start("q65p", identity).awaitTermination(); true }
-          catch { case _: PipelineLockedException => false }
-        val r = s.read.parquet(destDir)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        m2.close()
-        import s.implicits._
-        Seq(
-          ("cluster", "loser_sees_spec", sawSpec.toString),
-          ("lock", "loser_rejected_by", rejectedBy),
-          ("lock", "loser_has_query", loserHasQuery.toString),
-          ("lock", "rejected_after_drain_by", rejectedAfterDrain),
-          ("lock", "takeover_after_close", tookOver.toString),
-          ("rows", "n", r.getLong(0).toString),
-          ("rows", "n_distinct", r.getLong(1).toString))
-          .toDF("kind", "k", "v")
-      } finally {
-        pms.foreach(p => try p.close() catch { case _: Throwable => () })
-        deleteTree(ckptRoot, srcDir, new java.io.File(destDir).getParent)
-      }
+    "q65_manager_mutex" -> ((s, d) => gate(s, "q65") { g =>
+      val (ckptRoot, srcDir) = (g.dir("pm"), g.dir("src"))
+      val destDir = g.dir("dest") + "/d"
+      val epochOf = clickEpochs(s, d, 2L)
+      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q65src")
+      val m1 = g.track(new PipelineManager(s, ckptRoot, instance = "mgr1"))
+      m1.create(PipelineSpec("q65p", "parquet", "parquet", srcDir,
+        destinationConnection = destDir))
+      // mgr2 joins the cluster AFTER the create (a new manager loads
+      // the durable spec store) — BOTH are now live on the root
+      val m2 = g.track(new PipelineManager(s, ckptRoot, instance = "mgr2"))
+      val sawSpec = m2.get("q65p").isDefined
+      val q1 = m1.start("q65p", identity)
+      // loser: clean rejection, no second query
+      val rejectedBy =
+        try { m2.start("q65p", identity); "NONE" }
+        catch { case e: PipelineLockedException => e.lockedBy }
+      val loserHasQuery = m2.queryOf("q65p").isDefined
+      q1.awaitTermination()
+      // ownership is the MANAGER's, not the query's: the winner's
+      // query has drained, the winner is still live — still locked
+      val rejectedAfterDrain =
+        try { m2.start("q65p", identity); "NONE" }
+        catch { case e: PipelineLockedException => e.lockedBy }
+      // winner's session ends; its lock is now an orphan
+      m1.close()
+      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q65src")
+      val tookOver =
+        try { m2.start("q65p", identity).awaitTermination(); true }
+        catch { case _: PipelineLockedException => false }
+      val (n, nd) = g.delivered(destDir)
+      g.kv(
+        ("cluster", "loser_sees_spec", sawSpec),
+        ("lock", "loser_rejected_by", rejectedBy),
+        ("lock", "loser_has_query", loserHasQuery),
+        ("lock", "rejected_after_drain_by", rejectedAfterDrain),
+        ("lock", "takeover_after_close", tookOver),
+        ("rows", "n", n),
+        ("rows", "n_distinct", nd))
     }),
 
     // Destination-reuse fan-out — D1's RUNTIME half (SURVEY §4's CSE
@@ -2461,59 +1944,38 @@ object StreamingQueries {
     // with no epoch-0 redelivery. Closed-form oracle: group facts are
     // literals (incl. BOTH managers' query handles being one object),
     // and each sink holds every click exactly once.
-    "q66_dest_fanout" -> ((s, d) => {
-      val ckptRoot = Files.createTempDirectory("graft-q66-pm-").toString
-      val srcDir = Files.createTempDirectory("graft-q66-src-").toString
-      val destX = Files.createTempDirectory("graft-q66-destX-").toString + "/d"
-      val destY = Files.createTempDirectory("graft-q66-destY-").toString + "/d"
-      var pms = List.empty[PipelineManager]
-      try {
-        val clicks = Tables.t(s, d, "events")
-          .filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"))
-        def epochOf(e: Long): DataFrame =
-          clicks.filter(pmod(col("event_id"), lit(2L)) === e)
-        PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q66src")
-        val pm = new PipelineManager(s, ckptRoot)
-        pms ::= pm
-        pm.create(PipelineSpec("q66a", "parquet", "parquet", srcDir,
-          destinationConnection = destX))
-        val bSpec = pm.create(PipelineSpec("q66b", "parquet", "parquet", srcDir,
-          destinationConnection = destY))
-        val bPrefix = bSpec.metadata
-          .getOrElse(PipelineManager.TaskPrefixKey, "MISSING")
-        val groupSize = pm.findGroup("q66a").size
-        pm.startGroup("q66a", identity).awaitTermination()
-        val sharedQuery = (pm.queryOf("q66a"), pm.queryOf("q66b")) match {
-          case (Some(qa), Some(qb)) => (qa eq qb).toString
-          case _ => "absent"
-        }
-        // epoch 1 after a group restart: the group checkpoint carries
-        // the shared offsets — no epoch-0 redelivery in either sink
-        PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q66src")
-        pm.startGroup("q66a", identity).awaitTermination()
-        val x = s.read.parquet(destX)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        val y = s.read.parquet(destY)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        pm.close()
-        import s.implicits._
-        Seq(
-          ("group", "b_prefix", bPrefix),
-          ("group", "size", groupSize.toString),
-          ("group", "shared_query", sharedQuery),
-          ("rows", "x_n", x.getLong(0).toString),
-          ("rows", "x_distinct", x.getLong(1).toString),
-          ("rows", "y_n", y.getLong(0).toString),
-          ("rows", "y_distinct", y.getLong(1).toString))
-          .toDF("kind", "k", "v")
-      } finally {
-        pms.foreach(p => try p.close() catch { case _: Throwable => () })
-        deleteTree(ckptRoot, srcDir,
-          new java.io.File(destX).getParent, new java.io.File(destY).getParent)
+    "q66_dest_fanout" -> ((s, d) => gate(s, "q66") { g =>
+      val (ckptRoot, srcDir) = (g.dir("pm"), g.dir("src"))
+      val (destX, destY) = (g.dir("destX") + "/d", g.dir("destY") + "/d")
+      val epochOf = clickEpochs(s, d, 2L)
+      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q66src")
+      val pm = g.track(new PipelineManager(s, ckptRoot))
+      pm.create(PipelineSpec("q66a", "parquet", "parquet", srcDir,
+        destinationConnection = destX))
+      val bSpec = pm.create(PipelineSpec("q66b", "parquet", "parquet", srcDir,
+        destinationConnection = destY))
+      val bPrefix = bSpec.metadata
+        .getOrElse(PipelineManager.TaskPrefixKey, "MISSING")
+      val groupSize = pm.findGroup("q66a").size
+      pm.startGroup("q66a", identity).awaitTermination()
+      val sharedQuery = (pm.queryOf("q66a"), pm.queryOf("q66b")) match {
+        case (Some(qa), Some(qb)) => (qa eq qb).toString
+        case _ => "absent"
       }
+      // epoch 1 after a group restart: the group checkpoint carries
+      // the shared offsets — no epoch-0 redelivery in either sink
+      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q66src")
+      pm.startGroup("q66a", identity).awaitTermination()
+      val (xn, xd) = g.delivered(destX)
+      val (yn, yd) = g.delivered(destY)
+      g.kv(
+        ("group", "b_prefix", bPrefix),
+        ("group", "size", groupSize),
+        ("group", "shared_query", sharedQuery),
+        ("rows", "x_n", xn),
+        ("rows", "x_distinct", xd),
+        ("rows", "y_n", yn),
+        ("rows", "y_distinct", yd))
     }),
 
     // HARD-crash lease failover — the case q64 (graceful close) and
@@ -2530,59 +1992,40 @@ object StreamingQueries {
     // (ZkAdapter.java liveinstance nodes; task locks die with the
     // session). Closed-form oracle: lease-event literals plus
     // exactly-once corpus counts.
-    "q67_lease_failover" -> ((s, d) => {
-      val ckptRoot = Files.createTempDirectory("graft-q67-pm-").toString
-      val srcDir = Files.createTempDirectory("graft-q67-src-").toString
-      val destDir = Files.createTempDirectory("graft-q67-dest-").toString + "/d"
-      var pms = List.empty[PipelineManager]
-      try {
-        val clicks = Tables.t(s, d, "events")
-          .filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"))
-        def epochOf(e: Long): DataFrame =
-          clicks.filter(pmod(col("event_id"), lit(2L)) === e)
-        PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q67src")
-        val lease = 600000L // expiry below is SIMULATED, never slept for
-        val mA = new PipelineManager(s, ckptRoot, instance = "mgrA",
-          livenessLeaseMs = lease)
-        pms ::= mA
-        mA.create(PipelineSpec("q67p", "parquet", "parquet", srcDir,
-          destinationConnection = destDir))
-        mA.start("q67p", identity).awaitTermination()
-        // HARD CRASH: no close() — the registration file stays on
-        // disk; age it one lease past its last heartbeat
-        val fs = new org.apache.hadoop.fs.Path(ckptRoot).getFileSystem(
-          s.sparkContext.hadoopConfiguration)
-        fs.setTimes(new org.apache.hadoop.fs.Path(s"$ckptRoot/instances/mgrA"),
-          System.currentTimeMillis() - lease - 60000L, -1)
-        // the expired session cannot heartbeat itself back
-        val selfDemoted = (!mA.heartbeat()).toString
-        val mB = new PipelineManager(s, ckptRoot, instance = "mgrB",
-          livenessLeaseMs = lease)
-        pms ::= mB
-        PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q67src")
-        val tookOver =
-          try { mB.start("q67p", identity).awaitTermination(); true }
-          catch { case _: PipelineLockedException => false }
-        // a zombie of the crashed manager cannot re-take the pipeline
-        val zombieRejectedBy =
-          try { mA.start("q67p", identity); "NONE" }
-          catch { case e: PipelineLockedException => e.lockedBy }
-        val r = s.read.parquet(destDir)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        import s.implicits._
-        Seq(
-          ("lease", "self_demoted", selfDemoted),
-          ("lease", "takeover_after_expiry", tookOver.toString),
-          ("lease", "zombie_rejected_by", zombieRejectedBy),
-          ("rows", "n", r.getLong(0).toString),
-          ("rows", "n_distinct", r.getLong(1).toString))
-          .toDF("kind", "k", "v")
-      } finally {
-        pms.foreach(p => try p.close() catch { case _: Throwable => () })
-        deleteTree(ckptRoot, srcDir, new java.io.File(destDir).getParent)
-      }
+    "q67_lease_failover" -> ((s, d) => gate(s, "q67") { g =>
+      val (ckptRoot, srcDir) = (g.dir("pm"), g.dir("src"))
+      val destDir = g.dir("dest") + "/d"
+      val rec = g.records(ckptRoot)
+      val epochOf = clickEpochs(s, d, 2L)
+      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q67src")
+      val lease = 600000L // expiry below is SIMULATED, never slept for
+      val mA = g.track(new PipelineManager(s, ckptRoot, instance = "mgrA",
+        livenessLeaseMs = lease))
+      mA.create(PipelineSpec("q67p", "parquet", "parquet", srcDir,
+        destinationConnection = destDir))
+      mA.start("q67p", identity).awaitTermination()
+      // HARD CRASH: no close() — the registration file stays on
+      // disk; age it one lease past its last heartbeat
+      rec.touch(rec.instance("mgrA"), System.currentTimeMillis() - lease - 60000L)
+      // the expired session cannot heartbeat itself back
+      val selfDemoted = !mA.heartbeat()
+      val mB = g.track(new PipelineManager(s, ckptRoot, instance = "mgrB",
+        livenessLeaseMs = lease))
+      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q67src")
+      val tookOver =
+        try { mB.start("q67p", identity).awaitTermination(); true }
+        catch { case _: PipelineLockedException => false }
+      // a zombie of the crashed manager cannot re-take the pipeline
+      val zombieRejectedBy =
+        try { mA.start("q67p", identity); "NONE" }
+        catch { case e: PipelineLockedException => e.lockedBy }
+      val (n, nd) = g.delivered(destDir)
+      g.kv(
+        ("lease", "self_demoted", selfDemoted),
+        ("lease", "takeover_after_expiry", tookOver),
+        ("lease", "zombie_rejected_by", zombieRejectedBy),
+        ("rows", "n", n),
+        ("rows", "n_distinct", nd))
     }),
 
     // Per-member pause/resume INSIDE a running destination-reuse
@@ -2599,71 +2042,50 @@ object StreamingQueries {
     // path). Closed-form oracle: status literals plus per-destination
     // delivered counts at every phase, derived from the click corpus
     // by epoch arithmetic (event_id mod 3 = the epoch).
-    "q68_group_member_pause" -> ((s, d) => {
-      val ckptRoot = Files.createTempDirectory("graft-q68-pm-").toString
-      val srcDir = Files.createTempDirectory("graft-q68-src-").toString
-      val destX = Files.createTempDirectory("graft-q68-destX-").toString + "/d"
-      val destY = Files.createTempDirectory("graft-q68-destY-").toString + "/d"
-      var pms = List.empty[PipelineManager]
-      try {
-        val clicks = Tables.t(s, d, "events")
-          .filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"))
-        def epochOf(e: Long): DataFrame =
-          clicks.filter(pmod(col("event_id"), lit(3L)) === e)
-        def n(dest: String): Long = s.read.parquet(dest).count()
-        PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q68src")
-        val pm = new PipelineManager(s, ckptRoot)
-        pms ::= pm
-        pm.create(PipelineSpec("q68a", "parquet", "parquet", srcDir,
-          destinationConnection = destX))
-        pm.create(PipelineSpec("q68b", "parquet", "parquet", srcDir,
-          destinationConnection = destY))
-        pm.startGroup("q68a", identity).awaitTermination()
-        // default (force=false) pause scope: ONLY q68b
-        pm.pause("q68b")
-        val bStatus = pm.get("q68b").get.status.toString
-        val aStatus = pm.get("q68a").get.status.toString
-        // epoch 1 while b is paused: the SIBLING keeps receiving from
-        // the still-shared query; b's epochs land in durable holdback
-        PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q68src")
-        pm.startGroup("q68a", identity).awaitTermination()
-        val xMid = n(destX) // epochs 0+1
-        val yMid = n(destY) // epoch 0 only — held, not dropped
-        // resume replays the held epoch exactly once...
-        pm.resume("q68b", identity)
-        val yResumed = n(destY)
-        // ...and a re-replay (crash between replay and cleanup) no-ops
-        pm.resume("q68b", identity)
-        val yResumedAgain = n(destY)
-        // both members flow again
-        PipelineManager.epochAppend(epochOf(2).coalesce(1), srcDir, 2, "q68src")
-        pm.startGroup("q68a", identity).awaitTermination()
-        val x = s.read.parquet(destX)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        val y = s.read.parquet(destY)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        pm.close()
-        import s.implicits._
-        Seq(
-          ("pause", "b_status", bStatus),
-          ("pause", "a_status", aStatus),
-          ("rows", "x_mid", xMid.toString),
-          ("rows", "y_mid", yMid.toString),
-          ("rows", "y_resumed", yResumed.toString),
-          ("rows", "y_resumed_again", yResumedAgain.toString),
-          ("rows", "x_n", x.getLong(0).toString),
-          ("rows", "x_distinct", x.getLong(1).toString),
-          ("rows", "y_n", y.getLong(0).toString),
-          ("rows", "y_distinct", y.getLong(1).toString))
-          .toDF("kind", "k", "v")
-      } finally {
-        pms.foreach(p => try p.close() catch { case _: Throwable => () })
-        deleteTree(ckptRoot, srcDir,
-          new java.io.File(destX).getParent, new java.io.File(destY).getParent)
-      }
+    "q68_group_member_pause" -> ((s, d) => gate(s, "q68") { g =>
+      val (ckptRoot, srcDir) = (g.dir("pm"), g.dir("src"))
+      val (destX, destY) = (g.dir("destX") + "/d", g.dir("destY") + "/d")
+      val epochOf = clickEpochs(s, d, 3L)
+      def n(dest: String): Long = s.read.parquet(dest).count()
+      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q68src")
+      val pm = g.track(new PipelineManager(s, ckptRoot))
+      pm.create(PipelineSpec("q68a", "parquet", "parquet", srcDir,
+        destinationConnection = destX))
+      pm.create(PipelineSpec("q68b", "parquet", "parquet", srcDir,
+        destinationConnection = destY))
+      pm.startGroup("q68a", identity).awaitTermination()
+      // default (force=false) pause scope: ONLY q68b
+      pm.pause("q68b")
+      val bStatus = pm.get("q68b").get.status
+      val aStatus = pm.get("q68a").get.status
+      // epoch 1 while b is paused: the SIBLING keeps receiving from
+      // the still-shared query; b's epochs land in durable holdback
+      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q68src")
+      pm.startGroup("q68a", identity).awaitTermination()
+      val xMid = n(destX) // epochs 0+1
+      val yMid = n(destY) // epoch 0 only — held, not dropped
+      // resume replays the held epoch exactly once...
+      pm.resume("q68b", identity)
+      val yResumed = n(destY)
+      // ...and a re-replay (crash between replay and cleanup) no-ops
+      pm.resume("q68b", identity)
+      val yResumedAgain = n(destY)
+      // both members flow again
+      PipelineManager.epochAppend(epochOf(2).coalesce(1), srcDir, 2, "q68src")
+      pm.startGroup("q68a", identity).awaitTermination()
+      val (xn, xd) = g.delivered(destX)
+      val (yn, yd) = g.delivered(destY)
+      g.kv(
+        ("pause", "b_status", bStatus),
+        ("pause", "a_status", aStatus),
+        ("rows", "x_mid", xMid),
+        ("rows", "y_mid", yMid),
+        ("rows", "y_resumed", yResumed),
+        ("rows", "y_resumed_again", yResumedAgain),
+        ("rows", "x_n", xn),
+        ("rows", "x_distinct", xd),
+        ("rows", "y_n", yn),
+        ("rows", "y_distinct", yd))
     }),
 
     // MID-RUN GROUP MEMBERSHIP CHANGE — the reference reassigns tasks
@@ -2681,79 +2103,48 @@ object StreamingQueries {
     // dead with a live replacement under the same group name. All
     // waits poll the engine's own commit log — never sleeps sized to
     // the work.
-    "q71_group_rejoin" -> ((s, d) => {
-      val ckptRoot = Files.createTempDirectory("graft-q71-pm-").toString
-      val srcDir = Files.createTempDirectory("graft-q71-src-").toString
-      val destX = Files.createTempDirectory("graft-q71-destX-").toString + "/d"
-      val destY = Files.createTempDirectory("graft-q71-destY-").toString + "/d"
-      val destZ = Files.createTempDirectory("graft-q71-destZ-").toString + "/d"
-      var pms = List.empty[PipelineManager]
-      try {
-        val conf = s.sparkContext.hadoopConfiguration
-        val clicks = Tables.t(s, d, "events")
-          .filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"))
-        def epochOf(e: Long): DataFrame =
-          clicks.filter(pmod(col("event_id"), lit(2L)) === e)
-        val fs = new org.apache.hadoop.fs.Path(ckptRoot)
-          .getFileSystem(conf)
-        def commitDone(b: Long): Boolean = fs.exists(
-          new org.apache.hadoop.fs.Path(s"$ckptRoot/group-q71a/commits/$b"))
-        def awaitTrue(what: String)(cond: => Boolean): Unit =
-          awaitCond("q71", what)(cond)
-        PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q71src")
-        val pm = new PipelineManager(s, ckptRoot)
-        pms ::= pm
-        pm.create(PipelineSpec("q71a", "parquet", "parquet", srcDir,
-          destinationConnection = destX))
-        pm.create(PipelineSpec("q71b", "parquet", "parquet", srcDir,
-          destinationConnection = destY))
-        val q0 = pm.startGroup("q71a", identity,
-          Trigger.ProcessingTime("50 milliseconds"))
-        // epoch 0 fully COMMITTED (not just delivered) before the join
-        // — so the restart deterministically resumes at epoch 1 and
-        // the new member can never replay epoch 0
-        awaitTrue("epoch 0 commit")(commitDone(0))
-        pm.create(PipelineSpec("q71c", "parquet", "parquet", srcDir,
-          destinationConnection = destZ))
-        val restarted = (!q0.isActive).toString
-        val newLive = s.streams.active.exists(q =>
-          q.name == "group-q71a" && q.isActive).toString
-        val zAtJoin = PipelineManager.committedFiles(destZ, conf).size.toString
-        PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q71src")
-        awaitTrue("epoch 1 commit")(commitDone(1))
-        awaitTrue("post-join delivery to all three")(
-          PipelineManager.committedFiles(destZ, conf).nonEmpty &&
-            PipelineManager.committedFiles(destX, conf).size >= 2)
-        pm.stop("q71a", force = true)
-        val x = s.read.parquet(destX)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        val y = s.read.parquet(destY)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        val z = s.read.parquet(destZ)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        pm.close()
-        import s.implicits._
-        Seq(
-          ("join", "restarted", restarted),
-          ("join", "new_query_live", newLive),
-          ("join", "z_rows_at_join", zAtJoin),
-          ("rows", "x_n", x.getLong(0).toString),
-          ("rows", "x_distinct", x.getLong(1).toString),
-          ("rows", "y_n", y.getLong(0).toString),
-          ("rows", "y_distinct", y.getLong(1).toString),
-          ("rows", "z_n", z.getLong(0).toString),
-          ("rows", "z_distinct", z.getLong(1).toString))
-          .toDF("kind", "k", "v")
-      } finally {
-        pms.foreach(p => try p.close() catch { case _: Throwable => () })
-        deleteTree(ckptRoot, srcDir, new java.io.File(destX).getParent,
-          new java.io.File(destY).getParent,
-          new java.io.File(destZ).getParent)
-      }
+    "q71_group_rejoin" -> ((s, d) => gate(s, "q71") { g =>
+      val (ckptRoot, srcDir) = (g.dir("pm"), g.dir("src"))
+      val (destX, destY, destZ) =
+        (g.dir("destX") + "/d", g.dir("destY") + "/d", g.dir("destZ") + "/d")
+      val ckpt = g.records(ckptRoot).groupCheckpoint("q71a")
+      val epochOf = clickEpochs(s, d, 2L)
+      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q71src")
+      val pm = g.track(new PipelineManager(s, ckptRoot))
+      pm.create(PipelineSpec("q71a", "parquet", "parquet", srcDir,
+        destinationConnection = destX))
+      pm.create(PipelineSpec("q71b", "parquet", "parquet", srcDir,
+        destinationConnection = destY))
+      val q0 = pm.startGroup("q71a", identity,
+        Trigger.ProcessingTime("50 milliseconds"))
+      // epoch 0 fully COMMITTED (not just delivered) before the join
+      // — so the restart deterministically resumes at epoch 1 and
+      // the new member can never replay epoch 0
+      g.awaitCommit(ckpt, 0)()
+      pm.create(PipelineSpec("q71c", "parquet", "parquet", srcDir,
+        destinationConnection = destZ))
+      val restarted = !q0.isActive
+      val newLive = s.streams.active.exists(q =>
+        q.name == "group-q71a" && q.isActive)
+      val zAtJoin = g.committed(destZ)
+      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q71src")
+      g.awaitCommit(ckpt, 1)()
+      g.await("post-join delivery to all three")(
+        g.committed(destZ) > 0 && g.committed(destX) >= 2)
+      pm.stop("q71a", force = true)
+      val (xn, xd) = g.delivered(destX)
+      val (yn, yd) = g.delivered(destY)
+      val (zn, zd) = g.delivered(destZ)
+      g.kv(
+        ("join", "restarted", restarted),
+        ("join", "new_query_live", newLive),
+        ("join", "z_rows_at_join", zAtJoin),
+        ("rows", "x_n", xn),
+        ("rows", "x_distinct", xd),
+        ("rows", "y_n", yn),
+        ("rows", "y_distinct", yd),
+        ("rows", "z_n", zn),
+        ("rows", "z_distinct", zd))
     }),
 
     // MID-RUN MEMBERSHIP REMOVAL — q71's mirror: deleting a member of
@@ -2766,70 +2157,42 @@ object StreamingQueries {
     // once, the deleted member's destination receives NOTHING after
     // its last pre-delete epoch, and the old handle is dead with a
     // live replacement.
-    "q72_group_member_delete" -> ((s, d) => {
-      val ckptRoot = Files.createTempDirectory("graft-q72-pm-").toString
-      val srcDir = Files.createTempDirectory("graft-q72-src-").toString
-      val destX = Files.createTempDirectory("graft-q72-destX-").toString + "/d"
-      val destY = Files.createTempDirectory("graft-q72-destY-").toString + "/d"
-      var pms = List.empty[PipelineManager]
-      try {
-        val conf = s.sparkContext.hadoopConfiguration
-        val clicks = Tables.t(s, d, "events")
-          .filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"))
-        def epochOf(e: Long): DataFrame =
-          clicks.filter(pmod(col("event_id"), lit(2L)) === e)
-        val fs = new org.apache.hadoop.fs.Path(ckptRoot).getFileSystem(conf)
-        def commitDone(b: Long): Boolean = fs.exists(
-          new org.apache.hadoop.fs.Path(s"$ckptRoot/group-q72a/commits/$b"))
-        def awaitTrue(what: String)(cond: => Boolean): Unit =
-          awaitCond("q72", what)(cond)
-        PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q72src")
-        val pm = new PipelineManager(s, ckptRoot)
-        pms ::= pm
-        pm.create(PipelineSpec("q72a", "parquet", "parquet", srcDir,
-          destinationConnection = destX))
-        pm.create(PipelineSpec("q72b", "parquet", "parquet", srcDir,
-          destinationConnection = destY))
-        val q0 = pm.startGroup("q72a", identity,
-          Trigger.ProcessingTime("50 milliseconds"))
-        awaitTrue("epoch 0 commit")(commitDone(0))
-        pm.delete("q72b")
-        val restarted = (!q0.isActive).toString
-        val newLive = s.streams.active.exists(q =>
-          q.name == "group-q72a" && q.isActive).toString
-        val bGone = pm.get("q72b").isEmpty.toString
-        val yFilesAtDelete = PipelineManager.committedFiles(destY, conf).size
-        PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q72src")
-        awaitTrue("epoch 1 commit")(commitDone(1))
-        awaitTrue("post-delete delivery to the survivor")(
-          PipelineManager.committedFiles(destX, conf).size >= 2)
-        val yFilesAfter = PipelineManager.committedFiles(destY, conf).size
-        pm.stop("q72a", force = true)
-        val x = s.read.parquet(destX)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        val y = s.read.parquet(destY)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        pm.close()
-        import s.implicits._
-        Seq(
-          ("del", "restarted", restarted),
-          ("del", "new_query_live", newLive),
-          ("del", "b_gone", bGone),
-          ("del", "y_frozen",
-            (yFilesAfter == yFilesAtDelete).toString),
-          ("rows", "x_n", x.getLong(0).toString),
-          ("rows", "x_distinct", x.getLong(1).toString),
-          ("rows", "y_n", y.getLong(0).toString),
-          ("rows", "y_distinct", y.getLong(1).toString))
-          .toDF("kind", "k", "v")
-      } finally {
-        pms.foreach(p => try p.close() catch { case _: Throwable => () })
-        deleteTree(ckptRoot, srcDir, new java.io.File(destX).getParent,
-          new java.io.File(destY).getParent)
-      }
+    "q72_group_member_delete" -> ((s, d) => gate(s, "q72") { g =>
+      val (ckptRoot, srcDir) = (g.dir("pm"), g.dir("src"))
+      val (destX, destY) = (g.dir("destX") + "/d", g.dir("destY") + "/d")
+      val ckpt = g.records(ckptRoot).groupCheckpoint("q72a")
+      val epochOf = clickEpochs(s, d, 2L)
+      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q72src")
+      val pm = g.track(new PipelineManager(s, ckptRoot))
+      pm.create(PipelineSpec("q72a", "parquet", "parquet", srcDir,
+        destinationConnection = destX))
+      pm.create(PipelineSpec("q72b", "parquet", "parquet", srcDir,
+        destinationConnection = destY))
+      val q0 = pm.startGroup("q72a", identity,
+        Trigger.ProcessingTime("50 milliseconds"))
+      g.awaitCommit(ckpt, 0)()
+      pm.delete("q72b")
+      val restarted = !q0.isActive
+      val newLive = s.streams.active.exists(q =>
+        q.name == "group-q72a" && q.isActive)
+      val bGone = pm.get("q72b").isEmpty
+      val yFilesAtDelete = g.committed(destY)
+      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q72src")
+      g.awaitCommit(ckpt, 1)()
+      g.await("post-delete delivery to the survivor")(g.committed(destX) >= 2)
+      val yFilesAfter = g.committed(destY)
+      pm.stop("q72a", force = true)
+      val (xn, xd) = g.delivered(destX)
+      val (yn, yd) = g.delivered(destY)
+      g.kv(
+        ("del", "restarted", restarted),
+        ("del", "new_query_live", newLive),
+        ("del", "b_gone", bGone),
+        ("del", "y_frozen", yFilesAfter == yFilesAtDelete),
+        ("rows", "x_n", xn),
+        ("rows", "x_distinct", xd),
+        ("rows", "y_n", yn),
+        ("rows", "y_distinct", yd))
     }),
 
     // MID-RUN MEMBER UPDATE — the third membership-change direction
@@ -2845,81 +2208,51 @@ object StreamingQueries {
     // across the restart, and the old handle is dead with a live
     // replacement under the same group name. All waits poll the
     // engine's own commit log — never sleeps sized to the work.
-    "q73_group_member_update" -> ((s, d) => {
-      val ckptRoot = Files.createTempDirectory("graft-q73-pm-").toString
-      val srcDir = Files.createTempDirectory("graft-q73-src-").toString
-      val destX = Files.createTempDirectory("graft-q73-destX-").toString + "/d"
-      val destY = Files.createTempDirectory("graft-q73-destY-").toString + "/d"
-      val destZ = Files.createTempDirectory("graft-q73-destZ-").toString + "/d"
-      var pms = List.empty[PipelineManager]
-      try {
-        val conf = s.sparkContext.hadoopConfiguration
-        val clicks = Tables.t(s, d, "events")
-          .filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"))
-        def epochOf(e: Long): DataFrame =
-          clicks.filter(pmod(col("event_id"), lit(2L)) === e)
-        val fs = new org.apache.hadoop.fs.Path(ckptRoot).getFileSystem(conf)
-        def commitDone(b: Long): Boolean = fs.exists(
-          new org.apache.hadoop.fs.Path(s"$ckptRoot/group-q73a/commits/$b"))
-        def awaitTrue(what: String)(cond: => Boolean): Unit =
-          awaitCond("q73", what)(cond)
-        PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q73src")
-        val pm = new PipelineManager(s, ckptRoot)
-        pms ::= pm
-        pm.create(PipelineSpec("q73a", "parquet", "parquet", srcDir,
-          destinationConnection = destX))
-        pm.create(PipelineSpec("q73b", "parquet", "parquet", srcDir,
-          destinationConnection = destY))
-        val q0 = pm.startGroup("q73a", identity,
-          Trigger.ProcessingTime("50 milliseconds"))
-        // epoch 0 fully COMMITTED before the update — the restart
-        // deterministically resumes at epoch 1, so the new
-        // destination can never replay epoch 0
-        awaitTrue("epoch 0 commit")(commitDone(0))
-        val yFilesAtUpdate = PipelineManager.committedFiles(destY, conf).size
-        pm.update("q73b", PipelineSpec("q73b", "parquet", "parquet", srcDir,
-          destinationConnection = destZ)): Unit
-        val restarted = (!q0.isActive).toString
-        val newLive = s.streams.active.exists(q =>
-          q.name == "group-q73a" && q.isActive).toString
-        val zAtUpdate = PipelineManager.committedFiles(destZ, conf).size.toString
-        PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q73src")
-        awaitTrue("epoch 1 commit")(commitDone(1))
-        awaitTrue("post-update delivery to survivor and new dest")(
-          PipelineManager.committedFiles(destZ, conf).nonEmpty &&
-            PipelineManager.committedFiles(destX, conf).size >= 2)
-        val yFilesAfter = PipelineManager.committedFiles(destY, conf).size
-        pm.stop("q73a", force = true)
-        val x = s.read.parquet(destX)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        val y = s.read.parquet(destY)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        val z = s.read.parquet(destZ)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        pm.close()
-        import s.implicits._
-        Seq(
-          ("upd", "restarted", restarted),
-          ("upd", "new_query_live", newLive),
-          ("upd", "z_rows_at_update", zAtUpdate),
-          ("upd", "y_frozen", (yFilesAfter == yFilesAtUpdate).toString),
-          ("rows", "x_n", x.getLong(0).toString),
-          ("rows", "x_distinct", x.getLong(1).toString),
-          ("rows", "y_n", y.getLong(0).toString),
-          ("rows", "y_distinct", y.getLong(1).toString),
-          ("rows", "z_n", z.getLong(0).toString),
-          ("rows", "z_distinct", z.getLong(1).toString))
-          .toDF("kind", "k", "v")
-      } finally {
-        pms.foreach(p => try p.close() catch { case _: Throwable => () })
-        deleteTree(ckptRoot, srcDir, new java.io.File(destX).getParent,
-          new java.io.File(destY).getParent,
-          new java.io.File(destZ).getParent)
-      }
+    "q73_group_member_update" -> ((s, d) => gate(s, "q73") { g =>
+      val (ckptRoot, srcDir) = (g.dir("pm"), g.dir("src"))
+      val (destX, destY, destZ) =
+        (g.dir("destX") + "/d", g.dir("destY") + "/d", g.dir("destZ") + "/d")
+      val ckpt = g.records(ckptRoot).groupCheckpoint("q73a")
+      val epochOf = clickEpochs(s, d, 2L)
+      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q73src")
+      val pm = g.track(new PipelineManager(s, ckptRoot))
+      pm.create(PipelineSpec("q73a", "parquet", "parquet", srcDir,
+        destinationConnection = destX))
+      pm.create(PipelineSpec("q73b", "parquet", "parquet", srcDir,
+        destinationConnection = destY))
+      val q0 = pm.startGroup("q73a", identity,
+        Trigger.ProcessingTime("50 milliseconds"))
+      // epoch 0 fully COMMITTED before the update — the restart
+      // deterministically resumes at epoch 1, so the new
+      // destination can never replay epoch 0
+      g.awaitCommit(ckpt, 0)()
+      val yFilesAtUpdate = g.committed(destY)
+      pm.update("q73b", PipelineSpec("q73b", "parquet", "parquet", srcDir,
+        destinationConnection = destZ)): Unit
+      val restarted = !q0.isActive
+      val newLive = s.streams.active.exists(q =>
+        q.name == "group-q73a" && q.isActive)
+      val zAtUpdate = g.committed(destZ)
+      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q73src")
+      g.awaitCommit(ckpt, 1)()
+      g.await("post-update delivery to survivor and new dest")(
+        g.committed(destZ) > 0 && g.committed(destX) >= 2)
+      val yFilesAfter = g.committed(destY)
+      pm.stop("q73a", force = true)
+      val (xn, xd) = g.delivered(destX)
+      val (yn, yd) = g.delivered(destY)
+      val (zn, zd) = g.delivered(destZ)
+      g.kv(
+        ("upd", "restarted", restarted),
+        ("upd", "new_query_live", newLive),
+        ("upd", "z_rows_at_update", zAtUpdate),
+        ("upd", "y_frozen", yFilesAfter == yFilesAtUpdate),
+        ("rows", "x_n", xn),
+        ("rows", "x_distinct", xd),
+        ("rows", "y_n", yn),
+        ("rows", "y_distinct", yd),
+        ("rows", "z_n", zn),
+        ("rows", "z_distinct", zd))
     }),
 
     // RUNNING-SOLO UPDATE — the fourth membership-change direction
@@ -2936,70 +2269,44 @@ object StreamingQueries {
     // the old destination is frozen at its pre-update files, and the
     // two destinations partition the corpus exactly once. All waits
     // poll the engine's own commit log — never sleeps sized to work.
-    "q74_solo_update" -> ((s, d) => {
-      val ckptRoot = Files.createTempDirectory("graft-q74-pm-").toString
-      val srcDir = Files.createTempDirectory("graft-q74-src-").toString
-      val destX = Files.createTempDirectory("graft-q74-destX-").toString + "/d"
-      val destZ = Files.createTempDirectory("graft-q74-destZ-").toString + "/d"
-      var pms = List.empty[PipelineManager]
-      try {
-        val conf = s.sparkContext.hadoopConfiguration
-        val clicks = Tables.t(s, d, "events")
-          .filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"))
-        def epochOf(e: Long): DataFrame =
-          clicks.filter(pmod(col("event_id"), lit(2L)) === e)
-        val fs = new org.apache.hadoop.fs.Path(ckptRoot).getFileSystem(conf)
-        def commitDone(b: Long): Boolean = fs.exists(
-          new org.apache.hadoop.fs.Path(s"$ckptRoot/q74a/commits/$b"))
-        def awaitTrue(what: String)(cond: => Boolean): Unit =
-          awaitCond("q74", what)(cond)
-        PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q74src")
-        val pm = new PipelineManager(s, ckptRoot)
-        pms ::= pm
-        pm.create(PipelineSpec("q74a", "parquet", "parquet", srcDir,
-          destinationConnection = destX))
-        val q0 = pm.start("q74a", identity,
-          Trigger.ProcessingTime("50 milliseconds"))
-        // epoch 0 fully COMMITTED before the update — the restart
-        // deterministically resumes at epoch 1, so the new
-        // destination can never replay epoch 0
-        awaitTrue("epoch 0 commit")(commitDone(0))
-        val xFilesAtUpdate = PipelineManager.committedFiles(destX, conf).size
-        pm.update("q74a", PipelineSpec("q74a", "parquet", "parquet", srcDir,
-          destinationConnection = destZ)): Unit
-        val restarted = (!q0.isActive).toString
-        val newLive = s.streams.active.exists(q =>
-          q.name == "q74a" && q.isActive).toString
-        val zAtUpdate = PipelineManager.committedFiles(destZ, conf).size.toString
-        PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q74src")
-        awaitTrue("epoch 1 commit + post-update delivery")(
-          commitDone(1) && PipelineManager.committedFiles(destZ, conf).nonEmpty)
-        val xFilesAfter = PipelineManager.committedFiles(destX, conf).size
-        pm.stop("q74a")
-        val x = s.read.parquet(destX)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        val z = s.read.parquet(destZ)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        pm.close()
-        import s.implicits._
-        Seq(
-          ("upd", "restarted", restarted),
-          ("upd", "new_query_live", newLive),
-          ("upd", "z_rows_at_update", zAtUpdate),
-          ("upd", "x_frozen", (xFilesAfter == xFilesAtUpdate).toString),
-          ("rows", "x_n", x.getLong(0).toString),
-          ("rows", "x_distinct", x.getLong(1).toString),
-          ("rows", "z_n", z.getLong(0).toString),
-          ("rows", "z_distinct", z.getLong(1).toString))
-          .toDF("kind", "k", "v")
-      } finally {
-        pms.foreach(p => try p.close() catch { case _: Throwable => () })
-        deleteTree(ckptRoot, srcDir, new java.io.File(destX).getParent,
-          new java.io.File(destZ).getParent)
-      }
+    "q74_solo_update" -> ((s, d) => gate(s, "q74") { g =>
+      val (ckptRoot, srcDir) = (g.dir("pm"), g.dir("src"))
+      val (destX, destZ) = (g.dir("destX") + "/d", g.dir("destZ") + "/d")
+      val ckpt = g.records(ckptRoot).checkpoint("q74a")
+      val epochOf = clickEpochs(s, d, 2L)
+      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q74src")
+      val pm = g.track(new PipelineManager(s, ckptRoot))
+      pm.create(PipelineSpec("q74a", "parquet", "parquet", srcDir,
+        destinationConnection = destX))
+      val q0 = pm.start("q74a", identity,
+        Trigger.ProcessingTime("50 milliseconds"))
+      // epoch 0 fully COMMITTED before the update — the restart
+      // deterministically resumes at epoch 1, so the new
+      // destination can never replay epoch 0
+      g.awaitCommit(ckpt, 0)()
+      val xFilesAtUpdate = g.committed(destX)
+      pm.update("q74a", PipelineSpec("q74a", "parquet", "parquet", srcDir,
+        destinationConnection = destZ)): Unit
+      val restarted = !q0.isActive
+      val newLive = s.streams.active.exists(q =>
+        q.name == "q74a" && q.isActive)
+      val zAtUpdate = g.committed(destZ)
+      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q74src")
+      // plus post-update delivery
+      g.awaitCommit(ckpt, 1)(g.committed(destZ) > 0)
+      val xFilesAfter = g.committed(destX)
+      pm.stop("q74a")
+      val (xn, xd) = g.delivered(destX)
+      val (zn, zd) = g.delivered(destZ)
+      g.kv(
+        ("upd", "restarted", restarted),
+        ("upd", "new_query_live", newLive),
+        ("upd", "z_rows_at_update", zAtUpdate),
+        ("upd", "x_frozen", xFilesAfter == xFilesAtUpdate),
+        ("rows", "x_n", xn),
+        ("rows", "x_distinct", xd),
+        ("rows", "z_n", zn),
+        ("rows", "z_distinct", zd))
     }),
 
     // DELIVERY-RELEVANT METADATA UPDATE (q75) — the update-reassign
@@ -3015,68 +2322,52 @@ object StreamingQueries {
     // (N final). cdcBuckets is pinned to 1 in both specs: the bucket
     // function must not change shape mid-table (a re-key changes row
     // hashing; single-bucket state is layout-invariant under it).
-    "q75_metadata_update" -> ((s, d) => {
-      val ckptRoot = Files.createTempDirectory("graft-q75-pm-").toString
-      val srcDir = Files.createTempDirectory("graft-q75-src-").toString
-      val destDir = Files.createTempDirectory("graft-q75-dest-").toString + "/st"
-      var pms = List.empty[PipelineManager]
-      try {
-        val conf = s.sparkContext.hadoopConfiguration
-        val clicks = Tables.t(s, d, "events")
-          .filter(col("event_type") === "click")
-        def epochOf(e: Long): DataFrame = clicks.select(
-          col("event_id").as("k1"), lit(e).as("k2"),
-          lit(e + 1).as("scn"), lit("INSERT").as("op"),
-          col("user_id").as("v"))
-        val fs = new org.apache.hadoop.fs.Path(ckptRoot).getFileSystem(conf)
-        def commitDone(b: Long): Boolean = fs.exists(
-          new org.apache.hadoop.fs.Path(s"$ckptRoot/q75a/commits/$b"))
-        def awaitTrue(what: String)(cond: => Boolean): Unit =
-          awaitCond("q75", what)(cond)
-        def stateCount(): Long =
-          CdcMerge.currentState(s, destDir).map(_.count()).getOrElse(0L)
-        val metaV1 = Map("cdcKeyCols" -> "k1", "cdcScnCol" -> "scn",
-          "cdcOpcodeCol" -> "op", "cdcBuckets" -> "1")
-        PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q75src")
-        val pm = new PipelineManager(s, ckptRoot)
-        pms ::= pm
-        pm.create(PipelineSpec("q75a", "parquet", "cdc", srcDir,
-          destinationConnection = destDir, metadata = metaV1))
-        val q0 = pm.start("q75a", identity,
-          Trigger.ProcessingTime("50 milliseconds"))
-        awaitTrue("epoch 0 commit")(commitDone(0))
-        val nAtUpdate = stateCount()
-        // re-key mid-run: (k1) -> (k1, k2). Same destination — no
-        // state moves, but the running query MUST restart to pick the
-        // new merge key up (q75's whole point).
-        pm.update("q75a", PipelineSpec("q75a", "parquet", "cdc", srcDir,
-          destinationConnection = destDir,
-          metadata = metaV1 + ("cdcKeyCols" -> "k1,k2"))): Unit
-        val restarted = (!q0.isActive).toString
-        val newLive = s.streams.active.exists(q =>
-          q.name == "q75a" && q.isActive).toString
-        PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q75src")
-        awaitTrue("epoch 1 commit")(commitDone(1))
-        // the merge runs inside the epoch's foreachBatch, so commit 1
-        // implies the post-update state is installed
-        val nFinal = stateCount()
-        val k2Final = CdcMerge.currentState(s, destDir)
-          .map(_.select(countDistinct(col("k2"))).head().getLong(0))
-          .getOrElse(0L)
-        pm.stop("q75a")
-        pm.close()
-        import s.implicits._
-        Seq(
-          ("upd", "restarted", restarted),
-          ("upd", "new_query_live", newLive),
-          ("state", "n_at_update", nAtUpdate.toString),
-          ("state", "n_final", nFinal.toString),
-          ("state", "k2_distinct_final", k2Final.toString))
-          .toDF("kind", "k", "v")
-      } finally {
-        pms.foreach(p => try p.close() catch { case _: Throwable => () })
-        deleteTree(ckptRoot, srcDir, new java.io.File(destDir).getParent)
-      }
+    "q75_metadata_update" -> ((s, d) => gate(s, "q75") { g =>
+      val (ckptRoot, srcDir) = (g.dir("pm"), g.dir("src"))
+      val destDir = g.dir("dest") + "/st"
+      val ckpt = g.records(ckptRoot).checkpoint("q75a")
+      val clicks = Tables.t(s, d, "events")
+        .filter(col("event_type") === "click")
+      def epochOf(e: Long): DataFrame = clicks.select(
+        col("event_id").as("k1"), lit(e).as("k2"),
+        lit(e + 1).as("scn"), lit("INSERT").as("op"),
+        col("user_id").as("v"))
+      def stateCount(): Long =
+        CdcMerge.currentState(s, destDir).map(_.count()).getOrElse(0L)
+      val metaV1 = Map("cdcKeyCols" -> "k1", "cdcScnCol" -> "scn",
+        "cdcOpcodeCol" -> "op", "cdcBuckets" -> "1")
+      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q75src")
+      val pm = g.track(new PipelineManager(s, ckptRoot))
+      pm.create(PipelineSpec("q75a", "parquet", "cdc", srcDir,
+        destinationConnection = destDir, metadata = metaV1))
+      val q0 = pm.start("q75a", identity,
+        Trigger.ProcessingTime("50 milliseconds"))
+      g.awaitCommit(ckpt, 0)()
+      val nAtUpdate = stateCount()
+      // re-key mid-run: (k1) -> (k1, k2). Same destination — no
+      // state moves, but the running query MUST restart to pick the
+      // new merge key up (q75's whole point).
+      pm.update("q75a", PipelineSpec("q75a", "parquet", "cdc", srcDir,
+        destinationConnection = destDir,
+        metadata = metaV1 + ("cdcKeyCols" -> "k1,k2"))): Unit
+      val restarted = !q0.isActive
+      val newLive = s.streams.active.exists(q =>
+        q.name == "q75a" && q.isActive)
+      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q75src")
+      g.awaitCommit(ckpt, 1)()
+      // the merge runs inside the epoch's foreachBatch, so commit 1
+      // implies the post-update state is installed
+      val nFinal = stateCount()
+      val k2Final = CdcMerge.currentState(s, destDir)
+        .map(_.select(countDistinct(col("k2"))).head().getLong(0))
+        .getOrElse(0L)
+      pm.stop("q75a")
+      g.kv(
+        ("upd", "restarted", restarted),
+        ("upd", "new_query_live", newLive),
+        ("state", "n_at_update", nAtUpdate),
+        ("state", "n_final", nFinal),
+        ("state", "k2_distinct_final", k2Final))
     }),
 
     // CROSS-MANAGER UPDATE REASSIGNMENT (q76) — the fifth
@@ -3096,90 +2387,60 @@ object StreamingQueries {
     // shared checkpoint onto the new destination exactly-once; the
     // two destinations partition the corpus; a second consume is a
     // no-op. All waits poll the engine's own commit log.
-    "q76_cross_manager_update" -> ((s, d) => {
-      val ckptRoot = Files.createTempDirectory("graft-q76-pm-").toString
-      val srcDir = Files.createTempDirectory("graft-q76-src-").toString
-      val destX = Files.createTempDirectory("graft-q76-destX-").toString + "/d"
-      val destZ = Files.createTempDirectory("graft-q76-destZ-").toString + "/d"
-      var pms = List.empty[PipelineManager]
-      try {
-        val conf = s.sparkContext.hadoopConfiguration
-        val clicks = Tables.t(s, d, "events")
-          .filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"))
-        def epochOf(e: Long): DataFrame =
-          clicks.filter(pmod(col("event_id"), lit(2L)) === e)
-        val fs = new org.apache.hadoop.fs.Path(ckptRoot).getFileSystem(conf)
-        def commitDone(b: Long): Boolean = fs.exists(
-          new org.apache.hadoop.fs.Path(s"$ckptRoot/q76a/commits/$b"))
-        def requestPending: Boolean = {
-          val dir = new org.apache.hadoop.fs.Path(
-            s"$ckptRoot/reassign-requests")
-          fs.exists(dir) && fs.listStatus(dir).nonEmpty
-        }
-        def awaitTrue(what: String)(cond: => Boolean): Unit =
-          awaitCond("q76", what)(cond)
-        PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q76src")
-        val mA = new PipelineManager(s, ckptRoot, instance = "mgrA")
-        pms ::= mA
-        mA.create(PipelineSpec("q76a", "parquet", "parquet", srcDir,
-          destinationConnection = destX))
-        val q0 = mA.start("q76a", identity,
-          Trigger.ProcessingTime("50 milliseconds"))
-        // epoch 0 fully COMMITTED before the update — the owner's
-        // restart deterministically resumes at epoch 1, so the new
-        // destination can never replay epoch 0
-        awaitTrue("epoch 0 commit")(commitDone(0))
-        val xFilesAtUpdate = PipelineManager.committedFiles(destX, conf).size
-        // manager B shares the durable root but runs nothing
-        val mB = new PipelineManager(s, ckptRoot, instance = "mgrB")
-        pms ::= mB
-        mB.update("q76a", PipelineSpec("q76a", "parquet", "parquet", srcDir,
-          destinationConnection = destZ)): Unit
-        val peerUntouched = q0.isActive.toString
-        val pending = requestPending.toString
-        // B's own tick must refuse the request — A's lock is live
-        val bConsume = mB.consumeReassignRequests().toString
-        val zAtUpdate = PipelineManager.committedFiles(destZ, conf).size.toString
-        // the owner's tick (driven directly — same method the
-        // autoHeartbeat timer calls) consumes it and restarts
-        val consumed = mA.consumeReassignRequests().toString
-        val restarted = (!q0.isActive).toString
-        val newLive = s.streams.active.exists(q =>
-          q.name == "q76a" && q.isActive).toString
-        val reconsumed = mA.consumeReassignRequests().toString
-        PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q76src")
-        awaitTrue("epoch 1 commit + post-update delivery")(
-          commitDone(1) && PipelineManager.committedFiles(destZ, conf).nonEmpty)
-        val xFilesAfter = PipelineManager.committedFiles(destX, conf).size
-        mA.stop("q76a")
-        val x = s.read.parquet(destX)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        val z = s.read.parquet(destZ)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        import s.implicits._
-        Seq(
-          ("req", "peer_query_untouched", peerUntouched),
-          ("req", "request_pending", pending),
-          ("req", "b_consume_noop", bConsume),
-          ("req", "z_rows_at_update", zAtUpdate),
-          ("req", "consumed", consumed),
-          ("req", "reconsumed", reconsumed),
-          ("upd", "restarted", restarted),
-          ("upd", "new_query_live", newLive),
-          ("upd", "x_frozen", (xFilesAfter == xFilesAtUpdate).toString),
-          ("rows", "x_n", x.getLong(0).toString),
-          ("rows", "x_distinct", x.getLong(1).toString),
-          ("rows", "z_n", z.getLong(0).toString),
-          ("rows", "z_distinct", z.getLong(1).toString))
-          .toDF("kind", "k", "v")
-      } finally {
-        pms.foreach(p => try p.close() catch { case _: Throwable => () })
-        deleteTree(ckptRoot, srcDir, new java.io.File(destX).getParent,
-          new java.io.File(destZ).getParent)
-      }
+    "q76_cross_manager_update" -> ((s, d) => gate(s, "q76") { g =>
+      val (ckptRoot, srcDir) = (g.dir("pm"), g.dir("src"))
+      val (destX, destZ) = (g.dir("destX") + "/d", g.dir("destZ") + "/d")
+      val rec = g.records(ckptRoot)
+      val epochOf = clickEpochs(s, d, 2L)
+      def requestPending: Boolean = rec.list(rec.reassignDir, ".req").nonEmpty
+      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q76src")
+      val mA = g.track(new PipelineManager(s, ckptRoot, instance = "mgrA"))
+      mA.create(PipelineSpec("q76a", "parquet", "parquet", srcDir,
+        destinationConnection = destX))
+      val q0 = mA.start("q76a", identity,
+        Trigger.ProcessingTime("50 milliseconds"))
+      // epoch 0 fully COMMITTED before the update — the owner's
+      // restart deterministically resumes at epoch 1, so the new
+      // destination can never replay epoch 0
+      g.awaitCommit(rec.checkpoint("q76a"), 0)()
+      val xFilesAtUpdate = g.committed(destX)
+      // manager B shares the durable root but runs nothing
+      val mB = g.track(new PipelineManager(s, ckptRoot, instance = "mgrB"))
+      mB.update("q76a", PipelineSpec("q76a", "parquet", "parquet", srcDir,
+        destinationConnection = destZ)): Unit
+      val peerUntouched = q0.isActive
+      val pending = requestPending
+      // B's own tick must refuse the request — A's lock is live
+      val bConsume = mB.consumeReassignRequests()
+      val zAtUpdate = g.committed(destZ)
+      // the owner's tick (driven directly — same method the
+      // autoHeartbeat timer calls) consumes it and restarts
+      val consumed = mA.consumeReassignRequests()
+      val restarted = !q0.isActive
+      val newLive = s.streams.active.exists(q =>
+        q.name == "q76a" && q.isActive)
+      val reconsumed = mA.consumeReassignRequests()
+      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q76src")
+      // plus post-update delivery
+      g.awaitCommit(rec.checkpoint("q76a"), 1)(g.committed(destZ) > 0)
+      val xFilesAfter = g.committed(destX)
+      mA.stop("q76a")
+      val (xn, xd) = g.delivered(destX)
+      val (zn, zd) = g.delivered(destZ)
+      g.kv(
+        ("req", "peer_query_untouched", peerUntouched),
+        ("req", "request_pending", pending),
+        ("req", "b_consume_noop", bConsume),
+        ("req", "z_rows_at_update", zAtUpdate),
+        ("req", "consumed", consumed),
+        ("req", "reconsumed", reconsumed),
+        ("upd", "restarted", restarted),
+        ("upd", "new_query_live", newLive),
+        ("upd", "x_frozen", xFilesAfter == xFilesAtUpdate),
+        ("rows", "x_n", xn),
+        ("rows", "x_distinct", xd),
+        ("rows", "z_n", zn),
+        ("rows", "z_distinct", zd))
     }),
 
     // CROSS-MANAGER PAUSE + RESUME (q77) — the lifecycle-verb
@@ -3197,91 +2458,62 @@ object StreamingQueries {
     // assignment); B's requestResume routes back the same way and A
     // restarts from its remembered run; delivery across the whole
     // round trip is exactly-once.
-    "q77_cross_manager_pause" -> ((s, d) => {
-      val ckptRoot = Files.createTempDirectory("graft-q77-pm-").toString
-      val srcDir = Files.createTempDirectory("graft-q77-src-").toString
-      val destD = Files.createTempDirectory("graft-q77-dest-").toString + "/d"
-      var pms = List.empty[PipelineManager]
-      try {
-        val conf = s.sparkContext.hadoopConfiguration
-        val clicks = Tables.t(s, d, "events")
-          .filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"))
-        def epochOf(e: Long): DataFrame =
-          clicks.filter(pmod(col("event_id"), lit(2L)) === e)
-        val fs = new org.apache.hadoop.fs.Path(ckptRoot).getFileSystem(conf)
-        def commitDone(b: Long): Boolean = fs.exists(
-          new org.apache.hadoop.fs.Path(s"$ckptRoot/q77a/commits/$b"))
-        def durableStatus(v: String): Boolean = {
-          val p = new org.apache.hadoop.fs.Path(s"$ckptRoot/specs/q77a.json")
-          val in = fs.open(p)
-          val txt = try new String(in.readAllBytes(), "UTF-8")
-            finally in.close()
-          txt.contains(s""""status":"$v"""")
-        }
-        def requestPending: Boolean = {
-          val dir = new org.apache.hadoop.fs.Path(
-            s"$ckptRoot/lifecycle-requests")
-          fs.exists(dir) && fs.listStatus(dir).nonEmpty
-        }
-        PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q77src")
-        val mA = new PipelineManager(s, ckptRoot, instance = "mgrA")
-        pms ::= mA
-        mA.create(PipelineSpec("q77a", "parquet", "parquet", srcDir,
-          destinationConnection = destD))
-        val q0 = mA.start("q77a", identity,
-          Trigger.ProcessingTime("50 milliseconds"))
-        awaitCond("q77", "epoch 0 commit")(commitDone(0))
-        val mB = new PipelineManager(s, ckptRoot, instance = "mgrB")
-        pms ::= mB
-        mB.pause("q77a")
-        // routed verb mutated NOTHING: truthful status, live query
-        val peerActive = q0.isActive.toString
-        val statusTruthful = durableStatus("Ready").toString
-        val pending = requestPending.toString
-        val bConsume = mB.consumeLifecycleRequests().toString
-        val aConsume = mA.consumeLifecycleRequests().toString
-        val pausedStopped = (!q0.isActive).toString
-        val pausedDurable = durableStatus("Paused").toString
-        // pause keeps the assignment AND the lock with the owner
-        val lockKept = fs.exists(new org.apache.hadoop.fs.Path(
-          s"$ckptRoot/locks/q77a.lock")).toString
-        PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q77src")
-        // the return leg: resume routed from B, enacted by A from its
-        // remembered run (no transform crosses managers)
-        mB.requestResume("q77a")
-        val resumePending = requestPending.toString
-        val aConsume2 = mB.queryOf("q77a").isEmpty &&
-          mA.consumeLifecycleRequests() == 1
-        awaitCond("q77", "epoch 1 commit after resume")(commitDone(1) &&
-          PipelineManager.committedFiles(destD, conf).nonEmpty)
-        val resumedLive = mA.queryOf("q77a").exists(_.isActive).toString
-        val readyDurable = durableStatus("Ready").toString
-        mA.stop("q77a")
-        val r = s.read.parquet(destD)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        import s.implicits._
-        Seq(
-          ("req", "peer_query_untouched", peerActive),
-          ("req", "status_truthful_until_enacted", statusTruthful),
-          ("req", "request_pending", pending),
-          ("req", "b_consume_noop", bConsume),
-          ("req", "a_consumed", aConsume),
-          ("pause", "query_stopped", pausedStopped),
-          ("pause", "status_paused_durable", pausedDurable),
-          ("pause", "lock_kept", lockKept),
-          ("resume", "request_pending", resumePending),
-          ("resume", "owner_enacted", aConsume2.toString),
-          ("resume", "query_live", resumedLive),
-          ("resume", "status_ready_durable", readyDurable),
-          ("rows", "n", r.getLong(0).toString),
-          ("rows", "n_distinct", r.getLong(1).toString))
-          .toDF("kind", "k", "v")
-      } finally {
-        pms.foreach(p => try p.close() catch { case _: Throwable => () })
-        deleteTree(ckptRoot, srcDir, new java.io.File(destD).getParent)
-      }
+    "q77_cross_manager_pause" -> ((s, d) => gate(s, "q77") { g =>
+      val (ckptRoot, srcDir) = (g.dir("pm"), g.dir("src"))
+      val destD = g.dir("dest") + "/d"
+      val rec = g.records(ckptRoot)
+      val epochOf = clickEpochs(s, d, 2L)
+      def durableStatus(v: String): Boolean =
+        rec.read(rec.spec("q77a"))(b => Some(new String(b, "UTF-8")))
+          .toOption.exists(_.contains(s""""status":"$v""""))
+      def requestPending: Boolean = rec.list(rec.lifecycleDir, ".req").nonEmpty
+      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q77src")
+      val mA = g.track(new PipelineManager(s, ckptRoot, instance = "mgrA"))
+      mA.create(PipelineSpec("q77a", "parquet", "parquet", srcDir,
+        destinationConnection = destD))
+      val q0 = mA.start("q77a", identity,
+        Trigger.ProcessingTime("50 milliseconds"))
+      g.awaitCommit(rec.checkpoint("q77a"), 0)()
+      val mB = g.track(new PipelineManager(s, ckptRoot, instance = "mgrB"))
+      mB.pause("q77a")
+      // routed verb mutated NOTHING: truthful status, live query
+      val peerActive = q0.isActive
+      val statusTruthful = durableStatus("Ready")
+      val pending = requestPending
+      val bConsume = mB.consumeLifecycleRequests()
+      val aConsume = mA.consumeLifecycleRequests()
+      val pausedStopped = !q0.isActive
+      val pausedDurable = durableStatus("Paused")
+      // pause keeps the assignment AND the lock with the owner
+      val lockKept = g.exists(rec.lock("q77a"))
+      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q77src")
+      // the return leg: resume routed from B, enacted by A from its
+      // remembered run (no transform crosses managers)
+      mB.requestResume("q77a")
+      val resumePending = requestPending
+      val aConsume2 = mB.queryOf("q77a").isEmpty &&
+        mA.consumeLifecycleRequests() == 1
+      // after the resume
+      g.awaitCommit(rec.checkpoint("q77a"), 1)(g.committed(destD) > 0)
+      val resumedLive = mA.queryOf("q77a").exists(_.isActive)
+      val readyDurable = durableStatus("Ready")
+      mA.stop("q77a")
+      val (n, nd) = g.delivered(destD)
+      g.kv(
+        ("req", "peer_query_untouched", peerActive),
+        ("req", "status_truthful_until_enacted", statusTruthful),
+        ("req", "request_pending", pending),
+        ("req", "b_consume_noop", bConsume),
+        ("req", "a_consumed", aConsume),
+        ("pause", "query_stopped", pausedStopped),
+        ("pause", "status_paused_durable", pausedDurable),
+        ("pause", "lock_kept", lockKept),
+        ("resume", "request_pending", resumePending),
+        ("resume", "owner_enacted", aConsume2),
+        ("resume", "query_live", resumedLive),
+        ("resume", "status_ready_durable", readyDurable),
+        ("rows", "n", n),
+        ("rows", "n_distinct", nd))
     }),
 
     // CROSS-MANAGER STOP + TAKEOVER (q78) — stop routed like q77's
@@ -3290,62 +2522,41 @@ object StreamingQueries {
     // DatastreamResources.java:462-546): once the owner enacts it,
     // the requestor itself may acquire the freed task and continue
     // from the SHARED checkpoint — exactly-once across the handoff.
-    "q78_cross_manager_stop" -> ((s, d) => {
-      val ckptRoot = Files.createTempDirectory("graft-q78-pm-").toString
-      val srcDir = Files.createTempDirectory("graft-q78-src-").toString
-      val destD = Files.createTempDirectory("graft-q78-dest-").toString + "/d"
-      var pms = List.empty[PipelineManager]
-      try {
-        val conf = s.sparkContext.hadoopConfiguration
-        val clicks = Tables.t(s, d, "events")
-          .filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"))
-        def epochOf(e: Long): DataFrame =
-          clicks.filter(pmod(col("event_id"), lit(2L)) === e)
-        val fs = new org.apache.hadoop.fs.Path(ckptRoot).getFileSystem(conf)
-        def commitDone(b: Long): Boolean = fs.exists(
-          new org.apache.hadoop.fs.Path(s"$ckptRoot/q78a/commits/$b"))
-        PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q78src")
-        val mA = new PipelineManager(s, ckptRoot, instance = "mgrA")
-        pms ::= mA
-        mA.create(PipelineSpec("q78a", "parquet", "parquet", srcDir,
-          destinationConnection = destD))
-        val q0 = mA.start("q78a", identity,
-          Trigger.ProcessingTime("50 milliseconds"))
-        awaitCond("q78", "epoch 0 commit")(commitDone(0))
-        val mB = new PipelineManager(s, ckptRoot, instance = "mgrB")
-        pms ::= mB
-        mB.stop("q78a")
-        val peerActive = q0.isActive.toString
-        val bConsume = mB.consumeLifecycleRequests().toString
-        val aConsume = mA.consumeLifecycleRequests().toString
-        val stopped = (!q0.isActive).toString
-        // stop releases the task back to the pool: the lock is GONE
-        val lockReleased = (!fs.exists(new org.apache.hadoop.fs.Path(
-          s"$ckptRoot/locks/q78a.lock"))).toString
-        PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q78src")
-        // the freed task moves: B acquires it and resumes from the
-        // SHARED checkpoint — epoch 0 never replays, epoch 1 delivers
-        mB.resume("q78a", identity).awaitTermination()
-        val takenOver = mB.queryOf("q78a").isDefined.toString
-        val r = s.read.parquet(destD)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        import s.implicits._
-        Seq(
-          ("req", "peer_query_untouched", peerActive),
-          ("req", "b_consume_noop", bConsume),
-          ("req", "a_consumed", aConsume),
-          ("stop", "query_stopped", stopped),
-          ("stop", "lock_released", lockReleased),
-          ("stop", "taken_over_by_requestor", takenOver),
-          ("rows", "n", r.getLong(0).toString),
-          ("rows", "n_distinct", r.getLong(1).toString))
-          .toDF("kind", "k", "v")
-      } finally {
-        pms.foreach(p => try p.close() catch { case _: Throwable => () })
-        deleteTree(ckptRoot, srcDir, new java.io.File(destD).getParent)
-      }
+    "q78_cross_manager_stop" -> ((s, d) => gate(s, "q78") { g =>
+      val (ckptRoot, srcDir) = (g.dir("pm"), g.dir("src"))
+      val destD = g.dir("dest") + "/d"
+      val rec = g.records(ckptRoot)
+      val epochOf = clickEpochs(s, d, 2L)
+      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q78src")
+      val mA = g.track(new PipelineManager(s, ckptRoot, instance = "mgrA"))
+      mA.create(PipelineSpec("q78a", "parquet", "parquet", srcDir,
+        destinationConnection = destD))
+      val q0 = mA.start("q78a", identity,
+        Trigger.ProcessingTime("50 milliseconds"))
+      g.awaitCommit(rec.checkpoint("q78a"), 0)()
+      val mB = g.track(new PipelineManager(s, ckptRoot, instance = "mgrB"))
+      mB.stop("q78a")
+      val peerActive = q0.isActive
+      val bConsume = mB.consumeLifecycleRequests()
+      val aConsume = mA.consumeLifecycleRequests()
+      val stopped = !q0.isActive
+      // stop releases the task back to the pool: the lock is GONE
+      val lockReleased = !g.exists(rec.lock("q78a"))
+      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q78src")
+      // the freed task moves: B acquires it and resumes from the
+      // SHARED checkpoint — epoch 0 never replays, epoch 1 delivers
+      mB.resume("q78a", identity).awaitTermination()
+      val takenOver = mB.queryOf("q78a").isDefined
+      val (n, nd) = g.delivered(destD)
+      g.kv(
+        ("req", "peer_query_untouched", peerActive),
+        ("req", "b_consume_noop", bConsume),
+        ("req", "a_consumed", aConsume),
+        ("stop", "query_stopped", stopped),
+        ("stop", "lock_released", lockReleased),
+        ("stop", "taken_over_by_requestor", takenOver),
+        ("rows", "n", n),
+        ("rows", "n_distinct", nd))
     }),
 
     // CROSS-MANAGER DELETE (q79) — the one routed verb that is
@@ -3357,69 +2568,47 @@ object StreamingQueries {
     // request pending); A's tick enacts the full deletion — query
     // stopped, spec gone, checkpoint gone — while the DELIVERED data
     // at the destination is untouched; a second consume is a no-op.
-    "q79_cross_manager_delete" -> ((s, d) => {
-      val ckptRoot = Files.createTempDirectory("graft-q79-pm-").toString
-      val srcDir = Files.createTempDirectory("graft-q79-src-").toString
-      val destD = Files.createTempDirectory("graft-q79-dest-").toString + "/d"
-      var pms = List.empty[PipelineManager]
-      try {
-        val conf = s.sparkContext.hadoopConfiguration
-        val clicks = Tables.t(s, d, "events")
-          .filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"))
-        val epoch0 = clicks.filter(pmod(col("event_id"), lit(2L)) === 0L)
-        val fs = new org.apache.hadoop.fs.Path(ckptRoot).getFileSystem(conf)
-        def commitDone(b: Long): Boolean = fs.exists(
-          new org.apache.hadoop.fs.Path(s"$ckptRoot/q79a/commits/$b"))
-        def ckptExists: Boolean = fs.exists(
-          new org.apache.hadoop.fs.Path(s"$ckptRoot/q79a"))
-        def specExists: Boolean = fs.exists(
-          new org.apache.hadoop.fs.Path(s"$ckptRoot/specs/q79a.json"))
-        PipelineManager.epochAppend(epoch0.coalesce(1), srcDir, 0, "q79src")
-        val mA = new PipelineManager(s, ckptRoot, instance = "mgrA")
-        pms ::= mA
-        mA.create(PipelineSpec("q79a", "parquet", "parquet", srcDir,
-          destinationConnection = destD))
-        val q0 = mA.start("q79a", identity,
-          Trigger.ProcessingTime("50 milliseconds"))
-        awaitCond("q79", "epoch 0 commit")(commitDone(0) &&
-          PipelineManager.committedFiles(destD, conf).nonEmpty)
-        val mB = new PipelineManager(s, ckptRoot, instance = "mgrB")
-        pms ::= mB
-        mB.delete("q79a")
-        // nothing destroyed until the OWNER enacts
-        val peerActive = q0.isActive.toString
-        val ckptIntact = ckptExists.toString
-        val specIntact = specExists.toString
-        val bConsume = mB.consumeLifecycleRequests().toString
-        val aConsume = mA.consumeLifecycleRequests().toString
-        val stopped = (!q0.isActive).toString
-        val specGone = (!specExists).toString
-        val ckptGone = (!ckptExists).toString
-        val reconsumed = mA.consumeLifecycleRequests().toString
-        // the DELIVERED data outlives the pipeline (delete removes
-        // engine state, never the destination's committed output)
-        val r = s.read.parquet(destD)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        import s.implicits._
-        Seq(
-          ("req", "peer_query_untouched", peerActive),
-          ("req", "ckpt_intact_until_enacted", ckptIntact),
-          ("req", "spec_intact_until_enacted", specIntact),
-          ("req", "b_consume_noop", bConsume),
-          ("req", "a_consumed", aConsume),
-          ("del", "query_stopped", stopped),
-          ("del", "spec_gone", specGone),
-          ("del", "ckpt_gone", ckptGone),
-          ("del", "reconsumed_noop", reconsumed),
-          ("rows", "n", r.getLong(0).toString),
-          ("rows", "n_distinct", r.getLong(1).toString))
-          .toDF("kind", "k", "v")
-      } finally {
-        pms.foreach(p => try p.close() catch { case _: Throwable => () })
-        deleteTree(ckptRoot, srcDir, new java.io.File(destD).getParent)
-      }
+    "q79_cross_manager_delete" -> ((s, d) => gate(s, "q79") { g =>
+      val (ckptRoot, srcDir) = (g.dir("pm"), g.dir("src"))
+      val destD = g.dir("dest") + "/d"
+      val rec = g.records(ckptRoot)
+      val ckpt = rec.checkpoint("q79a")
+      def specExists: Boolean = g.exists(rec.spec("q79a"))
+      PipelineManager.epochAppend(clickEpochs(s, d, 2L)(0).coalesce(1),
+        srcDir, 0, "q79src")
+      val mA = g.track(new PipelineManager(s, ckptRoot, instance = "mgrA"))
+      mA.create(PipelineSpec("q79a", "parquet", "parquet", srcDir,
+        destinationConnection = destD))
+      val q0 = mA.start("q79a", identity,
+        Trigger.ProcessingTime("50 milliseconds"))
+      g.awaitCommit(ckpt, 0)(g.committed(destD) > 0)
+      val mB = g.track(new PipelineManager(s, ckptRoot, instance = "mgrB"))
+      mB.delete("q79a")
+      // nothing destroyed until the OWNER enacts
+      val peerActive = q0.isActive
+      val ckptIntact = g.exists(ckpt)
+      val specIntact = specExists
+      val bConsume = mB.consumeLifecycleRequests()
+      val aConsume = mA.consumeLifecycleRequests()
+      val stopped = !q0.isActive
+      val specGone = !specExists
+      val ckptGone = !g.exists(ckpt)
+      val reconsumed = mA.consumeLifecycleRequests()
+      // the DELIVERED data outlives the pipeline (delete removes
+      // engine state, never the destination's committed output)
+      val (n, nd) = g.delivered(destD)
+      g.kv(
+        ("req", "peer_query_untouched", peerActive),
+        ("req", "ckpt_intact_until_enacted", ckptIntact),
+        ("req", "spec_intact_until_enacted", specIntact),
+        ("req", "b_consume_noop", bConsume),
+        ("req", "a_consumed", aConsume),
+        ("del", "query_stopped", stopped),
+        ("del", "spec_gone", specGone),
+        ("del", "ckpt_gone", ckptGone),
+        ("del", "reconsumed_noop", reconsumed),
+        ("rows", "n", n),
+        ("rows", "n_distinct", nd))
     }),
 
     // SPEC RECONCILIATION (q80) — the ZK-watch stand-in that makes
@@ -3434,80 +2623,58 @@ object StreamingQueries {
     // in-memory before its persist lands). Reference: every instance
     // observes datastream changes via ZK watches
     // (Coordinator.java:824); here the heartbeat tick reconciles.
-    "q80_spec_reconcile" -> ((s, d) => {
-      val ckptRoot = Files.createTempDirectory("graft-q80-pm-").toString
-      val srcDir = Files.createTempDirectory("graft-q80-src-").toString
-      val destD = Files.createTempDirectory("graft-q80-dest-").toString + "/d"
-      var pms = List.empty[PipelineManager]
-      try {
-        val conf = s.sparkContext.hadoopConfiguration
-        val clicks = Tables.t(s, d, "events")
-          .filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"))
-        def epochOf(e: Long): DataFrame =
-          clicks.filter(pmod(col("event_id"), lit(2L)) === e)
-        val fs = new org.apache.hadoop.fs.Path(ckptRoot).getFileSystem(conf)
-        def commitDone(b: Long): Boolean = fs.exists(
-          new org.apache.hadoop.fs.Path(s"$ckptRoot/q80a/commits/$b"))
-        PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q80src")
-        // B exists FIRST: the later create is invisible to it until
-        // its reconcile tick discovers the durable spec
-        val mB = new PipelineManager(s, ckptRoot, instance = "mgrB")
-        pms ::= mB
-        val mA = new PipelineManager(s, ckptRoot, instance = "mgrA")
-        pms ::= mA
-        mA.create(PipelineSpec("q80a", "parquet", "parquet", srcDir,
-          destinationConnection = destD))
-        val q0 = mA.start("q80a", identity,
-          Trigger.ProcessingTime("50 milliseconds"))
-        awaitCond("q80", "epoch 0 commit")(commitDone(0))
-        val invisible = mB.get("q80a").isEmpty.toString
-        mB.reconcileSpecs()
-        // a live peer executes it: adopted verbatim as Ready
-        val discovered = mB.get("q80a")
-          .exists(_.status == PipelineStatus.Ready).toString
-        // the discovery is what makes the routed verb reachable at all
-        mB.pause("q80a")
-        val aConsumed = mA.consumeLifecycleRequests().toString
-        val enacted = (!q0.isActive).toString
-        // the owner's enacted flip moved the spec file: B's next tick
-        // refreshes the unowned entry to the truthful Paused
-        mB.reconcileSpecs()
-        val refreshed = mB.get("q80a")
-          .exists(_.status == PipelineStatus.Paused).toString
-        // the return leg, then drain the corpus for the closed form
-        PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q80src")
-        mB.requestResume("q80a")
-        val resumed = (mA.consumeLifecycleRequests() == 1).toString
-        awaitCond("q80", "epoch 1 commit after resume")(commitDone(1) &&
-          PipelineManager.committedFiles(destD, conf).nonEmpty)
-        mA.stop("q80a")
-        mA.delete("q80a")
-        // the sweep needs TWO consecutive positively-absent ticks
-        mB.reconcileSpecs()
-        val gracedFirstTick = mB.get("q80a").isDefined.toString
-        mB.reconcileSpecs()
-        val sweptSecondTick = mB.get("q80a").isEmpty.toString
-        val r = s.read.parquet(destD)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        import s.implicits._
-        Seq(
-          ("rec", "invisible_before_tick", invisible),
-          ("rec", "discovered_ready", discovered),
-          ("req", "routed_verb_reachable", aConsumed),
-          ("req", "enacted", enacted),
-          ("rec", "refreshed_to_paused", refreshed),
-          ("req", "resume_consumed", resumed),
-          ("rec", "sweep_graced_first_tick", gracedFirstTick),
-          ("rec", "swept_second_tick", sweptSecondTick),
-          ("rows", "n", r.getLong(0).toString),
-          ("rows", "n_distinct", r.getLong(1).toString))
-          .toDF("kind", "k", "v")
-      } finally {
-        pms.foreach(p => try p.close() catch { case _: Throwable => () })
-        deleteTree(ckptRoot, srcDir, new java.io.File(destD).getParent)
-      }
+    "q80_spec_reconcile" -> ((s, d) => gate(s, "q80") { g =>
+      val (ckptRoot, srcDir) = (g.dir("pm"), g.dir("src"))
+      val destD = g.dir("dest") + "/d"
+      val ckpt = g.records(ckptRoot).checkpoint("q80a")
+      val epochOf = clickEpochs(s, d, 2L)
+      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q80src")
+      // B exists FIRST: the later create is invisible to it until
+      // its reconcile tick discovers the durable spec
+      val mB = g.track(new PipelineManager(s, ckptRoot, instance = "mgrB"))
+      val mA = g.track(new PipelineManager(s, ckptRoot, instance = "mgrA"))
+      mA.create(PipelineSpec("q80a", "parquet", "parquet", srcDir,
+        destinationConnection = destD))
+      val q0 = mA.start("q80a", identity,
+        Trigger.ProcessingTime("50 milliseconds"))
+      g.awaitCommit(ckpt, 0)()
+      val invisible = mB.get("q80a").isEmpty
+      mB.reconcileSpecs()
+      // a live peer executes it: adopted verbatim as Ready
+      val discovered = mB.get("q80a").exists(_.status == PipelineStatus.Ready)
+      // the discovery is what makes the routed verb reachable at all
+      mB.pause("q80a")
+      val aConsumed = mA.consumeLifecycleRequests()
+      val enacted = !q0.isActive
+      // the owner's enacted flip moved the spec file: B's next tick
+      // refreshes the unowned entry to the truthful Paused
+      mB.reconcileSpecs()
+      val refreshed = mB.get("q80a").exists(_.status == PipelineStatus.Paused)
+      // the return leg, then drain the corpus for the closed form
+      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q80src")
+      mB.requestResume("q80a")
+      val resumed = mA.consumeLifecycleRequests() == 1
+      // after the resume
+      g.awaitCommit(ckpt, 1)(g.committed(destD) > 0)
+      mA.stop("q80a")
+      mA.delete("q80a")
+      // the sweep needs TWO consecutive positively-absent ticks
+      mB.reconcileSpecs()
+      val gracedFirstTick = mB.get("q80a").isDefined
+      mB.reconcileSpecs()
+      val sweptSecondTick = mB.get("q80a").isEmpty
+      val (n, nd) = g.delivered(destD)
+      g.kv(
+        ("rec", "invisible_before_tick", invisible),
+        ("rec", "discovered_ready", discovered),
+        ("req", "routed_verb_reachable", aConsumed),
+        ("req", "enacted", enacted),
+        ("rec", "refreshed_to_paused", refreshed),
+        ("req", "resume_consumed", resumed),
+        ("rec", "sweep_graced_first_tick", gracedFirstTick),
+        ("rec", "swept_second_tick", sweptSecondTick),
+        ("rows", "n", n),
+        ("rows", "n_distinct", nd))
     }),
 
     // ROUTED RESUME SURVIVES THE OWNER'S CRASH (q81) — the one
@@ -3527,100 +2694,70 @@ object StreamingQueries {
     // request file and restarts with the catalog transform + declared
     // trigger, reclaiming the orphan lock; epoch 0 (delivered by the
     // owner) is not redelivered.
-    "q81_catalog_resume_after_crash" -> ((s, d) => {
-      val ckptRoot = Files.createTempDirectory("graft-q81-pm-").toString
-      val srcDir = Files.createTempDirectory("graft-q81-src-").toString
-      val destD = Files.createTempDirectory("graft-q81-dest-").toString + "/d"
-      var pms = List.empty[PipelineManager]
-      try {
-        val conf = s.sparkContext.hadoopConfiguration
-        val clicks = Tables.t(s, d, "events")
-          .filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"))
-        def epochOf(e: Long): DataFrame =
-          clicks.filter(pmod(col("event_id"), lit(2L)) === e)
-        val fs = new org.apache.hadoop.fs.Path(ckptRoot).getFileSystem(conf)
-        def commitDone(b: Long): Boolean = fs.exists(
-          new org.apache.hadoop.fs.Path(s"$ckptRoot/q81a/commits/$b"))
-        // the shared catalog: one PARAMETERIZED transform both
-        // managers' hooks carry — params ride the spec's metadata
-        val catalog = PipelineHooks(transforms = Map(
-          "userMod" -> (md => df =>
-            df.filter(pmod(col("user_id"),
-              lit(md("transform.mod").toLong)) === 0))))
-        PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q81src")
-        val lease = 600000L // expiry below is SIMULATED, never slept for
-        val mA = new PipelineManager(s, ckptRoot, catalog, instance = "mgrA",
-          livenessLeaseMs = lease)
-        pms ::= mA
-        val spec = mA.create(PipelineSpec("q81a", "parquet", "parquet", srcDir,
-          destinationConnection = destD,
-          metadata = Map(
-            PipelineManager.TransformKey -> "userMod",
-            "transform.mod" -> "2",
-            PipelineManager.TriggerKey -> "processingTime:50")))
-        // the owner itself materializes from the spec — no BYO closure
-        // anywhere in this gate
-        val resolved = mA.resolveTransform(spec).isDefined.toString
-        mA.start("q81a", mA.resolveTransform(spec).get,
-          PipelineManager.specTrigger(spec))
-        awaitCond("q81", "epoch 0 commit")(commitDone(0))
-        mA.pause("q81a") // query stopped, durable Paused, lock KEPT by A
-        val mB = new PipelineManager(s, ckptRoot, catalog, instance = "mgrB",
-          livenessLeaseMs = lease)
-        pms ::= mB
-        // resume from B while A LIVES: must route, not enact — A holds
-        // the lock and only A could restart cheaply from its memory
-        mB.requestResume("q81a")
-        val lcDir = new org.apache.hadoop.fs.Path(
-          s"$ckptRoot/lifecycle-requests")
-        val routed = (fs.exists(lcDir) && fs.listStatus(lcDir).nonEmpty)
-          .toString
-        val bNoopWhileLive = mB.consumeLifecycleRequests().toString
-        // HARD CRASH of the owner: no close(); age the registration
-        // one lease past its last heartbeat (q67's simulation)
-        fs.setTimes(new org.apache.hadoop.fs.Path(
-          s"$ckptRoot/instances/mgrA"),
-          System.currentTimeMillis() - lease - 60000L, -1)
-        val ownerExpired = (!mA.heartbeat()).toString
-        PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q81src")
-        // the survivor never ran the pipeline: nothing remembered
-        val noRunRemembered = mB.queryOf("q81a").isEmpty.toString
-        // its tick consumes the ORPHANED request and restarts from the
-        // spec alone (catalog transform, declared trigger), from the
-        // shared checkpoint
-        val consumed = mB.consumeLifecycleRequests().toString
-        val restarted = mB.queryOf("q81a").exists(_.isActive).toString
-        awaitCond("q81", "epoch 1 commit after catalog resume")(
-          commitDone(1) &&
-            PipelineManager.committedFiles(destD, conf).nonEmpty)
-        // the restart reclaimed the dead owner's lock
-        val lockIn = fs.open(new org.apache.hadoop.fs.Path(
-          s"$ckptRoot/locks/q81a.lock"))
-        val lockTxt = try new String(lockIn.readAllBytes(), "UTF-8")
-          finally lockIn.close()
-        val relocked = lockTxt.contains("mgrB").toString
-        mB.stop("q81a")
-        val r = s.read.parquet(destD)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        import s.implicits._
-        Seq(
-          ("cat", "catalog_resolves_spec", resolved),
-          ("req", "routed_while_owner_live", routed),
-          ("req", "b_consume_noop_while_live", bNoopWhileLive),
-          ("crash", "owner_lease_expired", ownerExpired),
-          ("res", "no_run_remembered_on_survivor", noRunRemembered),
-          ("res", "survivor_consumed", consumed),
-          ("res", "restarted_from_spec_alone", restarted),
-          ("res", "relocked_by_survivor", relocked),
-          ("rows", "n", r.getLong(0).toString),
-          ("rows", "n_distinct", r.getLong(1).toString))
-          .toDF("kind", "k", "v")
-      } finally {
-        pms.foreach(p => try p.close() catch { case _: Throwable => () })
-        deleteTree(ckptRoot, srcDir, new java.io.File(destD).getParent)
-      }
+    "q81_catalog_resume_after_crash" -> ((s, d) => gate(s, "q81") { g =>
+      val (ckptRoot, srcDir) = (g.dir("pm"), g.dir("src"))
+      val destD = g.dir("dest") + "/d"
+      val rec = g.records(ckptRoot)
+      val epochOf = clickEpochs(s, d, 2L)
+      // the shared catalog: one PARAMETERIZED transform both
+      // managers' hooks carry — params ride the spec's metadata
+      val catalog = PipelineHooks(transforms = Map(
+        "userMod" -> (md => df =>
+          df.filter(pmod(col("user_id"),
+            lit(md("transform.mod").toLong)) === 0))))
+      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q81src")
+      val lease = 600000L // expiry below is SIMULATED, never slept for
+      val mA = g.track(new PipelineManager(s, ckptRoot, catalog,
+        instance = "mgrA", livenessLeaseMs = lease))
+      val spec = mA.create(PipelineSpec("q81a", "parquet", "parquet", srcDir,
+        destinationConnection = destD,
+        metadata = Map(
+          PipelineManager.TransformKey -> "userMod",
+          "transform.mod" -> "2",
+          PipelineManager.TriggerKey -> "processingTime:50")))
+      // the owner itself materializes from the spec — no BYO closure
+      // anywhere in this gate
+      val resolved = mA.resolveTransform(spec).isDefined
+      mA.start("q81a", mA.resolveTransform(spec).get,
+        PipelineManager.specTrigger(spec))
+      g.awaitCommit(rec.checkpoint("q81a"), 0)()
+      mA.pause("q81a") // query stopped, durable Paused, lock KEPT by A
+      val mB = g.track(new PipelineManager(s, ckptRoot, catalog,
+        instance = "mgrB", livenessLeaseMs = lease))
+      // resume from B while A LIVES: must route, not enact — A holds
+      // the lock and only A could restart cheaply from its memory
+      mB.requestResume("q81a")
+      val routed = rec.list(rec.lifecycleDir, ".req").nonEmpty
+      val bNoopWhileLive = mB.consumeLifecycleRequests()
+      // HARD CRASH of the owner: no close(); age the registration
+      // one lease past its last heartbeat (q67's simulation)
+      rec.touch(rec.instance("mgrA"), System.currentTimeMillis() - lease - 60000L)
+      val ownerExpired = !mA.heartbeat()
+      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q81src")
+      // the survivor never ran the pipeline: nothing remembered
+      val noRunRemembered = mB.queryOf("q81a").isEmpty
+      // its tick consumes the ORPHANED request and restarts from the
+      // spec alone (catalog transform, declared trigger), from the
+      // shared checkpoint
+      val consumed = mB.consumeLifecycleRequests()
+      val restarted = mB.queryOf("q81a").exists(_.isActive)
+      // after the catalog resume
+      g.awaitCommit(rec.checkpoint("q81a"), 1)(g.committed(destD) > 0)
+      // the restart reclaimed the dead owner's lock
+      val relocked = rec.fields(rec.lock("q81a")).toOption.exists(_.contains("mgrB"))
+      mB.stop("q81a")
+      val (n, nd) = g.delivered(destD)
+      g.kv(
+        ("cat", "catalog_resolves_spec", resolved),
+        ("req", "routed_while_owner_live", routed),
+        ("req", "b_consume_noop_while_live", bNoopWhileLive),
+        ("crash", "owner_lease_expired", ownerExpired),
+        ("res", "no_run_remembered_on_survivor", noRunRemembered),
+        ("res", "survivor_consumed", consumed),
+        ("res", "restarted_from_spec_alone", restarted),
+        ("res", "relocked_by_survivor", relocked),
+        ("rows", "n", n),
+        ("rows", "n_distinct", nd))
     }),
 
     // CATALOG UPDATE-REASSIGN (q82) — closes the contract hole q81
@@ -3643,114 +2780,88 @@ object StreamingQueries {
     // PERSISTED recipe, with no silent switch to any earlier one.
     // Exactly-once throughout: each event delivered by exactly the
     // recipe live at its epoch.
-    "q82_catalog_update_reassign" -> ((s, d) => {
-      val ckptRoot = Files.createTempDirectory("graft-q82-pm-").toString
-      val srcDir = Files.createTempDirectory("graft-q82-src-").toString
-      val destD = Files.createTempDirectory("graft-q82-dest-").toString + "/d"
-      var pms = List.empty[PipelineManager]
-      try {
-        val conf = s.sparkContext.hadoopConfiguration
-        val clicks = Tables.t(s, d, "events")
-          .filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"))
-        val mods = Array(2L, 3L, 5L, 7L)
-        def epochOf(e: Int): DataFrame =
-          clicks.filter(pmod(col("event_id"), lit(4L)) === e.toLong)
-        // expected cumulative delivery through epoch e — each epoch
-        // filtered by the recipe live when it was delivered
-        val expAt = mods.indices.map(e =>
-          epochOf(e).filter(pmod(col("user_id"), lit(mods(e))) === 0)
-            .count()).scanLeft(0L)(_ + _).tail
-        def delivered(): Long =
-          try s.read.parquet(destD).count()
-          catch { case _: Throwable => 0L }
-        val catalog = PipelineHooks(transforms = Map(
-          "userMod" -> (md => df =>
-            df.filter(pmod(col("user_id"),
-              lit(md("transform.mod").toLong)) === 0))))
-        def specWith(mod: Long) = PipelineSpec("q82a", "parquet", "parquet",
-          srcDir, destinationConnection = destD,
-          metadata = Map(
-            PipelineManager.TransformKey -> "userMod",
-            "transform.mod" -> mod.toString,
-            PipelineManager.TriggerKey -> "processingTime:50"))
-        val fs = new org.apache.hadoop.fs.Path(ckptRoot).getFileSystem(conf)
-        val lease = 600000L // expiry below is SIMULATED, never slept for
-        PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q82src")
-        val mA = new PipelineManager(s, ckptRoot, catalog, instance = "mgrA",
-          livenessLeaseMs = lease)
-        pms ::= mA
-        val spec0 = mA.create(specWith(2))
-        val q0 = mA.start("q82a", mA.resolveTransform(spec0).get,
-          PipelineManager.specTrigger(spec0))
-        awaitCond("q82", "epoch 0 delivered")(delivered() == expAt(0))
-        // ---- local owner update: params change restarts the query
-        // with the recipe re-materialized from the UPDATED spec ----
-        mA.update("q82a", specWith(3)): Unit
-        val localRestart = (!q0.isActive).toString
-        val localNewLive = mA.queryOf("q82a").exists(_.isActive).toString
-        PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q82src")
-        awaitCond("q82", "epoch 1 delivered by updated recipe")(
-          delivered() == expAt(1))
-        // ---- cross-manager update (q76 path, same predicate): B
-        // persists the new recipe and routes; A's tick enacts ----
-        val mB = new PipelineManager(s, ckptRoot, catalog, instance = "mgrB",
-          livenessLeaseMs = lease)
-        pms ::= mB
-        mB.update("q82a", specWith(5)): Unit
-        val reqDir = new org.apache.hadoop.fs.Path(
-          s"$ckptRoot/reassign-requests")
-        val routed = (fs.exists(reqDir) && fs.listStatus(reqDir).nonEmpty)
-          .toString
-        val bNoopWhileLive = mB.consumeReassignRequests().toString
-        val ownerConsumed = mA.consumeReassignRequests().toString
-        PipelineManager.epochAppend(epochOf(2).coalesce(1), srcDir, 2, "q82src")
-        awaitCond("q82", "epoch 2 delivered by routed recipe")(
-          delivered() == expAt(2))
-        // ---- the fuzz half: persist a NEW recipe while PAUSED, then
-        // CRASH the owner — the survivor's routed resume must enact
-        // the PERSISTED recipe (mod 7), never a remembered one ----
-        mA.pause("q82a") // query stopped, durable Paused, lock KEPT by A
-        mB.reconcileSpecs() // B adopts the truthful Paused baseline
-        mB.update("q82a", specWith(7)): Unit
-        val pausedRouted = (fs.exists(reqDir) && fs.listStatus(reqDir)
-          .nonEmpty).toString
-        // HARD CRASH of the owner: no close(); age the registration
-        // one lease past its last heartbeat (q67's simulation)
-        fs.setTimes(new org.apache.hadoop.fs.Path(
-          s"$ckptRoot/instances/mgrA"),
-          System.currentTimeMillis() - lease - 60000L, -1)
-        val ownerExpired = (!mA.heartbeat()).toString
-        // the orphaned reassign-request is consumable now (paused: no
-        // query to restart; the persisted recipe already stands)
-        val orphanConsumed = mB.consumeReassignRequests().toString
-        PipelineManager.epochAppend(epochOf(3).coalesce(1), srcDir, 3, "q82src")
-        mB.requestResume("q82a")
-        val resumed = mB.queryOf("q82a").exists(_.isActive).toString
-        awaitCond("q82", "epoch 3 delivered by persisted recipe")(
-          delivered() == expAt(3))
-        mB.stop("q82a")
-        val r = s.read.parquet(destD)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        import s.implicits._
-        Seq(
-          ("upd", "local_param_restart", localRestart),
-          ("upd", "local_new_query_live", localNewLive),
-          ("upd", "cross_manager_routed", routed),
-          ("upd", "b_consume_noop_while_owner_live", bNoopWhileLive),
-          ("upd", "owner_consumed", ownerConsumed),
-          ("upd", "paused_update_routed", pausedRouted),
-          ("crash", "owner_lease_expired", ownerExpired),
-          ("res", "orphan_reassign_consumed", orphanConsumed),
-          ("res", "survivor_resumed_persisted_recipe", resumed),
-          ("rows", "n", r.getLong(0).toString),
-          ("rows", "n_distinct", r.getLong(1).toString))
-          .toDF("kind", "k", "v")
-      } finally {
-        pms.foreach(p => try p.close() catch { case _: Throwable => () })
-        deleteTree(ckptRoot, srcDir, new java.io.File(destD).getParent)
-      }
+    "q82_catalog_update_reassign" -> ((s, d) => gate(s, "q82") { g =>
+      val (ckptRoot, srcDir) = (g.dir("pm"), g.dir("src"))
+      val destD = g.dir("dest") + "/d"
+      val rec = g.records(ckptRoot)
+      val mods = Array(2L, 3L, 5L, 7L)
+      val epochOf = clickEpochs(s, d, 4L)
+      // expected cumulative delivery through epoch e — each epoch
+      // filtered by the recipe live when it was delivered
+      val expAt = mods.indices.map(e =>
+        epochOf(e).filter(pmod(col("user_id"), lit(mods(e))) === 0)
+          .count()).scanLeft(0L)(_ + _).tail
+      def delivered(): Long =
+        try s.read.parquet(destD).count()
+        catch { case _: Throwable => 0L }
+      val catalog = PipelineHooks(transforms = Map(
+        "userMod" -> (md => df =>
+          df.filter(pmod(col("user_id"),
+            lit(md("transform.mod").toLong)) === 0))))
+      def specWith(mod: Long) = PipelineSpec("q82a", "parquet", "parquet",
+        srcDir, destinationConnection = destD,
+        metadata = Map(
+          PipelineManager.TransformKey -> "userMod",
+          "transform.mod" -> mod.toString,
+          PipelineManager.TriggerKey -> "processingTime:50"))
+      def requestPending: Boolean = rec.list(rec.reassignDir, ".req").nonEmpty
+      val lease = 600000L // expiry below is SIMULATED, never slept for
+      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q82src")
+      val mA = g.track(new PipelineManager(s, ckptRoot, catalog,
+        instance = "mgrA", livenessLeaseMs = lease))
+      val spec0 = mA.create(specWith(2))
+      val q0 = mA.start("q82a", mA.resolveTransform(spec0).get,
+        PipelineManager.specTrigger(spec0))
+      g.await("epoch 0 delivered")(delivered() == expAt(0))
+      // ---- local owner update: params change restarts the query
+      // with the recipe re-materialized from the UPDATED spec ----
+      mA.update("q82a", specWith(3)): Unit
+      val localRestart = !q0.isActive
+      val localNewLive = mA.queryOf("q82a").exists(_.isActive)
+      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q82src")
+      g.await("epoch 1 delivered by updated recipe")(delivered() == expAt(1))
+      // ---- cross-manager update (q76 path, same predicate): B
+      // persists the new recipe and routes; A's tick enacts ----
+      val mB = g.track(new PipelineManager(s, ckptRoot, catalog,
+        instance = "mgrB", livenessLeaseMs = lease))
+      mB.update("q82a", specWith(5)): Unit
+      val routed = requestPending
+      val bNoopWhileLive = mB.consumeReassignRequests()
+      val ownerConsumed = mA.consumeReassignRequests()
+      PipelineManager.epochAppend(epochOf(2).coalesce(1), srcDir, 2, "q82src")
+      g.await("epoch 2 delivered by routed recipe")(delivered() == expAt(2))
+      // ---- the fuzz half: persist a NEW recipe while PAUSED, then
+      // CRASH the owner — the survivor's routed resume must enact
+      // the PERSISTED recipe (mod 7), never a remembered one ----
+      mA.pause("q82a") // query stopped, durable Paused, lock KEPT by A
+      mB.reconcileSpecs() // B adopts the truthful Paused baseline
+      mB.update("q82a", specWith(7)): Unit
+      val pausedRouted = requestPending
+      // HARD CRASH of the owner: no close(); age the registration
+      // one lease past its last heartbeat (q67's simulation)
+      rec.touch(rec.instance("mgrA"), System.currentTimeMillis() - lease - 60000L)
+      val ownerExpired = !mA.heartbeat()
+      // the orphaned reassign-request is consumable now (paused: no
+      // query to restart; the persisted recipe already stands)
+      val orphanConsumed = mB.consumeReassignRequests()
+      PipelineManager.epochAppend(epochOf(3).coalesce(1), srcDir, 3, "q82src")
+      mB.requestResume("q82a")
+      val resumed = mB.queryOf("q82a").exists(_.isActive)
+      g.await("epoch 3 delivered by persisted recipe")(delivered() == expAt(3))
+      mB.stop("q82a")
+      val (n, nd) = g.delivered(destD)
+      g.kv(
+        ("upd", "local_param_restart", localRestart),
+        ("upd", "local_new_query_live", localNewLive),
+        ("upd", "cross_manager_routed", routed),
+        ("upd", "b_consume_noop_while_owner_live", bNoopWhileLive),
+        ("upd", "owner_consumed", ownerConsumed),
+        ("upd", "paused_update_routed", pausedRouted),
+        ("crash", "owner_lease_expired", ownerExpired),
+        ("res", "orphan_reassign_consumed", orphanConsumed),
+        ("res", "survivor_resumed_persisted_recipe", resumed),
+        ("rows", "n", n),
+        ("rows", "n_distinct", nd))
     }),
 
     // Heartbeat-driven self-demotion — the RUNTIME half of the q67
@@ -3763,78 +2874,58 @@ object StreamingQueries {
     // Coordinator.onSessionExpired (Coordinator.java:705,783). The
     // expiry is SIMULATED by aging the registration mod-time; the
     // test waits only for the 50 ms timer tick, never for a lease.
-    "q69_heartbeat_demotion" -> ((s, d) => {
-      val ckptRoot = Files.createTempDirectory("graft-q69-pm-").toString
-      val srcDir = Files.createTempDirectory("graft-q69-src-").toString
-      val destDir = Files.createTempDirectory("graft-q69-dest-").toString + "/d"
-      var pms = List.empty[PipelineManager]
-      try {
-        val clicks = Tables.t(s, d, "events")
-          .filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"))
-        def epochOf(e: Long): DataFrame =
-          clicks.filter(pmod(col("event_id"), lit(2L)) === e)
-        PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q69src")
-        val lease = 600000L // expiry below is SIMULATED, never slept for
-        val mA = new PipelineManager(s, ckptRoot, instance = "mgrA",
-          livenessLeaseMs = lease, autoHeartbeat = true,
-          heartbeatIntervalMs = 50L)
-        pms ::= mA
-        mA.create(PipelineSpec("q69p", "parquet", "parquet", srcDir,
-          destinationConnection = destDir))
-        mA.start("q69p", identity).awaitTermination()
-        val liveBeforeExpiry = (!mA.isDemoted).toString
-        // hard-expire the lease; the manager's own timer must react
-        val fs = new org.apache.hadoop.fs.Path(ckptRoot).getFileSystem(
-          s.sparkContext.hadoopConfiguration)
-        // Re-age every iteration: a heartbeat tick's check-then-touch
-        // is not atomic, so a single aging write can land between a
-        // tick's freshness read and its setTimes refresh and be
-        // overwritten — re-applying the aged mod-time until the timer
-        // reacts converges regardless of that interleaving.
-        val regPath = new org.apache.hadoop.fs.Path(s"$ckptRoot/instances/mgrA")
-        // 90 s: the timer reacts in well under a second unloaded, but
-        // the driver's bench window runs gates under load and the
-        // aging write must land inside a tick's check-then-touch gap
-        val deadline = System.currentTimeMillis() + 90000L
-        while (!mA.isDemoted && System.currentTimeMillis() < deadline) {
-          fs.setTimes(regPath,
-            System.currentTimeMillis() - lease - 60000L, -1)
-          Thread.sleep(20L)
-        }
-        val selfDemoted = mA.isDemoted.toString
-        val startRefused =
-          try { mA.start("q69p", identity); "NONE" }
-          catch { case _: IllegalStateException => "refused" }
-        // the lock is NOT released — it belongs to the reclaim path
-        val lockKept = fs.exists(
-          new org.apache.hadoop.fs.Path(s"$ckptRoot/locks/q69p.lock")).toString
-        // failover: a live peer reclaims and delivers epoch 1 exactly
-        // once from the shared checkpoint
-        PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q69src")
-        val mB = new PipelineManager(s, ckptRoot, instance = "mgrB",
-          livenessLeaseMs = lease)
-        pms ::= mB
-        val tookOver =
-          try { mB.start("q69p", identity).awaitTermination(); true }
-          catch { case _: PipelineLockedException => false }
-        val r = s.read.parquet(destDir)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        import s.implicits._
-        Seq(
-          ("lease", "live_before_expiry", liveBeforeExpiry),
-          ("lease", "self_demoted_by_timer", selfDemoted),
-          ("lease", "demoted_start", startRefused),
-          ("lease", "lock_kept_for_reclaimer", lockKept),
-          ("lease", "takeover", tookOver.toString),
-          ("rows", "n", r.getLong(0).toString),
-          ("rows", "n_distinct", r.getLong(1).toString))
-          .toDF("kind", "k", "v")
-      } finally {
-        pms.foreach(p => try p.close() catch { case _: Throwable => () })
-        deleteTree(ckptRoot, srcDir, new java.io.File(destDir).getParent)
+    "q69_heartbeat_demotion" -> ((s, d) => gate(s, "q69") { g =>
+      val (ckptRoot, srcDir) = (g.dir("pm"), g.dir("src"))
+      val destDir = g.dir("dest") + "/d"
+      val rec = g.records(ckptRoot)
+      val epochOf = clickEpochs(s, d, 2L)
+      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q69src")
+      val lease = 600000L // expiry below is SIMULATED, never slept for
+      val mA = g.track(new PipelineManager(s, ckptRoot, instance = "mgrA",
+        livenessLeaseMs = lease, autoHeartbeat = true,
+        heartbeatIntervalMs = 50L))
+      mA.create(PipelineSpec("q69p", "parquet", "parquet", srcDir,
+        destinationConnection = destDir))
+      mA.start("q69p", identity).awaitTermination()
+      val liveBeforeExpiry = !mA.isDemoted
+      // hard-expire the lease; the manager's own timer must react.
+      // Re-age every iteration: a heartbeat tick's check-then-touch
+      // is not atomic, so a single aging write can land between a
+      // tick's freshness read and its setTimes refresh and be
+      // overwritten — re-applying the aged mod-time until the timer
+      // reacts converges regardless of that interleaving.
+      // 90 s: the timer reacts in well under a second unloaded, but
+      // the driver's bench window runs gates under load and the
+      // aging write must land inside a tick's check-then-touch gap
+      val deadline = System.currentTimeMillis() + 90000L
+      while (!mA.isDemoted && System.currentTimeMillis() < deadline) {
+        rec.touch(rec.instance("mgrA"),
+          System.currentTimeMillis() - lease - 60000L)
+        Thread.sleep(20L)
       }
+      val selfDemoted = mA.isDemoted
+      val startRefused =
+        try { mA.start("q69p", identity); "NONE" }
+        catch { case _: IllegalStateException => "refused" }
+      // the lock is NOT released — it belongs to the reclaim path
+      val lockKept = g.exists(rec.lock("q69p"))
+      // failover: a live peer reclaims and delivers epoch 1 exactly
+      // once from the shared checkpoint
+      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q69src")
+      val mB = g.track(new PipelineManager(s, ckptRoot, instance = "mgrB",
+        livenessLeaseMs = lease))
+      val tookOver =
+        try { mB.start("q69p", identity).awaitTermination(); true }
+        catch { case _: PipelineLockedException => false }
+      val (n, nd) = g.delivered(destDir)
+      g.kv(
+        ("lease", "live_before_expiry", liveBeforeExpiry),
+        ("lease", "self_demoted_by_timer", selfDemoted),
+        ("lease", "demoted_start", startRefused),
+        ("lease", "lock_kept_for_reclaimer", lockKept),
+        ("lease", "takeover", tookOver),
+        ("rows", "n", n),
+        ("rows", "n_distinct", nd))
     }),
 
     // Planned task handover between two LIVE managers — the third leg
@@ -3850,58 +2941,39 @@ object StreamingQueries {
     // runs, A's restart attempt is fenced by B's lock. Closed-form
     // oracle: lock/handover facts are literals; exactly-once across
     // the handover means the destination equals the click corpus.
-    "q70_graceful_handover" -> ((s, d) => {
-      val ckptRoot = Files.createTempDirectory("graft-q70-pm-").toString
-      val srcDir = Files.createTempDirectory("graft-q70-src-").toString
-      val destDir = Files.createTempDirectory("graft-q70-dest-").toString + "/d"
-      var pms = List.empty[PipelineManager]
-      try {
-        val clicks = Tables.t(s, d, "events")
-          .filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"))
-        def epochOf(e: Long): DataFrame =
-          clicks.filter(pmod(col("event_id"), lit(2L)) === e)
-        PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q70src")
-        val fs = new org.apache.hadoop.fs.Path(ckptRoot).getFileSystem(
-          s.sparkContext.hadoopConfiguration)
-        val lockPath = new org.apache.hadoop.fs.Path(s"$ckptRoot/locks/q70p.lock")
-        val mA = new PipelineManager(s, ckptRoot, instance = "mgrA")
-        pms ::= mA
-        mA.create(PipelineSpec("q70p", "parquet", "parquet", srcDir,
-          destinationConnection = destDir))
-        mA.start("q70p", identity).awaitTermination()
-        val heldWhileRunning = fs.exists(lockPath)
-        // planned drain: stop releases the lock — the task returns to
-        // the pool for any live peer (contrast q67, where only lease
-        // EXPIRY frees a crashed owner's lock)
-        mA.stop("q70p")
-        val releasedAfterStop = !fs.exists(lockPath)
-        val mB = new PipelineManager(s, ckptRoot, instance = "mgrB")
-        pms ::= mB
-        PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q70src")
-        val tookOver =
-          try { mB.start("q70p", identity).awaitTermination(); true }
-          catch { case _: PipelineLockedException => false }
-        // the old owner is fenced while the new owner holds the task
-        val oldOwnerFencedBy =
-          try { mA.start("q70p", identity); "NONE" }
-          catch { case e: PipelineLockedException => e.lockedBy }
-        val r = s.read.parquet(destDir)
-          .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("nd"))
-          .head()
-        import s.implicits._
-        Seq(
-          ("lock", "held_while_running", heldWhileRunning.toString),
-          ("lock", "released_after_stop", releasedAfterStop.toString),
-          ("lock", "takeover_after_release", tookOver.toString),
-          ("lock", "old_owner_fenced_by", oldOwnerFencedBy),
-          ("rows", "n", r.getLong(0).toString),
-          ("rows", "n_distinct", r.getLong(1).toString))
-          .toDF("kind", "k", "v")
-      } finally {
-        pms.foreach(p => try p.close() catch { case _: Throwable => () })
-        deleteTree(ckptRoot, srcDir, new java.io.File(destDir).getParent)
-      }
+    "q70_graceful_handover" -> ((s, d) => gate(s, "q70") { g =>
+      val (ckptRoot, srcDir) = (g.dir("pm"), g.dir("src"))
+      val destDir = g.dir("dest") + "/d"
+      val lockPath = g.records(ckptRoot).lock("q70p")
+      val epochOf = clickEpochs(s, d, 2L)
+      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q70src")
+      val mA = g.track(new PipelineManager(s, ckptRoot, instance = "mgrA"))
+      mA.create(PipelineSpec("q70p", "parquet", "parquet", srcDir,
+        destinationConnection = destDir))
+      mA.start("q70p", identity).awaitTermination()
+      val heldWhileRunning = g.exists(lockPath)
+      // planned drain: stop releases the lock — the task returns to
+      // the pool for any live peer (contrast q67, where only lease
+      // EXPIRY frees a crashed owner's lock)
+      mA.stop("q70p")
+      val releasedAfterStop = !g.exists(lockPath)
+      val mB = g.track(new PipelineManager(s, ckptRoot, instance = "mgrB"))
+      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q70src")
+      val tookOver =
+        try { mB.start("q70p", identity).awaitTermination(); true }
+        catch { case _: PipelineLockedException => false }
+      // the old owner is fenced while the new owner holds the task
+      val oldOwnerFencedBy =
+        try { mA.start("q70p", identity); "NONE" }
+        catch { case e: PipelineLockedException => e.lockedBy }
+      val (n, nd) = g.delivered(destDir)
+      g.kv(
+        ("lock", "held_while_running", heldWhileRunning),
+        ("lock", "released_after_stop", releasedAfterStop),
+        ("lock", "takeover_after_release", tookOver),
+        ("lock", "old_owner_fenced_by", oldOwnerFencedBy),
+        ("rows", "n", n),
+        ("rows", "n_distinct", nd))
     }),
 
     // §2.10: the full SPI lifecycle through PipelineManager — every
@@ -3914,9 +2986,8 @@ object StreamingQueries {
     // → delete emits the Ready/Paused/Ready/Deleting sequence
     // (postDatastreamStateChangeAction). The oracle is the closed
     // form of all of it.
-    "q62_spi_lifecycle" -> ((s, d) => {
+    "q62_spi_lifecycle" -> ((s, d) => gate(s, "q62") { g =>
       import scala.jdk.CollectionConverters._
-      val ckptRoot = Files.createTempDirectory("graft-q62-pm-").toString
       val transitions =
         new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
       val delivered = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -3926,7 +2997,7 @@ object StreamingQueries {
         transports = Map("list" -> (_ => (batch, _) => {
           delivered.addAndGet(batch.count()); ()
         })))
-      val pm = new PipelineManager(s, ckptRoot, hooks)
+      val pm = g.track(new PipelineManager(s, g.dir("pm"), hooks))
       val authRejected =
         try { pm.create(PipelineSpec("q62x", "synthetic", "list", "100"),
           owner = "mallory"); false }
@@ -3949,14 +3020,11 @@ object StreamingQueries {
       pm.close()
       val stateRows = transitions.asScala.toSeq.filter(_._1 == "q62a")
         .zipWithIndex.map { case ((_, st), i) => ("state", s"q62a:$i", st) }
-      val rows = stateRows ++ Seq(
-        ("rows", "delivered", delivered.get().toString),
-        ("validate", "unauthorized_rejected", authRejected.toString),
+      g.kv(stateRows ++ Seq(
+        ("rows", "delivered", delivered.get()),
+        ("validate", "unauthorized_rejected", authRejected),
         ("dedup", "q62b_prefix", bPrefix),
-        ("dedup", "group_size", groupSize.toString))
-      deleteTree(ckptRoot)
-      import s.implicits._
-      rows.toDF("kind", "k", "v")
+        ("dedup", "group_size", groupSize)): _*)
     }),
 
     // Stream-static enrichment: every event joined to a broadcast
@@ -3965,7 +3033,7 @@ object StreamingQueries {
     "s07_stream_static_enrich" -> ((s, d) => {
       val dim = Tables.t(s, d, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
-      runToTable(
+      runToTable("s07",
         eventsStream(s, d)
           .select(col("event_id"), col("user_id"))
           .join(broadcast(dim), col("user_id") === col("c_custkey"), "left")

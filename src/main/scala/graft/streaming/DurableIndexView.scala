@@ -15,8 +15,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * The bound this class exists for: a plain per-epoch
  * `view = view.union(read(newFiles))` grows the logical plan by one
  * relation per epoch, and analysis/planning cost grows with it — the
- * round-12 StreamScaleProbe measured ~22% late-over-early per-epoch
- * drift at 40 epochs from exactly this. Every `refreshEvery`
+ * round-12 StreamScaleProbe (deleted since; at commit 4d47ea1)
+ * measured ~22% late-over-early per-epoch drift at 40 epochs from
+ * exactly this. Every `refreshEvery`
  * extensions the view therefore swaps back to a single fresh read of
  * the compacted dir (one relation, flat listing), so the union plan
  * never exceeds `refreshEvery` relations no matter how many epochs a

@@ -34,7 +34,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
  * (checkpoints, holdback tables, sketches, default destinations) are
  * located here too but written by their own protocols.
  */
-private[streaming] final class DurableRecords(fs: FileSystem, root: String) {
+private[graft] final class DurableRecords(fs: FileSystem, root: String) {
   import DurableRecords._
 
   private def ns(name: String): String = PipelineManager.namespaceOf(name)
@@ -77,7 +77,9 @@ private[streaming] final class DurableRecords(fs: FileSystem, root: String) {
     * are absent, a replace may have renamed `.next` into place between
     * the two opens, so the record is read once more before it counts
     * as absent (`.next` only ever leaves by that rename or by
-    * [[delete]], which removes it before the record). */
+    * [[delete]], which removes it before the record). A torn record
+    * with nothing staged is an abandoned first write
+    * ([[abandonedFirstWrite]]). */
   def read[A](p: Path)(parse: Array[Byte] => Option[A]): Read[A] =
     readOne(p, parse) match {
       case main @ (Found(_) | Unknown(false)) => main
@@ -86,9 +88,35 @@ private[streaming] final class DurableRecords(fs: FileSystem, root: String) {
         case (_, staged @ Found(_)) => staged
         case (Absent, Absent) => readOne(p, parse)
         case (Absent, staged) => staged
+        case (Unknown(true), Absent) => abandonedFirstWrite(p, parse)
         case _ => main
       }
     }
+
+  /** A torn record of a [[replace]]d kind with nothing staged beside
+    * it can only be a first write — replace's exclusive create — that
+    * never completed, so no complete record ever existed. Once older
+    * than [[PipelineManager.AcquireGraceMs]] (the create-to-write grace
+    * the request consumers and lock acquirers apply) it is no longer
+    * in flight: it is deleted and reads as absent, so one crashed
+    * first write cannot keep every snapshot of the root unknowable.
+    * Younger, it stays unknowable. Judged again under the path's
+    * replace stripe, so a replace in this JVM that completed the
+    * record meanwhile is read, never deleted; a writer in another
+    * process stalled past the grace is the hazard the request
+    * consumers already accept. */
+  private def abandonedFirstWrite[A](p: Path,
+      parse: Array[Byte] => Option[A]): Read[A] = stripe(p).synchronized {
+    readOne(p, parse) match {
+      case torn @ Unknown(true) =>
+        val stale =
+          try !fs.exists(nextOf(p)) && System.currentTimeMillis() -
+            fs.getFileStatus(p).getModificationTime > PipelineManager.AcquireGraceMs
+          catch { case _: IOException => false }
+        if (stale) { delete(p); Absent } else torn
+      case other => other
+    }
+  }
 
   private def readOne[A](p: Path, parse: Array[Byte] => Option[A]): Read[A] =
     try {
@@ -157,7 +185,7 @@ private[streaming] final class DurableRecords(fs: FileSystem, root: String) {
     require(replaced(p), s"$p is not a record kind replace writes")
     def stamp(q: Path): Unit =
       if (mtime >= 0L) try fs.setTimes(q, mtime, -1) catch { case NonFatal(_) => () }
-    replaceStripes(math.floorMod(p.toString.hashCode, replaceStripes.length)).synchronized {
+    stripe(p).synchronized {
       if (createExclusive(p, bytes)) stamp(p)
       else {
         val next = nextOf(p)
@@ -170,6 +198,9 @@ private[streaming] final class DurableRecords(fs: FileSystem, root: String) {
       }
     }
   }
+
+  private def stripe(p: Path): Object =
+    replaceStripes(math.floorMod(p.toString.hashCode, replaceStripes.length))
 
   /** Create the record at `p` only if nothing is there: false when it
     * exists (both spellings of the collision — any other create

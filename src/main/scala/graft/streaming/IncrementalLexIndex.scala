@@ -269,9 +269,7 @@ final class IncrementalLexIndex(spark: SparkSession, dir: String,
           .filter(col("tb").isin(buckets: _*) && col("term").isin(terms: _*))
         val dfT = post.groupBy(col("term"))
           .agg(count(lit(1)).cast("double").as("df"))
-        val idf = log((lit(nd) - col("df") + 0.5) / (col("df") + 0.5) + 1)
-        val w: Column = idf * col("tf") * (k1 + 1) /
-          (col("tf") + lit(k1) * (lit(1) - b + lit(b) * col("dl") / lit(avgdl)))
+        val w = Text.bm25Weight(lit(nd), lit(avgdl), k1, b)
         val scored = post.join(broadcast(dfT), "term")
           .groupBy(col("doc_id")).agg(round(sum(w), 6).as("score"))
         val top = scored.orderBy(col("score").desc, col("doc_id")).limit(k)
@@ -313,9 +311,7 @@ final class IncrementalLexIndex(spark: SparkSession, dir: String,
           .toDF("query_id", "term")
         val df = count(lit(1)).over(Window.partitionBy(col("term")))
           .cast("double").as("df")
-        val idf = log((lit(nd) - col("df") + 0.5) / (col("df") + 0.5) + 1)
-        val w: Column = idf * col("tf") * (k1 + 1) /
-          (col("tf") + lit(k1) * (lit(1) - b + lit(b) * col("dl") / lit(avgdl)))
+        val w = Text.bm25Weight(lit(nd), lit(avgdl), k1, b)
         val scored = post.withColumn("df", df)
           .join(broadcast(qt), "term")
           .groupBy(col("query_id"), col("doc_id"))

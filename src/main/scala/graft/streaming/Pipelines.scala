@@ -128,6 +128,12 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
   val instanceId: String =
     if (instance.nonEmpty) instance
     else "inst-" + java.util.UUID.randomUUID().toString.take(8)
+  // The id names this manager's registration file under the root, so
+  // it must be one path component: `a/b` would nest the registration
+  // and `..` would leave the root. Rejected, not encoded, so every
+  // registration path stays the one managers sharing the root expect.
+  require(!instanceId.contains('/') && instanceId != "." && instanceId != "..",
+    s"instance id '$instanceId' must be one path component (no '/', not '.' or '..')")
 
   private val specs = TrieMap.empty[String, PipelineSpec]
   private val queries = new ConcurrentHashMap[String, StreamingQuery]()

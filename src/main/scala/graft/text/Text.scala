@@ -566,6 +566,16 @@ object Text {
           .as("chunk_text"))
   }
 
+  /** THE BM25 term weight of one (doc, term) posting row carrying `tf`,
+    * `df` and `dl`, for a corpus of `nd` docs of mean length `avgdl`:
+    * idf * tf * (k1+1) / (tf + k1*(1 - b + b*dl/avgdl)), Lucene's idf
+    * ln((nd - df + 0.5)/(df + 0.5) + 1). Literal shapes are kept
+    * left-associative to match the oracle SQL bit for bit; callers
+    * pass the corpus stats as columns or literals. */
+  def bm25Weight(nd: Column, avgdl: Column, k1: Double, b: Double): Column =
+    log((nd - col("df") + 0.5) / (col("df") + 0.5) + 1) * col("tf") * (k1 + 1) /
+      (col("tf") + lit(k1) * (lit(1) - b + lit(b) * col("dl") / avgdl))
+
   /**
    * Exact BM25 top-k lexical retrieval for one literal query (Lucene's
    * idf form: ln((N - df + 0.5)/(df + 0.5) + 1), k1/b the classic
@@ -603,12 +613,8 @@ object Text {
       .agg(count(lit(1)).cast("double").as("tf"))
     val df = postings.groupBy(col("term"))
       .agg(count(lit(1)).cast("double").as("df"))
-    // idf * tf * (k1+1) / (tf + k1*(1 - b + b*dl/avgdl)), summed over
-    // the query terms present in the doc — literal shapes kept
-    // left-associative to match the oracle SQL bit for bit.
-    val idf = log((col("nd") - col("df") + 0.5) / (col("df") + 0.5) + 1)
-    val w = idf * col("tf") * (k1 + 1) /
-      (col("tf") + lit(k1) * (lit(1) - b + lit(b) * col("dl") / col("avgdl")))
+    // summed over the query terms present in the doc
+    val w = bm25Weight(col("nd"), col("avgdl"), k1, b)
     val scored = postings
       .join(broadcast(df), "term")
       .crossJoin(broadcast(stats))
@@ -685,9 +691,7 @@ object Text {
     val stats = spark.read.parquet(s"$dir/stats")
     val df = postings.groupBy(col("term"))
       .agg(count(lit(1)).cast("double").as("df"))
-    val idf = log((col("nd") - col("df") + 0.5) / (col("df") + 0.5) + 1)
-    val w = idf * col("tf") * (k1 + 1) /
-      (col("tf") + lit(k1) * (lit(1) - b + lit(b) * col("dl") / col("avgdl")))
+    val w = bm25Weight(col("nd"), col("avgdl"), k1, b)
     val scored = postings
       .join(dl, "doc_id")
       .join(broadcast(df), "term")
@@ -736,9 +740,7 @@ object Text {
       .toDF("query_id", "term")
     val df = count(lit(1)).over(Window.partitionBy(col("term")))
       .cast("double").as("df")
-    val idf = log((col("nd") - col("df") + 0.5) / (col("df") + 0.5) + 1)
-    val w = idf * col("tf") * (k1 + 1) /
-      (col("tf") + lit(k1) * (lit(1) - b + lit(b) * col("dl") / col("avgdl")))
+    val w = bm25Weight(col("nd"), col("avgdl"), k1, b)
     val scored = postings.withColumn("df", df)
       .join(dl, "doc_id")
       .join(broadcast(qt), "term")

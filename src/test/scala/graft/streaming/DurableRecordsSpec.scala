@@ -128,6 +128,35 @@ class DurableRecordsSpec extends AnyFunSuite {
     assert(SpecReadHookFs.fired.get)
   }
 
+  test("an abandoned torn first write reads as absent past the grace, never a record completed meanwhile") {
+    val root = Files.createTempDirectory("graft-records-torn-").toString
+    val fs = new SpecReadHookFs
+    fs.initialize(new java.net.URI("file:///"), new Configuration())
+    val records = new DurableRecords(fs, root)
+    val p = records.reassign("t")
+    def tornFirstWrite(): Unit = {
+      put(fs, p, frame(Seq("t", "i", "old")).take(4))
+      fs.setTimes(p, System.currentTimeMillis() - PipelineManager.AcquireGraceMs - 60000L, -1)
+    }
+    // a young torn record may still be mid-write: unknowable, kept
+    put(fs, p, frame(Seq("t", "i", "old")).take(4))
+    assert(records.fields(p) == Unknown(torn = true))
+    assert(fs.exists(p))
+    // aged, but a replace completes the record right after the reader
+    // saw the torn bytes: the completed record is read, not deleted
+    tornFirstWrite()
+    SpecReadHookFs.arm("t.req", () => records.replace(p, frame(Seq("t", "i", "new"))))
+    assert(records.fields(p) == Found(Seq("t", "i", "new")))
+    assert(SpecReadHookFs.fired.get)
+    assert(records.fields(p) == Found(Seq("t", "i", "new")))
+    // aged with no writer: no complete record ever existed — absent,
+    // and removed so no later snapshot of the root reads it as unknown
+    tornFirstWrite()
+    assert(records.fields(p) == Absent)
+    assert(!fs.exists(p))
+    assert(records.list(records.reassignDir, ".req").isEmpty)
+  }
+
   test("only the kinds replace writes have a staged .next") {
     val (fs, records) = store()
     val l = records.lock("k")

@@ -49,8 +49,9 @@ class IncrementalLexIndexSpec extends SparkTestBase {
     // tierFanIn fills a level), never the accumulated raw epochs'
     // worth. The bound in epoch count is tierFanIn·levels runs, not
     // one — that is the price of O(N·levels) instead of O(N²) total
-    // rewrite bytes (StoreFuzzSpec and StreamScaleProbe carry the
-    // long-horizon flatness/write-cost evidence).
+    // rewrite bytes (StoreFuzzSpec, and the deleted StreamScaleProbe
+    // at commit 4d47ea1, carry the long-horizon flatness/write-cost
+    // evidence).
     for ((e, liveRuns) <- Seq(1 -> 1, 3 -> 2, 5 -> 3))
       assert(fileCounts(e) <= Text.LexIndexBuckets * liveRuns,
         s"store not at its compacted floor after epoch $e: $fileCounts")

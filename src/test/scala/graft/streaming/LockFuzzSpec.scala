@@ -162,7 +162,7 @@ class LockFuzzSpec extends SparkTestBase {
       if (phase < Phases && rnd.nextInt(3) != 0) {
         val victimIdx = rnd.nextInt(live.size)
         val victim = live(victimIdx)
-        fs.setTimes(new Path(s"$root/instances/${victim.instanceId}"),
+        fs.setTimes(new DurableRecords(fs, root).instance(victim.instanceId),
           System.currentTimeMillis() - Lease - 60000L, -1)
         abandoned.asScala.toList.foreach { case (pi, owner) =>
           if (owner == victim.instanceId) {

@@ -967,7 +967,7 @@ class PipelineManagerSpec extends SparkTestBase {
     // registration past the lease instead of sleeping the test
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    fs.setTimes(new org.apache.hadoop.fs.Path(s"$root/instances/A"),
+    fs.setTimes(new DurableRecords(fs, root).instance("A"),
       System.currentTimeMillis() - lease - 1000L, -1)
     // an expired session cannot heartbeat itself back to life — A
     // learns it must self-demote, and its registration stays stale
@@ -1837,7 +1837,7 @@ class PipelineManagerSpec extends SparkTestBase {
     pmC.demote()
     val fs2 = new org.apache.hadoop.fs.Path(root2).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    fs2.setTimes(new org.apache.hadoop.fs.Path(s"$root2/instances/C"),
+    fs2.setTimes(new DurableRecords(fs2, root2).instance("C"),
       System.currentTimeMillis() - lease - 1000L, -1)
     assert(pmD.consumeLifecycleRequests() == 1,
       "a dead owner's orphaned verb must enact on a surviving manager")
@@ -1939,7 +1939,7 @@ class PipelineManagerSpec extends SparkTestBase {
     pmA.demote()
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    fs.setTimes(new org.apache.hadoop.fs.Path(s"$root/instances/A"),
+    fs.setTimes(new DurableRecords(fs, root).instance("A"),
       System.currentTimeMillis() - lease - 1000L, -1)
     // both survivors' ticks race the orphan
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -1989,7 +1989,7 @@ class PipelineManagerSpec extends SparkTestBase {
     // re-aged every iteration: a tick's non-atomic check-then-touch
     // can overwrite a single aging write (read fresh, then refresh
     // after the test's setTimes landed) — re-applying converges
-    val regA = new org.apache.hadoop.fs.Path(s"$root/instances/A")
+    val regA = new DurableRecords(fs, root).instance("A")
     // 90 s: the 50 ms timer normally reacts in well under a second,
     // but this suite runs beside gate batteries on a loaded box and
     // the aging write must land in a tick's check-then-touch gap —
@@ -2034,6 +2034,11 @@ class PipelineManagerSpec extends SparkTestBase {
       new PipelineManager(spark, root, instance = "dup")
     }
     pm1.close()
+    // an id is one path component of the registration: `a/b` would
+    // nest it and `..` would leave the root
+    Seq("a/b", "..", ".").foreach { id =>
+      intercept[IllegalArgumentException](new PipelineManager(spark, root, instance = id))
+    }
     // lease mode: a crashed host restarting under its static name
     // BEFORE the lease ran out is rejected the same way...
     val lease = 600000L
@@ -2050,7 +2055,7 @@ class PipelineManagerSpec extends SparkTestBase {
     // the new incarnation starts with no inherited ownership
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    fs.setTimes(new org.apache.hadoop.fs.Path(s"$root/instances/host1"),
+    fs.setTimes(new DurableRecords(fs, root).instance("host1"),
       System.currentTimeMillis() - lease - 60000L, -1)
     val reborn = new PipelineManager(spark, root, instance = "host1",
       livenessLeaseMs = lease)
@@ -2234,7 +2239,7 @@ class PipelineManagerSpec extends SparkTestBase {
       mB.requestResume("gca", force = true)
       assert(mB.queryOf("gca") == None && mB.consumeLifecycleRequests() == 0)
       // HARD CRASH: age A's registration one lease past
-      fs.setTimes(new org.apache.hadoop.fs.Path(s"$root/instances/gcatA"),
+      fs.setTimes(new DurableRecords(fs, root).instance("gcatA"),
         System.currentTimeMillis() - lease - 60000L, -1)
       assert(!mA.heartbeat())
       PipelineManager.epochAppend(
@@ -2368,7 +2373,7 @@ class PipelineManagerSpec extends SparkTestBase {
         livenessLeaseMs = lease)
       mBOpt = Some(mB)
       mB.requestResume("gda", force = true) // routed: A holds the locks
-      fs.setTimes(new org.apache.hadoop.fs.Path(s"$root/instances/gdivA"),
+      fs.setTimes(new DurableRecords(fs, root).instance("gdivA"),
         System.currentTimeMillis() - lease - 60000L, -1)
       assert(!mA.heartbeat())
       // the survivor consumes the orphaned request but must DROP it
@@ -2449,7 +2454,7 @@ class PipelineManagerSpec extends SparkTestBase {
       // length, so the stamp's mtime component alone must carry the
       // cache invalidation
       fs.setTimes(lockP, System.currentTimeMillis() - 50000L, -1)
-      fs.setTimes(new org.apache.hadoop.fs.Path(s"$root/instances/lsA"),
+      fs.setTimes(new DurableRecords(fs, root).instance("lsA"),
         System.currentTimeMillis() - lease - 60000L, -1)
       obs.reconcileSpecs()
       obs.reconcileSpecs()
@@ -2458,7 +2463,7 @@ class PipelineManagerSpec extends SparkTestBase {
         "the snapshot cache must follow the handover to the live owner")
       // and when the NEW owner also dies, the collapse fires from the
       // refreshed cache (two-tick grace)
-      fs.setTimes(new org.apache.hadoop.fs.Path(s"$root/instances/lsB"),
+      fs.setTimes(new DurableRecords(fs, root).instance("lsB"),
         System.currentTimeMillis() - lease - 60000L, -1)
       obs.reconcileSpecs()
       obs.reconcileSpecs()
