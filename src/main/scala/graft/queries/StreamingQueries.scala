@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.model.{PipelineSpec, PipelineStatus}
 import graft.operators.Translate
-import graft.streaming.{CdcMerge, DurableRecords, PipelineHooks, PipelineLockedException, PipelineManager, TwsCounterProcessor, TwsSessionProcessor}
+import graft.streaming.{CdcMerge, DurableRecords, EpochCommit, PipelineHooks, PipelineLockedException, PipelineManager, TwsCounterProcessor, TwsSessionProcessor}
 
 /**
  * Structured-Streaming forms of the data-plane operators, run
@@ -88,12 +88,12 @@ object StreamingQueries {
 
     /** The epoch body that commits each micro-batch to `dir`. */
     def appendTo(dir: String): (DataFrame, Long) => Unit =
-      (batch, epoch) => PipelineManager.epochAppend(batch, dir, epoch, tag): Unit
+      (batch, epoch) => EpochCommit.epochAppend(batch, dir, epoch, tag): Unit
 
     /** Commit one epoch's served rows to `dir`, tagged with the epoch
       * — the one place an epoch becomes a plan literal. */
     def serveTo(dir: String, epoch: Long, served: DataFrame): Unit =
-      PipelineManager.epochAppend(
+      EpochCommit.epochAppend(
         served.withColumn("epoch", lit(epoch)).coalesce(1), dir, epoch, tag): Unit
 
     /** A bucketed file source in a fresh `src` dir. */
@@ -108,7 +108,7 @@ object StreamingQueries {
     def exists(p: Path): Boolean = p.getFileSystem(conf).exists(p)
 
     /** Committed epoch files at `dest` (epochAppend's rename contract). */
-    def committed(dest: String): Int = PipelineManager.committedFiles(dest, conf).size
+    def committed(dest: String): Int = EpochCommit.committedFiles(dest, conf).size
 
     def await(what: String)(cond: => Boolean): Unit = awaitCond(tag, what)(cond)
 
@@ -555,7 +555,7 @@ object StreamingQueries {
           // index as of this epoch, committed one-file-per-epoch;
           // PipelineManager.dedupAdmissionEpoch owns the loop —
           // this gate's index layer is the flat dir + bounded view)
-          idx.extend(PipelineManager.epochAppend(
+          idx.extend(EpochCommit.epochAppend(
             PipelineManager.dedupAdmissionEpoch(
               idx.frame, batch, outDir, epoch, "s15out"),
             idxDir, epoch, "s15idx"))
@@ -846,7 +846,7 @@ object StreamingQueries {
           .option("payloadSize", "64")
           .option("numPartitions", "4")
           .load(), ckpt)((batch, epoch) =>
-        PipelineManager.epochAppend(batch.coalesce(1), outDir, epoch, "s17"))
+        EpochCommit.epochAppend(batch.coalesce(1), outDir, epoch, "s17"))
       drain(600)
       drain(1000)
       s.read.parquet(outDir).localCheckpoint()
@@ -868,7 +868,7 @@ object StreamingQueries {
           .option("batchPerPartition", "40")
           .option("payloadSize", "16")
           .option("pauseFile", pauseFile.toString)
-          .load(), ckpt)((batch, epoch) => PipelineManager.epochAppend(
+          .load(), ckpt)((batch, epoch) => EpochCommit.epochAppend(
         batch.withColumn("run", lit(run)).coalesce(1), outDir, epoch, "s18"))
       Files.writeString(pauseFile, "1")
       drain(1)
@@ -895,7 +895,7 @@ object StreamingQueries {
           .option("numPartitions", "4")
           .option("batchPerPartition", "40")
           .option("payloadSize", "16")
-          .load(), ckpt)((batch, epoch) => PipelineManager.epochAppend(
+          .load(), ckpt)((batch, epoch) => EpochCommit.epochAppend(
         batch.withColumn("run", lit(run)).coalesce(1), outDir, epoch, "s19"))
       Files.writeString(pauseFile, "1")
       drain(1)
@@ -1010,7 +1010,7 @@ object StreamingQueries {
           val scored = postings.join(bdl, "doc_id")
             .join(broadcast(dfTable), "term")
             .groupBy(col("doc_id")).agg(round(sum(wExpr), 6).as("score"))
-          PipelineManager.epochAppend(scored.coalesce(1), outDir, epoch, "s21")
+          EpochCommit.epochAppend(scored.coalesce(1), outDir, epoch, "s21")
         })
       s.read.parquet(outDir).localCheckpoint()
     }),
@@ -1052,7 +1052,7 @@ object StreamingQueries {
             .groupBy(col("doc_id"), col("term"))
             .agg(count(lit(1)).cast("double").as("tf"))
             .join(bdl, "doc_id")
-          PipelineManager.epochAppend(bpost.coalesce(1),
+          EpochCommit.epochAppend(bpost.coalesce(1),
             s"$idxDir/postings", epoch, "s23p")
           // running corpus stats: committed row for THIS epoch wins
           // (replay), else previous epoch's cumulative + this batch
@@ -1073,7 +1073,7 @@ object StreamingQueries {
               (prior.map(_.getDouble(1)).getOrElse(0.0) + b.getDouble(0),
                 prior.map(_.getDouble(2)).getOrElse(0.0) + b.getDouble(1))
           }
-          PipelineManager.epochAppend(
+          EpochCommit.epochAppend(
             { import s.implicits._
               Seq((epoch, nd, sumDl)).toDF("epoch", "nd", "sum_dl") }
               .coalesce(1),
@@ -1156,7 +1156,7 @@ object StreamingQueries {
           // lexical store: the batch's full-vocab postings
           ilx.appendEpoch(batch, epoch)
           // vector store: this epoch's embeddings slice
-          val vFiles = PipelineManager.epochAppend(
+          val vFiles = EpochCommit.epochAppend(
             emb.filter(pmod(col("vec_id"), lit(3L)) === epoch).coalesce(1),
             vecDir, epoch, "s25v")
           val vecs = vview match {
@@ -1339,7 +1339,7 @@ object StreamingQueries {
           ipxA.appendEpoch(batch, epoch)))
       def serveOf(ipx: graft.streaming.IncrementalPqIndex): DataFrame =
         ipx.serve(probes, k = 3, nprobe = 2, rerank = 6)
-      PipelineManager.epochAppend(
+      EpochCommit.epochAppend(
         phased("pre", serveOf(ipxA)).coalesce(1), outDir, 0, "s32")
       // REBUILD beside it: a fresh store under the new codebook,
       // backfilled from the RAW corpus (the source of truth) in two
@@ -1348,14 +1348,14 @@ object StreamingQueries {
       val ipxB = new graft.streaming.IncrementalPqIndex(s, idxB,
         cents, cbNew, m = 8, name = "s32b", compactEvery = 2)
       ipxB.appendEpoch(emb.filter(pmod(col("vec_id"), lit(2L)) === 0), 0L)
-      PipelineManager.epochAppend(
+      EpochCommit.epochAppend(
         phased("during", serveOf(ipxA)).coalesce(1), outDir, 1, "s32")
       ipxB.appendEpoch(emb.filter(pmod(col("vec_id"), lit(2L)) === 1), 1L)
       // cutover gate: reads move only when the rebuild's committed
       // ceiling covers its backfill plan
       require(ipxB.cellStore.committedEpochCeiling == 1L,
         "rebuild incomplete; refusing cutover")
-      PipelineManager.epochAppend(
+      EpochCommit.epochAppend(
         phased("post", serveOf(ipxB)).coalesce(1), outDir, 2, "s32")
       s.read.parquet(outDir).localCheckpoint()
     }),
@@ -1495,7 +1495,7 @@ object StreamingQueries {
         })
       def serveOf(): DataFrame =
         slot.get().serve(probes, k = 3, nprobe = 2, rerank = 6)
-      PipelineManager.epochAppend(
+      EpochCommit.epochAppend(
         phased("pre", serveOf()).coalesce(1), outDir, 0, "s33")
       // REST call 1: start the rebuild
       val posted = http("POST", "/pipelines/s33a/rebuildIndex")
@@ -1518,7 +1518,7 @@ object StreamingQueries {
         diag.contains("\"oldCeiling\":2") &&
         diag.contains("\"newCeiling\":0"), s"diag mid-rebuild: $diag")
       // the old index serves UNCHANGED mid-backfill (oracle pins it)
-      PipelineManager.epochAppend(
+      EpochCommit.epochAppend(
         phased("during", serveOf()).coalesce(1), outDir, 1, "s33")
       // REST call 3: release and poll to completion (the cutover
       // gate is the manager's, not the gate's)
@@ -1530,7 +1530,7 @@ object StreamingQueries {
         fin.contains("\"newCeiling\":1"), s"final progress: $fin")
       require(!new java.io.File(idxA).exists(),
         "cutover must sweep the superseded store")
-      PipelineManager.epochAppend(
+      EpochCommit.epochAppend(
         phased("post", serveOf()).coalesce(1), outDir, 2, "s33")
       s.read.parquet(outDir).localCheckpoint()
     }),
@@ -1711,10 +1711,10 @@ object StreamingQueries {
         .select(col("event_id"), col("event_type"), col("user_id"))
       // one source file per event type; maxFilesPerTrigger=1 makes
       // each file its own micro-batch epoch
-      PipelineManager.epochAppend(
+      EpochCommit.epochAppend(
         slice.filter(col("event_type") === "click").coalesce(1),
         srcDir, 0, "q60src")
-      PipelineManager.epochAppend(
+      EpochCommit.epochAppend(
         slice.filter(col("event_type") === "view").coalesce(1),
         srcDir, 1, "q60src")
       val pm = g.track(new PipelineManager(s, ckptRoot))
@@ -1727,8 +1727,8 @@ object StreamingQueries {
       pm.resume("q60", identity).awaitTermination()
       // crash-after-flush replay of both epochs: the commit marker
       // (written only after the flush) makes each a no-op
-      PipelineManager.epochAppend(slice.coalesce(1), dest, 0, "q60")
-      PipelineManager.epochAppend(slice.coalesce(1), dest, 1, "q60")
+      EpochCommit.epochAppend(slice.coalesce(1), dest, 0, "q60")
+      EpochCommit.epochAppend(slice.coalesce(1), dest, 1, "q60")
       // Epoch ids ride the committed file names (epochAppend's rename
       // contract), so the barrier is checkable from the sink alone:
       // each type landed in exactly ONE epoch (its one source file),
@@ -1755,7 +1755,7 @@ object StreamingQueries {
       val slice = Tables.t(s, d, "events")
         .filter(col("event_type").isin("click", "error"))
         .select(col("event_id"), col("user_id"), col("event_type"))
-      PipelineManager.epochAppend(slice.coalesce(1), srcDir, 0, "q61src")
+      EpochCommit.epochAppend(slice.coalesce(1), srcDir, 0, "q61src")
       val pm = g.track(new PipelineManager(s, ckptRoot))
       // memory-sink table names are session-global; a fresh name per
       // invocation keeps repeated gated runs independent
@@ -1781,18 +1781,14 @@ object StreamingQueries {
       val slice = Tables.t(s, d, "events")
         .filter(col("event_type") === "click")
         .select(col("event_id"), pmod(col("event_id"), lit(4L)).as("bucket"))
-      for (e <- 0 until 4)
-        PipelineManager.epochAppend(
-          slice.filter(col("bucket") === e.toLong).coalesce(1),
-          destDir, e.toLong, "q63")
+      val files = (0 until 4).map(e => EpochCommit.epochAppend(
+        slice.filter(col("bucket") === e.toLong).coalesce(1),
+        destDir, e.toLong, "q63"))
       // age epochs 0 and 2 beyond the 1-hour window
       val fs = new Path(destDir).getFileSystem(s.sparkContext.hadoopConfiguration)
       val now = System.currentTimeMillis()
-      for (e <- Seq(0, 2)) {
-        val p = new Path(destDir,
-          s"graft-${PipelineManager.namespaceOf("q63")}-e$e-p0.parquet")
-        fs.setTimes(p, now - 7200000L, -1)
-      }
+      for (e <- Seq(0, 2); f <- files(e))
+        fs.setTimes(new Path(f), now - 7200000L, -1)
       val removed = pm.enforceRetention("q63", nowMs = now)
       import s.implicits._
       s.read.parquet(destDir)
@@ -1828,8 +1824,8 @@ object StreamingQueries {
       def epochOf(df: DataFrame, e: Long): DataFrame =
         df.filter(pmod(col("event_id"), lit(2L)) === e)
       // epoch 0 source files
-      PipelineManager.epochAppend(epochOf(clicks, 0).coalesce(1), srcA, 0, "q64a")
-      PipelineManager.epochAppend(epochOf(views, 0).coalesce(1), srcB, 0, "q64b")
+      EpochCommit.epochAppend(epochOf(clicks, 0).coalesce(1), srcA, 0, "q64a")
+      EpochCommit.epochAppend(epochOf(views, 0).coalesce(1), srcB, 0, "q64b")
       val pm1 = g.track(new PipelineManager(s, ckptRoot))
       pm1.create(PipelineSpec("q64a", "parquet", "parquet", srcA,
         destinationConnection = destA))
@@ -1853,8 +1849,8 @@ object StreamingQueries {
       val bPaused = pm2.paused("q64b").toSeq.sorted.mkString(",")
       // epoch 1 arrives after the failover; continued delivery must
       // pick it up without redelivering epoch 0
-      PipelineManager.epochAppend(epochOf(clicks, 1).coalesce(1), srcA, 1, "q64a")
-      PipelineManager.epochAppend(epochOf(views, 1).coalesce(1), srcB, 1, "q64b")
+      EpochCommit.epochAppend(epochOf(clicks, 1).coalesce(1), srcA, 1, "q64a")
+      EpochCommit.epochAppend(epochOf(views, 1).coalesce(1), srcB, 1, "q64b")
       val qa1 = pm2.start("q64a", identity)
       val qb1 = pm2.start("q64b", identity)
       qa1.awaitTermination(); qb1.awaitTermination()
@@ -1893,7 +1889,7 @@ object StreamingQueries {
       val (ckptRoot, srcDir) = (g.dir("pm"), g.dir("src"))
       val destDir = g.dir("dest") + "/d"
       val epochOf = clickEpochs(s, d, 2L)
-      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q65src")
+      EpochCommit.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q65src")
       val m1 = g.track(new PipelineManager(s, ckptRoot, instance = "mgr1"))
       m1.create(PipelineSpec("q65p", "parquet", "parquet", srcDir,
         destinationConnection = destDir))
@@ -1915,7 +1911,7 @@ object StreamingQueries {
         catch { case e: PipelineLockedException => e.lockedBy }
       // winner's session ends; its lock is now an orphan
       m1.close()
-      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q65src")
+      EpochCommit.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q65src")
       val tookOver =
         try { m2.start("q65p", identity).awaitTermination(); true }
         catch { case _: PipelineLockedException => false }
@@ -1948,7 +1944,7 @@ object StreamingQueries {
       val (ckptRoot, srcDir) = (g.dir("pm"), g.dir("src"))
       val (destX, destY) = (g.dir("destX") + "/d", g.dir("destY") + "/d")
       val epochOf = clickEpochs(s, d, 2L)
-      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q66src")
+      EpochCommit.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q66src")
       val pm = g.track(new PipelineManager(s, ckptRoot))
       pm.create(PipelineSpec("q66a", "parquet", "parquet", srcDir,
         destinationConnection = destX))
@@ -1964,7 +1960,7 @@ object StreamingQueries {
       }
       // epoch 1 after a group restart: the group checkpoint carries
       // the shared offsets — no epoch-0 redelivery in either sink
-      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q66src")
+      EpochCommit.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q66src")
       pm.startGroup("q66a", identity).awaitTermination()
       val (xn, xd) = g.delivered(destX)
       val (yn, yd) = g.delivered(destY)
@@ -1997,7 +1993,7 @@ object StreamingQueries {
       val destDir = g.dir("dest") + "/d"
       val rec = g.records(ckptRoot)
       val epochOf = clickEpochs(s, d, 2L)
-      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q67src")
+      EpochCommit.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q67src")
       val lease = 600000L // expiry below is SIMULATED, never slept for
       val mA = g.track(new PipelineManager(s, ckptRoot, instance = "mgrA",
         livenessLeaseMs = lease))
@@ -2011,7 +2007,7 @@ object StreamingQueries {
       val selfDemoted = !mA.heartbeat()
       val mB = g.track(new PipelineManager(s, ckptRoot, instance = "mgrB",
         livenessLeaseMs = lease))
-      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q67src")
+      EpochCommit.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q67src")
       val tookOver =
         try { mB.start("q67p", identity).awaitTermination(); true }
         catch { case _: PipelineLockedException => false }
@@ -2047,7 +2043,7 @@ object StreamingQueries {
       val (destX, destY) = (g.dir("destX") + "/d", g.dir("destY") + "/d")
       val epochOf = clickEpochs(s, d, 3L)
       def n(dest: String): Long = s.read.parquet(dest).count()
-      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q68src")
+      EpochCommit.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q68src")
       val pm = g.track(new PipelineManager(s, ckptRoot))
       pm.create(PipelineSpec("q68a", "parquet", "parquet", srcDir,
         destinationConnection = destX))
@@ -2060,7 +2056,7 @@ object StreamingQueries {
       val aStatus = pm.get("q68a").get.status
       // epoch 1 while b is paused: the SIBLING keeps receiving from
       // the still-shared query; b's epochs land in durable holdback
-      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q68src")
+      EpochCommit.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q68src")
       pm.startGroup("q68a", identity).awaitTermination()
       val xMid = n(destX) // epochs 0+1
       val yMid = n(destY) // epoch 0 only — held, not dropped
@@ -2071,7 +2067,7 @@ object StreamingQueries {
       pm.resume("q68b", identity)
       val yResumedAgain = n(destY)
       // both members flow again
-      PipelineManager.epochAppend(epochOf(2).coalesce(1), srcDir, 2, "q68src")
+      EpochCommit.epochAppend(epochOf(2).coalesce(1), srcDir, 2, "q68src")
       pm.startGroup("q68a", identity).awaitTermination()
       val (xn, xd) = g.delivered(destX)
       val (yn, yd) = g.delivered(destY)
@@ -2109,7 +2105,7 @@ object StreamingQueries {
         (g.dir("destX") + "/d", g.dir("destY") + "/d", g.dir("destZ") + "/d")
       val ckpt = g.records(ckptRoot).groupCheckpoint("q71a")
       val epochOf = clickEpochs(s, d, 2L)
-      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q71src")
+      EpochCommit.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q71src")
       val pm = g.track(new PipelineManager(s, ckptRoot))
       pm.create(PipelineSpec("q71a", "parquet", "parquet", srcDir,
         destinationConnection = destX))
@@ -2127,7 +2123,7 @@ object StreamingQueries {
       val newLive = s.streams.active.exists(q =>
         q.name == "group-q71a" && q.isActive)
       val zAtJoin = g.committed(destZ)
-      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q71src")
+      EpochCommit.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q71src")
       g.awaitCommit(ckpt, 1)()
       g.await("post-join delivery to all three")(
         g.committed(destZ) > 0 && g.committed(destX) >= 2)
@@ -2162,7 +2158,7 @@ object StreamingQueries {
       val (destX, destY) = (g.dir("destX") + "/d", g.dir("destY") + "/d")
       val ckpt = g.records(ckptRoot).groupCheckpoint("q72a")
       val epochOf = clickEpochs(s, d, 2L)
-      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q72src")
+      EpochCommit.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q72src")
       val pm = g.track(new PipelineManager(s, ckptRoot))
       pm.create(PipelineSpec("q72a", "parquet", "parquet", srcDir,
         destinationConnection = destX))
@@ -2177,7 +2173,7 @@ object StreamingQueries {
         q.name == "group-q72a" && q.isActive)
       val bGone = pm.get("q72b").isEmpty
       val yFilesAtDelete = g.committed(destY)
-      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q72src")
+      EpochCommit.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q72src")
       g.awaitCommit(ckpt, 1)()
       g.await("post-delete delivery to the survivor")(g.committed(destX) >= 2)
       val yFilesAfter = g.committed(destY)
@@ -2214,7 +2210,7 @@ object StreamingQueries {
         (g.dir("destX") + "/d", g.dir("destY") + "/d", g.dir("destZ") + "/d")
       val ckpt = g.records(ckptRoot).groupCheckpoint("q73a")
       val epochOf = clickEpochs(s, d, 2L)
-      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q73src")
+      EpochCommit.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q73src")
       val pm = g.track(new PipelineManager(s, ckptRoot))
       pm.create(PipelineSpec("q73a", "parquet", "parquet", srcDir,
         destinationConnection = destX))
@@ -2233,7 +2229,7 @@ object StreamingQueries {
       val newLive = s.streams.active.exists(q =>
         q.name == "group-q73a" && q.isActive)
       val zAtUpdate = g.committed(destZ)
-      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q73src")
+      EpochCommit.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q73src")
       g.awaitCommit(ckpt, 1)()
       g.await("post-update delivery to survivor and new dest")(
         g.committed(destZ) > 0 && g.committed(destX) >= 2)
@@ -2274,7 +2270,7 @@ object StreamingQueries {
       val (destX, destZ) = (g.dir("destX") + "/d", g.dir("destZ") + "/d")
       val ckpt = g.records(ckptRoot).checkpoint("q74a")
       val epochOf = clickEpochs(s, d, 2L)
-      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q74src")
+      EpochCommit.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q74src")
       val pm = g.track(new PipelineManager(s, ckptRoot))
       pm.create(PipelineSpec("q74a", "parquet", "parquet", srcDir,
         destinationConnection = destX))
@@ -2291,7 +2287,7 @@ object StreamingQueries {
       val newLive = s.streams.active.exists(q =>
         q.name == "q74a" && q.isActive)
       val zAtUpdate = g.committed(destZ)
-      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q74src")
+      EpochCommit.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q74src")
       // plus post-update delivery
       g.awaitCommit(ckpt, 1)(g.committed(destZ) > 0)
       val xFilesAfter = g.committed(destX)
@@ -2336,7 +2332,7 @@ object StreamingQueries {
         CdcMerge.currentState(s, destDir).map(_.count()).getOrElse(0L)
       val metaV1 = Map("cdcKeyCols" -> "k1", "cdcScnCol" -> "scn",
         "cdcOpcodeCol" -> "op", "cdcBuckets" -> "1")
-      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q75src")
+      EpochCommit.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q75src")
       val pm = g.track(new PipelineManager(s, ckptRoot))
       pm.create(PipelineSpec("q75a", "parquet", "cdc", srcDir,
         destinationConnection = destDir, metadata = metaV1))
@@ -2353,7 +2349,7 @@ object StreamingQueries {
       val restarted = !q0.isActive
       val newLive = s.streams.active.exists(q =>
         q.name == "q75a" && q.isActive)
-      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q75src")
+      EpochCommit.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q75src")
       g.awaitCommit(ckpt, 1)()
       // the merge runs inside the epoch's foreachBatch, so commit 1
       // implies the post-update state is installed
@@ -2393,7 +2389,7 @@ object StreamingQueries {
       val rec = g.records(ckptRoot)
       val epochOf = clickEpochs(s, d, 2L)
       def requestPending: Boolean = rec.list(rec.reassignDir, ".req").nonEmpty
-      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q76src")
+      EpochCommit.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q76src")
       val mA = g.track(new PipelineManager(s, ckptRoot, instance = "mgrA"))
       mA.create(PipelineSpec("q76a", "parquet", "parquet", srcDir,
         destinationConnection = destX))
@@ -2420,7 +2416,7 @@ object StreamingQueries {
       val newLive = s.streams.active.exists(q =>
         q.name == "q76a" && q.isActive)
       val reconsumed = mA.consumeReassignRequests()
-      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q76src")
+      EpochCommit.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q76src")
       // plus post-update delivery
       g.awaitCommit(rec.checkpoint("q76a"), 1)(g.committed(destZ) > 0)
       val xFilesAfter = g.committed(destX)
@@ -2467,7 +2463,7 @@ object StreamingQueries {
         rec.read(rec.spec("q77a"))(b => Some(new String(b, "UTF-8")))
           .toOption.exists(_.contains(s""""status":"$v""""))
       def requestPending: Boolean = rec.list(rec.lifecycleDir, ".req").nonEmpty
-      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q77src")
+      EpochCommit.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q77src")
       val mA = g.track(new PipelineManager(s, ckptRoot, instance = "mgrA"))
       mA.create(PipelineSpec("q77a", "parquet", "parquet", srcDir,
         destinationConnection = destD))
@@ -2486,7 +2482,7 @@ object StreamingQueries {
       val pausedDurable = durableStatus("Paused")
       // pause keeps the assignment AND the lock with the owner
       val lockKept = g.exists(rec.lock("q77a"))
-      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q77src")
+      EpochCommit.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q77src")
       // the return leg: resume routed from B, enacted by A from its
       // remembered run (no transform crosses managers)
       mB.requestResume("q77a")
@@ -2527,7 +2523,7 @@ object StreamingQueries {
       val destD = g.dir("dest") + "/d"
       val rec = g.records(ckptRoot)
       val epochOf = clickEpochs(s, d, 2L)
-      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q78src")
+      EpochCommit.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q78src")
       val mA = g.track(new PipelineManager(s, ckptRoot, instance = "mgrA"))
       mA.create(PipelineSpec("q78a", "parquet", "parquet", srcDir,
         destinationConnection = destD))
@@ -2542,7 +2538,7 @@ object StreamingQueries {
       val stopped = !q0.isActive
       // stop releases the task back to the pool: the lock is GONE
       val lockReleased = !g.exists(rec.lock("q78a"))
-      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q78src")
+      EpochCommit.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q78src")
       // the freed task moves: B acquires it and resumes from the
       // SHARED checkpoint — epoch 0 never replays, epoch 1 delivers
       mB.resume("q78a", identity).awaitTermination()
@@ -2574,7 +2570,7 @@ object StreamingQueries {
       val rec = g.records(ckptRoot)
       val ckpt = rec.checkpoint("q79a")
       def specExists: Boolean = g.exists(rec.spec("q79a"))
-      PipelineManager.epochAppend(clickEpochs(s, d, 2L)(0).coalesce(1),
+      EpochCommit.epochAppend(clickEpochs(s, d, 2L)(0).coalesce(1),
         srcDir, 0, "q79src")
       val mA = g.track(new PipelineManager(s, ckptRoot, instance = "mgrA"))
       mA.create(PipelineSpec("q79a", "parquet", "parquet", srcDir,
@@ -2628,7 +2624,7 @@ object StreamingQueries {
       val destD = g.dir("dest") + "/d"
       val ckpt = g.records(ckptRoot).checkpoint("q80a")
       val epochOf = clickEpochs(s, d, 2L)
-      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q80src")
+      EpochCommit.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q80src")
       // B exists FIRST: the later create is invisible to it until
       // its reconcile tick discovers the durable spec
       val mB = g.track(new PipelineManager(s, ckptRoot, instance = "mgrB"))
@@ -2651,7 +2647,7 @@ object StreamingQueries {
       mB.reconcileSpecs()
       val refreshed = mB.get("q80a").exists(_.status == PipelineStatus.Paused)
       // the return leg, then drain the corpus for the closed form
-      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q80src")
+      EpochCommit.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q80src")
       mB.requestResume("q80a")
       val resumed = mA.consumeLifecycleRequests() == 1
       // after the resume
@@ -2705,7 +2701,7 @@ object StreamingQueries {
         "userMod" -> (md => df =>
           df.filter(pmod(col("user_id"),
             lit(md("transform.mod").toLong)) === 0))))
-      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q81src")
+      EpochCommit.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q81src")
       val lease = 600000L // expiry below is SIMULATED, never slept for
       val mA = g.track(new PipelineManager(s, ckptRoot, catalog,
         instance = "mgrA", livenessLeaseMs = lease))
@@ -2733,7 +2729,7 @@ object StreamingQueries {
       // one lease past its last heartbeat (q67's simulation)
       rec.touch(rec.instance("mgrA"), System.currentTimeMillis() - lease - 60000L)
       val ownerExpired = !mA.heartbeat()
-      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q81src")
+      EpochCommit.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q81src")
       // the survivor never ran the pipeline: nothing remembered
       val noRunRemembered = mB.queryOf("q81a").isEmpty
       // its tick consumes the ORPHANED request and restarts from the
@@ -2806,7 +2802,7 @@ object StreamingQueries {
           PipelineManager.TriggerKey -> "processingTime:50"))
       def requestPending: Boolean = rec.list(rec.reassignDir, ".req").nonEmpty
       val lease = 600000L // expiry below is SIMULATED, never slept for
-      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q82src")
+      EpochCommit.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q82src")
       val mA = g.track(new PipelineManager(s, ckptRoot, catalog,
         instance = "mgrA", livenessLeaseMs = lease))
       val spec0 = mA.create(specWith(2))
@@ -2818,7 +2814,7 @@ object StreamingQueries {
       mA.update("q82a", specWith(3)): Unit
       val localRestart = !q0.isActive
       val localNewLive = mA.queryOf("q82a").exists(_.isActive)
-      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q82src")
+      EpochCommit.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q82src")
       g.await("epoch 1 delivered by updated recipe")(delivered() == expAt(1))
       // ---- cross-manager update (q76 path, same predicate): B
       // persists the new recipe and routes; A's tick enacts ----
@@ -2828,7 +2824,7 @@ object StreamingQueries {
       val routed = requestPending
       val bNoopWhileLive = mB.consumeReassignRequests()
       val ownerConsumed = mA.consumeReassignRequests()
-      PipelineManager.epochAppend(epochOf(2).coalesce(1), srcDir, 2, "q82src")
+      EpochCommit.epochAppend(epochOf(2).coalesce(1), srcDir, 2, "q82src")
       g.await("epoch 2 delivered by routed recipe")(delivered() == expAt(2))
       // ---- the fuzz half: persist a NEW recipe while PAUSED, then
       // CRASH the owner — the survivor's routed resume must enact
@@ -2844,7 +2840,7 @@ object StreamingQueries {
       // the orphaned reassign-request is consumable now (paused: no
       // query to restart; the persisted recipe already stands)
       val orphanConsumed = mB.consumeReassignRequests()
-      PipelineManager.epochAppend(epochOf(3).coalesce(1), srcDir, 3, "q82src")
+      EpochCommit.epochAppend(epochOf(3).coalesce(1), srcDir, 3, "q82src")
       mB.requestResume("q82a")
       val resumed = mB.queryOf("q82a").exists(_.isActive)
       g.await("epoch 3 delivered by persisted recipe")(delivered() == expAt(3))
@@ -2879,7 +2875,7 @@ object StreamingQueries {
       val destDir = g.dir("dest") + "/d"
       val rec = g.records(ckptRoot)
       val epochOf = clickEpochs(s, d, 2L)
-      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q69src")
+      EpochCommit.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q69src")
       val lease = 600000L // expiry below is SIMULATED, never slept for
       val mA = g.track(new PipelineManager(s, ckptRoot, instance = "mgrA",
         livenessLeaseMs = lease, autoHeartbeat = true,
@@ -2911,7 +2907,7 @@ object StreamingQueries {
       val lockKept = g.exists(rec.lock("q69p"))
       // failover: a live peer reclaims and delivers epoch 1 exactly
       // once from the shared checkpoint
-      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q69src")
+      EpochCommit.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q69src")
       val mB = g.track(new PipelineManager(s, ckptRoot, instance = "mgrB",
         livenessLeaseMs = lease))
       val tookOver =
@@ -2946,7 +2942,7 @@ object StreamingQueries {
       val destDir = g.dir("dest") + "/d"
       val lockPath = g.records(ckptRoot).lock("q70p")
       val epochOf = clickEpochs(s, d, 2L)
-      PipelineManager.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q70src")
+      EpochCommit.epochAppend(epochOf(0).coalesce(1), srcDir, 0, "q70src")
       val mA = g.track(new PipelineManager(s, ckptRoot, instance = "mgrA"))
       mA.create(PipelineSpec("q70p", "parquet", "parquet", srcDir,
         destinationConnection = destDir))
@@ -2958,7 +2954,7 @@ object StreamingQueries {
       mA.stop("q70p")
       val releasedAfterStop = !g.exists(lockPath)
       val mB = g.track(new PipelineManager(s, ckptRoot, instance = "mgrB"))
-      PipelineManager.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q70src")
+      EpochCommit.epochAppend(epochOf(1).coalesce(1), srcDir, 1, "q70src")
       val tookOver =
         try { mB.start("q70p", identity).awaitTermination(); true }
         catch { case _: PipelineLockedException => false }

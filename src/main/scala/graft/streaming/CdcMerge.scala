@@ -37,14 +37,14 @@ import graft.functions.Portable
  * and move-aside backups (`statePath.bak/`) live OUTSIDE the state
  * root so state readers never see half-written files.
  *
- * Crash safety per bucket: new bucket contents land in scratch, the
- * previous bucket dir is renamed aside, scratch renamed in, and ONLY
- * THEN is the backup dropped — at every instant either the bucket dir
- * or its backup holds a complete copy. [[currentState]] resolves
- * whichever survives. A replayed micro-batch (Spark's at-least-once
- * foreachBatch contract) re-merges idempotently: each touched key takes
- * the batch's final image again, so re-applying the same changes leaves
- * the same rows.
+ * Crash safety per bucket: each touched bucket is swapped by
+ * [[EpochCommit.replaceDir]] — scratch is complete, the bucket dir
+ * moves aside to its backup, scratch is promoted, the backup is
+ * dropped — so at every instant the bucket dir or its backup holds a
+ * complete copy, and [[currentState]] reads whichever survives. A
+ * replayed micro-batch (Spark's at-least-once foreachBatch contract)
+ * re-merges idempotently: each touched key takes the batch's final
+ * image again, so re-applying the same changes leaves the same rows.
  */
 object CdcMerge {
 
@@ -99,48 +99,9 @@ object CdcMerge {
   private def bakDir(statePath: String, b: Long) =
     new Path(s"$statePath.bak", f"b$b%05d")
 
-  /** The live copy of one bucket: the bucket dir, or its backup if a
-    * crash happened between the two swap renames. */
-  private def liveBucket(fs: FileSystem, statePath: String, b: Long): Option[Path] = {
-    val main = bucketDir(statePath, b)
-    if (fs.exists(main)) Some(main)
-    else {
-      val bak = bakDir(statePath, b)
-      if (fs.exists(bak)) Some(bak) else None
-    }
-  }
-
-  /**
-   * Atomically install the pre-written scratch dir `tmp` as bucket
-   * `b`'s state. A missing `tmp` means the bucket's merged contents
-   * are EMPTY (every key deleted — a partitioned write emits no dir
-   * for an empty partition); an empty dir is installed so the swap
-   * still retires the old copy.
-   *
-   * Ordering is the load-bearing part: the previous copy is deleted
-   * only AFTER the replacement is fully installed, and every rename is
-   * checked — a false return fails the epoch so Spark replays it
-   * instead of silently committing a half-swap.
-   */
-  private def installBucketDir(fs: FileSystem, tmp: Path,
-      statePath: String, b: Long): Unit = {
-    val state = bucketDir(statePath, b)
-    val bak = bakDir(statePath, b)
-    if (!fs.exists(tmp)) fs.mkdirs(tmp)
-    if (fs.exists(state)) {
-      // A backup alongside a live state dir is a stale leftover of a
-      // crash after install-but-before-cleanup; the state dir is newer.
-      if (fs.exists(bak)) require(fs.delete(bak, true), s"cannot clear stale $bak")
-      fs.mkdirs(bak.getParent)
-      require(fs.rename(state, bak), s"cannot move aside $state")
-    }
-    // If state was absent (first write, or recovering from a crash
-    // mid-swap) the existing .bak — the only live copy — stays put
-    // until the new state, merged FROM it, is installed.
-    fs.mkdirs(state.getParent)
-    require(fs.rename(tmp, state), s"cannot install $tmp as $state")
-    fs.delete(bak, true) // safe: state is installed; a leftover is handled above
-  }
+  /** The live copy of one bucket ([[EpochCommit.liveDir]]). */
+  private def liveBucket(fs: FileSystem, statePath: String, b: Long): Option[Path] =
+    EpochCommit.liveDir(fs, bucketDir(statePath, b), bakDir(statePath, b))
 
   /** Spark's copy of the written frame's schema, which it stores in
     * every parquet footer it writes (`ParquetReadSupport.SPARK_METADATA_KEY`). */
@@ -238,7 +199,14 @@ object CdcMerge {
     val tmpRoot = new Path(s"$statePath.tmp")
     fs.delete(tmpRoot, true) // leftovers of a crashed epoch
     merged.write.mode(SaveMode.Overwrite).partitionBy("__bucket").parquet(tmpRoot.toString)
-    touched.foreach(b => installBucketDir(fs, new Path(tmpRoot, s"__bucket=$b"), statePath, b))
+    touched.foreach { b =>
+      // a missing scratch dir is a bucket whose keys were all deleted
+      // (a partitioned write emits no dir for an empty partition): an
+      // empty dir is installed so the swap still retires the old copy
+      val tmp = new Path(tmpRoot, s"__bucket=$b")
+      if (!fs.exists(tmp)) fs.mkdirs(tmp)
+      EpochCommit.replaceDir(fs, tmp, bucketDir(statePath, b), bakDir(statePath, b))
+    }
     fs.delete(tmpRoot, true)
   }
 

@@ -22,9 +22,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * the compacted dir (one relation, flat listing), so the union plan
  * never exceeds `refreshEvery` relations no matter how many epochs a
  * run processes. Correctness is unchanged: the dir holds precisely
- * the committed files the unions accumulated ([[PipelineManager
- * .epochAppend]]'s rename-then-marker contract; Spark's parquet
- * reader ignores the `_staging-*`/`_graft_commits` metadata paths),
+ * the committed files the unions accumulated ([[EpochCommit]]'s
+ * rename-then-marker contract; Spark's parquet reader ignores its
+ * underscore-prefixed staging and marker paths),
  * so the refreshed frame has the same rows as the union it replaces.
  *
  * At 100 TB the same bound matters more, not less: a long-running
@@ -33,7 +33,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * ever-wider plan into every batch's analysis.
  *
  * `partitioned = true` marks a hive-partitioned store (written by
- * [[PipelineManager.epochAppendPartitioned]]): epoch-extension reads
+ * [[EpochCommit.epochAppendPartitioned]]): epoch-extension reads
  * of leaf files then set `basePath` to the store root so the
  * partition column (and its pruning) survives the leaf-file read —
  * without it Spark would drop the directory-encoded column and every

@@ -14,14 +14,14 @@ import org.apache.spark.sql.types.StructType
  * One crash protocol, two indexes.
  *
  * Layout under `dir`:
- *  - `<partCol>=<v>/graft-<ns>-e<N>-p<i>.parquet` — epoch data,
- *    committed through [[PipelineManager.epochAppendPartitioned]]
- *    (whole-epoch marker: an epoch is visible in all partitions or
- *    none). `<ns>` is the RAW namespace (`<name>.p`) for ingest
- *    epochs and a per-level RUN namespace (`<name>.g<L>`) for
- *    compacted runs; `<name>.g` without a level digit is the legacy
- *    full-rewrite namespace, still honored on read.
- *  - `_graft_commits/...` — epoch/run markers. Raw-epoch markers are
+ *  - `<partCol>=<v>/<epoch file of ns>` — epoch data, committed
+ *    through [[EpochCommit.epochAppendPartitioned]] (whole-epoch
+ *    marker: an epoch is visible in all partitions or none). `<ns>` is
+ *    the RAW namespace (`<name>.p`) for ingest epochs and a per-level
+ *    RUN namespace (`<name>.g<L>`) for compacted runs; `<name>.g`
+ *    without a level digit is the legacy full-rewrite namespace, still
+ *    honored on read.
+ *  - [[EpochCommit]]'s epoch/run markers. Raw-epoch markers are
  *    kept FOREVER (they are the replay protection); run markers only
  *    until the run is superseded.
  *  - `_compact_state-<L>-<lo>-<hi>` — compacted run: level `L`
@@ -133,35 +133,26 @@ final class EpochPartitionedStore(spark: SparkSession, val dir: String,
         if (!keys.contains((k, e))) fs.delete(st.getPath, false): Unit
       case _ => ()
     }
-    runMarkerDirs().foreach { md =>
-      val k = kindOf(md.getPath.getName, names)
-      fs.listStatus(md.getPath).toSeq.foreach { st =>
-        // stray tolerance (see recordedRuns): a non-numeric artifact
-        // is not ours to parse — or to delete
-        st.getPath.getName.toLongOption.foreach { e =>
-          if (k.exists(kk => !keys.contains((kk, e))))
-            fs.delete(st.getPath, false): Unit
-        }
-      }
+    runMarkers().foreach { case (ns, k, e) =>
+      if (!keys.contains((k, e))) fs.delete(EpochCommit.marker(dir, ns, e), false): Unit
     }
     // the rollback above already deleted unrecorded entries from the
     // listing's view of disk; re-deleting is a harmless false return
     sweepSuperseded(runs, listing)
   }
 
-  /** Marker directories of every RUN namespace (legacy and leveled;
-    * never the raw namespace — raw markers are the replay
-    * protection and live forever). */
-  private def runMarkerDirs(): Seq[FileStatus] = {
-    val root = new Path(dir, "_graft_commits")
-    if (!fs.exists(root)) Nil
-    else fs.listStatus(root).toSeq.filter { st =>
-      kindOf(st.getPath.getName, names) match {
-        case Some(LegacyKind) | Some(LevelKind(_)) => true
-        case _ => false
+  /** The committed markers of every RUN namespace (legacy and
+    * leveled; never the raw namespace — raw markers are the replay
+    * protection and live forever), as (namespace, kind, epoch) —
+    * lazily, one namespace listed at a time. */
+  private def runMarkers(): Iterator[(String, Kind, Long)] =
+    EpochCommit.markerNamespaces(fs, dir).iterator.flatMap { ns =>
+      kindOf(ns, names) match {
+        case Some(k @ (LegacyKind | LevelKind(_))) =>
+          EpochCommit.committedEpochs(fs, dir, ns).map(e => (ns, k, e))
+        case _ => Nil
       }
     }
-  }
 
   /** THE DEFERRED SWEEP: delete everything the current records
     * supersede — raw epochs at or below the compacted frontier,
@@ -186,13 +177,8 @@ final class EpochPartitionedStore(spark: SparkSession, val dir: String,
       case (k, e, st) =>
         if (deadKeys.contains((k, e))) fs.delete(st.getPath, false): Unit
     }
-    runMarkerDirs().foreach { md =>
-      val k = kindOf(md.getPath.getName, names)
-      fs.listStatus(md.getPath).toSeq.foreach { st =>
-        if (st.getPath.getName.toLongOption.exists(e =>
-            k.exists(kk => deadKeys.contains((kk, e)))))
-          fs.delete(st.getPath, false): Unit
-      }
+    runMarkers().foreach { case (ns, k, e) =>
+      if (deadKeys.contains((k, e))) fs.delete(EpochCommit.marker(dir, ns, e), false): Unit
     }
     dead.foreach(r => fs.delete(stateFile(dir, r), false): Unit)
     onSweep(fr, fr)
@@ -214,15 +200,8 @@ final class EpochPartitionedStore(spark: SparkSession, val dir: String,
     * stores commit BEFORE this one (the lexical index's stats
     * accumulator) cap their cold reads here, so a crash between the
     * two commits can never serve stats describing absent data. */
-  def committedEpochCeiling: Long = {
-    val markers = new Path(dir, s"_graft_commits/${names.dataNs}")
-    val ms = if (fs.exists(markers))
-      // stray tolerance (see recordedRuns): this sits under every
-      // health() poll and the lex index's serving-ceiling cap
-      fs.listStatus(markers).toSeq.flatMap(_.getPath.getName.toLongOption)
-    else Nil
-    ms.foldLeft(Long.MinValue)(math.max)
-  }
+  def committedEpochCeiling: Long =
+    EpochCommit.committedEpochs(fs, dir, names.dataNs).foldLeft(Long.MinValue)(math.max)
 
   private def ensureView(): DurableIndexView = viewLock.synchronized {
     view.getOrElse {
@@ -300,7 +279,7 @@ final class EpochPartitionedStore(spark: SparkSession, val dir: String,
       appendsInFlight += 1
     }
     val files =
-      try PipelineManager.epochAppendPartitioned(
+      try EpochCommit.epochAppendPartitioned(
         frame, dir, partCol, epoch, names.dataPipe)
       catch {
         case t: Throwable =>
@@ -341,7 +320,7 @@ final class EpochPartitionedStore(spark: SparkSession, val dir: String,
     val in = spark.read.option("basePath", dir)
       .parquet(inputs.map(_.getPath.toString): _*)
       .repartition(col(partCol))
-    val published = PipelineManager.epochAppendPartitioned(
+    val published = EpochCommit.epochAppendPartitioned(
       in, dir, partCol, hi, s"$name.g$level")
     val run = Run(level, lo, hi, legacy = false)
     val out = fs.create(stateFile(dir, run), false) // create-once: authority
@@ -551,21 +530,19 @@ object EpochPartitionedStore {
   private[streaming] def frontier(runs: Seq[Run]): Long =
     runs.map(_.hi).maxOption.getOrElse(-1L)
 
-  private def fileNs(fileName: String): String = fileName.split('-')(1)
-
   /** Every committed-contract data file under the store, classified
     * (kind, epoch, status). Files in namespaces this store does not
     * own are ignored. */
   private[streaming] def allDataFiles(fs: FileSystem, dir: String,
       partCol: String, names: StoreNames): Seq[(Kind, Long, FileStatus)] =
     Option(fs.globStatus(
-        new Path(dir, s"$partCol=*/graft-*-e*-p*.parquet")))
+        new Path(dir, s"$partCol=*/${EpochCommit.namespaceFileGlob("*")}")))
       .toSeq.flatten
       .flatMap { st =>
         val n = st.getPath.getName
-        if (!PipelineManager.isCommittedEpochFile(n)) None
-        else kindOf(fileNs(n), names).map(k =>
-          (k, PipelineManager.epochOfCommittedFile(n), st))
+        if (!EpochCommit.isCommittedEpochFile(n)) None
+        else kindOf(EpochCommit.namespaceOfCommittedFile(n), names).map(k =>
+          (k, EpochCommit.epochOfCommittedFile(n), st))
       }
 
   /** THE live-file computation every fresh read goes through.
@@ -590,13 +567,7 @@ object EpochPartitionedStore {
     val fr = frontier(runs)
     val liveKeys = runs.filterNot(r => isSuperseded(r, runs))
       .map(runKey).toSet
-    val markerDir = new Path(dir, s"_graft_commits/${names.dataNs}")
-    val committed: Set[Long] =
-      if (!fs.exists(markerDir)) Set.empty
-      else fs.listStatus(markerDir).toSeq
-        // same stray tolerance as recordedRuns: one non-numeric
-        // artifact must never brick every reader
-        .flatMap(_.getPath.getName.toLongOption).toSet
+    val committed = EpochCommit.committedEpochs(fs, dir, names.dataNs).toSet
     allDataFiles(fs, dir, partCol, names).collect {
       case (RawKind, e, st) if e > fr && committed(e) => st
       case (k @ (LegacyKind | LevelKind(_)), e, st)

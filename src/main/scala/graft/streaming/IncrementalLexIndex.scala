@@ -79,9 +79,9 @@ final class IncrementalLexIndex(spark: SparkSession, dir: String,
     "tb", name, refreshEvery, compactEvery, onSweep = (_, upTo) => {
       val fs = new org.apache.hadoop.fs.Path(statsDir).getFileSystem(conf)
       Option(fs.globStatus(new org.apache.hadoop.fs.Path(statsDir,
-          s"graft-$statsNs-e*-p*.parquet")))
+          EpochCommit.namespaceFileGlob(statsNs))))
         .toSeq.flatten
-        .filter(st => PipelineManager.epochOfCommittedFile(
+        .filter(st => EpochCommit.epochOfCommittedFile(
           st.getPath.getName) < upTo)
         .foreach(st => fs.delete(st.getPath, false))
     })
@@ -131,8 +131,8 @@ final class IncrementalLexIndex(spark: SparkSession, dir: String,
         // chain resumes from ONE file read — the exact row for a
         // replayed epoch (it wins: crash replay must reuse, never
         // re-add), else the newest prior row plus this batch.
-        val byEpoch = PipelineManager.committedFiles(statsDir, conf)
-          .map(f => (PipelineManager.epochOfCommittedFile(f), f))
+        val byEpoch = EpochCommit.committedFiles(statsDir, conf)
+          .map(f => (EpochCommit.epochOfCommittedFile(f), f))
         byEpoch.find(_._1 == epoch) match {
           case Some((_, f)) =>
             val r = spark.read.parquet(f).head()
@@ -148,7 +148,7 @@ final class IncrementalLexIndex(spark: SparkSession, dir: String,
     })
     // driver-side 1-row commit: same protocol/naming as epochAppend,
     // without the per-epoch Spark job a LocalRelation write costs
-    PipelineManager.epochAppendLocalRow(spark, statsDir, epoch, statsPipe,
+    EpochCommit.epochAppendLocalRow(spark, statsDir, epoch, statsPipe,
       Seq(("epoch", epoch), ("nd", nd), ("sum_dl", sumDl))): Unit
     // NOTE: the in-memory lastStats cache is NOT written here — only
     // after the postings commit in [[appendEpoch]]. Stats commit
@@ -237,8 +237,8 @@ final class IncrementalLexIndex(spark: SparkSession, dir: String,
       servableCache match {
         case Some((c, n, s)) if c == ceiling => Some((n, s))
         case _ =>
-          val read = PipelineManager.committedFiles(statsDir, conf)
-            .map(f => (PipelineManager.epochOfCommittedFile(f), f))
+          val read = EpochCommit.committedFiles(statsDir, conf)
+            .map(f => (EpochCommit.epochOfCommittedFile(f), f))
             .filter(_._1 <= ceiling)
             .sortBy(-_._1).headOption
             .map { case (_, f) =>

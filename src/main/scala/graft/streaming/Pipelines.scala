@@ -2021,7 +2021,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
    * divert paused-partition rows and [[resumePartitions]] replay them
    * through the same write path. Parquet-backed transports are
    * exactly-once across epoch replays via
-   * [[PipelineManager.epochAppend]]'s commit markers; the rest
+   * [[EpochCommit]]'s commit markers; the rest
    * (kafka, directoryOps, custom) are at-least-once, matching the
    * reference's base guarantee.
    */
@@ -2035,7 +2035,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     val dest = spec.destinationConnection
     spec.transport match {
       case "parquet" =>
-        (batch, epoch) => PipelineManager.epochAppend(batch, dest, epoch, spec.name)
+        (batch, epoch) => EpochCommit.epochAppend(batch, dest, epoch, spec.name)
       case "noop" =>
         (batch, _) => batch.write.format("noop").mode("overwrite").save()
       case "kafka" =>
@@ -2052,7 +2052,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
           (batch, _) => PipelineManager.applyDirectoryOps(batch, dest,
             orderCol = spec.metadata.get("directoryOrderCol"))
         else
-          (batch, epoch) => PipelineManager.epochAppend(batch, dest, epoch, spec.name)
+          (batch, epoch) => EpochCommit.epochAppend(batch, dest, epoch, spec.name)
       case "cdc" =>
         // T7 materialization: each epoch's change records upsert into
         // the bucketed keyed state table (crash-safe per-bucket swap in
@@ -2245,7 +2245,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
                 val hbDir = records.groupHoldback(leader.name)
                 stampHoldbackOwner(hbDir, leader.name,
                   leader.destinationConnection)
-                PipelineManager.epochAppend(batch,
+                EpochCommit.epochAppend(batch,
                   hbDir.toString, epoch, leader.name): Unit
               }
             }
@@ -2286,10 +2286,13 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     val dest = sorted.head.destinationConnection
     val withMarkers =
       if (!dest.startsWith("/")) Nil // memory/logical transports
-      else sorted.filter { m =>
-        try rootFs.exists(new Path(dest,
-          s"_graft_commits/${PipelineManager.namespaceOf(m.name)}"))
-        catch { case _: java.io.IOException => false }
+      else {
+        val fs = destFs(dest)
+        sorted.filter { m =>
+          try fs.exists(EpochCommit.markerDir(dest,
+            PipelineManager.namespaceOf(m.name)))
+          catch { case _: java.io.IOException => false }
+        }
       }
     withMarkers.headOption.getOrElse(sorted.head)
   }
@@ -2301,18 +2304,22 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * namespace and no-op, or the destination double-receives. */
   private def migrateDestMarkers(dest: String, fromName: String,
       toName: String): Unit = if (dest.startsWith("/")) {
-    val fromDir = new Path(dest,
-      s"_graft_commits/${PipelineManager.namespaceOf(fromName)}")
-    val toDir = new Path(dest,
-      s"_graft_commits/${PipelineManager.namespaceOf(toName)}")
-    if (rootFs.exists(fromDir)) {
-      rootFs.mkdirs(toDir)
-      rootFs.listStatus(fromDir).toSeq.filter(_.isFile).foreach { st =>
+    val fs = destFs(dest)
+    val fromDir = EpochCommit.markerDir(dest, PipelineManager.namespaceOf(fromName))
+    val toDir = EpochCommit.markerDir(dest, PipelineManager.namespaceOf(toName))
+    if (fs.exists(fromDir)) {
+      fs.mkdirs(toDir)
+      fs.listStatus(fromDir).toSeq.filter(_.isFile).foreach { st =>
         val target = new Path(toDir, st.getPath.getName)
-        if (!rootFs.exists(target)) rootFs.create(target, false).close()
+        if (!fs.exists(target)) fs.create(target, false).close()
       }
     }
   }
+
+  /** The filesystem of destination `dest` — the one its commits were
+    * written through, which need not be the checkpoint root's. */
+  private def destFs(dest: String) =
+    new Path(dest).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Has `name`'s task group ever run as ONE shared query? True once
     * the group checkpoint exists (only [[startGroup]] creates it, and
@@ -2345,7 +2352,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
 
   /** Deliver (then remove) every held-back epoch of a dest group, in
     * epoch order — for parquet transports each replayed epoch
-    * re-enters [[PipelineManager.epochAppend]] with its ORIGINAL
+    * re-enters [[EpochCommit.epochAppend]] with its ORIGINAL
     * epoch number UNDER ITS DIR-OWNER'S NAMESPACE, so a crash between
     * deliver and cleanup re-replays into a no-op (the destination's
     * commit marker already exists) no matter which caller view
@@ -2403,17 +2410,15 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
         case (hb, Some((owner, `dest`))) if deliversToOrGone(specs.get(owner)
             .fold(durableSpec(owner))(DurableRecords.Found(_)), dest) =>
           val ns = PipelineManager.namespaceOf(owner)
-          val markers = new Path(hb, s"_graft_commits/$ns")
-          if (rootFs.exists(markers)) {
-            val epochs = rootFs.listStatus(markers).toSeq
-              .flatMap(s => scala.util.Try(s.getPath.getName.toLong).toOption)
-              .sorted
+          val hbDir = hb.toString
+          val epochs = EpochCommit.committedEpochs(rootFs, hbDir, ns).sorted
+          if (epochs.nonEmpty) {
             // deliver under the dir OWNER's identity: the destination
             // markers then dedup retries from every caller view
             lazy val deliver = transportWriter(anchor.copy(name = owner))
             epochs.foreach { e =>
               val files = Option(rootFs.globStatus(
-                new Path(hb, PipelineManager.epochFileGlob(ns, e)))).toSeq.flatten
+                new Path(hb, EpochCommit.epochFileGlob(ns, e)))).toSeq.flatten
               if (files.nonEmpty) {
                 // one materialization serves the delivery and every
                 // member's sketch fold (the batch-loop persist rule)
@@ -2430,7 +2435,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
                 } finally held.unpersist(): Unit
               }
               files.foreach(f => rootFs.delete(f.getPath, false))
-              rootFs.delete(new Path(markers, e.toString), false): Unit
+              rootFs.delete(EpochCommit.marker(hbDir, ns, e), false): Unit
             }
           }
         case _ => ()
@@ -2520,29 +2525,21 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     } catch { case e: Throwable => if (newlyLocked) releaseLock(name); throw e }
   }
 
-  private def sketchHasData(name: String): Boolean = {
-    val p = new Path(records.sketch(name))
-    rootFs.exists(p) && rootFs.listStatus(p).exists(st =>
-      st.isFile && st.getPath.getName.startsWith("part-"))
+  /** A sketch table's (live, staged, aside) dirs: the register table,
+    * its next version while written, and the previous version while
+    * it is swapped out ([[EpochCommit.replaceDir]]). */
+  private def sketchDirs(name: String): (Path, Path, Path) = {
+    val dir = records.sketch(name)
+    (new Path(dir), new Path(dir + ".staging"), new Path(dir + ".old"))
   }
 
-  /** Put the sketch store back to exactly one complete table after a
-    * crash mid-swap. The swap's ordering (staging write completes →
-    * live renamed aside → staging promoted → aside deleted) means a
-    * MISSING live dir proves the staging write finished — promote it;
-    * failing that, the set-aside previous table is the newest
-    * complete one. A stray staging NEXT TO a live dir is a crashed
-    * pre-rename attempt whose epoch will replay: drop it. Idempotent;
-    * callers hold [[PipelineManager.sketchStripe]]. */
-  private def recoverSketch(name: String): Unit = {
-    val dir = new Path(records.sketch(name))
-    val aside = new Path(records.sketch(name) + ".old")
-    val staging = new Path(records.sketch(name) + ".staging")
-    if (!rootFs.exists(dir)) {
-      if (rootFs.exists(staging)) rootFs.rename(staging, dir): Unit
-      else if (rootFs.exists(aside)) rootFs.rename(aside, dir): Unit
-    } else rootFs.delete(staging, true): Unit
-    rootFs.delete(aside, true): Unit
+  /** The sketch table to read — the live dir, else the previous table a
+    * crash mid-swap left aside — when it holds register data. */
+  private def sketchTable(name: String): Option[Path] = {
+    val (live, _, aside) = sketchDirs(name)
+    EpochCommit.liveDir(rootFs, live, aside).filter(p =>
+      rootFs.listStatus(p).exists(st =>
+        st.isFile && st.getPath.getName.startsWith("part-")))
   }
 
   /** Max-merge the delivered batch's HLL registers into the
@@ -2551,34 +2548,23 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * is 256 rows forever; max-merge is idempotent AND commutative, so
     * a crash-replayed epoch re-merging the same batch is a natural
     * no-op — no epoch markers needed. The table is REPLACED by
-    * staged-write-then-rename (never an in-place overwrite, whose
+    * [[EpochCommit.replaceDir]] (never an in-place overwrite, whose
     * delete-before-commit window would silently reset the cumulative
-    * registers to one batch on a crash); [[recoverSketch]] completes
-    * or discards an interrupted swap. */
+    * registers to one batch on a crash); a crash mid-swap leaves the
+    * previous table aside, which the replayed epoch merges into. */
   private def updateCardinalitySketch(spec: PipelineSpec,
       batch: DataFrame): Unit =
     spec.metadata.get(PipelineManager.SketchColumnKey).foreach { c =>
       PipelineManager.sketchStripe(records.sketch(spec.name)).synchronized {
-        recoverSketch(spec.name)
-        val dir = records.sketch(spec.name)
+        val (live, staged, aside) = sketchDirs(spec.name)
         val bregs = graft.sketch.Sketch.hllRegisters(
           batch.select(col(c)), col(c))
-        val merged = (if (sketchHasData(spec.name))
-            spark.read.parquet(dir).unionByName(bregs) else bregs)
+        val merged = sketchTable(spec.name)
+          .fold(bregs)(t => spark.read.parquet(t.toString).unionByName(bregs))
           .groupBy(col("reg")).agg(max(col("mj")).as("mj"))
-        val staging = new Path(dir + ".staging")
-        val aside = new Path(dir + ".old")
-        // the staging job reads the live dir while it still exists
-        merged.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-        val dirP = new Path(dir)
-        if (rootFs.exists(dirP)) {
-          rootFs.delete(aside, true)
-          if (!rootFs.rename(dirP, aside))
-            sys.error(s"sketch set-aside failed for ${spec.name}")
-        }
-        if (!rootFs.rename(staging, dirP))
-          sys.error(s"sketch swap failed for ${spec.name}")
-        rootFs.delete(aside, true): Unit
+        // the staging job reads the table before the swap moves it
+        merged.coalesce(1).write.mode("overwrite").parquet(staged.toString)
+        EpochCommit.replaceDir(rootFs, staged, live, aside)
       }
     }
 
@@ -2588,46 +2574,23 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     *
     * STRICTLY READ-ONLY: this can be called from any manager sharing
     * the checkpoint root (a standby's /diag), while only the
-    * execution-lock owner delivers — so it must never run the swap
-    * recovery (a cross-JVM recover could promote/delete directories
-    * out from under the owner's in-flight rename pair). Instead it
-    * reads the newest COMPLETE snapshot: the live dir, else the
-    * staging dir (whose write finished before the live dir was
-    * renamed aside), else the set-aside previous table. */
+    * execution-lock owner delivers, so it only reads: the live table,
+    * else the previous one set aside mid-swap. */
   def cardinality(name: String): Option[(Long, Double)] =
     PipelineManager.sketchStripe(records.sketch(name)).synchronized {
-      // requireSuccess: a CROSS-JVM reader can see the owner's staging
-      // dir mid-write with only a subset of part files visible —
-      // Spark's job-commit `_SUCCESS` marker is what proves the write
-      // finished (the swap promotes staging only after that write
-      // returned). The live and set-aside dirs were complete tables
-      // when they were (re)named into place, so they need no marker.
-      def tryRead(dir: String,
-          requireSuccess: Boolean = false): Option[(Long, Double)] =
-        try {
-          val p = new Path(dir)
-          val hasData = rootFs.exists(p) && rootFs.listStatus(p).exists(st =>
-            st.isFile && st.getPath.getName.startsWith("part-")) &&
-            (!requireSuccess || rootFs.exists(new Path(p, "_SUCCESS")))
-          if (!hasData) None
-          else {
-            val r = graft.sketch.Sketch
-              .hllEstimate(spark.read.parquet(dir)).head()
-            Some((r.getAs[Long]("n_regs"), r.getAs[Double]("hll_est")))
-          }
-        } catch {
-          // ONLY swap-race shapes fall through to the next candidate
-          // (a dir renamed away between the existence probe and the
-          // read): IO, a parquet listing/analysis failure, or a Spark
-          // job killed by the vanished files. Anything else — OOM,
-          // interrupt, a genuine bug — propagates.
-          case _: java.io.IOException => None
-          case _: org.apache.spark.sql.AnalysisException => None
-          case _: org.apache.spark.SparkException => None
-        }
-      tryRead(records.sketch(name))
-        .orElse(tryRead(records.sketch(name) + ".staging", requireSuccess = true))
-        .orElse(tryRead(records.sketch(name) + ".old"))
+      try sketchTable(name).map { t =>
+        val r = graft.sketch.Sketch.hllEstimate(spark.read.parquet(t.toString)).head()
+        (r.getAs[Long]("n_regs"), r.getAs[Double]("hll_est"))
+      } catch {
+        // ONLY swap-race shapes read as "no estimate yet" (a dir
+        // renamed away between the existence probe and the read): IO,
+        // a parquet listing/analysis failure, or a Spark job killed by
+        // the vanished files. Anything else — OOM, interrupt, a
+        // genuine bug — propagates.
+        case _: java.io.IOException => None
+        case _: org.apache.spark.sql.AnalysisException => None
+        case _: org.apache.spark.SparkException => None
+      }
     }
 
   /** Remove orphan atomic-write temp files (`.<name>.<uuid>.tmp`)
@@ -3359,8 +3322,8 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
       specs.updateWith(name)(_.map(_.copy(status = PipelineStatus.Deleting)))
       specs.remove(name)
       PipelineManager.sketchStripe(records.sketch(name)).synchronized {
-        Seq("", ".old", ".staging").foreach(sfx =>
-          rootFs.delete(new Path(records.sketch(name) + sfx), true): Unit)
+        val (live, staged, aside) = sketchDirs(name)
+        Seq(live, aside, staged).foreach(rootFs.delete(_, true): Unit)
       }
       // Per-name durable state dies with the pipeline: a recreated
       // same-name pipeline must not inherit offsets, holdback, or a
@@ -3479,7 +3442,7 @@ object PipelineManager {
     * .DEFAULT_RETENTION). */
   val DefaultRetentionMs: Long = 3L * 24 * 60 * 60 * 1000
 
-  /** Namespace used by [[epochAppend]] when no pipeline name is given;
+  /** Namespace used by [[EpochCommit]] when no pipeline name is given;
     * reserved — [[PipelineManager.create]] rejects it as a name. */
   val ReservedNamespace: String = "default"
 
@@ -3645,7 +3608,7 @@ object PipelineManager {
 
   /**
    * Injective filesystem-safe encoding of a pipeline name (see
-   * [[epochAppend]]): ASCII alphanumerics pass through, every other
+   * [[EpochCommit]]): ASCII alphanumerics pass through, every other
    * character hex-escapes per UTF-8 byte as `_xx`. Decoding is
    * unambiguous (`_` always starts exactly one two-hex-digit escape),
    * so distinct names never share an epoch namespace.
@@ -3658,65 +3621,6 @@ object PipelineManager {
           (c >= '0' && c <= '9')) c.toString
       else f"_${b & 0xff}%02x"
     }.mkString
-
-  // ---- THE single owner of the committed-epoch file naming
-  // convention (`graft-<ns>-e<N>-p<i>.parquet`). Writers
-  // ([[epochAppend]]) name through [[epochFileName]], redo/replay
-  // paths glob through [[epochFileGlob]], and readers probing a
-  // durable store for committed data (the s23/s24 incremental-index
-  // stats accumulators, holdback drains) go through
-  // [[committedFiles]]/[[isCommittedEpochFile]] — so a change to the
-  // rename contract can never silently desynchronize a reader. ----
-
-  /** Published name of epoch `epoch`'s `i`-th part file in namespace
-    * `ns`. '-' never appears inside an encoded namespace or an epoch
-    * number, so it stays a structural delimiter. */
-  private[streaming] def epochFileName(ns: String, epoch: Long, i: Int): String =
-    s"graft-$ns-e$epoch-p$i.parquet"
-
-  /** Glob matching exactly epoch `epoch`'s published files in `ns` —
-    * the `-p` before the wildcard keeps the epoch-N glob from ever
-    * matching epoch-N0..N9 files. */
-  private[streaming] def epochFileGlob(ns: String, epoch: Long): String =
-    s"graft-$ns-e$epoch-p*.parquet"
-
-  private val CommittedEpochFileRe =
-    "graft-[A-Za-z0-9_]+-e\\d+-p\\d+\\.parquet".r
-
-  /** Does `name` follow [[epochAppend]]'s published-file naming
-    * contract (any namespace, any epoch)? `part-*` staging names and
-    * `_`-prefixed metadata never match. */
-  def isCommittedEpochFile(name: String): Boolean =
-    CommittedEpochFileRe.matches(name)
-
-  /** Epoch number parsed from a committed epoch file name or full
-    * path (`graft-<ns>-e<N>-p<i>.parquet` — '-' is structural: it
-    * never appears inside an encoded namespace or a number). The
-    * reader-side complement of [[epochFileName]]: epoch-keyed stores
-    * (the s23/s24 stats accumulators, [[EpochPartitionedStore]])
-    * discover "the newest row" from NAMES instead of reading every
-    * file — O(1) data read on a cold open no matter how many epochs
-    * the store holds. */
-  def epochOfCommittedFile(path: String): Long = {
-    val name = path.substring(path.lastIndexOf('/') + 1)
-    name.split('-')(2).drop(1).toLong
-  }
-
-  /** The committed epoch files directly under `dir` (any namespace,
-    * any epoch), sorted; empty when the dir does not exist. The
-    * reader-side half of [[epochAppend]]'s rename-then-marker
-    * contract: probing for these names is how an incremental-index
-    * loop decides whether a durable store holds committed data yet —
-    * never by hard-coding the naming at the call site. */
-  def committedFiles(dir: String,
-      conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isFile && isCommittedEpochFile(st.getPath.getName))
-      .map(_.getPath.toString).sorted
-  }
 
   /**
    * Kafka subscription + consumer options for a spec (S1-S3). An
@@ -3742,233 +3646,11 @@ object PipelineManager {
     Map(subscription) ++ passthrough ++ flow
   }
 
-  /**
-   * Apply a directory change feed to a destination directory: each
-   * record is a file event (key = relative path, value = CREATED/
-   * MODIFIED/DELETED, optional `content` column = file body). The
-   * batch is first collapsed to the last event per path (ordered by
-   * `orderCol` when given), then applied from the executors via
-   * foreachPartition — no driver-side loop, so a wide epoch fans out
-   * across the cluster. Reference: datastream-directory/
-   * DirectoryChangeProcessor.java:128-140 +
-   * DirectoryTransportProvider's create/modify/delete application.
-   */
-  /**
-   * Idempotent per-epoch parquet append — upgrades the parquet and
-   * directory transports from at-least-once to exactly-once across
-   * epoch replays. A marker under `_graft_commits/<pipeline>/<epoch>`
-   * records a committed epoch; a replayed epoch whose marker exists is
-   * a no-op. A crashed attempt left no marker, so the redo path first
-   * clears that attempt's published files (they carry pipeline+epoch
-   * in their name, so the redo is deterministic), re-stages the batch,
-   * and republishes by same-filesystem rename — failing the epoch on a
-   * false rename return. Staging and marker paths start with '_' so
-   * parquet readers of `dest` ignore them. Negative epochs (holdback
-   * replays from [[PipelineManager.resumePartitions]]) are plain
-   * appends: their dedup is the holdback subdirectory delete,
-   * documented at-least-once.
-   *
-   * Markers and published names are NAMESPACED PER PIPELINE because D1
-   * destination-reuse intentionally lets several pipelines share one
-   * destination, each with an independent epoch counter — un-namespaced
-   * markers would no-op a second pipeline's epoch N (data loss) and its
-   * redo would delete the first pipeline's files. The namespace encoding
-   * is INJECTIVE: ASCII alphanumerics pass through; every other
-   * character is hex-escaped as `_xx` per UTF-8 byte (`_` itself
-   * becomes `_5f`), so distinct names like `etl-a` and `etl.a` can
-   * never share markers — collapsing both to `etl_a` would silently
-   * re-couple two D1 destination-sharing pipelines. '-' never appears
-   * in an encoded namespace, so it stays a structural delimiter, and
-   * files are `graft-<ns>-e<epoch>-p<i>.parquet` so the epoch-N redo
-   * glob can never match epoch-N0..N9 files. The empty name maps to the
-   * reserved namespace `default` ([[PipelineManager.ReservedNamespace]];
-   * `create` rejects it as a pipeline name so a library caller using
-   * the default parameter cannot couple with a real pipeline).
-   *
-   * Migration: alphanumeric pipeline names (every name the specs and
-   * manager call sites use) encode identically before and after the
-   * injective encoding, so their markers/files carry over. A
-   * destination written by a pre-namespacing build (markers directly
-   * under `_graft_commits/<epoch>`) must be recreated — old markers are
-   * not recognized, so a replay against such a destination re-appends.
-   *
-   * Reference guarantee being matched: checkpoint-then-flush in
-   * AbstractKafkaBasedConnectorTask (the flush barrier) plus the
-   * reference's broker-side idempotent producer; here the
-   * (pipeline, epoch) id from the offset log plays the
-   * producer-(id, sequence) role.
-   */
+  /** [[EpochCommit.epochAppend]], kept here for callers that reach the
+    * commit through the manager's companion. */
   def epochAppend(batch: DataFrame, dest: String, epoch: Long,
-      pipeline: String = ""): Seq[String] = {
-    if (epoch < 0) { batch.write.mode("append").parquet(dest); return Nil }
-    // Returned so a caller can reuse the commit as the batch's
-    // materialization point (the durable-index loops read the epoch's
-    // committed files back instead of paying a second localCheckpoint
-    // job); the replayed-epoch path returns the SAME files, so a
-    // replay reads identical bytes. The negative-epoch (holdback
-    // replay) branch above returns Nil even though it wrote data —
-    // plain appends have no deterministic file names to report; do
-    // not use the return value on that path.
-    epochCommitCore(batch, dest, epoch, pipeline,
-      stage = (b, s) => b.write.mode("overwrite").parquet(s),
-      relativeGlob = ns => epochFileGlob(ns, epoch),
-      publish = (fs, staging, destPath, ns) =>
-        renameStagedParts(fs, staging, destPath, ns, epoch))
-  }
-
-  /**
-   * [[epochAppend]] for ONE DRIVER-KNOWN row of long/double/string
-   * columns — the incremental indexes' per-epoch cumulative-stats
-   * commit. The staged parquet file is written DRIVER-SIDE through
-   * parquet-hadoop (no Spark job: a 1-row LocalRelation write still
-   * pays a full job + task launch per epoch), then published through
-   * the exact marker-check → clear → rename → marker protocol of
-   * [[epochAppend]], so replay semantics and file naming are
-   * identical. Readers (spark.read.parquet) see the same column
-   * names/types/values a DataFrame write would have produced.
-   */
-  def epochAppendLocalRow(spark: org.apache.spark.sql.SparkSession,
-      dest: String, epoch: Long, pipeline: String,
-      cols: Seq[(String, Any)]): Seq[String] = {
-    require(epoch >= 0, "epochAppendLocalRow is epoch-committed only")
-    import org.apache.parquet.schema.{PrimitiveType, Types => PTypes}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    val fields = cols.map {
-      case (n, _: Long) =>
-        PTypes.required(INT64).named(n)
-      case (n, _: Double) =>
-        PTypes.required(DOUBLE).named(n)
-      case (n, _: String) =>
-        PTypes.required(BINARY)
-          .as(LogicalTypeAnnotation.stringType()).named(n)
-      case (n, v) => sys.error(
-        s"epochAppendLocalRow: unsupported column $n type ${v.getClass}")
-    }
-    val schema = new org.apache.parquet.schema.MessageType(
-      "spark_schema", fields: _*)
-    epochCommitCore(null, dest, epoch, pipeline,
-      stage = (_, stagingDir) => {
-        // COPY of the session conf: setSchema mutates the
-        // 'parquet.example.schema' key as a side channel to the
-        // writer, and two concurrent committers (or any future caller
-        // with different columns) would race on the session-global
-        // Configuration — each stage call gets its own.
-        val conf = new org.apache.hadoop.conf.Configuration(
-          spark.sparkContext.hadoopConfiguration)
-        org.apache.parquet.hadoop.example.GroupWriteSupport
-          .setSchema(schema, conf)
-        val file = new Path(stagingDir, "part-00000")
-        val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-          .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
-            .fromPath(file, conf))
-          .withConf(conf)
-          .withCompressionCodec(
-            org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-          .build()
-        try {
-          val g = new org.apache.parquet.example.data.simple.SimpleGroup(schema)
-          cols.foreach {
-            case (n, v: Long) => g.add(n, v)
-            case (n, v: Double) => g.add(n, v)
-            case (n, v: String) => g.add(n, v)
-            case _ => () // unreachable: rejected while building fields
-          }
-          w.write(g)
-        } finally w.close()
-      },
-      relativeGlob = ns => epochFileGlob(ns, epoch),
-      publish = (fs, staging, destPath, ns) =>
-        renameStagedParts(fs, staging, destPath, ns, epoch),
-      hadoopConf = Some(spark.sparkContext.hadoopConfiguration))
-  }
-
-  /** One spelling of the exactly-once redo protocol shared by
-    * [[epochAppend]] and [[epochAppendPartitioned]]: marker check →
-    * stage → clear the previous attempt's published files → rename
-    * into place → marker. A future change to any step lands in both
-    * stores by construction. */
-  private def epochCommitCore(batch: DataFrame, dest: String, epoch: Long,
-      pipeline: String,
-      stage: (DataFrame, String) => Unit,
-      relativeGlob: String => String,
-      publish: (org.apache.hadoop.fs.FileSystem, Path, Path, String) => Unit,
-      // driver-side stagers (epochAppendLocalRow) have no batch frame
-      // to derive the FS from; they pass the session's conf instead
-      hadoopConf: Option[org.apache.hadoop.conf.Configuration] = None)
-      : Seq[String] = {
-    val ns = namespaceOf(pipeline)
-    val destPath = new Path(dest)
-    val fs = destPath.getFileSystem(hadoopConf.getOrElse(
-      batch.sparkSession.sparkContext.hadoopConfiguration))
-    def committedFiles: Seq[String] =
-      Option(fs.globStatus(new Path(destPath, relativeGlob(ns))))
-        .toSeq.flatten.map(_.getPath.toString).sorted
-    val marker = new Path(destPath, s"_graft_commits/$ns/$epoch")
-    if (fs.exists(marker)) return committedFiles // replayed epoch: already committed
-    val staging = new Path(destPath, s"_staging-$ns-$epoch")
-    fs.delete(staging, true)
-    stage(batch, staging.toString)
-    Option(fs.globStatus(new Path(destPath, relativeGlob(ns))))
-      .foreach(_.foreach(st => fs.delete(st.getPath, false)))
-    publish(fs, staging, destPath, ns)
-    fs.delete(staging, true)
-    fs.mkdirs(marker.getParent)
-    fs.create(marker, true).close()
-    committedFiles
-  }
-
-  /** Rename one staged directory's part files into `toDir` under the
-    * committed-epoch naming contract, failing the epoch on a false
-    * rename return. */
-  private def renameStagedParts(fs: org.apache.hadoop.fs.FileSystem,
-      fromDir: Path, toDir: Path, ns: String, epoch: Long): Unit = {
-    val parts = fs.listStatus(fromDir)
-      .filter(_.getPath.getName.startsWith("part-")).sortBy(_.getPath.getName)
-    parts.zipWithIndex.foreach { case (st, i) =>
-      val target = new Path(toDir, epochFileName(ns, epoch, i))
-      if (!fs.rename(st.getPath, target))
-        sys.error(s"rename ${st.getPath} -> $target failed; failing epoch $epoch")
-    }
-  }
-
-  /**
-   * [[epochAppend]] for a HIVE-PARTITIONED destination: the batch is
-   * staged `partitionBy(partCol)` and each staged partition's part
-   * files rename into `dest/<partCol>=<v>/` under the same
-   * `graft-<ns>-e<N>-p<i>.parquet` contract (file index per partition
-   * directory), with ONE marker for the whole epoch — an epoch is
-   * visible in all of its partitions or none. This is what lets a
-   * streaming ingest maintain a partition-pruned serving store (the
-   * s24 incremental lexical index appends postings by term-hash
-   * bucket, so a query's bucket predicate keeps pruning at the
-   * directory level as the store grows). Readers recover the
-   * partition column from the directory name — leaf-file reads must
-   * set `basePath` to `dest` ([[DurableIndexView]] does).
-   *
-   * Same exactly-once semantics as [[epochAppend]]: replays return
-   * the committed files; a crashed attempt's published files are
-   * cleared by the redo before re-staging. Negative epochs are not
-   * supported here (partitioned holdback replay has no use case).
-   */
-  def epochAppendPartitioned(batch: DataFrame, dest: String, partCol: String,
-      epoch: Long, pipeline: String = ""): Seq[String] = {
-    require(epoch >= 0, "epochAppendPartitioned is epoch-committed only")
-    epochCommitCore(batch, dest, epoch, pipeline,
-      stage = (b, s) =>
-        b.write.mode("overwrite").partitionBy(partCol).parquet(s),
-      relativeGlob = ns => s"$partCol=*/${epochFileGlob(ns, epoch)}",
-      publish = (fs, staging, destPath, ns) =>
-        fs.listStatus(staging)
-          .filter(s => s.isDirectory &&
-            s.getPath.getName.startsWith(s"$partCol="))
-          .sortBy(_.getPath.getName)
-          .foreach { pd =>
-            val targetDir = new Path(destPath, pd.getPath.getName)
-            fs.mkdirs(targetDir)
-            renameStagedParts(fs, pd.getPath, targetDir, ns, epoch)
-          })
-  }
+      pipeline: String = ""): Seq[String] =
+    EpochCommit.epochAppend(batch, dest, epoch, pipeline)
 
   /**
    * One streaming band-admission epoch — THE loop body shared by the
@@ -3989,12 +3671,23 @@ object PipelineManager {
     val bb = batch.filter(col("band").isNotNull)
     val verdictFrame = graft.dedup.Dedup.indexDedupBatch(
       index, bb, batch.select(col("doc")).distinct())
-    val vFiles = epochAppend(verdictFrame.coalesce(1), outDir, epoch, outPipe)
+    val vFiles = EpochCommit.epochAppend(verdictFrame.coalesce(1), outDir, epoch, outPipe)
     val verdicts = if (vFiles.isEmpty) verdictFrame.limit(0)
       else spark.read.parquet(vFiles: _*)
     graft.dedup.Dedup.admitBands(bb, verdicts).coalesce(1)
   }
 
+  /**
+   * Apply a directory change feed to a destination directory: each
+   * record is a file event (key = relative path, value = CREATED/
+   * MODIFIED/DELETED, optional `content` column = file body). The
+   * batch is first collapsed to the last event per path (ordered by
+   * `orderCol` when given), then applied from the executors via
+   * foreachPartition — no driver-side loop, so a wide epoch fans out
+   * across the cluster. Reference: datastream-directory/
+   * DirectoryChangeProcessor.java:128-140 +
+   * DirectoryTransportProvider's create/modify/delete application.
+   */
   def applyDirectoryOps(batch: DataFrame, dest: String,
       orderCol: Option[String]): Unit = {
     val hasContent = batch.columns.contains("content")

@@ -58,7 +58,7 @@ class IncrementalLexIndexSpec extends SparkTestBase {
     // the stats store is swept too: cumulative rows below the
     // compaction FRONTIER are subsumed by the row at it (the sweep is
     // deferred one tick, so rows from the frontier on linger)
-    assert(PipelineManager.committedFiles(s"$dir/stats",
+    assert(EpochCommit.committedFiles(s"$dir/stats",
         spark.sparkContext.hadoopConfiguration).size <= 4,
       "stats store must not grow one file per epoch across compactions")
   }
@@ -151,7 +151,7 @@ class IncrementalLexIndexSpec extends SparkTestBase {
     // fabricate exactly what the legacy code produced: a full rewrite
     // of the store under the un-leveled generation namespace plus a
     // ROOT-level single-number record
-    PipelineManager.epochAppendPartitioned(
+    EpochCommit.epochAppendPartitioned(
       spark.read.parquet(s"$dir/postings").repartition(col("tb")),
       s"$dir/postings", "tb", 1L, "t.g"): Unit
     val out = fs.create(
@@ -202,9 +202,9 @@ class IncrementalLexIndexSpec extends SparkTestBase {
     // epoch 5) — with NO records. Without rollback the store holds
     // rows multiple times and every score multiplies.
     val poison = spark.read.parquet(s"$dir/postings").repartition(col("tb"))
-    PipelineManager.epochAppendPartitioned(
+    EpochCommit.epochAppendPartitioned(
       poison, s"$dir/postings", "tb", 5L, "t.g"): Unit
-    PipelineManager.epochAppendPartitioned(
+    EpochCommit.epochAppendPartitioned(
       poison, s"$dir/postings", "tb", 5L, "t.g2"): Unit
     val reopened = new IncrementalLexIndex(spark, dir, name = "t")
     assert(serveRows(reopened) == want,

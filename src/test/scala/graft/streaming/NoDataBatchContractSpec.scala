@@ -50,7 +50,9 @@ class NoDataBatchContractSpec extends SparkTestBase {
     val srcDir = Files.createTempDirectory("graft-ndb-src-").toString
     val ckpt = Files.createTempDirectory("graft-ndb-ckpt-").toString
     val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val ndbBefore = spark.conf.get(key)
+    // set-before only: a key found unset is unset again, never left
+    // set to its default for the rest of the battery
+    val ndbBefore = spark.conf.getAll.get(key)
     spark.conf.set(key, noDataBatches.toString)
 
     val schema = batch0.toDF("user_id", "event_id", "event_type", "ts").schema
@@ -91,7 +93,7 @@ class NoDataBatchContractSpec extends SparkTestBase {
     try {
       runBatch(batch0)
       runBatch(batch1)
-    } finally spark.conf.set(key, ndbBefore)
+    } finally ndbBefore.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     sink.synchronized(sink.toSet)
   }
 

@@ -568,12 +568,12 @@ class PipelineManagerSpec extends SparkTestBase {
   test("committedFiles is the one owner of the epoch-file naming contract") {
     // readers (s23/s24 stats probes, index loops) must see exactly the
     // files epochAppend published — and nothing staged, partial, or
-    // foreign — through PipelineManager.committedFiles, never a
+    // foreign — through EpochCommit.committedFiles, never a
     // re-spelled glob. This test pins both halves: the published names
     // and the probe's filter.
     val dest = Files.createTempDirectory("graft-cf-").toString
     val conf = spark.sparkContext.hadoopConfiguration
-    assert(PipelineManager.committedFiles(s"$dest/absent", conf).isEmpty)
+    assert(EpochCommit.committedFiles(s"$dest/absent", conf).isEmpty)
     val published =
       PipelineManager.epochAppend(
         Seq((1L, "a")).toDF("id", "v").coalesce(1), dest, 0L, "pipeA") ++
@@ -588,11 +588,11 @@ class PipelineManagerSpec extends SparkTestBase {
     val fs = new org.apache.hadoop.fs.Path(dest).getFileSystem(conf)
     fs.create(new org.apache.hadoop.fs.Path(dest,
       "graft-pipeA-e3.parquet"), true).close() // no -p<i>: not committed
-    assert(PipelineManager.committedFiles(dest, conf) == published.sorted)
-    assert(PipelineManager.isCommittedEpochFile("graft-default-e0-p0.parquet"))
-    assert(!PipelineManager.isCommittedEpochFile("part-00000-abc.parquet"))
-    assert(!PipelineManager.isCommittedEpochFile("graft-pipeA-e3.parquet"))
-    assert(!PipelineManager.isCommittedEpochFile("_graft_holdback_meta"))
+    assert(EpochCommit.committedFiles(dest, conf) == published.sorted)
+    assert(EpochCommit.isCommittedEpochFile("graft-default-e0-p0.parquet"))
+    assert(!EpochCommit.isCommittedEpochFile("part-00000-abc.parquet"))
+    assert(!EpochCommit.isCommittedEpochFile("graft-pipeA-e3.parquet"))
+    assert(!EpochCommit.isCommittedEpochFile("_graft_holdback_meta"))
   }
 
   test("epochAppendPartitioned: per-bucket names, one whole-epoch marker, exactly-once redo") {
@@ -600,7 +600,7 @@ class PipelineManagerSpec extends SparkTestBase {
     val fs = new org.apache.hadoop.fs.Path(dest)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val b0 = Seq((1L, 0L), (2L, 1L), (3L, 0L)).toDF("id", "tb")
-    val files = PipelineManager.epochAppendPartitioned(
+    val files = EpochCommit.epochAppendPartitioned(
       b0.repartition(col("tb")), dest, "tb", 0L, "pp")
     assert(files.nonEmpty && files.forall(f => f.contains("/tb=") &&
       f.split('/').last.matches("graft-pp-e0-p\\d+\\.parquet")),
@@ -608,7 +608,7 @@ class PipelineManagerSpec extends SparkTestBase {
     // ONE marker for the whole epoch — visible in all partitions or none
     assert(fs.exists(new org.apache.hadoop.fs.Path(dest, "_graft_commits/pp/0")))
     // replay with DIFFERENT data: the marker wins, the SAME files return
-    val replay = PipelineManager.epochAppendPartitioned(
+    val replay = EpochCommit.epochAppendPartitioned(
       Seq((9L, 9L)).toDF("id", "tb"), dest, "tb", 0L, "pp")
     assert(replay == files)
     // partition discovery recovers tb from the directory names
@@ -617,7 +617,7 @@ class PipelineManagerSpec extends SparkTestBase {
       .collect().toSet == Set((1L, 0L), (2L, 1L), (3L, 0L)))
     // crashed attempt (files published, marker lost): redo replaces
     fs.delete(new org.apache.hadoop.fs.Path(dest, "_graft_commits/pp/0"), false)
-    PipelineManager.epochAppendPartitioned(b0, dest, "tb", 0L, "pp"): Unit
+    EpochCommit.epochAppendPartitioned(b0, dest, "tb", 0L, "pp"): Unit
     assert(spark.read.parquet(dest).count() == 3)
   }
 
@@ -735,7 +735,7 @@ class PipelineManagerSpec extends SparkTestBase {
           System.currentTimeMillis() < deadline) Thread.sleep(25L)
       pm.stop("mc") // per-member: mc's owner explicitly stopped it
       assert(pm.get("mc").get.status == PipelineStatus.Stopped)
-      val cFiles = PipelineManager.committedFiles(mc.destinationConnection,
+      val cFiles = EpochCommit.committedFiles(mc.destinationConnection,
         spark.sparkContext.hadoopConfiguration).size
       pm.delete("mb") // unrelated member's removal triggers a restart
       assert(pm.get("mc").get.status == PipelineStatus.Stopped,
@@ -746,7 +746,7 @@ class PipelineManagerSpec extends SparkTestBase {
       while (!fs.exists(new org.apache.hadoop.fs.Path(
           s"$root/group-ma/commits/1")) &&
           System.currentTimeMillis() < d2) Thread.sleep(25L)
-      assert(PipelineManager.committedFiles(mc.destinationConnection,
+      assert(EpochCommit.committedFiles(mc.destinationConnection,
         spark.sparkContext.hadoopConfiguration).size == cFiles,
         "a stopped member's destination must not receive after the restart")
       pm.stop("ma", force = true)
@@ -1173,12 +1173,12 @@ class PipelineManagerSpec extends SparkTestBase {
       Seq((2L, "e1")).toDF("k", "v").coalesce(1), src2, 1, "updsrc")
     awaitTrue("epoch 1 commit")(commitDone(1))
     awaitTrue("post-resume delivery to the new destination")(
-      PipelineManager.committedFiles(d3, conf).nonEmpty)
+      EpochCommit.committedFiles(d3, conf).nonEmpty)
     pm2.stop("qa", force = true)
     assert(spark.read.parquet(d3).as[(Long, String)].collect().toSet ==
       Set((2L, "e1")),
       "resumed member must deliver to the NEW destination only")
-    assert(PipelineManager.committedFiles(d2, conf).size == 1,
+    assert(EpochCommit.committedFiles(d2, conf).size == 1,
       "the OLD destination must receive nothing after the update")
     pm2.close()
   }
@@ -1715,7 +1715,7 @@ class PipelineManagerSpec extends SparkTestBase {
     while (!fsB.exists(new org.apache.hadoop.fs.Path(dz)) &&
         System.currentTimeMillis() < dl2) Thread.sleep(20L)
     val dl3 = System.currentTimeMillis() + 90000L
-    while (PipelineManager.committedFiles(dz,
+    while (EpochCommit.committedFiles(dz,
         spark.sparkContext.hadoopConfiguration).isEmpty &&
         System.currentTimeMillis() < dl3) Thread.sleep(20L)
     pmA.stop("xm")
@@ -2668,18 +2668,27 @@ class PipelineManagerSpec extends SparkTestBase {
   }
 }
 
-/** A local filesystem with two one-shot faults. [[SpecReadHookFs.arm]]
-  * runs a hook right after a file has been read and before the reader
-  * gets its bytes: it forces a write to land between a reconcile
-  * tick's read and its put, or (a throwing hook) fails the open. On a
-  * file that does not exist, the hook runs between the miss and the
-  * reader seeing it.
+/** The library's local filesystem with hooks, for crash and race
+  * tests. [[SpecReadHookFs.arm]] runs a hook right after a file has
+  * been read and before the reader gets its bytes: it forces a write
+  * to land between a reconcile tick's read and its put, or (a
+  * throwing hook) fails the open. On a file that does not exist, the
+  * hook runs between the miss and the reader seeing it.
   * [[SpecReadHookFs.armCreate]] makes the next create of a file whose
   * name starts with the armed prefix fail after that many bytes — the
-  * bytes written so far land, as in a writer crashing mid-write. */
-final class SpecReadHookFs extends org.apache.hadoop.fs.LocalFileSystem {
-  import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, Path}
-  override def open(f: Path, bufferSize: Int): FSDataInputStream =
+  * bytes written so far land, as in a writer crashing mid-write.
+  * [[SpecReadHookFs.failAt]] fails the Nth call of a named op before
+  * it runs, as in a process killed at that call, and
+  * [[SpecReadHookFs.census]] counts calls per op. Both see only
+  * OUTERMOST calls (a glob's inner listings are part of the glob) and
+  * name a call by its path — a rename by its destination. */
+final class SpecReadHookFs
+    extends org.apache.hadoop.fs.LocalFileSystem(new graft.fs.NioRawLocalFileSystem) {
+  import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, Path}
+  import org.apache.hadoop.fs.permission.FsPermission
+  import SpecReadHookFs.call
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = call("open", f) {
     SpecReadHookFs.take(f.getName) match {
       case None => super.open(f, bufferSize)
       case Some(hook) if !pathToFile(f).exists() =>
@@ -2692,12 +2701,12 @@ final class SpecReadHookFs extends org.apache.hadoop.fs.LocalFileSystem {
         hook()
         super.open(copy, bufferSize)
     }
+  }
 
-  override def create(f: Path,
-      permission: org.apache.hadoop.fs.permission.FsPermission,
+  override def create(f: Path, permission: FsPermission,
       overwrite: Boolean, bufferSize: Int, replication: Short,
       blockSize: Long, progress: org.apache.hadoop.util.Progressable)
-      : FSDataOutputStream = {
+      : FSDataOutputStream = call("create", f) {
     val out = super.create(f, permission, overwrite, bufferSize,
       replication, blockSize, progress)
     SpecReadHookFs.takeCreate(f.getName) match {
@@ -2714,6 +2723,21 @@ final class SpecReadHookFs extends org.apache.hadoop.fs.LocalFileSystem {
         }, null)
     }
   }
+
+  override def rename(src: Path, dst: Path): Boolean =
+    call("rename", dst)(super.rename(src, dst))
+  override def delete(f: Path, recursive: Boolean): Boolean =
+    call("delete", f)(super.delete(f, recursive))
+  override def mkdirs(f: Path): Boolean = call("mkdirs", f)(super.mkdirs(f))
+  override def mkdirs(f: Path, permission: FsPermission): Boolean =
+    call("mkdirs", f)(super.mkdirs(f, permission))
+  override def exists(f: Path): Boolean = call("exists", f)(super.exists(f))
+  override def getFileStatus(f: Path): FileStatus =
+    call("getFileStatus", f)(super.getFileStatus(f))
+  override def listStatus(f: Path): Array[FileStatus] =
+    call("listStatus", f)(super.listStatus(f))
+  override def globStatus(f: Path): Array[FileStatus] =
+    call("globStatus", f)(super.globStatus(f))
 }
 
 object SpecReadHookFs {
@@ -2744,6 +2768,60 @@ object SpecReadHookFs {
       Some(a._2)
     } else None
   }
+
+  /** A call the hooks saw: its op and its path, qualified. */
+  final case class Call(op: String, path: String)
+
+  /** Fails the `n`-th (1-based) outermost driver-side call of `op`
+    * whose path satisfies `where` by throwing before the call runs;
+    * [[fired]] then turns true. One shot: the calls after it run. */
+  private final class Fault(val op: String, val where: String => Boolean, n: Int) {
+    private val seen = new java.util.concurrent.atomic.AtomicInteger
+    def hits(c: Call): Boolean = c.op == op && where(c.path) && seen.incrementAndGet() == n
+  }
+  private val fault = new java.util.concurrent.atomic.AtomicReference[Fault]
+  def failAt(op: String, n: Int, where: String => Boolean): Unit = {
+    fired.set(false)
+    fault.set(new Fault(op, where, n))
+  }
+  def disarm(): Unit = fault.set(null)
+
+  private val depth = ThreadLocal.withInitial[Int](() => 0)
+  private val recorders =
+    new java.util.concurrent.CopyOnWriteArrayList[Call => Unit]
+
+  /** Runs `body` as an outermost call when no hooked call encloses it. */
+  private def call[T](op: String, p: org.apache.hadoop.fs.Path)(body: => T): T = {
+    val d = depth.get
+    if (d == 0) {
+      val c = Call(op, p.toUri.getPath)
+      recorders.forEach(_(c))
+      val f = fault.get
+      if (f != null && !isExecutorThread && f.hits(c) && fault.compareAndSet(f, null)) {
+        fired.set(true)
+        throw new java.io.IOException(s"injected crash at $op $p")
+      }
+    }
+    depth.set(d + 1)
+    try body finally depth.set(d)
+  }
+
+  private def isExecutorThread: Boolean =
+    Thread.currentThread.getName.startsWith("Executor task launch worker")
+
+  /** The outermost driver-side calls `body` makes whose path satisfies
+    * `where`, in order (executor tasks' calls are left out). */
+  def record(where: String => Boolean)(body: => Unit): Seq[Call] = {
+    val calls = new java.util.concurrent.ConcurrentLinkedQueue[Call]
+    val rec: Call => Unit = c => if (!isExecutorThread && where(c.path)) calls.add(c): Unit
+    recorders.add(rec)
+    try body finally recorders.remove(rec)
+    calls.toArray(Array.empty[Call]).toSeq
+  }
+
+  /** [[record]], counted per op. */
+  def census(where: String => Boolean)(body: => Unit): Map[String, Int] =
+    record(where)(body).groupBy(_.op).view.mapValues(_.size).toMap
 
   /** Run `body` with every `file:` filesystem the session creates
     * being a fresh [[SpecReadHookFs]]. */

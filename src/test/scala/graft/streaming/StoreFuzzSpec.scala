@@ -91,7 +91,7 @@ class StoreFuzzSpec extends SparkTestBase {
             if (store.hasData) {
               val gen = nextEpoch + 1000 + step // beyond any real epoch
               val ns = Seq("fz.g", "fz.g1", "fz.g2")(rnd.nextInt(3))
-              PipelineManager.epochAppendPartitioned(
+              EpochCommit.epochAppendPartitioned(
                 spark.read.parquet(dir).repartition(col("pc")),
                 dir, "pc", gen, ns): Unit
               store = new EpochPartitionedStore(spark, dir, "pc", "fz",

@@ -30,7 +30,7 @@ class TwsSessionContractSpec extends SparkTestBase {
     val ckpt = Files.createTempDirectory("tws-sess-ckpt-").toString
     val outDir = Files.createTempDirectory("tws-sess-out-").toString
     val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val provBefore = spark.conf.get(provKey)
+    val provBefore = spark.conf.getAll.get(provKey) // unset again if unset
     spark.conf.set(provKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val gapMs = 100000L // 100 s of event-time silence
@@ -81,7 +81,7 @@ class TwsSessionContractSpec extends SparkTestBase {
       // user 3 (expiry 1100s > wm 1000s) never fired — state is alive,
       // not emitted: condition 3.
       assert(!after2.exists(_._1 == 3L))
-    } finally spark.conf.set(provKey, provBefore)
+    } finally provBefore.fold(spark.conf.unset(provKey))(spark.conf.set(provKey, _))
   }
 
   test("a timer fires when the watermark exactly EQUALS its expiry") {
@@ -89,7 +89,7 @@ class TwsSessionContractSpec extends SparkTestBase {
     val ckpt = Files.createTempDirectory("tws-eq-ckpt-").toString
     val outDir = Files.createTempDirectory("tws-eq-out-").toString
     val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val provBefore = spark.conf.get(provKey)
+    val provBefore = spark.conf.getAll.get(provKey) // unset again if unset
     spark.conf.set(provKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val gapMs = 100000L
@@ -128,6 +128,6 @@ class TwsSessionContractSpec extends SparkTestBase {
       // the oracle's `g >= m + G` conditions to `>`.
       assert(out == Set((1L, 1L, 1000L)),
         s"watermark == expiry must fire the timer, got $out")
-    } finally spark.conf.set(provKey, provBefore)
+    } finally provBefore.fold(spark.conf.unset(provKey))(spark.conf.set(provKey, _))
   }
 }
