@@ -19,23 +19,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Generated-class cache sized to the workload, not the 100-entry
-      // default: this suite compiles thousands of whole-stage sources
-      // (197 gates; the incremental-serve loops re-plan per epoch), and
-      // at 100 entries the JVM-global cache thrashes — a single warmed
-      // s31 run showed 531 Janino compiles (~5 s). Scale-neutral (the
-      // cache is driver/executor-local and bounded; ~tens of KB per
-      // entry), measured −29..−40 % on s29/s30/s31 same-window n=3.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession("32")
 
     // Warm the machinery once (parquet reader, codegen, shuffle, AQE)
     // so per-query numbers reflect steady state, not JVM startup.

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Repeated-run micro-bench for individual gated queries: the per-round
  * bench runs every query once (n=1), which cannot distinguish a real
@@ -15,22 +13,12 @@ import org.apache.spark.sql.SparkSession
 object BenchRepeat {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val n = args.headOption.map(_.toInt).getOrElse(5)
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else Seq("q15_registry_frame", "q03_hash_shard", "q14_scalar_funcs",
         "q04_seek_chunk", "q06_paging")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Bench's shipping session (static conf — must be set here)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession("32")
 
     val results = names.map { name =>
       val fn = SparkEntry.queries(name)

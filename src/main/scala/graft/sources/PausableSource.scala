@@ -51,21 +51,22 @@ object PausableSource {
     StructField("idx", LongType, nullable = false),
     StructField("payload", StringType, nullable = false)))
 
-  /** Pause-control file: comma/whitespace-separated partition ids.
-    * Absent or empty file = nothing paused. The pause set is
-    * RECONCILED control input, not a schema the query dies on: a
-    * malformed token (stray character, torn read during a concurrent
-    * edit) is dropped — throwing here happens inside latestOffset on
-    * the driver and would kill the whole streaming query over an
-    * operator's fat-fingered control write; the next micro-batch
-    * re-reads whatever the file then says. */
-  def readPauseSet(path: String): Set[Int] = {
+  /** THE pause-control file reader, shared with
+    * [[PausingMicroBatchStream]]: comma/whitespace-separated tokens
+    * (partition ids here, component names there). Absent or empty
+    * file = nothing paused. The pause set is RECONCILED control
+    * input, not a schema the query dies on: a token that names
+    * nothing (stray character, torn read during a concurrent edit)
+    * is dropped by the caller — throwing here happens inside
+    * latestOffset on the driver and would kill the whole streaming
+    * query over an operator's fat-fingered control write; the next
+    * micro-batch re-reads whatever the file then says. */
+  def readPauseTokens(path: String): Set[String] = {
     if (path.isEmpty) return Set.empty
     val p = Paths.get(path)
     if (!Files.exists(p)) return Set.empty
     new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      .split("[,\\s]+").iterator.map(_.trim).filter(_.nonEmpty)
-      .flatMap(_.toIntOption).toSet
+      .split("[,\\s]+").iterator.map(_.trim).filter(_.nonEmpty).toSet
   }
 }
 
@@ -132,7 +133,7 @@ final class PausableStream(rows: Long, parts: Int, batchPer: Long, size: Int,
     * SyntheticStream). */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[VectorOffset].next
-    val paused = PausableSource.readPauseSet(pauseFile)
+    val paused = PausableSource.readPauseTokens(pauseFile).flatMap(_.toIntOption)
     // The row budget is shared by the partitions that can actually
     // advance: dividing by the TOTAL partition count would shrink
     // every micro-batch while partitions are paused (2 of 4 paused =

@@ -108,15 +108,6 @@ final class PausingMicroBatchStream(
   extends MicroBatchStream with SupportsAdmissionControl
   with SupportsTriggerAvailableNow {
 
-  private def pausedNow(): Set[String] = {
-    import java.nio.file.{Files, Paths}
-    if (pauseFile.isEmpty) return Set.empty
-    val p = Paths.get(pauseFile)
-    if (!Files.exists(p)) return Set.empty
-    new String(Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8)
-      .split("[,\\s]+").iterator.map(_.trim).filter(_.nonEmpty).toSet
-  }
-
   override def initialOffset(): Offset = inner.initialOffset()
   override def deserializeOffset(json: String): Offset =
     inner.deserializeOffset(json)
@@ -141,7 +132,7 @@ final class PausingMicroBatchStream(
     * set shrinks. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val advanced = inner.latestOffset(start, limit)
-    val paused = pausedNow()
+    val paused = PausableSource.readPauseTokens(pauseFile)
     if (paused.isEmpty) return advanced
     val s = codec.split(start.json())
     val held = codec.split(advanced.json()).map { case (k, v) =>

@@ -688,12 +688,15 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     override def onQueryProgress(e: QueryProgressEvent): Unit = {
       val row = e.progress.observedMetrics.get("graft_metrics")
       // only queries owned by THIS manager — several managers can
-      // share one session without cross-polluting each other's metrics
-      if (row != null && queries.containsKey(e.progress.name)) {
-        lastMetrics.put(e.progress.name,
-          Map("events" -> row.getAs[Long]("events"),
-            "bytes" -> Option(row.getAs[Any]("bytes"))
-              .map(_.asInstanceOf[Long]).getOrElse(0L)))
+      // share one session without cross-polluting each other's metrics.
+      // Matched by run id, not query name: a group query ("group-<prefix>")
+      // is registered under every member, and each member reports it.
+      if (row != null) {
+        val m = Map("events" -> row.getAs[Long]("events"),
+          "bytes" -> Option(row.getAs[Any]("bytes"))
+            .map(_.asInstanceOf[Long]).getOrElse(0L))
+        queries.forEach((n, q) =>
+          if (q.runId == e.progress.runId) lastMetrics.put(n, m): Unit)
       }
     }
   }
@@ -744,9 +747,8 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
         // (Coordinator.java:2470-2472): the two streams now form one
         // task group, discoverable via [[findGroup]].
         spec.copy(destinationConnection = existing.destinationConnection,
-          metadata = spec.metadata + (PipelineManager.TaskPrefixKey ->
-            existing.metadata.getOrElse(PipelineManager.TaskPrefixKey,
-              existing.name)))
+          metadata = spec.metadata +
+            (PipelineManager.TaskPrefixKey -> prefixOf(existing)))
       case Some(existing) =>
         // BYOT with its own destination but a deduped (shared) source
         // still joins the task group — the runtime half of D1 (SURVEY
@@ -754,9 +756,8 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
         // group from ONE query, fanning each micro-batch to the
         // group's distinct destinations instead of scanning the
         // source once per member.
-        spec.copy(metadata = spec.metadata + (PipelineManager.TaskPrefixKey ->
-          existing.metadata.getOrElse(PipelineManager.TaskPrefixKey,
-            existing.name)))
+        spec.copy(metadata = spec.metadata +
+          (PipelineManager.TaskPrefixKey -> prefixOf(existing)))
       case _ if spec.destinationConnection.isEmpty =>
         // auto-provision a destination (the analog of the reference's
         // Coordinator.createTopic): durable sinks get a real path.
@@ -800,8 +801,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * start). The restart reuses the transform/trigger the running
     * query was started with ([[groupRuns]]). */
   private def rejoinRunningGroup(spec: PipelineSpec): Unit = {
-    val prefix = spec.metadata.getOrElse(PipelineManager.TaskPrefixKey,
-      spec.name)
+    val prefix = prefixOf(spec)
     PipelineManager.membershipStripe(prefix).synchronized {
       val siblings = findGroup(spec.name).filterNot(_.name == spec.name)
       val runningShared = siblings
@@ -832,25 +832,12 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
               // member is gone again (same signal delete() sends)
               try hooks.onStateChange(spec.name, PipelineStatus.Deleting)
               catch { case e2: Throwable => e.addSuppressed(e2) }
-              try startGroup(siblings.head.name, transform, trigger,
-                reAdmitStopped = false): Unit
-              catch {
-                case e2: Throwable =>
-                  e.addSuppressed(e2)
-                  // restore ALSO failed: no query is running, so the
-                  // truthful state is Stopped (delete()'s analogous
-                  // failure path) — never phantom-Ready members whose
-                  // locks a dead start left behind
-                  siblings.foreach { m =>
-                    try {
-                      releaseLock(m.name)
-                      specs.updateWith(m.name)(
-                        _.map(_.copy(status = PipelineStatus.Stopped)))
-                      specs.get(m.name).foreach(persistSpec)
-                      hooks.onStateChange(m.name, PipelineStatus.Stopped)
-                    } catch { case e3: Throwable => e.addSuppressed(e3) }
-                  }
-              }
+              // a failed restore leaves the siblings Stopped too
+              // (delete()'s analogous failure path)
+              try stoppedOnFailure(siblings.map(_.name))(
+                startGroup(siblings.head.name, transform, trigger,
+                  reAdmitStopped = false): Unit)
+              catch { case e2: Throwable => e.addSuppressed(e2) }
               throw e
           }
       }
@@ -1005,7 +992,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     // spec persists and the CALLER owns making the next start's
     // checkpoint consistent with it. (Residual cross-JVM window: a
     // start that read the spec and acquires the lock exactly between
-    // this check and the persist below — startInPool re-reads the
+    // this check and the persist below — the launcher re-reads the
     // spec after acquiring, so only a sub-RPC interleaving can still
     // pair an old-source query with a new-source spec.)
     if (newSpec.connector != baseline.connector ||
@@ -1019,8 +1006,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
       // can ever run again — and a per-member-stopped member's
       // released lock would otherwise sneak it past the lock check
       // below while the siblings' shared query still runs.
-      val prefix = baseline.metadata.getOrElse(
-        PipelineManager.TaskPrefixKey, name)
+      val prefix = prefixOf(baseline)
       // sibling scan over the DURABLE population too (a peer-created
       // group member is invisible in this manager's map), fail-closed
       // on an unreadable store — wrongly accepting a grouped source
@@ -1029,9 +1015,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
       require(durableForGroup.isDefined, "spec store unreadable; " +
         s"cannot validate $name's task-group membership — retry")
       require(!(specs.values ++ durableForGroup.get).exists(s =>
-          s.name != name &&
-          s.metadata.getOrElse(PipelineManager.TaskPrefixKey, s.name)
-            == prefix),
+          s.name != name && prefixOf(s) == prefix),
         s"pipeline $name belongs to task group '$prefix'; group " +
           "sources must stay consistent — delete and recreate to " +
           "re-point the source")
@@ -1468,8 +1452,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     }
     val byPrefix: Map[String, Seq[String]] =
       specs.values.toSeq
-        .groupBy(s => s.metadata.getOrElse(PipelineManager.TaskPrefixKey,
-          s.name))
+        .groupBy(prefixOf)
         .map { case (p, ms) => p -> ms.map(_.name) }
     def membersOf(name: String): Seq[String] =
       specs.get(name)
@@ -1625,8 +1608,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
       writeReassignRequest(name, previous.destinationConnection)
       return
     }
-    val prefix = updated.metadata.getOrElse(PipelineManager.TaskPrefixKey,
-      name)
+    val prefix = prefixOf(updated)
     // q82: a catalog-named pipeline's reassignment restart must
     // materialize the UPDATED spec's recipe — the remembered closure
     // captured the OLD params at the last start, so restarting it
@@ -1701,25 +1683,12 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
           // (locks released) exactly like a restart failure — never
           // Ready-with-no-query members holding locks.
           members.foreach(m => stopQueryOf(m.name))
-          try {
+          // the update stands either way
+          stoppedOnFailure(members.map(_.name)) {
             val (transform, trigger) = thunk()
             moveOldDestState()
             startGroup(name, transform, trigger,
               reAdmitStopped = false): Unit
-          } catch {
-            case e: Throwable =>
-              // the update stands; leave the group in the truthful
-              // Stopped state rather than Ready-with-no-query
-              members.foreach { m =>
-                try {
-                  releaseLock(m.name)
-                  specs.updateWith(m.name)(
-                    _.map(_.copy(status = PipelineStatus.Stopped)))
-                  specs.get(m.name).foreach(persistSpec)
-                  hooks.onStateChange(m.name, PipelineStatus.Stopped)
-                } catch { case e2: Throwable => e.addSuppressed(e2) }
-              }
-              throw e
           }
         case _ =>
           // q74: a RUNNING SOLO pipeline's re-point restarts its own
@@ -1727,7 +1696,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
           // (DatastreamResources.java:410 → Coordinator.java:1680
           // handleLeaderDoAssignment), not only group members. The
           // delivery closure captured the OLD spec at start
-          // ([[startLocked]]'s transportWriter), so without a restart
+          // ([[holdbackSplit]]'s transportWriter), so without a restart
           // the persisted spec and the running delivery diverge
           // silently, forever. Excluded ONLY when both sides are
           // memory: a memory sink cannot be (re)started on an
@@ -1751,7 +1720,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
               // the state move sits INSIDE the rollback scope — same
               // discipline as the group branch above
               stopQueryOf(name)
-              try {
+              stoppedOnFailure(Seq(name)) {
                 val (transform, trigger) = thunk()
                 moveOldDestState()
                 // restart from the per-name checkpoint: committed
@@ -1759,19 +1728,6 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
                 // replays into the NEW destination (the update's
                 // contract — the stream follows its spec)
                 start(name, transform, trigger): Unit
-              } catch {
-                case e: Throwable =>
-                  // the update stands; leave the member in the
-                  // truthful Stopped state rather than
-                  // Ready-with-no-query holding its lock
-                  try {
-                    releaseLock(name)
-                    specs.updateWith(name)(
-                      _.map(_.copy(status = PipelineStatus.Stopped)))
-                    specs.get(name).foreach(persistSpec)
-                    hooks.onStateChange(name, PipelineStatus.Stopped)
-                  } catch { case e2: Throwable => e.addSuppressed(e2) }
-                  throw e
               }
             case _ =>
               // no running query to reassign (or no remembered run to
@@ -2073,39 +2029,22 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
    * Start the query for a created spec with a transform chain.
    * Checkpointing (the reference's ZookeeperCheckpointProvider) is the
    * built-in offset/commit log under [[DurableRecords.checkpoint]].
-   *
-   * Multi-tenant isolation (SURVEY §7.3 hard part 4): every pipeline's
-   * jobs run in their own scheduler pool `graft-<name>` — the Spark
-   * counterpart of the reference running each task in its own
-   * connector thread (`AbstractKafkaConnector.java:222-245`), so one
-   * hot pipeline cannot starve the others once the session runs the
-   * FAIR scheduler. The pool local-property is inherited by the
-   * micro-batch execution thread at start() and cleared from the
-   * caller afterwards.
+   * Jobs run in the pipeline's own scheduler pool `graft-<name>`;
+   * [[launch]] documents the whole start protocol.
    */
   def start(name: String, transform: DataFrame => DataFrame,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    // Restore (not clear) the caller's pool afterwards — a caller that
-    // had already scoped its own jobs to a pool keeps that scope.
-    val prevPool = spark.sparkContext.getLocalProperty("spark.scheduler.pool")
-    spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"graft-$name")
-    try {
-      val q = startInPool(name, transform, trigger)
-      // remember the run shape only for a start that SUCCEEDED — the
-      // q74 update-restart must never restart from a shape that never
-      // produced a live query
-      soloRuns.put(name, (transform, trigger))
-      // a successful start IS the pipeline running: a status restored
-      // or collapsed to Stopped (constructor load, reconcile liveness)
-      // flips back to the truthful Ready. No hook when already Ready —
-      // the create→start path must not fire a duplicate transition.
-      if (!specs.get(name).map(_.status).contains(PipelineStatus.Ready)) {
-        specs.updateWith(name)(_.map(_.copy(status = PipelineStatus.Ready)))
-        specs.get(name).foreach(persistSpec)
-        hooks.onStateChange(name, PipelineStatus.Ready)
-      }
-      q
-    } finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", prevPool)
+    val spec = specs.getOrElse(name, sys.error(s"unknown pipeline $name"))
+    launch(name, s"graft-$name", records.checkpoint(name),
+      foreign = Seq(records.groupCheckpoint(prefixOf(spec))),
+      members = Seq(name), locked = Seq(name), readmit = Seq(name),
+      (transform, trigger), soloRuns, name) { live =>
+      // the memory sink is test-only and non-durable (it cannot
+      // recover from a checkpoint), so paused-partition holdback does
+      // not apply — use a durable transport for pause/resume semantics
+      if (live.head.transport == "memory") None
+      else Some(holdbackSplit(live.head))
+    }
   }
 
   /**
@@ -2131,143 +2070,212 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
    * created while the query runs joins through
    * [[rejoinRunningGroup]]'s restart (create() triggers it), and a
    * member created between runs joins on the next start.
+   *
+   * An explicit group (re)start runs every member that is not held
+   * back: members stopped per-member in an earlier run rejoin here
+   * (their stop forfeited the epochs delivered while stopped — that
+   * is stop's released-resources contract; a member that must NOT
+   * lose epochs is paused, not stopped). Reassignment restarts
+   * (`reAdmitStopped = false`: create/delete/update on a running
+   * group) keep them stopped: an unrelated member's membership change
+   * must never resurrect a sibling its owner explicitly stopped, nor
+   * pull its lock back from the pool (another live manager may own
+   * it — that would abort a restart the member takes no part in).
    */
   def startGroup(name: String, transform: DataFrame => DataFrame,
       trigger: Trigger = Trigger.AvailableNow(),
       reAdmitStopped: Boolean = true): StreamingQuery = {
-    if (demotedFlag) throw new IllegalStateException(s"manager $instanceId " +
-      "is demoted (lease expired); it must not start queries")
     val members = findGroup(name)
     require(members.nonEmpty, s"unknown pipeline $name")
     val srcs = members.map(_.sourceConnection).distinct
     require(srcs.size == 1,
       s"task group spans ${srcs.size} sources; group fan-out needs exactly one")
-    val prefix = members.head.metadata
-      .getOrElse(PipelineManager.TaskPrefixKey, members.head.name)
-    val groupCkpt = records.groupCheckpoint(prefix)
-    // Members that STAY stopped across this start (reassignment
-    // restarts pass reAdmitStopped=false): their resources were
-    // released, so this start must neither flip them Ready nor pull
-    // their locks back from the pool (another live manager may own
-    // one — that would abort a restart the member takes no part in).
-    val stayStopped: Set[String] =
-      if (reAdmitStopped) Set.empty
-      else members.filter(m =>
-          specs.get(m.name).exists(_.status == PipelineStatus.Stopped))
-        .map(_.name).toSet
-    // All-or-nothing lock acquisition, and EVERYTHING after it rolls
-    // back on failure: a member already owned by another live manager
-    // — or a guard/build/start failure below — must not leave members
-    // locked by an instance that runs no query. Only locks THIS call
-    // newly took are released (locks held before the call stay held).
-    val newlyLocked = scala.collection.mutable.ListBuffer.empty[String]
+    val prefix = prefixOf(members.head)
+    val names = members.map(_.name)
+    val stopped = members.filter(_.status == PipelineStatus.Stopped).map(_.name)
+    launch(s"group-$prefix", s"graft-$prefix", records.groupCheckpoint(prefix),
+      foreign = names.map(records.checkpoint), members = names,
+      locked = if (reAdmitStopped) names else names.diff(stopped),
+      readmit = if (reAdmitStopped) stopped else Nil,
+      (transform, trigger), groupRuns, prefix)(live => Some(fanOut(live)))
+  }
+
+  /**
+   * THE start protocol behind [[start]] and [[startGroup]]: one run is
+   * one StreamingQuery `queryName` over checkpoint `ckpt`, registered
+   * under every name in `members`. The callers pass only what differs
+   * between a solo and a group run; the order is this launcher's:
+   *  1. The demote fence refuses a demoted manager.
+   *  2. Single owner BEFORE any query exists (D4;
+   *     DatastreamTaskImpl.java:126-139 acquire): the locks of
+   *     `locked` are taken all-or-nothing. A failure anywhere later
+   *     releases the locks this call newly took, and only those (a
+   *     lock held before the call, as across a pause, stays held): an
+   *     instance must never sit on a lock while running no query.
+   *  3. The member specs are re-read under the locks: an update()
+   *     that persisted between the caller's read and the acquire wins,
+   *     and a concurrent delete() fails this start instead of being
+   *     resurrected. (Cross-manager mutations are routed to the lock
+   *     owner, q76–q79.)
+   *  4. The checkpoint-kind guard: `ckpt` absent while one of `foreign`
+   *     (the checkpoints of the other run kind) exists means the
+   *     members' offsets live elsewhere — starting here would redeliver
+   *     every epoch their destinations already received. Refused: a
+   *     group run restarts with startGroup, a solo one with start.
+   *  5. Multi-tenant isolation (SURVEY §7.3 hard part 4): the run's
+   *     jobs — the query's, inherited by its micro-batch thread at
+   *     start — go to scheduler pool `pool`, the counterpart of the
+   *     reference running each task in its own connector thread
+   *     (AbstractKafkaConnector.java:222-245), so one hot pipeline
+   *     cannot starve the others under the FAIR scheduler. The
+   *     caller's pool is restored (not cleared) afterwards.
+   *  6. The query is built, then every member's previous query is
+   *     stopped and unregistered (no double delivery beside the new
+   *     one, and no writer left in `ckpt`), the checkpoint's orphan
+   *     temps are swept and the query starts with `sink`'s
+   *     `foreachBatch` body (None: the memory sink).
+   *  7. The handles are registered, and the demote fence is checked
+   *     again: the entry check and the registration are not atomic,
+   *     so either demote() finds the handles and stops them, or this
+   *     thread sees the flag and unwinds (query stopped, handles and
+   *     new locks dropped).
+   *  8. The run is remembered under `runKey` for reassignment
+   *     restarts (only a run that produced a live query), and the
+   *     `readmit` members not already Ready flip to Ready — only now,
+   *     so a start that fails leaves them as they were, and with no
+   *     hook for a member already Ready (create→start reports no
+   *     duplicate transition). No batch body runs before this step is
+   *     done, so the first epoch's admission already sees the flips.
+   */
+  private def launch(queryName: String, pool: String, ckpt: Path,
+      foreign: Seq[Path], members: Seq[String], locked: Seq[String],
+      readmit: Seq[String], run: (DataFrame => DataFrame, Trigger),
+      runs: TrieMap[String, (DataFrame => DataFrame, Trigger)], runKey: String)(
+      sink: Seq[PipelineSpec] => Option[(DataFrame, Long) => Unit]): StreamingQuery = {
+    requireNotDemoted()
+    val prevPool = spark.sparkContext.getLocalProperty("spark.scheduler.pool")
+    spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
+    val launched = new java.util.concurrent.CountDownLatch(1)
     try {
-      members.filterNot(m => stayStopped(m.name))
-        .foreach(m => if (acquireLock(m.name)) newlyLocked += m.name)
-      // Mirror of startInPool's solo-after-group guard, other
-      // direction: a member whose last run was SOLO has its offsets in
-      // the per-name checkpoint; a group start from an empty group
-      // checkpoint would redeliver every epoch that member's
-      // destination already received.
-      if (!rootFs.exists(groupCkpt)) members.foreach { m =>
-        if (rootFs.exists(records.checkpoint(m.name)))
-          throw new IllegalStateException(s"pipeline ${m.name} last ran solo " +
-            "(per-name checkpoint exists, group checkpoint does not); a group " +
-            "start would redeliver its delivered epochs")
-      }
-      // A still-active member query must not keep running beside the
-      // shared query (double delivery with no handle left to stop it):
-      // stop and unregister every member's previous query first.
-      members.foreach(m => stopQueryOf(m.name))
-      // An explicit group (re)start runs every member that is not held
-      // back: members stopped per-member in an earlier run rejoin here
-      // (their stop forfeited the epochs delivered while stopped —
-      // that is stop's released-resources contract; a member that must
-      // NOT lose epochs is paused, not stopped). Reassignment restarts
-      // (create/delete on a running group) keep them stopped: an
-      // unrelated member's membership change must never resurrect a
-      // sibling its owner explicitly stopped.
-      members.filter(m =>
-          specs.get(m.name).exists(_.status == PipelineStatus.Stopped))
-        .filterNot(m => stayStopped(m.name))
-        .foreach { m =>
-          specs.updateWith(m.name)(_.map(_.copy(status = PipelineStatus.Ready)))
-          specs.get(m.name).foreach(persistSpec)
-          hooks.onStateChange(m.name, PipelineStatus.Ready)
+      val newlyLocked = scala.collection.mutable.ListBuffer.empty[String]
+      var started = Option.empty[StreamingQuery]
+      val q = try {
+        locked.foreach(n => if (acquireLock(n)) newlyLocked += n)
+        val live = members.map(n =>
+          specs.getOrElse(n, sys.error(s"unknown pipeline $n")))
+        if (!rootFs.exists(ckpt)) foreign.find(rootFs.exists).foreach { other =>
+          throw new IllegalStateException(s"$queryName: $ckpt does not " +
+            s"exist but $other does — the pipeline last ran as the other " +
+            "run kind (solo vs task group), and starting here would " +
+            "redeliver its delivered epochs; restart it with the verb it " +
+            "last ran under (start or startGroup)")
         }
-      // Per-DESTINATION delivery groups (members sharing a destination
-      // deliver once — the reference's duplicate-stream contract). The
-      // leader carries the transport identity: its name namespaces the
-      // destination's epoch markers AND the dest-group's holdback, so
-      // held epochs replay into exactly the namespace live delivery
-      // uses — exactly-once by the same markers. Leadership is STICKY
-      // ([[destLeader]]): a membership change never silently moves the
-      // marker namespace out from under an uncommitted epoch.
-      val destGroups = members.groupBy(_.destinationConnection).toSeq
-        .sortBy(_._1)
-        .map { case (_, ms) =>
-          val leader = destLeader(ms)
-          (ms, leader, transportWriter(leader))
-        }
-      val prevPool = spark.sparkContext.getLocalProperty("spark.scheduler.pool")
-      spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"graft-$prefix")
-      try {
-        sweepCheckpointTemps(groupCkpt)
-        // metrics ride the shared query (observed under the group query
-        // name "group-<prefix>": one scan → one set of counters)
-        val q = observed(transform(source(members.head))).writeStream
-          .queryName(s"group-$prefix")
+        val out = observed(run._1(source(live.head)))
+        members.foreach(stopQueryOf)
+        sweepCheckpointTemps(ckpt)
+        val writer = out.writeStream
+          .queryName(queryName)
           .outputMode("append")
-          .option("checkpointLocation", groupCkpt.toString)
-          .trigger(trigger)
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            // one materialization serves every sink
-            batch.persist()
-            try destGroups.foreach { case (ms, leader, write) =>
-              // Per-member admission (q68; the reference's force=false
-              // pause scope, DatastreamResources.java:355-377), judged
-              // at batch time from the live spec store:
-              //  - any member Ready → the destination receives (and any
-              //    held epochs drain first — self-healing after a
-              //    resume that raced an in-flight batch);
-              //  - members only Paused → the epoch lands in the
-              //    dest-group's durable holdback, never dropped;
-              //  - members only Stopped/absent → skipped (stop released
-              //    the member's resources; its sink forfeits epochs
-              //    until it rejoins).
-              val statuses = ms.flatMap(m => specs.get(m.name)).map(_.status)
-              if (statuses.contains(PipelineStatus.Ready)) {
-                replayGroupHoldback(ms)
-                write(batch, epoch)
-                ms.filter(_.metadata.contains(PipelineManager.SketchColumnKey))
-                  .foreach(updateCardinalitySketch(_, batch))
-              } else if (statuses.contains(PipelineStatus.Paused)) {
-                val hbDir = records.groupHoldback(leader.name)
-                stampHoldbackOwner(hbDir, leader.name,
-                  leader.destinationConnection)
-                EpochCommit.epochAppend(batch,
-                  hbDir.toString, epoch, leader.name): Unit
-              }
-            }
-            finally { batch.unpersist(); () }
-          }
-          .start()
-        members.foreach(m => queries.put(m.name, q))
-        groupRuns.put(prefix, (transform, trigger))
-        // Same demote() race close as startLocked: re-check AFTER the
-        // handles are registered so either demote() sweeps them or
-        // this thread unwinds itself (the catch below releases the
-        // newly-taken locks).
-        if (demotedFlag) {
-          try if (q.isActive) q.stop()
-          finally members.foreach(m => queries.remove(m.name))
-          throw new IllegalStateException(s"manager $instanceId demoted " +
-            "during group start; the query was stopped")
+          .option("checkpointLocation", ckpt.toString)
+          .trigger(run._2)
+        val q = sink(live).fold(writer.format("memory").start()) { body =>
+          writer.foreachBatch { (batch: DataFrame, epoch: Long) =>
+            launched.await(); body(batch, epoch)
+          }.start()
         }
+        started = Some(q)
+        members.foreach(queries.put(_, q))
+        if (demotedFlag) throw new IllegalStateException(s"manager " +
+          s"$instanceId demoted during start; the query was stopped")
         q
-      } finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", prevPool)
-    } catch {
-      case e: Throwable => newlyLocked.foreach(releaseLock); throw e
+      } catch {
+        case e: Throwable =>
+          started.foreach { q =>
+            try if (q.isActive) q.stop()
+            finally members.foreach(queries.remove(_, q))
+          }
+          newlyLocked.foreach(releaseLock)
+          throw e
+      }
+      runs.put(runKey, run)
+      readmit.foreach(n => if (!specs.get(n).exists(_.status == PipelineStatus.Ready))
+        transition(n, PipelineStatus.Ready))
+      q
+    } finally {
+      launched.countDown()
+      spark.sparkContext.setLocalProperty("spark.scheduler.pool", prevPool)
+    }
+  }
+
+  /** The solo `foreachBatch` body: rows of paused partition values go
+    * to the pipeline's durable holdback, the rest deliver. */
+  private def holdbackSplit(spec: PipelineSpec): (DataFrame, Long) => Unit = {
+    val deliver = transportWriter(spec)
+    val hbPath = records.holdback(spec.name).toString
+    (batch, epoch) => pausedPartitions.get(spec.name) match {
+      case Some((pcol, values)) if values.nonEmpty =>
+        val isPaused = col(pcol).isin(values.toSeq: _*)
+        // Held rows land BEFORE the epoch commits: the offset log may
+        // advance past them, but they are durable and replayed by
+        // resumePartitions — never dropped. Each partition value owns
+        // a subdirectory (__pp=<value>) so resuming one value never
+        // rewrites another's rows.
+        batch.filter(isPaused)
+          .withColumn("__pp", col(pcol).cast("string"))
+          .write.mode("append").partitionBy("__pp").parquet(hbPath)
+        deliver(batch.filter(!isPaused), epoch)
+        updateCardinalitySketch(spec, batch.filter(!isPaused))
+      case _ =>
+        deliver(batch, epoch)
+        updateCardinalitySketch(spec, batch)
+    }
+  }
+
+  /** The group `foreachBatch` body: one materialization of the batch
+    * delivered once per DISTINCT member destination. The leader of each
+    * destination group carries the transport identity: its name
+    * namespaces the destination's epoch markers AND the dest-group's
+    * holdback, so held epochs replay into exactly the namespace live
+    * delivery uses — exactly-once by the same markers. Leadership is
+    * STICKY ([[destLeader]]): a membership change never silently moves
+    * the marker namespace out from under an uncommitted epoch. */
+  private def fanOut(members: Seq[PipelineSpec]): (DataFrame, Long) => Unit = {
+    val destGroups = members.groupBy(_.destinationConnection).toSeq
+      .sortBy(_._1)
+      .map { case (_, ms) =>
+        val leader = destLeader(ms)
+        (ms, leader, transportWriter(leader))
+      }
+    (batch, epoch) => {
+      // one materialization serves every sink
+      batch.persist()
+      try destGroups.foreach { case (ms, leader, write) =>
+        // Per-member admission (q68; the reference's force=false
+        // pause scope, DatastreamResources.java:355-377), judged
+        // at batch time from the live spec store:
+        //  - any member Ready → the destination receives (and any
+        //    held epochs drain first — self-healing after a
+        //    resume that raced an in-flight batch);
+        //  - members only Paused → the epoch lands in the
+        //    dest-group's durable holdback, never dropped;
+        //  - members only Stopped/absent → skipped (stop released
+        //    the member's resources; its sink forfeits epochs
+        //    until it rejoins).
+        val statuses = ms.flatMap(m => specs.get(m.name)).map(_.status)
+        if (statuses.contains(PipelineStatus.Ready)) {
+          replayGroupHoldback(ms)
+          write(batch, epoch)
+          ms.filter(_.metadata.contains(PipelineManager.SketchColumnKey))
+            .foreach(updateCardinalitySketch(_, batch))
+        } else if (statuses.contains(PipelineStatus.Paused)) {
+          val hbDir = records.groupHoldback(leader.name)
+          stampHoldbackOwner(hbDir, leader.name,
+            leader.destinationConnection)
+          EpochCommit.epochAppend(batch,
+            hbDir.toString, epoch, leader.name): Unit
+        }
+      }
+      finally { batch.unpersist(); () }
     }
   }
 
@@ -2327,10 +2335,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * lifecycle verbs on a member mean per-member admission, not
     * query-wide control. */
   private def isGroupRun(name: String): Boolean =
-    specs.get(name).exists { spec =>
-      val prefix = spec.metadata.getOrElse(PipelineManager.TaskPrefixKey, spec.name)
-      rootFs.exists(records.groupCheckpoint(prefix))
-    }
+    specs.get(name).exists(s => rootFs.exists(records.groupCheckpoint(prefixOf(s))))
 
   /** Durable holdback of a destination group inside a running group
     * ([[DurableRecords.groupHoldback]]): epochs withheld while every
@@ -2478,8 +2483,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
 
   /** A6/A7: per-epoch throughput metrics ride the query itself via
     * observe() — no second pass over the data; the listener collects
-    * them (the reference's EventProducer SLA counters). Shared by the
-    * solo and group start paths. */
+    * them (the reference's EventProducer SLA counters). */
   private def observed(transformed: DataFrame): DataFrame =
     if (transformed.columns.contains("value")) {
       // octet_length: true payload size for binary AND string values
@@ -2494,36 +2498,6 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     } else
       transformed.observe("graft_metrics",
         count(lit(1)).as("events"), max(lit(0L)).as("bytes"))
-
-  private def startInPool(name: String, transform: DataFrame => DataFrame,
-      trigger: Trigger): StreamingQuery = {
-    if (demotedFlag) throw new IllegalStateException(s"manager $instanceId " +
-      "is demoted (lease expired); it must not start queries")
-    val spec = specs.getOrElse(name, sys.error(s"unknown pipeline $name"))
-    // Single-owner guarantee BEFORE any query exists: a second live
-    // manager's start is rejected here with no StreamingQuery, no
-    // checkpoint touch, no delivery (D4; DatastreamTaskImpl.java
-    // :126-139 acquire). A failure ANYWHERE below (guard, source
-    // build, .start()) releases a lock this call newly took — an
-    // instance must never sit on a lock while running no query.
-    val newlyLocked = acquireLock(name)
-    try {
-      // RE-READ the spec now that the lock is held: a SAME-JVM
-      // update() that persisted between the entry read above and the
-      // acquire must win (its source-identity guard saw our lock only
-      // if our create landed first — whichever side lost
-      // re-reads/rejects, so a running query and the persisted spec
-      // agree), and a concurrent delete() must fail this start, not
-      // be resurrected from the stale entry-time read. Cross-JVM
-      // updates are NOT seen here (specs is this manager's in-memory
-      // store): the deployment contract is leader-routed mutations
-      // (the lease/demotion machinery exists to keep one writer), so
-      // a non-leader manager should not be mutating at all.
-      val current = specs.getOrElse(name,
-        sys.error(s"unknown pipeline $name"))
-      startLocked(name, current, transform, trigger)
-    } catch { case e: Throwable => if (newlyLocked) releaseLock(name); throw e }
-  }
 
   /** A sketch table's (live, staged, aside) dirs: the register table,
     * its next version while written, and the previous version while
@@ -2606,7 +2580,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * real entry is absent. Swept only in the metadata-log dirs
     * (offsets/commits, plus the sources log one level down) — never
     * the state stores, whose own files are large and self-managed —
-    * and only from start paths, which hold the execution lock with
+    * and only from [[launch]], which holds the execution lock with
     * the previous query stopped. */
   private def sweepCheckpointTemps(ckpt: Path): Unit = {
     def sweepFlat(dir: Path): Unit =
@@ -2622,71 +2596,6 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     if (rootFs.exists(sources))
       rootFs.listStatus(sources).filter(_.isDirectory)
         .foreach(d => sweepFlat(d.getPath))
-  }
-
-  private def startLocked(name: String, spec: PipelineSpec,
-      transform: DataFrame => DataFrame, trigger: Trigger): StreamingQuery = {
-    // A member whose last run was group-scoped has its offsets in the
-    // GROUP checkpoint; a solo restart would begin from an empty
-    // per-name checkpoint and redeliver every epoch the group already
-    // delivered. Fail loudly instead — the group restarts via
-    // startGroup.
-    val prefix = spec.metadata.getOrElse(PipelineManager.TaskPrefixKey, name)
-    val groupCkpt = records.groupCheckpoint(prefix)
-    val ckpt = records.checkpoint(name)
-    if (rootFs.exists(groupCkpt) && !rootFs.exists(ckpt))
-      throw new IllegalStateException(s"pipeline $name last ran as part of " +
-        s"task group '$prefix' (shared checkpoint); restart it with startGroup")
-    sweepCheckpointTemps(ckpt)
-    val out = observed(transform(source(spec)))
-    val writer = out.writeStream
-      .queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(trigger)
-    val q = spec.transport match {
-      case "memory" =>
-        // Test-only, non-durable sink (cannot recover from a
-        // checkpoint); paused-partition holdback does not apply — use
-        // a durable transport for pause/resume semantics.
-        writer.format("memory").start()
-      case _ =>
-        val deliver = transportWriter(spec)
-        val hbPath = records.holdback(name).toString
-        writer.foreachBatch { (batch: DataFrame, epoch: Long) =>
-          pausedPartitions.get(name) match {
-            case Some((pcol, values)) if values.nonEmpty =>
-              val isPaused = col(pcol).isin(values.toSeq: _*)
-              // Held rows land BEFORE the epoch commits: the offset
-              // log may advance past them, but they are durable and
-              // replayed by resumePartitions — never dropped. Each
-              // partition value owns a subdirectory (__pp=<value>) so
-              // resuming one value never rewrites another's rows.
-              batch.filter(isPaused)
-                .withColumn("__pp", col(pcol).cast("string"))
-                .write.mode("append").partitionBy("__pp").parquet(hbPath)
-              deliver(batch.filter(!isPaused), epoch)
-              updateCardinalitySketch(spec, batch.filter(!isPaused))
-            case _ =>
-              deliver(batch, epoch)
-              updateCardinalitySketch(spec, batch)
-          }
-        }.start()
-    }
-    queries.put(name, q)
-    // Close the demote() race: the flag check at entry and this
-    // registration are not atomic, so a heartbeat-thread demotion can
-    // land between them — demote() would then have swept an empty map
-    // while this query runs on. Re-checking AFTER the put means one
-    // side always sees the other: either demote() finds the handle and
-    // stops it, or this thread sees the flag and unwinds itself (the
-    // startInPool rollback releases a newly-taken lock on throw).
-    if (demotedFlag) {
-      try if (q.isActive) q.stop() finally queries.remove(name)
-      throw new IllegalStateException(s"manager $instanceId demoted " +
-        "during start; the query was stopped")
-    }
-    q
   }
 
   /**
@@ -2883,21 +2792,21 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     rebuildProgress(name).getOrElse(start)
   }
 
-  /** Pause = stop the query; offsets stay in the checkpoint. */
+  /** THE demote refusal. A demoted instance must not start a query
+    * or run ANY state-mutating verb: each of them writes the shared
+    * durable spec store (persistSpec) — and resume/applyFlowDecisions
+    * additionally DELIVER held epochs — on the strength of locks a
+    * reclaiming peer may legitimately own by now; the reclaimer's
+    * writes are authoritative. Guards [[launch]], the lifecycle verbs,
+    * create/update, applyFlowDecisions and the request consumers. */
+  private def requireNotDemoted(): Unit =
+    if (demotedFlag) throw new IllegalStateException(s"manager $instanceId " +
+      "is demoted (lease expired); it must not start queries or mutate " +
+      "pipeline state")
+
   /** Authorize a mutating lifecycle call against the Authorizer hook
     * — the reference authorizes EVERY DMS mutation, not just
     * create/update (Coordinator.java:2371-2393). */
-  /** A demoted instance must not run ANY state-mutating verb: each of
-    * them writes the shared durable spec store (persistSpec) — and
-    * resume/applyFlowDecisions additionally DELIVER held epochs — on
-    * the strength of locks a reclaiming peer may legitimately own by
-    * now. Same fencing as start/startGroup; the reclaimer's writes
-    * are authoritative. Guards the lifecycle verbs AND create/update/
-    * applyFlowDecisions. */
-  private def requireNotDemoted(): Unit =
-    if (demotedFlag) throw new IllegalStateException(s"manager $instanceId " +
-      "is demoted (lease expired); it must not mutate pipeline state")
-
   private def authorizeLifecycle(name: String, owner: String): PipelineSpec = {
     requireNotDemoted()
     val spec = specs.getOrElse(name, sys.error(s"unknown pipeline $name"))
@@ -2905,6 +2814,36 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
       s"owner $owner not authorized for $name")
     spec
   }
+
+  /** `s`'s task-group prefix: the TaskPrefixKey create() stamps, else
+    * (pre-group legacy state) its own name. */
+  private def prefixOf(s: PipelineSpec): String =
+    s.metadata.getOrElse(PipelineManager.TaskPrefixKey, s.name)
+
+  /** THE persisted status transition: the local spec, the durable
+    * record, then the state-change hook (which fires even for a name
+    * no longer registered). */
+  private def transition(name: String, to: PipelineStatus.Value): Unit = {
+    specs.updateWith(name)(_.map(_.copy(status = to)))
+    specs.get(name).foreach(persistSpec)
+    hooks.onStateChange(name, to)
+  }
+
+  /** Run a restart of `names`; if it fails, no query runs for them, so
+    * each falls into the truthful Stopped state — lock released,
+    * Stopped persisted and notified — never Ready-with-no-query
+    * holding a lock. The restart's own error is rethrown, carrying any
+    * rollback failure as suppressed. */
+  private def stoppedOnFailure(names: Seq[String])(restart: => Unit): Unit =
+    try restart
+    catch {
+      case e: Throwable =>
+        names.foreach { n =>
+          try { releaseLock(n); transition(n, PipelineStatus.Stopped) }
+          catch { case e2: Throwable => e.addSuppressed(e2) }
+        }
+        throw e
+    }
 
   /**
    * Pause. Solo-run pipelines stop their query (offsets stay in the
@@ -2943,11 +2882,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     // other shape stops the target queries (the members' own solo
     // queries, or — group-run force — the shared query, swept once)
     if (!(groupRun && !force)) targets.foreach(stopQueryOf)
-    targets.foreach { n =>
-      specs.updateWith(n)(_.map(_.copy(status = PipelineStatus.Paused)))
-      specs.get(n).foreach(persistSpec)
-      hooks.onStateChange(n, PipelineStatus.Paused)
-    }
+    targets.foreach(transition(_, PipelineStatus.Paused))
   }
 
   /**
@@ -2999,10 +2934,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
               // the last member's stop ended the group run: drop the
               // remembered transform closure here too, not only on
               // the force path
-              specs.get(n)
-                .map(s => s.metadata
-                  .getOrElse(PipelineManager.TaskPrefixKey, s.name))
-                .foreach(groupRuns.remove(_): Unit)
+              specs.get(n).map(prefixOf).foreach(groupRuns.remove(_): Unit)
             }
           }
         } else {
@@ -3018,17 +2950,13 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
         // live manager may now acquire it (contrast pause, which keeps
         // the assignment AND the lock)
         releaseLock(n)
-        specs.updateWith(n)(_.map(_.copy(status = PipelineStatus.Stopped)))
-        specs.get(n).foreach(persistSpec)
-        hooks.onStateChange(n, PipelineStatus.Stopped)
+        transition(n, PipelineStatus.Stopped)
       }
     }
     // a force stop ends the whole group run: drop the remembered
     // transform/trigger so the caller's closure is not retained for
     // the manager's lifetime (resume/startGroup re-remember on restart)
-    if (force) specs.get(name)
-      .map(s => s.metadata.getOrElse(PipelineManager.TaskPrefixKey, s.name))
-      .foreach(groupRuns.remove(_): Unit)
+    if (force) specs.get(name).map(prefixOf).foreach(groupRuns.remove(_): Unit)
   }
 
   /**
@@ -3047,12 +2975,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     if (isGroupRun(name)) {
       resumeGroupFlipAndReplay(name, force)
       Option(queries.get(name)).getOrElse(startGroup(name, transform))
-    } else {
-      specs.updateWith(name)(_.map(_.copy(status = PipelineStatus.Ready)))
-      specs.get(name).foreach(persistSpec)
-      hooks.onStateChange(name, PipelineStatus.Ready)
-      start(name, transform)
-    }
+    } else start(name, transform) // flips Ready once the query runs
   }
 
   /** Cross-manager-safe resume (q77's return leg): no transform — a
@@ -3102,18 +3025,15 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
   /** [[resume]]'s group-path status flip + holdback drain, shared
     * with [[resumeRemembered]] so the direct and routed paths can
     * never diverge. Drains the holdback of every dest group that now
-    * has a Ready member. Leaders are computed exactly as startGroup
-    * computes them (lexicographically-first member per destination),
-    * so the replay lands in the namespace live delivery uses. The
+    * has a Ready member. [[replayGroupHoldback]] delivers each
+    * holdback dir under the owner stamped on it, so the replay lands
+    * in the marker namespace its epochs were held under, whichever
+    * member leads the destination now ([[destLeader]] is sticky). The
     * batch loop's own self-healing drain covers a resume that races
-    * an in-flight epoch (both paths serialize per leader). */
+    * an in-flight epoch (both paths serialize per destination). */
   private def resumeGroupFlipAndReplay(name: String, force: Boolean): Unit = {
     val targets = if (force) findGroup(name).map(_.name).toSet else Set(name)
-    targets.foreach { n =>
-      specs.updateWith(n)(_.map(_.copy(status = PipelineStatus.Ready)))
-      specs.get(n).foreach(persistSpec)
-      hooks.onStateChange(n, PipelineStatus.Ready)
-    }
+    targets.foreach(transition(_, PipelineStatus.Ready))
     findGroup(name).groupBy(_.destinationConnection).values
       .filter(ms => ms.exists(m => targets.contains(m.name)) &&
         ms.exists(m =>
@@ -3220,9 +3140,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * actual start. */
   private def resumeRemembered(name: String, force: Boolean): Unit =
     if (isGroupRun(name)) {
-      val prefix = specs.get(name)
-        .map(s => s.metadata.getOrElse(PipelineManager.TaskPrefixKey, s.name))
-        .getOrElse(name)
+      val prefix = specs.get(name).fold(name)(prefixOf)
       // judged BEFORE any flip/persist/replay: an enactment that
       // cannot proceed (crashed owner emptied groupRuns and the spec
       // declares no catalog transform; no query handle survives) must
@@ -3247,15 +3165,9 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
       // restart, or one issued against a live pipeline): the resume
       // is the Ready flip alone — starting a second query on the
       // same checkpoint is never the answer
-      specs.updateWith(name)(_.map(_.copy(status = PipelineStatus.Ready)))
-      specs.get(name).foreach(persistSpec)
-      hooks.onStateChange(name, PipelineStatus.Ready)
+      transition(name, PipelineStatus.Ready)
     } else catalogRun(name).orElse(soloRuns.get(name)) match {
-      case Some((transform, trigger)) =>
-        specs.updateWith(name)(_.map(_.copy(status = PipelineStatus.Ready)))
-        specs.get(name).foreach(persistSpec)
-        hooks.onStateChange(name, PipelineStatus.Ready)
-        start(name, transform, trigger): Unit
+      case Some((transform, trigger)) => start(name, transform, trigger): Unit
       case None => throw new IllegalStateException(
         s"no remembered solo run for $name on this manager and its " +
           "spec names no catalog transform; resume with an explicit " +
@@ -3305,8 +3217,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * query ([[delete]] routed everything else away). */
   private def deleteLocal(name: String): Unit = {
     val deletedSpec = specs.get(name)
-    val prefix = deletedSpec
-      .map(s => s.metadata.getOrElse(PipelineManager.TaskPrefixKey, s.name))
+    val prefix = deletedSpec.map(prefixOf)
     PipelineManager.membershipStripe(prefix.getOrElse(name)).synchronized {
       // capture BEFORE the stop: was the group's shared query live,
       // and who survives to restart it
@@ -3374,8 +3285,7 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
       soloRuns.remove(name): Unit
       // last member gone -> the remembered group run (and its captured
       // transform closure) has nothing left to restart
-      prefix.filterNot(p => specs.values.exists(s =>
-          s.metadata.getOrElse(PipelineManager.TaskPrefixKey, s.name) == p))
+      prefix.filterNot(p => specs.values.exists(prefixOf(_) == p))
         .foreach(groupRuns.remove(_): Unit)
       hooks.onStateChange(name, PipelineStatus.Deleting)
       // Exactly-once across a leader change: if the deleted member
@@ -3398,23 +3308,10 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
         p <- prefix
         (transform, trigger) <- groupRuns.get(p)
       } {
-        try startGroup(survivors.minBy(_.name).name, transform, trigger,
-          reAdmitStopped = false): Unit
-        catch {
-          case e: Throwable =>
-            // the deletion stands; leave the group in the truthful
-            // Stopped state rather than Ready-with-no-query
-            survivors.foreach { m =>
-              try {
-                releaseLock(m.name)
-                specs.updateWith(m.name)(
-                  _.map(_.copy(status = PipelineStatus.Stopped)))
-                specs.get(m.name).foreach(persistSpec)
-                hooks.onStateChange(m.name, PipelineStatus.Stopped)
-              } catch { case e2: Throwable => e.addSuppressed(e2) }
-            }
-            throw e
-        }
+        // the deletion stands either way
+        stoppedOnFailure(survivors.map(_.name))(
+          startGroup(survivors.minBy(_.name).name, transform, trigger,
+            reAdmitStopped = false): Unit)
       }
     }
   }

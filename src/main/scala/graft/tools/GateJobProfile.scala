@@ -3,9 +3,8 @@ package graft.tools
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
+import graft.{HarnessSession, SparkEntry}
 
 /** Profile one gated query: record every Spark job's wall duration and
   * call site, print a sorted cost table. Usage:
@@ -16,17 +15,7 @@ object GateJobProfile {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val warm = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Bench's shipping session (static conf — must be set here)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession("32")
 
     val starts = new ConcurrentHashMap[Int, (Long, String)]()
     // (jobId, startNanos, durNanos, site)

@@ -2091,6 +2091,123 @@ class PipelineManagerSpec extends SparkTestBase {
     pmB.close(); pmA.close()
   }
 
+  test("every member of a group run reports the shared query's metrics") {
+    val root = Files.createTempDirectory("graft-grpm-").toString
+    val srcDir = Files.createTempDirectory("graft-grpm-src-").toString
+    Seq((1L, "v1"), (2L, "v2")).toDF("k", "value")
+      .write.mode(SaveMode.Append).parquet(srcDir)
+    val da = Files.createTempDirectory("graft-grpm-da-").toString + "/d"
+    val db = Files.createTempDirectory("graft-grpm-db-").toString + "/d"
+    val pm = new PipelineManager(spark, root)
+    pm.create(PipelineSpec("ma", "parquet", "parquet", srcDir,
+      destinationConnection = da))
+    pm.create(PipelineSpec("mb", "parquet", "parquet", srcDir,
+      destinationConnection = db))
+    pm.startGroup("ma", identity).awaitTermination()
+    // progress events reach the listener asynchronously
+    def events(m: String) = pm.metrics(m).getOrElse("events", 0L)
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (Seq("ma", "mb").exists(events(_) == 0L) && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    Seq("ma", "mb").foreach(m =>
+      assert(events(m) > 0L, s"group member $m reports no events of the shared query"))
+    pm.close()
+  }
+
+  /** The status `name`'s spec record holds on disk. */
+  private def durableStatus(root: String, name: String): PipelineStatus.Value = {
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val p = new DurableRecords(fs, root).spec(name)
+    graft.model.PipelineSpecJson.read(
+      new String(Files.readAllBytes(java.nio.file.Paths.get(p.toString)), "UTF-8")).status
+  }
+
+  private def lockHeld(root: String, name: String): Boolean = {
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(new DurableRecords(fs, root).lock(name))
+  }
+
+  private val failingTransform: org.apache.spark.sql.DataFrame =>
+      org.apache.spark.sql.DataFrame =
+    _ => throw new IllegalStateException("transform failed")
+
+  test("a group start whose build fails leaves force-stopped members Stopped and releases the locks it took") {
+    val root = Files.createTempDirectory("graft-grpf-").toString
+    val srcDir = Files.createTempDirectory("graft-grpf-src-").toString
+    Seq((1L, "v1")).toDF("k", "v").write.mode(SaveMode.Append).parquet(srcDir)
+    val da = Files.createTempDirectory("graft-grpf-da-").toString + "/d"
+    val db = Files.createTempDirectory("graft-grpf-db-").toString + "/d"
+    val pm = new PipelineManager(spark, root)
+    pm.create(PipelineSpec("fa", "parquet", "parquet", srcDir,
+      destinationConnection = da))
+    pm.create(PipelineSpec("fb", "parquet", "parquet", srcDir,
+      destinationConnection = db))
+    pm.startGroup("fa", identity).awaitTermination()
+    pm.stop("fa", force = true)
+    val e = intercept[IllegalStateException] { pm.startGroup("fa", failingTransform) }
+    assert(e.getMessage == "transform failed")
+    Seq("fa", "fb").foreach { m =>
+      assert(pm.get(m).get.status == PipelineStatus.Stopped,
+        s"$m flipped in memory by a start that never ran")
+      assert(durableStatus(root, m) == PipelineStatus.Stopped,
+        s"$m persisted by a start that never ran")
+      assert(!lockHeld(root, m), s"the failed start kept $m's lock")
+      assert(pm.queryOf(m).isEmpty)
+    }
+    pm.close()
+  }
+
+  test("a solo start whose build fails releases only the lock it newly took") {
+    val root = Files.createTempDirectory("graft-solof-").toString
+    val srcDir = Files.createTempDirectory("graft-solof-src-").toString
+    Seq((1L, "v1")).toDF("k", "v").write.mode(SaveMode.Append).parquet(srcDir)
+    val pm = new PipelineManager(spark, root)
+    pm.create(PipelineSpec("sf", "parquet", "parquet", srcDir))
+    intercept[IllegalStateException] { pm.start("sf", failingTransform) }
+    assert(!lockHeld(root, "sf"), "the failed start kept the lock it took")
+    assert(pm.queryOf("sf").isEmpty)
+    // pause keeps the lock: a failed start (or resume) must not drop
+    // it, nor flip the pipeline out of Paused
+    pm.start("sf", identity).awaitTermination()
+    pm.pause("sf")
+    intercept[IllegalStateException] { pm.start("sf", failingTransform) }
+    intercept[IllegalStateException] { pm.resume("sf", failingTransform) }
+    assert(lockHeld(root, "sf"), "a failed start released a lock held before it")
+    assert(pm.get("sf").get.status == PipelineStatus.Paused)
+    assert(durableStatus(root, "sf") == PipelineStatus.Paused,
+      "a failed resume persisted Ready with no query")
+    assert(pm.queryOf("sf").isEmpty)
+    pm.close()
+  }
+
+  test("a demote while the source builds: start and startGroup refuse, stop the query, leave no handle") {
+    Seq(false, true).foreach { group =>
+      val root = Files.createTempDirectory("graft-demb-").toString
+      val srcDir = Files.createTempDirectory("graft-demb-src-").toString
+      Seq((1L, "v1")).toDF("k", "v").write.mode(SaveMode.Append).parquet(srcDir)
+      val schema = spark.read.parquet(srcDir).schema
+      var pm: PipelineManager = null
+      pm = new PipelineManager(spark, root, PipelineHooks(connectors = Map(
+        "demoting" -> ((s, spec) => {
+          pm.demote()
+          s.readStream.schema(schema).parquet(spec.sourceConnection)
+        }))))
+      val members = if (group) Seq("dx", "dy") else Seq("dx")
+      members.foreach(m => pm.create(PipelineSpec(m, "demoting", "parquet", srcDir,
+        destinationConnection = Files.createTempDirectory("graft-demb-d-").toString + "/d")))
+      val e = intercept[IllegalStateException] {
+        if (group) pm.startGroup("dx", identity) else pm.start("dx", identity)
+      }
+      assert(e.getMessage.contains("demoted"), e.getMessage)
+      members.foreach(m => assert(pm.queryOf(m).isEmpty, s"$m kept a handle"))
+      assert(!spark.streams.active.exists(q => q.name == "dx" || q.name == "group-dx"),
+        "the demoted start left its query running")
+      pm.close()
+    }
+  }
+
   test("pipeline lock: one owner among live managers, stop releases, close orphans") {
     val root = Files.createTempDirectory("graft-lock-").toString
     val srcDir = Files.createTempDirectory("graft-lock-src-").toString
