@@ -8,12 +8,12 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.model.{PipelineSpec, PipelineStatus}
 import graft.operators.Translate
-import graft.streaming.{CdcMerge, DurableRecords, EpochCommit, PipelineHooks, PipelineLockedException, PipelineManager, TwsCounterProcessor, TwsSessionProcessor}
+import graft.streaming.{CdcMerge, DurableRecords, EpochCommit, PipelineHooks, PipelineLockedException, PipelineManager, StreamStart, TwsCounterProcessor, TwsSessionProcessor}
 
 /**
  * Structured-Streaming forms of the data-plane operators, run
@@ -84,7 +84,7 @@ object StreamingQueries {
       * `ckpt`, handing each micro-batch and its epoch to `onEpoch`. */
     def availableNow(stream: DataFrame, ckpt: String, mode: String = "append")(
         onEpoch: (DataFrame, Long) => Unit): Unit =
-      runAvailableNow(stream.writeStream.foreachBatch(onEpoch), ckpt, mode)
+      runAvailableNow(stream, ckpt, mode)(_.foreachBatch(onEpoch))
 
     /** The epoch body that commits each micro-batch to `dir`. */
     def appendTo(dir: String): (DataFrame, Long) => Unit =
@@ -157,13 +157,13 @@ object StreamingQueries {
   }
 
   /** THE Trigger.AvailableNow runner: every gate's stream drains
-    * through here. */
-  private def runAvailableNow(w: DataStreamWriter[Row], ckpt: String,
-      mode: String): Unit =
-    w.outputMode(mode)
+    * through here, into the sink `sink` sets, and starts through the
+    * one stream start ([[StreamStart]]). */
+  private def runAvailableNow(df: DataFrame, ckpt: String, mode: String)(
+      sink: StreamStart.Writer => StreamStart.Writer): Unit =
+    StreamStart(df)(w => sink(w).outputMode(mode)
       .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      .trigger(Trigger.AvailableNow()))
       .awaitTermination()
 
   /** A file-stream source fed one bucket file at a time and read as
@@ -215,8 +215,7 @@ object StreamingQueries {
       statePartitions: Int = 8): DataFrame = gate(df.sparkSession, tag) { g =>
     val name = s"stream_out_${runId.incrementAndGet()}"
     g.pin("spark.sql.shuffle.partitions" -> statePartitions)
-    runAvailableNow(df.writeStream.queryName(name).format("memory"),
-      g.dir("ckpt"), mode)
+    runAvailableNow(df, g.dir("ckpt"), mode)(_.queryName(name).format("memory"))
     df.sparkSession.table(name)
   }
 

@@ -1,14 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.functions.Portable
 
@@ -103,21 +99,6 @@ object CdcMerge {
   private def liveBucket(fs: FileSystem, statePath: String, b: Long): Option[Path] =
     EpochCommit.liveDir(fs, bucketDir(statePath, b), bakDir(statePath, b))
 
-  /** Spark's copy of the written frame's schema, which it stores in
-    * every parquet footer it writes (`ParquetReadSupport.SPARK_METADATA_KEY`). */
-  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
-
-  /** The schema Spark recorded in one part file's footer. Every bucket
-    * file is written by Spark's parquet writer, so a footer without it
-    * is not a state file and fails the read. */
-  private def footerSchema(conf: Configuration, file: Path): StructType = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    val json = try reader.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
-      finally reader.close()
-    require(json != null, s"$file has no $SparkSchemaKey footer key")
-    DataType.fromJson(json).asInstanceOf[StructType]
-  }
-
   /**
    * Read the live copies of buckets `ids`; None when none of them holds
    * a data file (never written, or every key deleted: an emptied bucket
@@ -134,8 +115,10 @@ object CdcMerge {
     }
     withData.headOption.map { case (_, file) =>
       val dirs = withData.map(_._1)
-      spark.read.schema(footerSchema(spark.sparkContext.hadoopConfiguration, file))
-        .parquet(dirs: _*)
+      // every bucket file is Spark-written: its footer holds the schema
+      val schema = PipelineManager.footerSchema(spark, file)
+        .getOrElse(sys.error(s"$file: unreadable Spark schema footer key"))
+      spark.read.schema(schema).parquet(dirs: _*)
     }
   }
 

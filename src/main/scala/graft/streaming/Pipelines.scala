@@ -6,11 +6,14 @@ import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.BinaryType
+import org.apache.spark.sql.types.{BinaryType, DataType, StructType}
 
 import graft.model.{PipelineSpec, PipelineSpecJson, PipelineStatus}
 
@@ -1835,8 +1838,8 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
       spark.readStream.format("rate")
         .option("rowsPerSecond", spec.sourcePartitions.max(1) * 10).load()
     case "parquet" =>
-      val schema = spark.read.parquet(spec.sourceConnection).schema
-      val reader = spark.readStream.schema(schema)
+      val reader = spark.readStream
+        .schema(PipelineManager.parquetSchema(spark, spec.sourceConnection))
       val withFlow = spec.metadata.get("maxFilesPerTrigger")
         .fold(reader)(v => reader.option("maxFilesPerTrigger", v))
       withFlow.parquet(spec.sourceConnection)
@@ -2133,7 +2136,9 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
    *     stopped and unregistered (no double delivery beside the new
    *     one, and no writer left in `ckpt`), the checkpoint's orphan
    *     temps are swept and the query starts with `sink`'s
-   *     `foreachBatch` body (None: the memory sink).
+   *     `foreachBatch` body (None: the memory sink), through
+   *     [[StreamStart]]: a restarted run reuses the classes the
+   *     session already compiled for its plan.
    *  7. The handles are registered, and the demote fence is checked
    *     again: the entry check and the registration are not atomic,
    *     so either demote() finds the handles and stops them, or this
@@ -2173,15 +2178,16 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
         val out = observed(run._1(source(live.head)))
         members.foreach(stopQueryOf)
         sweepCheckpointTemps(ckpt)
-        val writer = out.writeStream
-          .queryName(queryName)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(run._2)
-        val q = sink(live).fold(writer.format("memory").start()) { body =>
-          writer.foreachBatch { (batch: DataFrame, epoch: Long) =>
-            launched.await(); body(batch, epoch)
-          }.start()
+        val q = StreamStart(out) { w =>
+          val writer = w.queryName(queryName)
+            .outputMode("append")
+            .option("checkpointLocation", ckpt.toString)
+            .trigger(run._2)
+          sink(live).fold(writer.format("memory")) { body =>
+            writer.foreachBatch { (batch: DataFrame, epoch: Long) =>
+              launched.await(); body(batch, epoch)
+            }
+          }
         }
         started = Some(q)
         members.foreach(queries.put(_, q))
@@ -3333,6 +3339,67 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
 }
 
 object PipelineManager {
+
+  /** The footer key under which Spark's parquet writer stores the
+    * written frame's schema (`ParquetReadSupport.SPARK_METADATA_KEY`). */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The schema Spark's parquet inference reads from one file's footer:
+    * the Spark schema key if present, else the Parquet→Spark converter
+    * built from the session conf as `ParquetFileFormat
+    * .mergeSchemasInParallel` builds it; nullable throughout, as a file
+    * relation's data schema is. None when the key does not parse as
+    * JSON (Spark then tries a legacy format this reader leaves to it). */
+  private[streaming] def footerSchema(spark: SparkSession, file: Path): Option[StructType] = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+    val meta = try reader.getFileMetaData finally reader.close()
+    val schema = Option(meta.getKeyValueMetaData.get(SparkSchemaKey)) match {
+      case Some(json) => scala.util.Try(DataType.fromJson(json)).toOption.collect {
+        case s: StructType => s
+      }
+      case None =>
+        val conf = GraftBridge.sqlConf(spark)
+        Some(new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = conf.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+          nanosAsLong = conf.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+          .convert(meta.getSchema))
+    }
+    schema.map(GraftBridge.asNullable)
+  }
+
+  /**
+   * `spark.read.parquet(src).schema` without its Spark job: the parquet
+   * connector's source schema, read on the driver from the one footer
+   * Spark's inference reads (mergeSchema off): the first data file by
+   * path among the names Spark's listing keeps. Everything this rule
+   * does not cover goes to Spark's own inference, so its result and its
+   * errors stay Spark's: a path that is not a plain directory (missing,
+   * a file, a glob), a directory with subdirectories (partition columns
+   * come from their paths), a file-sink output (listed by its log),
+   * summary files, schema merging, no data file, an unreadable footer.
+   */
+  private[streaming] def parquetSchema(spark: SparkSession, src: String): StructType = {
+    // HadoopFSUtils.shouldFilterOutPathName: the names Spark's listing drops
+    def hidden(n: String) =
+      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")) &&
+        !n.startsWith("_common_metadata") && !n.startsWith("_metadata")
+    val dir = new Path(src)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listed =
+      if (src.exists("{}[]*?\\".contains(_)) || GraftBridge.sqlConf(spark).isParquetSchemaMergingEnabled ||
+          !scala.util.Try(fs.getFileStatus(dir).isDirectory).getOrElse(false)) Nil
+      else fs.listStatus(dir).toSeq
+    val kept = listed.filterNot(st => hidden(st.getPath.getName))
+    val dataFilesOnly = kept.nonEmpty && !listed.exists(_.getPath.getName == "_spark_metadata") &&
+      kept.forall(st => st.isFile && !st.getPath.getName.startsWith("_"))
+    val fromFooter = if (!dataFilesOnly) None else scala.util.Try(
+      footerSchema(spark, kept.map(_.getPath).minBy(_.toString))).toOption.flatten
+    fromFooter.getOrElse(spark.read.parquet(src).schema)
+  }
 
   /** Default destination retention — the reference's 3-day topic
     * retention default (KafkaTransportProviderAdmin

@@ -2783,6 +2783,183 @@ class PipelineManagerSpec extends SparkTestBase {
       assert(mA.get("rr").exists(_.status == PipelineStatus.Paused))
     } finally { mB.close(); mA.close() }
   }
+
+  test("a pipeline restarted in the same session runs its tasks under its first run's classloader: no recompile") {
+    val pm = newManager()
+    val srcDir = Files.createTempDirectory("graft-warm-src-").toString
+    Seq((1L, "v1"), (2L, "v2")).toDF("k", "v").write.mode(SaveMode.Append).parquet(srcDir)
+    pm.create(PipelineSpec("warm", "parquet", "parquet", srcDir))
+    val probe = udf((k: Long) => TaskLoaderProbe.record(k))
+    val transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
+      _.withColumn("k", probe(col("k")))
+    def run(start: => org.apache.spark.sql.streaming.StreamingQuery) = {
+      TaskLoaderProbe.clear()
+      start.awaitTermination()
+      TaskLoaderProbe.seen
+    }
+    try {
+      val first = run(pm.start("warm", transform))
+      pm.pause("warm")
+      Seq((3L, "v3")).toDF("k", "v").write.mode(SaveMode.Append).parquet(srcDir)
+      val compiles0 = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val restarted = run(pm.resume("warm", transform))
+      val compiles =
+        org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      assert(first.size == 1 && restarted.size == 1, s"tasks ran under $first, then $restarted")
+      // CodeGenerator caches compiled classes per task classloader: the
+      // same loader is what lets the restart reuse the first run's classes
+      assert(restarted.head eq first.head, s"the restart's first epoch ran its tasks under " +
+        s"${restarted.head}, not the first run's ${first.head}: its generated classes were " +
+        s"compiled again ($compiles codegen compiles)")
+      assert(!spark.conf.getAll.contains("spark.sql.artifact.isolation.enabled"),
+        "the start's isolation pin must not stay in the caller's session")
+    } finally pm.close()
+  }
+
+  test("a session holding an added jar keeps artifact isolation: its stream's tasks load the jar's class") {
+    val dir = Files.createTempDirectory("graft-artifact-")
+    val src = dir.resolve("GraftArtifactProbe.java")
+    Files.writeString(src,
+      "public class GraftArtifactProbe { public static String tag() { return \"from-jar\"; } }")
+    val javac = javax.tools.ToolProvider.getSystemJavaCompiler
+    assert(javac.run(null, null, null, "-d", dir.toString, src.toString) == 0)
+    val jar = dir.resolve("probe.jar")
+    val out = new java.util.jar.JarOutputStream(Files.newOutputStream(jar))
+    try {
+      out.putNextEntry(new java.util.jar.JarEntry("GraftArtifactProbe.class"))
+      out.write(Files.readAllBytes(dir.resolve("GraftArtifactProbe.class")))
+      out.closeEntry()
+    } finally out.close()
+
+    val s2 = spark.newSession()
+    s2.addArtifact(jar.toString)
+    val srcDir = Files.createTempDirectory("graft-artifact-src-").toString
+    s2.range(3).toDF("k").write.mode(SaveMode.Append).parquet(srcDir)
+    val pm = new PipelineManager(s2, Files.createTempDirectory("graft-pm-").toString)
+    val viaJar = udf { (k: Long) =>
+      TaskLoaderProbe.record(k)
+      Class.forName("GraftArtifactProbe", true, Thread.currentThread.getContextClassLoader)
+        .getMethod("tag").invoke(null).toString + k
+    }
+    try {
+      val spec = pm.create(PipelineSpec("art", "parquet", "parquet", srcDir))
+      TaskLoaderProbe.clear()
+      pm.start("art", _.withColumn("tag", viaJar(col("k")))).awaitTermination()
+      val streamLoaders = TaskLoaderProbe.seen
+      assert(s2.read.parquet(spec.destinationConnection).select("tag").as[String]
+        .collect().sorted.toSeq == Seq("from-jar0", "from-jar1", "from-jar2"))
+      assert(!s2.conf.getAll.contains("spark.sql.artifact.isolation.enabled"))
+      // the stream kept isolation: its tasks did not run under the
+      // application's classloader, which sessions without isolation share
+      val shared = spark.newSession()
+      shared.conf.set("spark.sql.artifact.isolation.enabled", "false")
+      TaskLoaderProbe.clear()
+      shared.range(1).select(udf((k: Long) => TaskLoaderProbe.record(k)).apply(col("id"))).collect()
+      val appLoader = TaskLoaderProbe.seen
+      assert(appLoader.size == 1 && streamLoaders.nonEmpty)
+      assert(!streamLoaders.exists(_ eq appLoader.head),
+        s"the stream ran its tasks under the application's classloader ${appLoader.head}")
+    } finally pm.close()
+  }
+
+  /** `dir`'s schema as the parquet connector reads it, as Spark's
+    * inference reads it, and the Spark jobs the connector's read ran. */
+  private def schemas(dir: String) = {
+    val sc = spark.sparkContext
+    def inGroup[T](group: String)(body: => T): T = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+    val tag = s"schema-${System.nanoTime}"
+    val viaFooter = inGroup(s"$tag-footer")(PipelineManager.parquetSchema(spark, dir))
+    val viaSpark = inGroup(s"$tag-spark")(spark.read.parquet(dir).schema)
+    // job events arrive in order: once the inference job shows, any job
+    // of the footer read would have shown too
+    val deadline = System.currentTimeMillis() + 30000L
+    while (sc.statusTracker.getJobIdsForGroup(s"$tag-spark").isEmpty &&
+      System.currentTimeMillis() < deadline) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(s"$tag-spark").nonEmpty)
+    (viaFooter, viaSpark, sc.statusTracker.getJobIdsForGroup(s"$tag-footer").length)
+  }
+
+  test("the parquet connector's schema of parquet-hadoop files without a Spark footer key equals Spark's inference, with no job") {
+    import org.apache.parquet.example.data.simple.SimpleGroup
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      """message feed {
+        |  required binary topic (STRING);
+        |  required int32 partition;
+        |  required int64 offset;
+        |  optional binary name (STRING);
+        |  optional int32 shard;
+        |  optional int64 updated;
+        |  required binary value;
+        |}""".stripMargin)
+    val dir = Files.createTempDirectory("graft-feed-")
+    val conf = spark.sparkContext.hadoopConfiguration
+    Seq("b.parquet", "a.parquet").foreach { name =>
+      val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(dir.resolve(name).toString), conf)).withType(schema).build()
+      try {
+        val g = new SimpleGroup(schema)
+        g.add("topic", "t"); g.add("partition", 1); g.add("offset", 2L)
+        g.add("value", org.apache.parquet.io.api.Binary.fromString("x"))
+        w.write(g)
+      } finally w.close()
+    }
+    val (viaFooter, viaSpark, footerJobs) = schemas(dir.toString)
+    assert(viaFooter == viaSpark)
+    assert(viaSpark.fields.map(_.dataType.typeName).toSeq ==
+      Seq("string", "integer", "long", "string", "integer", "long", "binary"))
+    assert(footerJobs == 0, "the footer read must run no Spark job")
+  }
+
+  test("the parquet connector's schema of Spark-written decimal, timestamp and metadata columns equals Spark's inference") {
+    val dir = Files.createTempDirectory("graft-typed-").toString
+    val meta = new org.apache.spark.sql.types.MetadataBuilder().putString("comment", "kept").build()
+    spark.range(3).select(
+      col("id").as("tagged", meta),
+      (col("id") / 3).cast("decimal(12,4)").as("d"),
+      (col("id") * 1000000L).cast("decimal(30,2)").as("wide"),
+      timestamp_seconds(col("id")).as("ts"),
+      timestamp_seconds(col("id")).cast("timestamp_ntz").as("ntz"),
+      lit(1).as("required_int"),
+      struct(col("id").as("inner")).as("nested"),
+      array(col("id")).as("arr"))
+      .write.mode(SaveMode.Append).parquet(dir)
+    val (viaFooter, viaSpark, footerJobs) = schemas(dir)
+    assert(viaFooter == viaSpark)
+    assert(viaSpark("tagged").metadata == meta && viaSpark("required_int").nullable)
+    assert(footerJobs == 0, "the footer read must run no Spark job")
+  }
+
+  test("the parquet connector's schema of an empty source directory fails with Spark's error") {
+    val dir = Files.createTempDirectory("graft-empty-").toString
+    val viaSpark = intercept[org.apache.spark.sql.AnalysisException](spark.read.parquet(dir).schema)
+    val viaFooter = intercept[org.apache.spark.sql.AnalysisException](
+      PipelineManager.parquetSchema(spark, dir))
+    assert(viaFooter.getMessage == viaSpark.getMessage)
+    assert(viaFooter.getCondition == viaSpark.getCondition)
+  }
+
+  test("the parquet connector keeps the partition columns of a partitioned source directory") {
+    val dir = Files.createTempDirectory("graft-parted-").toString
+    spark.range(4).select(col("id"), (col("id") % 2).as("p"), lit("x").as("q"))
+      .write.mode(SaveMode.Overwrite).partitionBy("p", "q").parquet(dir)
+    val viaFooter = PipelineManager.parquetSchema(spark, dir)
+    assert(viaFooter == spark.read.parquet(dir).schema)
+    assert(viaFooter.fieldNames.toSeq == Seq("id", "p", "q"))
+  }
+}
+
+/** The context classloaders executor tasks ran under, recorded by a
+  * UDF: the key CodeGenerator caches compiled classes by. */
+object TaskLoaderProbe {
+  private val loaders = java.util.concurrent.ConcurrentHashMap.newKeySet[ClassLoader]()
+  def record(k: Long): Long = { loaders.add(Thread.currentThread.getContextClassLoader); k }
+  def clear(): Unit = loaders.clear()
+  def seen: Seq[ClassLoader] = loaders.toArray(Array.empty[ClassLoader]).toSeq
 }
 
 /** The library's local filesystem with hooks, for crash and race
