@@ -168,12 +168,14 @@ object EpochCommit {
     * instead of paying a second localCheckpoint job); a replayed epoch
     * returns the SAME files. A negative epoch is a plain append that
     * returns Nil even though it wrote data — plain appends have no
-    * deterministic file names to report. */
+    * deterministic file names to report. The batch is staged by
+    * [[EpochWriter]], which ships the write's Hadoop conf once per
+    * conf instead of inside every task. */
   def epochAppend(batch: DataFrame, dest: String, epoch: Long,
       pipeline: String = ""): Seq[String] = {
     if (epoch < 0) { batch.write.mode("append").parquet(dest); return Nil }
     epochCommitCore(batch, dest, epoch, pipeline,
-      stage = (b, s) => b.write.mode("overwrite").parquet(s),
+      stage = EpochWriter.write,
       relativeGlob = ns => epochFileGlob(ns, epoch),
       publish = (fs, staging, destPath, ns) =>
         renameStagedParts(fs, staging, destPath, ns, epoch))

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.StructType
  * through the public Column API (the supported pattern before Spark
  * split Column from Expression), and the few session internals the
  * engine reads (state-store unload, function registry, artifact
- * manager, SQL conf).
+ * manager, SQL conf) or sets (task output metrics).
  */
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -42,6 +42,14 @@ object GraftBridge {
 
   /** The session's SQL conf (not the thread's active one). */
   def sqlConf(spark: SparkSession): SQLConf = classicSession(spark).sessionState.conf
+
+  /** Report a write task's output as Spark's file writers do
+    * (`BasicWriteTaskStatsTracker`): its rows and file bytes. */
+  def setOutputMetrics(ctx: org.apache.spark.TaskContext, bytes: Long, records: Long): Unit = {
+    val m = ctx.taskMetrics().outputMetrics
+    m.setBytesWritten(bytes)
+    m.setRecordsWritten(records)
+  }
 
   /** `s` with every field nullable, as a file relation's data schema. */
   def asNullable(s: StructType): StructType = s.asNullable

@@ -157,6 +157,122 @@ class EpochCommitSpec extends SparkTestBase {
     assert(first >= 4 && redo >= 5, s"first attempt $first steps, redo $redo")
   }
 
+  // ---- the staged write against Spark's writer ----
+
+  /** The footer of a parquet file: its key-value metadata, its parquet
+    * schema and the codec of its first column chunk (None without row
+    * groups). */
+  private def footer(f: String): (Map[String, String], String, Option[String]) = {
+    import scala.jdk.CollectionConverters._
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(f), conf))
+    try {
+      val meta = r.getFooter
+      (meta.getFileMetaData.getKeyValueMetaData.asScala.toMap,
+        meta.getFileMetaData.getSchema.toString,
+        meta.getBlocks.asScala.headOption.map(_.getColumns.get(0).getCodec.name))
+    } finally r.close()
+  }
+
+  /** `b` written by Spark's own writer under a new dir: its part files
+    * in partition order. */
+  private def sparkWritten(b: DataFrame): Seq[String] = {
+    val d = tmp("spark-writer")
+    b.write.mode("overwrite").parquet(d)
+    new Path(d).getFileSystem(conf).listStatus(new Path(d)).toSeq
+      .map(_.getPath.toString).filter(new Path(_).getName.startsWith("part-")).sorted
+  }
+
+  private def marked(d: String, e: Long) = exists(EpochCommit.marker(d, ns, e).toString)
+
+  /** `body`'s result and the rows and bytes its tasks reported as
+    * written (the task output metrics). */
+  private def withOutputMetrics[T](body: => T): (T, Long, Long) = {
+    val sc = spark.sparkContext
+    val rows = new java.util.concurrent.atomic.AtomicLong
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach { m =>
+          rows.addAndGet(m.outputMetrics.recordsWritten)
+          bytes.addAndGet(m.outputMetrics.bytesWritten)
+        }
+    }
+    org.apache.spark.GraftTestAccess.drainListeners(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.GraftTestAccess.drainListeners(sc)
+      (r, rows.get, bytes.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("epochAppend's staged write matches Spark's writer: rows, part files, footers, output metrics") {
+    val b = rows(1).map { case (i, t) => (i, t, s"v$i", i * 0.5) }
+      .toDF("id", "tb", "s", "x").repartition(3)
+    val d = tmp("parity")
+    val (ours, ourRows, ourBytes) = withOutputMetrics(EpochCommit.epochAppend(b, d, 1L, "ec-p"))
+    val (theirs, theirRows, _) = withOutputMetrics(sparkWritten(b))
+    assert(ours.size == theirs.size, s"part files: ours $ours, Spark's $theirs")
+    def len(f: String) = new Path(f).getFileSystem(conf).getFileStatus(new Path(f)).getLen
+    assert(ourRows == 30 && theirRows == 30, s"rows written: ours $ourRows, Spark's $theirRows")
+    assert(ourBytes == ours.map(len).sum, "bytes written must be the published files' bytes")
+    def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(sorted(spark.read.parquet(d)) == sorted(spark.read.parquet(theirs: _*)))
+    ours.zip(theirs).foreach { case (o, t) =>
+      assert(footer(o) == footer(t), s"footer of $o differs from Spark's $t")
+      assert(PipelineManager.footerSchema(spark, new Path(o)) ==
+        PipelineManager.footerSchema(spark, new Path(t)))
+    }
+    assert(PipelineManager.parquetSchema(spark, d) == spark.read.parquet(d).schema)
+  }
+
+  test("epochAppend's staged write: a parquet codec set between two epochs shows in the second's footer") {
+    val key = "spark.sql.parquet.compression.codec"
+    val d = tmp("codec")
+    val before = spark.conf.getAll.get(key) // set or unset, as it was
+    val first = EpochCommit.epochAppend(batch(1, 2), d, 1L, "ec-p")
+    val second = try {
+      spark.conf.set(key, "gzip")
+      EpochCommit.epochAppend(batch(2, 2), d, 2L, "ec-p")
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(first.map(footer(_)._3).toSet == Set(Some("SNAPPY")))
+    assert(second.map(footer(_)._3).toSet == Set(Some("GZIP")))
+    // and the next epoch writes under the restored conf again
+    val third = EpochCommit.epochAppend(batch(3, 2), d, 3L, "ec-p")
+    assert(third.map(footer(_)._3).toSet == Set(Some("SNAPPY")))
+    assert(ids(d) == (rows(1) ++ rows(2) ++ rows(3)).map(_._1).sorted)
+  }
+
+  test("epochAppend's staged write: an empty batch publishes -p0 with its schema") {
+    val empties = Seq(
+      "empty partitions" -> batch(1, 3).filter("id < 0"),
+      "no partitions" -> spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch(1, 1).schema))
+    empties.foreach { case (what, b) =>
+      val d = tmp("empty")
+      val published = EpochCommit.epochAppend(b, d, 1L, "ec-p")
+      assert(published.map(new Path(_).getName) == Seq(EpochCommit.epochFileName(ns, 1L, 0)), what)
+      assert(spark.read.parquet(d).schema == org.apache.spark.sql.GraftBridge.asNullable(b.schema), what)
+      assert(spark.read.parquet(d).count() == 0, what)
+      assert(footer(published.head)._1 == footer(sparkWritten(b).head)._1, what)
+      assert(marked(d, 1L), what)
+    }
+  }
+
+  test("epochAppend's staged write: a column type parquet cannot hold fails the epoch, nothing published") {
+    val b = spark.range(3).selectExpr("id", "make_interval(0, 0, 0, cast(id AS int)) AS iv")
+    assert(b.schema("iv").dataType == org.apache.spark.sql.types.CalendarIntervalType)
+    val d = tmp("unsupported")
+    val ours = intercept[org.apache.spark.sql.AnalysisException](
+      EpochCommit.epochAppend(b, d, 1L, "ec-p"))
+    val theirs = intercept[org.apache.spark.sql.AnalysisException](sparkWritten(b))
+    assert(ours.getCondition == theirs.getCondition, ours.getMessage)
+    assert(!marked(d, 1L), "no marker")
+    assert(EpochCommit.committedFiles(d, conf).isEmpty, "no published file")
+    assert(!exists(EpochCommit.stagingDir(d, ns, 1L).toString), "no staged file")
+  }
+
   // ---- EpochPartitionedStore's run publish ----
 
   test("EpochPartitionedStore: a kill at any step of an epoch and its run publish replays exactly once") {
@@ -296,6 +412,11 @@ class EpochCommitSpec extends SparkTestBase {
         line(s"$name committed", committed)
         line(s"$name replayed", replayed)
         assert(replayed == Map("exists" -> 1, "globStatus" -> 1), s"$name replay: $replayed")
+        // the staged write makes no driver-side call: what is left is
+        // the protocol's own (see the object doc), three parts renamed
+        if (name == "epochAppend")
+          assert(committed == Map("exists" -> 1, "delete" -> 2, "create" -> 1, "globStatus" -> 2,
+            "listStatus" -> 1, "rename" -> 3, "mkdirs" -> 1), s"$name committed: $committed")
       }
       val sp = tmp("census-cdc") + "/state"
       CdcMerge.applyBatch(spark, cdcBatch1, sp, Seq("key"), "scn", "opcode", numBuckets = 4)

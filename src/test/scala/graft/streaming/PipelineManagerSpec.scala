@@ -2816,6 +2816,40 @@ class PipelineManagerSpec extends SparkTestBase {
     } finally pm.close()
   }
 
+  test("stop/start cycles of a parquet pipeline do not grow the driver's broadcast blocks") {
+    // the epoch writer keeps one conf broadcast per schema, reused by
+    // every restart and replaced when the conf changes; the other
+    // broadcasts of a run (task binaries, the source scan's conf) are
+    // freed by the context cleaner once garbage
+    val pm = newManager()
+    val srcDir = Files.createTempDirectory("graft-bc-src-").toString
+    pm.create(PipelineSpec("bc", "parquet", "parquet", srcDir))
+    /** The broadcast count once the cleaner has freed what is garbage:
+      * three equal readings in a row, a gc before each. */
+    def settled(): Int = {
+      var readings = List.empty[Int]
+      while (readings.size < 3 || readings.take(3).distinct.size > 1) {
+        System.gc()
+        Thread.sleep(150)
+        readings = org.apache.spark.GraftTestAccess.broadcastIds().size :: readings
+        assert(readings.size < 100, s"broadcast count never settled: $readings")
+      }
+      readings.head
+    }
+    try {
+      val counts = (1 to 5).map { cycle =>
+        Seq((cycle.toLong, s"v$cycle")).toDF("k", "v").write.mode(SaveMode.Append).parquet(srcDir)
+        val q = if (cycle == 1) pm.start("bc", identity) else pm.resume("bc", identity)
+        q.awaitTermination()
+        pm.pause("bc")
+        settled()
+      }
+      assert(spark.read.parquet(pm.get("bc").get.destinationConnection).count() == 5)
+      assert(counts.tail.forall(_ <= counts.head),
+        s"broadcast blocks after each of 5 stop/start cycles: ${counts.mkString(", ")}")
+    } finally pm.close()
+  }
+
   test("a session holding an added jar keeps artifact isolation: its stream's tasks load the jar's class") {
     val dir = Files.createTempDirectory("graft-artifact-")
     val src = dir.resolve("GraftArtifactProbe.java")
