@@ -1,11 +1,9 @@
 package graft.streaming
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.{SparkContext, TaskContext}
+import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -27,22 +25,22 @@ import org.apache.spark.util.SerializableConfiguration
  * Hadoop conf. `FileFormatWriter` ships the session's conf (about 1 100
  * properties, 112 KB serialized) inside every write task, twice; each
  * task pays about 6 ms to read each copy back. Here the prepared job
- * conf travels as one broadcast per (application, schema), reused by
- * every epoch and restart that writes the schema under a conf of the
- * same content: a change to the session's SQL or Hadoop conf makes a
- * new one, which replaces it. A replaced broadcast is only dropped, and
- * Spark's context cleaner removes it once no job holds it.
+ * conf travels as one broadcast per write, read once per executor and
+ * destroyed when the job ends.
  *
  * As `FileFormatWriter` does: a partition with no rows writes no file,
  * except partition 0, so an empty batch still publishes its schema;
  * a batch of no partitions runs one empty task; a column type parquet
  * cannot hold fails the epoch before the job. Each task reports its
  * rows and bytes in its output metrics. No commit protocol runs: the
- * epoch commit stages into a dir of its own and publishes by rename. A
- * task creates its file without overwrite and deletes it if its write
- * fails, so a second attempt of a task never replaces a file another
- * attempt wrote: it fails at the create, and a job that fails fails the
- * epoch, which the replay redoes from the top.
+ * epoch commit stages into a dir of its own, cleared before the
+ * write, and publishes by rename. So the writer assumes one attempt
+ * per task. A task creates its file without overwrite and deletes it
+ * when anything after the create fails; an attempt that dies with its
+ * executor leaves its file, a retry of that task then fails at the
+ * create, and the failed job fails the epoch, which the replay redoes
+ * from a cleared staging dir. Neither a retry nor a speculative
+ * attempt can replace or add to a file another attempt wrote.
  */
 private[streaming] object EpochWriter {
   private val format = new ParquetFileFormat
@@ -57,39 +55,14 @@ private[streaming] object EpochWriter {
     DataSourceUtils.checkFieldNames(format, schema)
     val job = Job.getInstance(session.sessionState.newHadoopConf())
     val factory = format.prepareWrite(session, job, Map.empty, schema)
-    val task = new PartWriter(factory, jobConf(sc, schema, job), schema, dir)
-    SQLExecution.withNewExecutionId(qe, Some("epochAppend")) {
+    val conf = sc.broadcast(new SerializableConfiguration(job.getConfiguration))
+    val task = new PartWriter(factory, conf, schema, dir)
+    try SQLExecution.withNewExecutionId(qe, Some("epochAppend")) {
       val rdd = qe.toRdd
       val parts = if (rdd.partitions.isEmpty) sc.parallelize(Seq.empty[InternalRow], 1) else rdd
       sc.runJob(parts, (ctx: TaskContext, rows: Iterator[InternalRow]) => task(ctx, rows))
     }: Unit
-  }
-
-  /** The broadcast job conf per (application, schema): the newest one
-    * made and the conf content it holds. Bounded: least recently used
-    * schemas are dropped. */
-  private val MaxSchemas = 16
-  private val confs = new java.util.LinkedHashMap[(String, StructType),
-      (Map[String, String], Broadcast[SerializableConfiguration])](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[(String, StructType),
-        (Map[String, String], Broadcast[SerializableConfiguration])]): Boolean =
-      size > MaxSchemas
-  }
-
-  /** The broadcast of `job`'s prepared conf: the cached one while its
-    * content is the same, else a new one that replaces it. */
-  private def jobConf(sc: SparkContext, schema: StructType,
-      job: Job): Broadcast[SerializableConfiguration] = {
-    val conf = job.getConfiguration
-    val props = conf.iterator.asScala.map(e => e.getKey -> e.getValue).toMap
-    val key = (sc.applicationId, schema)
-    confs.synchronized {
-      Option(confs.get(key)).collect { case (p, bc) if p == props => bc }.getOrElse {
-        val made = sc.broadcast(new SerializableConfiguration(conf))
-        confs.put(key, (props, made))
-        made
-      }
-    }
+    finally conf.destroy()
   }
 
   /** One write task: partition `i` of the batch into `dir/part-<i>`. */
@@ -97,24 +70,24 @@ private[streaming] object EpochWriter {
       conf: Broadcast[SerializableConfiguration], schema: StructType,
       dir: String) extends Serializable {
     def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Unit =
-      if (ctx.partitionId == 0 || rows.hasNext) {
+      if (ctx.partitionId() == 0 || rows.hasNext) {
         val attempt = new TaskAttemptContextImpl(conf.value.value,
-          new TaskAttemptID("graft", ctx.stageId, TaskType.MAP, ctx.partitionId,
-            ctx.attemptNumber))
-        val file = new Path(dir, f"part-${ctx.partitionId}%05d")
+          new TaskAttemptID("graft", ctx.stageId(), TaskType.MAP, ctx.partitionId(),
+            ctx.attemptNumber()))
+        val file = new Path(dir, f"part-${ctx.partitionId()}%05d")
         val fs = file.getFileSystem(attempt.getConfiguration)
         val out = factory.newInstance(file.toString, schema, attempt)
         var n = 0L
         try {
           while (rows.hasNext) { out.write(rows.next()); n += 1 }
           out.close()
+          GraftBridge.setOutputMetrics(ctx, fs.getFileStatus(file).getLen, n)
         } catch {
           case t: Throwable =>
             try out.close() catch { case c: Throwable => t.addSuppressed(c) }
             try fs.delete(file, false) catch { case c: Throwable => t.addSuppressed(c) }
             throw t
         }
-        GraftBridge.setOutputMetrics(ctx, fs.getFileStatus(file).getLen, n)
       }
   }
 }

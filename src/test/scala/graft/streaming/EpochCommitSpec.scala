@@ -273,6 +273,28 @@ class EpochCommitSpec extends SparkTestBase {
     assert(!exists(EpochCommit.stagingDir(d, ns, 1L).toString), "no staged file")
   }
 
+  test("epochAppend's staged write: a task failing mid-write fails the epoch, and no write leaves its conf broadcast") {
+    val before = org.apache.spark.GraftTestAccess.confBroadcasts(spark.sparkContext)
+    val d = tmp("task-fail")
+    EpochCommit.epochAppend(batch(1, 2), d, 1L, "ec-p")
+    val failing = batch(2, 3).withColumn("tb", expr("if(id = 215, raise_error('boom'), tb)"))
+    val e = intercept[Exception](EpochCommit.epochAppend(failing, d, 2L, "ec-p"))
+    assert(e.getMessage.contains("boom"), e.getMessage)
+    // each write destroys its broadcast when its job ends, committed or
+    // failed (the destroy is asynchronous)
+    def lingering = org.apache.spark.GraftTestAccess.confBroadcasts(spark.sparkContext) -- before
+    val deadline = System.nanoTime + 10L * 1000 * 1000 * 1000
+    while (lingering.nonEmpty && System.nanoTime < deadline) Thread.sleep(50)
+    assert(lingering.isEmpty, s"conf broadcasts left by the writes: $lingering")
+    assert(!marked(d, 2L), "no marker")
+    // the failed task removed its file: what is staged is whole
+    val staging = EpochCommit.stagingDir(d, ns, 2L).toString
+    if (exists(staging)) spark.read.parquet(staging).count()
+    assert(ids(d) == rows(1).map(_._1).sorted, "only epoch 1 is visible")
+    EpochCommit.epochAppend(batch(2, 3), d, 2L, "ec-p") // the replay
+    assert(ids(d) == (rows(1) ++ rows(2)).map(_._1).sorted)
+  }
+
   // ---- EpochPartitionedStore's run publish ----
 
   test("EpochPartitionedStore: a kill at any step of an epoch and its run publish replays exactly once") {

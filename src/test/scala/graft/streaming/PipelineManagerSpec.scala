@@ -2817,10 +2817,9 @@ class PipelineManagerSpec extends SparkTestBase {
   }
 
   test("stop/start cycles of a parquet pipeline do not grow the driver's broadcast blocks") {
-    // the epoch writer keeps one conf broadcast per schema, reused by
-    // every restart and replaced when the conf changes; the other
-    // broadcasts of a run (task binaries, the source scan's conf) are
-    // freed by the context cleaner once garbage
+    // the epoch writer destroys its conf broadcast after each write;
+    // the other broadcasts of a run (task binaries, the source scan's
+    // conf) are freed by the context cleaner once garbage
     val pm = newManager()
     val srcDir = Files.createTempDirectory("graft-bc-src-").toString
     pm.create(PipelineSpec("bc", "parquet", "parquet", srcDir))
@@ -2831,7 +2830,7 @@ class PipelineManagerSpec extends SparkTestBase {
       while (readings.size < 3 || readings.take(3).distinct.size > 1) {
         System.gc()
         Thread.sleep(150)
-        readings = org.apache.spark.GraftTestAccess.broadcastIds().size :: readings
+        readings = org.apache.spark.GraftTestAccess.broadcastIds(spark.sparkContext).size :: readings
         assert(readings.size < 100, s"broadcast count never settled: $readings")
       }
       readings.head
