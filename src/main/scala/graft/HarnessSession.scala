@@ -5,11 +5,14 @@ import org.apache.spark.sql.SparkSession
 /** The one session the harness mains (Bench, BenchRepeat, Verify,
   * GateJobProfile) run on: `local[SPARK_GRAFT_CPUS]` with as many
   * shuffle partitions, AQE, UTC, no UI, WARN logging. `defaultCpus`
-  * applies when SPARK_GRAFT_CPUS is unset. */
+  * applies when SPARK_GRAFT_CPUS is unset. `extra` confs go on last,
+  * so an A/B of a candidate conf (BenchRepeat's SPARK_GRAFT_CONF)
+  * differs from the bench's session by exactly those confs. */
 private[graft] object HarnessSession {
-  def apply(defaultCpus: String): SparkSession = {
+  def apply(defaultCpus: String,
+      extra: Seq[(String, String)] = Nil): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
-    val spark = SparkSession.builder()
+    val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
@@ -24,6 +27,7 @@ private[graft] object HarnessSession {
       // entry), measured −29..−40 % on s29/s30/s31 same-window n=3.
       // A static conf: it only takes effect here, at session build.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+    val spark = extra.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

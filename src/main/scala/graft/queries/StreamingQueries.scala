@@ -1077,19 +1077,12 @@ object StreamingQueries {
               Seq((epoch, nd, sumDl)).toDF("epoch", "nd", "sum_dl") }
               .coalesce(1),
             statsPath, epoch, "s23s")
-          // serve the standing query from the updated index
-          val avgdl = sumDl / nd
-          val post = s.read.parquet(s"$idxDir/postings")
-          val dfT = post.groupBy(col("term"))
-            .agg(count(lit(1)).cast("double").as("df"))
-          val wExpr = graft.text.Text.bm25Weight(lit(nd), lit(avgdl), 1.2, 0.75)
-          val scored = post.join(broadcast(dfT), "term")
-            .groupBy(col("doc_id")).agg(round(sum(wExpr), 6).as("score"))
-          val top = scored.orderBy(col("score").desc, col("doc_id")).limit(3)
-            .withColumn("rank", row_number().over(
-              org.apache.spark.sql.expressions.Window
-                .orderBy(col("score").desc, col("doc_id"))).cast("long"))
-            .select(col("doc_id"), col("rank"), col("score"))
+          // serve the standing query from the updated index: its
+          // postings hold only the query's terms, and the running
+          // stats cross in as data
+          val top = graft.text.Text.bm25ScoreTopK(
+            s.read.parquet(s"$idxDir/postings"),
+            graft.text.Text.corpusStats(s, nd, sumDl), 3, 1.2, 0.75)
           g.serveTo(outDir, epoch, top)
         })
       s.read.parquet(outDir).localCheckpoint()

@@ -105,8 +105,8 @@ private[graft] final class DurableRecords(fs: FileSystem, root: String) {
     * record meanwhile is read, never deleted; a writer in another
     * process stalled past the grace is the hazard the request
     * consumers already accept. */
-  private def abandonedFirstWrite[A](p: Path,
-      parse: Array[Byte] => Option[A]): Read[A] = stripe(p).synchronized {
+  private def abandonedFirstWrite[A](p: Path, parse: Array[Byte] => Option[A])
+      : Read[A] = replaceStripes(p.toString).synchronized {
     readOne(p, parse) match {
       case torn @ Unknown(true) =>
         val stale =
@@ -185,7 +185,7 @@ private[graft] final class DurableRecords(fs: FileSystem, root: String) {
     require(replaced(p), s"$p is not a record kind replace writes")
     def stamp(q: Path): Unit =
       if (mtime >= 0L) try fs.setTimes(q, mtime, -1) catch { case NonFatal(_) => () }
-    stripe(p).synchronized {
+    replaceStripes(p.toString).synchronized {
       if (createExclusive(p, bytes)) stamp(p)
       else {
         val next = nextOf(p)
@@ -198,9 +198,6 @@ private[graft] final class DurableRecords(fs: FileSystem, root: String) {
       }
     }
   }
-
-  private def stripe(p: Path): Object =
-    replaceStripes(math.floorMod(p.toString.hashCode, replaceStripes.length))
 
   /** Create the record at `p` only if nothing is there: false when it
     * exists (both spellings of the collision — any other create
@@ -302,7 +299,7 @@ private[graft] object DurableRecords {
   val ReservedNames: Set[String] = (PipelineManager.ReservedNamespace +:
     TopLevelDirs.filter(_.matches("[A-Za-z0-9_]+"))).toSet
 
-  private val replaceStripes = Array.fill(64)(new Object)
+  private val replaceStripes = new Stripes
 
   /** Closing line of every frame: a frame without it was cut short by
     * a crashed writer. No encoded field line starts with `.`, so only

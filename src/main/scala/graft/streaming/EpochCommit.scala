@@ -152,9 +152,7 @@ object EpochCommit {
     * durable store holds committed data yet. */
   def committedFiles(dir: String, conf: Configuration): Seq[String] = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq
+    listOrEmpty(p.getFileSystem(conf), p)
       .filter(st => st.isFile && isCommittedEpochFile(st.getPath.getName))
       .map(_.getPath.toString).sorted
   }

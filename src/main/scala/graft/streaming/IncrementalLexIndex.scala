@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.text.Text
@@ -199,15 +199,6 @@ final class IncrementalLexIndex(spark: SparkSession, dir: String,
     } finally btok.unpersist(false): Unit
   }
 
-  /**
-   * BM25 top-`k` for `terms` — NONE of which need to have been named
-   * at ingest — served from index files only: the postings scan
-   * carries the bucket predicate (PartitionFilters: unvisited bucket
-   * directories never open) and the term set (PushedFilters inside
-   * the visited buckets); (N, avgdl) come from the accumulator's
-   * latest row. Identical literal shapes (and bit-identical scores)
-   * to [[graft.text.Text.bm25TopK]] over the ingested prefix.
-   */
   /** Newest USABLE cumulative stats row for serving, from at most ONE
     * stats file read. Two properties at once:
     *  - O(1) cold open: committed file names carry their epoch, so
@@ -250,82 +241,59 @@ final class IncrementalLexIndex(spark: SparkSession, dir: String,
       }
     })
 
+  /**
+   * BM25 top-`k` for `terms` — NONE of which need to have been named
+   * at ingest — served from index files only: the postings scan
+   * carries the bucket predicate (PartitionFilters: unvisited bucket
+   * directories never open) and the term set (PushedFilters inside
+   * the visited buckets); (N, avgdl) come from the accumulator's
+   * latest row as a 1-row frame. Scored by
+   * [[graft.text.Text.bm25ScoreTopK]], so the scores are
+   * bit-identical to [[graft.text.Text.bm25TopK]] over the ingested
+   * prefix.
+   */
   def serve(terms: Seq[String], k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
-    // an index that has seen no documents yet (no epochs, or only
-    // empty batches) serves an empty result — a ProcessingTime
-    // stream's first data-free triggers must not kill the query on
-    // an uninferrable-schema read
-    val latest: Option[(Double, Double)] = latestServableStats()
-    (latest.filter(_._1 > 0.0), store.frameIfAny) match {
-      case (Some((nd, sumDl)), Some(fr)) =>
-        val avgdl = sumDl / nd
-        val buckets = terms.map(t =>
-          java.lang.Math.floorMod(graft.functions.Portable.hash64Of(t),
-            Text.LexIndexBuckets.toLong).toInt).distinct
-        val post = fr
-          .filter(col("tb").isin(buckets: _*) && col("term").isin(terms: _*))
-        val dfT = post.groupBy(col("term"))
-          .agg(count(lit(1)).cast("double").as("df"))
-        val w = Text.bm25Weight(lit(nd), lit(avgdl), k1, b)
-        val scored = post.join(broadcast(dfT), "term")
-          .groupBy(col("doc_id")).agg(round(sum(w), 6).as("score"))
-        val top = scored.orderBy(col("score").desc, col("doc_id")).limit(k)
-        top.withColumn("rank", row_number()
-            .over(Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
-          .select(col("doc_id"), col("rank"), col("score"))
-      case _ =>
+      k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    servable(terms) match {
+      case Some((post, stats)) => Text.bm25ScoreTopK(post, stats, k, k1, b)
+      case None =>
+        import spark.implicits._
         Seq.empty[(Long, Long, Double)].toDF("doc_id", "rank", "score")
     }
-  }
 
   /**
    * Q keyword queries against the LIVE index in ONE postings pass —
    * [[graft.text.Text.bm25TopKFromIndexMulti]]'s curation-batch shape
    * against the streaming store: the union of the term sets prunes
-   * one bucket-filtered read of the view, per-term df comes from a
-   * count-over-window on those filtered postings (never a second
-   * pass), the tiny (query, term) table broadcasts so shared terms
-   * score for every query that asks, and the per-query top-k is a
-   * query-partitioned rank window. Per query, rows and scores are
-   * bit-identical to Q independent [[serve]] calls. Returns
-   * (query_id, doc_id, rank, score); empty before any data.
+   * one bucket-filtered read of the view and
+   * [[graft.text.Text.bm25ScoreTopKMulti]] scores it. Per query, rows
+   * and scores are bit-identical to Q independent [[serve]] calls.
+   * Returns (query_id, doc_id, rank, score); empty before any data.
    */
   def serveMulti(queries: Seq[(String, Seq[String])], k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
-    val latest: Option[(Double, Double)] = latestServableStats()
-    (latest.filter(_._1 > 0.0), store.frameIfAny) match {
-      case (Some((nd, sumDl)), Some(fr)) =>
-        val avgdl = sumDl / nd
-        val allTerms = queries.flatMap(_._2).distinct
-        val buckets = allTerms.map(t =>
-          java.lang.Math.floorMod(graft.functions.Portable.hash64Of(t),
-            Text.LexIndexBuckets.toLong).toInt).distinct
-        val post = fr.filter(
-          col("tb").isin(buckets: _*) && col("term").isin(allTerms: _*))
-        val qt = queries.flatMap { case (q, ts) => ts.distinct.map((q, _)) }
-          .toDF("query_id", "term")
-        val df = count(lit(1)).over(Window.partitionBy(col("term")))
-          .cast("double").as("df")
-        val w = Text.bm25Weight(lit(nd), lit(avgdl), k1, b)
-        val scored = post.withColumn("df", df)
-          .join(broadcast(qt), "term")
-          .groupBy(col("query_id"), col("doc_id"))
-          .agg(round(sum(w), 6).as("score"))
-        val rw = Window.partitionBy(col("query_id"))
-          .orderBy(col("score").desc, col("doc_id"))
-        scored.withColumn("rank", row_number().over(rw).cast("long"))
-          .filter(col("rank") <= k)
-          .select(col("query_id"), col("doc_id"), col("rank"), col("score"))
-      case _ =>
+      k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    servable(queries.flatMap(_._2).distinct) match {
+      case Some((post, stats)) =>
+        Text.bm25ScoreTopKMulti(post, stats, queries, k, k1, b)
+      case None =>
+        import spark.implicits._
         Seq.empty[(String, Long, Long, Double)]
           .toDF("query_id", "doc_id", "rank", "score")
     }
-  }
+
+  /** The scorers' two inputs for `terms`: the view's postings pruned
+    * to the terms' buckets and filtered to the terms, and the latest
+    * servable corpus stats as a driver-local 1-row frame. None while
+    * the index has seen no documents (no epochs, or only empty
+    * batches): a ProcessingTime stream's first data-free triggers
+    * must serve an empty result, not fail on an uninferrable-schema
+    * read. */
+  private def servable(terms: Seq[String]): Option[(DataFrame, DataFrame)] =
+    for {
+      (nd, sumDl) <- latestServableStats().filter(_._1 > 0.0)
+      fr <- store.frameIfAny
+    } yield (fr.filter(Text.termBucketFilter(terms)),
+      Text.corpusStats(spark, nd, sumDl))
 
   /** Committed postings data-file count (all buckets) — the quantity
     * compaction keeps flat; probes and specs assert on it. */

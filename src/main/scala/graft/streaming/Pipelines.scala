@@ -1769,13 +1769,12 @@ final class PipelineManager(spark: SparkSession, checkpointRoot: String,
     * spec before restamping, so the filter admits it.) */
   private def restampHoldbackDest(fromDest: String, toDest: String): Unit =
     if (fromDest != toDest && fromDest.nonEmpty) {
-      val stripes = Seq(PipelineManager.holdbackStripeIndex(fromDest),
-        PipelineManager.holdbackStripeIndex(toDest)).distinct.sorted
+      val pool = PipelineManager.holdbackStripe
+      val stripes = Seq(pool.index(fromDest), pool.index(toDest)).distinct.sorted
       def locked(body: => Unit): Unit = stripes match {
-        case Seq(one) => PipelineManager.holdbackStripeAt(one)
-          .synchronized(body)
-        case Seq(a, b) => PipelineManager.holdbackStripeAt(a).synchronized(
-          PipelineManager.holdbackStripeAt(b).synchronized(body))
+        case Seq(one) => pool.at(one).synchronized(body)
+        case Seq(a, b) =>
+          pool.at(a).synchronized(pool.at(b).synchronized(body))
         case _ => body // unreachable: 1 or 2 distinct stripes
       }
       locked {
@@ -3416,32 +3415,17 @@ object PipelineManager {
 
   /** Fixed pool of monitors serializing IN-PROCESS lock operations —
     * the local-filesystem complement of HDFS's atomic exclusive
-    * create (acquireLock's cross-process primitive). A fixed array
-    * (hash of the lock path picks the stripe) instead of a per-path
-    * map: a long-lived multi-tenant JVM creates unboundedly many
-    * (root, pipeline) pairs, and a hash collision merely
-    * over-serializes two unrelated acquires. */
-  private val lockStripes = Array.fill(64)(new Object)
-  private[streaming] def lockStripe(path: String): Object =
-    lockStripes(math.floorMod(path.hashCode, lockStripes.length))
+    * create (acquireLock's cross-process primitive), striped by lock
+    * path: a long-lived multi-tenant JVM creates unboundedly many
+    * (root, pipeline) pairs. */
+  private[streaming] val lockStripe = new Stripes
 
   /** Monitors for group-holdback replay — a SEPARATE pool from
     * [[lockStripe]]: replay holds its monitor across whole Spark
     * read+deliver jobs (seconds), while the lock stripes were sized
     * for microsecond filesystem ops; sharing them would stall a
     * hash-colliding acquire/release for a replay's duration. */
-  private val holdbackStripes = Array.fill(64)(new Object)
-  /** Stripe INDEX for `path` — the ONE spelling of the striping
-    * function: [[holdbackStripe]] is defined through it, and callers
-    * that must hold two holdback stripes at once (the q73 restamp:
-    * source and target destination) acquire them in ascending index
-    * order, so two such callers can never deadlock. */
-  private[streaming] def holdbackStripeIndex(path: String): Int =
-    math.floorMod(path.hashCode, holdbackStripes.length)
-  private[streaming] def holdbackStripeAt(i: Int): Object =
-    holdbackStripes(i)
-  private[streaming] def holdbackStripe(path: String): Object =
-    holdbackStripeAt(holdbackStripeIndex(path))
+  private[streaming] val holdbackStripe = new Stripes
 
   /** Name of the owner/destination stamp record inside a
     * group-holdback dir ([[DurableRecords.stamp]]) — lets replay
@@ -3454,9 +3438,7 @@ object PipelineManager {
     * merge + directory swap), so they get their own pool: a /diag
     * read and the delivery thread's sketch update of one pipeline
     * serialize here instead of racing the rename window. */
-  private val sketchStripes = Array.fill(64)(new Object)
-  private[streaming] def sketchStripe(path: String): Object =
-    sketchStripes(math.floorMod(path.hashCode, sketchStripes.length))
+  private[streaming] val sketchStripe = new Stripes
 
   /** Monitors serializing MEMBERSHIP CHANGES of one task group (the
     * capture-stop-restart sequences of create-on-running-group and
@@ -3464,9 +3446,7 @@ object PipelineManager {
     * observe the shared query live and both race to start its
     * replacement. Own pool — the critical section spans a query stop
     * and start (seconds). */
-  private val membershipStripes = Array.fill(64)(new Object)
-  private[streaming] def membershipStripe(prefix: String): Object =
-    membershipStripes(math.floorMod(prefix.hashCode, membershipStripes.length))
+  private[streaming] val membershipStripe = new Stripes
 
   /** Metadata key carrying a pipeline's task-group prefix (the
     * reference's `system.taskPrefix`,

@@ -577,6 +577,90 @@ object Text {
       (col("tf") + lit(k1) * (lit(1) - b + lit(b) * col("dl") / avgdl))
 
   /**
+   * THE single-query BM25 scorer: every one-query lexical top-k
+   * ([[bm25TopK]], [[bm25TopKFromIndex]], the incremental index's
+   * `serve`, s23) ends here. `postings` carries (term, doc_id, tf, dl),
+   * already restricted to the query's terms; `stats` is the corpus's
+   * 1-row (nd, avgdl) frame, crossed in as its caller hints it (a
+   * broadcast aggregate or file, or [[corpusStats]]'s driver-local
+   * row) — data, never a literal, so an epoch's new corpus stats
+   * reuse the last epoch's plan and generated code. Per-term df is
+   * |q| rows, broadcast; the top-k is orderBy+limit — Spark's
+   * distributed TakeOrderedAndProject, never a global sort — and the
+   * rank window runs over k rows. Returns (doc_id, rank, score).
+   */
+  def bm25ScoreTopK(postings: DataFrame, stats: DataFrame, k: Int,
+      k1: Double, b: Double): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    // counts postings by their (never null) dl, not by row: the df
+    // branch then keeps the same columns as the scored branch, so a
+    // doc-length join feeding both (the batch index's docstats) is
+    // one reused exchange, not a second, differently pruned one
+    val df = postings.groupBy(col("term"))
+      .agg(count(col("dl")).cast("double").as("df"))
+    // summed over the query terms present in the doc
+    val scored = postings
+      .join(broadcast(df), "term")
+      .crossJoin(stats)
+      .groupBy(col("doc_id"))
+      .agg(round(sum(bm25Weight(col("nd"), col("avgdl"), k1, b)), 6).as("score"))
+    val top = scored.orderBy(col("score").desc, col("doc_id")).limit(k)
+    top.withColumn("rank", row_number()
+        .over(Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
+      .select(col("doc_id"), col("rank"), col("score"))
+  }
+
+  /**
+   * THE multi-query BM25 scorer: Q keyword queries over ONE postings
+   * read ([[bm25TopKFromIndexMulti]], the incremental index's
+   * `serveMulti`). `postings` (term, doc_id, tf, dl) is restricted to
+   * the union of the query term sets; per-term df comes from a
+   * count-over-window partitioned by term (never a second read); the
+   * tiny (query, term) table broadcasts onto the postings so a term
+   * shared by two queries scores for both; `stats` crosses in as in
+   * [[bm25ScoreTopK]]; and the per-query top-k is a rank window
+   * partitioned by query (Q-way parallel). Per query, rows and scores
+   * are BIT-IDENTICAL to [[bm25ScoreTopK]] over the same postings: df,
+   * nd and avgdl are corpus facts, unchanged by which query asks.
+   * Returns (query_id, doc_id, rank, score), rank 1..k per query.
+   */
+  def bm25ScoreTopKMulti(postings: DataFrame, stats: DataFrame,
+      queries: Seq[(String, Seq[String])], k: Int,
+      k1: Double, b: Double): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import postings.sparkSession.implicits._
+    val qt = queries.flatMap { case (q, ts) => ts.distinct.map((q, _)) }
+      .toDF("query_id", "term")
+    val df = count(lit(1)).over(Window.partitionBy(col("term")))
+      .cast("double").as("df")
+    val scored = postings.withColumn("df", df)
+      .join(broadcast(qt), "term")
+      .crossJoin(stats)
+      .groupBy(col("query_id"), col("doc_id"))
+      .agg(round(sum(bm25Weight(col("nd"), col("avgdl"), k1, b)), 6).as("score"))
+    val rw = Window.partitionBy(col("query_id"))
+      .orderBy(col("score").desc, col("doc_id"))
+    scored.withColumn("rank", row_number().over(rw).cast("long"))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("doc_id"), col("rank"), col("score"))
+  }
+
+  /** A running corpus's stats as the scorers' 1-row (nd, avgdl)
+    * frame, built on the driver from (nd, Σdl). Its values are data —
+    * nothing in the plan changes when they do. The local relation is
+    * hinted to replicate into the scoring tasks (a cartesian product
+    * with its one partition) rather than broadcast: a broadcast of a
+    * local relation still runs a collect job, one per serve. */
+  def corpusStats(spark: org.apache.spark.sql.SparkSession,
+      nd: Double, sumDl: Double): DataFrame = {
+    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+    spark.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row(nd, sumDl / nd)),
+      StructType(Seq(StructField("nd", DoubleType), StructField("avgdl", DoubleType))))
+      .hint("shuffle_replicate_nl")
+  }
+
+  /**
    * Exact BM25 top-k lexical retrieval for one literal query (Lucene's
    * idf form: ln((N - df + 0.5)/(df + 0.5) + 1), k1/b the classic
    * 1.2/0.75) — the lexical half of a hybrid retrieval stack, and the
@@ -589,12 +673,9 @@ object Text {
    * separate doc-length join), and FILTERS to the query's terms
    * BEFORE any aggregation, so the per-(doc,term) groupBy and
    * everything after it run over postings for |q| terms, never the
-   * full postings list. Per-term df is |q| rows, broadcast; the
-   * stats row crosses in broadcast. The final top-k is orderBy+limit
-   * — Spark's distributed TakeOrderedAndProject, never a global sort
-   * — and the rank window runs over k rows. A serve-many caller
-   * amortizes even the two passes away with [[buildLexicalIndex]] +
-   * [[bm25TopKFromIndex]].
+   * full postings list. Scoring is [[bm25ScoreTopK]]. A serve-many
+   * caller amortizes even the two passes away with
+   * [[buildLexicalIndex]] + [[bm25TopKFromIndex]].
    *
    * Reference surface: the reference has no lexical scorer; this is
    * the documents-table counterpart of the ANN retrieval family
@@ -602,7 +683,6 @@ object Text {
    */
   def bm25TopK(docs: DataFrame, terms: Seq[String], k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val tok = docs.select(col("doc_id"), tokens(col("text")).as("w"))
     val stats = tok.agg(count(lit(1)).cast("double").as("nd"),
       avg(size(col("w")).cast("double")).as("avgdl"))
@@ -611,19 +691,7 @@ object Text {
       .filter(col("term").isin(terms: _*))
       .groupBy(col("doc_id"), col("dl"), col("term"))
       .agg(count(lit(1)).cast("double").as("tf"))
-    val df = postings.groupBy(col("term"))
-      .agg(count(lit(1)).cast("double").as("df"))
-    // summed over the query terms present in the doc
-    val w = bm25Weight(col("nd"), col("avgdl"), k1, b)
-    val scored = postings
-      .join(broadcast(df), "term")
-      .crossJoin(broadcast(stats))
-      .groupBy(col("doc_id"))
-      .agg(round(sum(w), 6).as("score"))
-    val top = scored.orderBy(col("score").desc, col("doc_id")).limit(k)
-    top.withColumn("rank", row_number()
-        .over(Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
-      .select(col("doc_id"), col("rank"), col("score"))
+    bm25ScoreTopK(postings, broadcast(stats), k, k1, b)
   }
 
   /** Number of term-hash buckets the postings index is partitioned
@@ -632,6 +700,16 @@ object Text {
     * a fixed bucket count keeps the directory fan-out bounded while
     * a |q|-term query still prunes to ≤ |q| buckets. */
   val LexIndexBuckets = 64
+
+  /** The query-term restriction of a postings store partitioned by
+    * term-hash bucket `tb`: the terms' buckets (→ PartitionFilters,
+    * unvisited buckets' directories never open) and the term set
+    * itself (→ PushedFilters inside the visited buckets). */
+  def termBucketFilter(terms: Seq[String]): Column = {
+    val buckets = terms.map(t => java.lang.Math.floorMod(
+      Portable.hash64Of(t), LexIndexBuckets.toLong).toInt).distinct
+    col("tb").isin(buckets: _*) && col("term").isin(terms: _*)
+  }
 
   /**
    * Build a durable inverted index from a document corpus — the
@@ -667,90 +745,47 @@ object Text {
     } finally tok.unpersist(false): Unit
   }
 
+  /** A [[buildLexicalIndex]] directory's postings for `terms`, with
+    * each candidate doc's length joined in from `docstats/`. */
+  private def indexPostings(spark: org.apache.spark.sql.SparkSession,
+      dir: String, terms: Seq[String]): DataFrame =
+    spark.read.parquet(s"$dir/postings")
+      .filter(termBucketFilter(terms))
+      .select(col("doc_id"), col("term"), col("tf"))
+      .join(spark.read.parquet(s"$dir/docstats"), "doc_id")
+
   /**
    * Score a query from a [[buildLexicalIndex]] directory — identical
    * math (and bit-identical output) to [[bm25TopK]], but the only
    * inputs are index files: the postings scan carries BOTH the
    * term-bucket predicate (→ PartitionFilters, unvisited buckets'
    * directories never open) and the term equality set (→
-   * PushedFilters inside the visited buckets). df comes from the |q|
-   * filtered postings groups; doc lengths join in for candidate docs
-   * only; the corpus table appears nowhere in the plan.
+   * PushedFilters inside the visited buckets). Doc lengths join in
+   * for candidate docs only; the corpus table appears nowhere in the
+   * plan.
    */
   def bm25TopKFromIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, terms: Seq[String], k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val buckets = terms.map(t =>
-      java.lang.Math.floorMod(graft.functions.Portable.hash64Of(t),
-        LexIndexBuckets.toLong)).distinct
-    val postings = spark.read.parquet(s"$dir/postings")
-      .filter(col("tb").isin(buckets: _*) && col("term").isin(terms: _*))
-      .select(col("doc_id"), col("term"), col("tf"))
-    val dl = spark.read.parquet(s"$dir/docstats")
-    val stats = spark.read.parquet(s"$dir/stats")
-    val df = postings.groupBy(col("term"))
-      .agg(count(lit(1)).cast("double").as("df"))
-    val w = bm25Weight(col("nd"), col("avgdl"), k1, b)
-    val scored = postings
-      .join(dl, "doc_id")
-      .join(broadcast(df), "term")
-      .crossJoin(broadcast(stats))
-      .groupBy(col("doc_id"))
-      .agg(round(sum(w), 6).as("score"))
-    val top = scored.orderBy(col("score").desc, col("doc_id")).limit(k)
-    top.withColumn("rank", row_number()
-        .over(Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
-      .select(col("doc_id"), col("rank"), col("score"))
-  }
+      k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    bm25ScoreTopK(indexPostings(spark, dir, terms),
+      broadcast(spark.read.parquet(s"$dir/stats")), k, k1, b)
 
   /**
    * Score Q keyword queries against a [[buildLexicalIndex]] directory
    * in ONE postings scan — the curation-batch shape: a training-data
    * pipeline runs hundreds of keyword queries over one corpus, and Q
    * independent [[bm25TopKFromIndex]] calls would open the same
-   * bucket files Q times. Here the union of all query term sets
-   * prunes/filters ONE postings read; per-term df comes from a
-   * count-over-window partitioned by term (only the filtered postings
-   * shuffle — never a second scan); the tiny (query, term) table
-   * broadcasts onto the postings so a term shared by two queries
-   * scores for both; and the per-query top-k is a rank window
-   * partitioned by query (Q-way parallel, each query's candidate set
-   * sorts in its own partition). Per query, rows and scores are
-   * BIT-IDENTICAL to an independent [[bm25TopKFromIndex]] run: df,
-   * N, avgdl are corpus facts, unchanged by which query asks.
+   * bucket files Q times. The union of all query term sets prunes and
+   * filters ONE postings read; [[bm25ScoreTopKMulti]] scores it. Per
+   * query, rows and scores are BIT-IDENTICAL to an independent
+   * [[bm25TopKFromIndex]] run.
    *
    * Returns (query_id, doc_id, rank, score), rank 1..k per query.
    */
   def bm25TopKFromIndexMulti(spark: org.apache.spark.sql.SparkSession,
       dir: String, queries: Seq[(String, Seq[String])], k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
-    val allTerms = queries.flatMap(_._2).distinct
-    val buckets = allTerms.map(t =>
-      java.lang.Math.floorMod(graft.functions.Portable.hash64Of(t),
-        LexIndexBuckets.toLong)).distinct
-    val postings = spark.read.parquet(s"$dir/postings")
-      .filter(col("tb").isin(buckets: _*) && col("term").isin(allTerms: _*))
-      .select(col("doc_id"), col("term"), col("tf"))
-    val dl = spark.read.parquet(s"$dir/docstats")
-    val stats = spark.read.parquet(s"$dir/stats")
-    val qt = queries.flatMap { case (q, ts) => ts.distinct.map((q, _)) }
-      .toDF("query_id", "term")
-    val df = count(lit(1)).over(Window.partitionBy(col("term")))
-      .cast("double").as("df")
-    val w = bm25Weight(col("nd"), col("avgdl"), k1, b)
-    val scored = postings.withColumn("df", df)
-      .join(dl, "doc_id")
-      .join(broadcast(qt), "term")
-      .crossJoin(broadcast(stats))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(round(sum(w), 6).as("score"))
-    val rw = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    scored.withColumn("rank", row_number().over(rw).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("doc_id"), col("rank"), col("score"))
-  }
+      k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    bm25ScoreTopKMulti(
+      indexPostings(spark, dir, queries.flatMap(_._2).distinct),
+      broadcast(spark.read.parquet(s"$dir/stats")), queries, k, k1, b)
 }

@@ -118,6 +118,53 @@ class IncrementalLexIndexSpec extends SparkTestBase {
     }
   }
 
+  test("serveMulti per query equals independent serve on every prefix") {
+    // the s28 contract on the lexical side: one postings pass for Q
+    // queries, each query's rows identical to serving it alone — with
+    // a term shared by two queries and a query no document matches
+    val queries = Seq("qA" -> qTerms,
+      "qB" -> Seq("vector", "customer", "merge", "scan"),
+      "qC" -> Seq("table", "join", "hash"),
+      "qD" -> Seq("no-such-term"))
+    val ilx = new IncrementalLexIndex(spark, tmp("ilx-multi-"), name = "m",
+      compactEvery = 2)
+    (0 until 4).foreach { e =>
+      ilx.appendEpoch(docs.filter(pmod(col("doc_id"), lit(4L)) === e), e)
+      val multi = ilx.serveMulti(queries, 5)
+        .as[(String, Long, Long, Double)].collect().toSeq
+        .sortBy(r => (r._1, r._3))
+      val singles = queries.flatMap { case (q, ts) =>
+        ilx.serve(ts, 5).as[(Long, Long, Double)].collect().toSeq
+          .map { case (d, r, s) => (q, d, r, s) }
+      }.sortBy(r => (r._1, r._3))
+      assert(multi.nonEmpty && multi == singles,
+        s"epoch $e: serveMulti diverged from independent serves")
+    }
+  }
+
+  test("serve plans carry the corpus stats as data, never as literals") {
+    // nd and avgdl change every epoch: as plan literals they would
+    // make every epoch's serve a new plan (and new generated code)
+    val ilx = new IncrementalLexIndex(spark, tmp("ilx-lit-"), name = "l")
+    (0L until 2L).foreach { e =>
+      ilx.appendEpoch(docs.filter(pmod(col("doc_id"), lit(2L)) === e), e)
+    }
+    val (nd, avgdl) = (ilx.health("docsIndexed"), ilx.health("avgDocLength"))
+    assert(nd > 0.0)
+    for ((name, served) <- Seq("serve" -> ilx.serve(qTerms, 5),
+        "serveMulti" -> ilx.serveMulti(Seq("q" -> qTerms), 5))) {
+      val plan = served.queryExecution.optimizedPlan
+      val doubles = plan.collect { case node =>
+        node.expressions.flatMap(_.collect {
+          case org.apache.spark.sql.catalyst.expressions.Literal(
+              v: Double, org.apache.spark.sql.types.DoubleType) => v
+        })
+      }.flatten
+      assert(!doubles.contains(nd) && !doubles.contains(avgdl),
+        s"$name plan holds a corpus-stats literal (nd=$nd, avgdl=$avgdl):\n$plan")
+    }
+  }
+
   test("an index with no documents yet serves an empty result, not a crash") {
     val dir = tmp("ilx-empty-")
     // compactEvery=1: every data-free epoch also ticks the compaction
